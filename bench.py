@@ -52,6 +52,30 @@ def read_steal_ticks() -> int | None:
     except (OSError, ValueError):
         return None
 
+
+def _stage_snapshot(spark) -> tuple[int, dict[int, int]] | None:
+    """(max stage id seen, {stage_id: executorRunTime ms}) from the app
+    status store, or None when the store cannot be read — a failed
+    snapshot must not pass for "no stages yet", or a run would be
+    charged every stage of the session."""
+    try:
+        store = spark.sparkContext._jsc.sc().statusStore()
+        # Spark 4.1 signature: stageList(statuses, details,
+        # withSummaries, quantiles, taskStatus) — py4j sees no Scala
+        # default args, so fetch each default explicitly.
+        defaults = [
+            getattr(store, f"stageList$default${i}")() for i in (2, 3, 4, 5)
+        ]
+        seq = store.stageList(None, *defaults)
+        out: dict[int, int] = {}
+        for i in range(seq.size()):
+            s = seq.apply(i)
+            out[s.stageId()] = int(s.executorRunTime())
+        return (max(out) if out else -1), out
+    except Exception:
+        return None
+
+
 BENCH_QUERIES = [
     # headline relational
     "q1_pricing_summary",
@@ -278,31 +302,13 @@ def main() -> None:
     # monotonically, so "stages created by THIS run" is exactly the IDs
     # above the pre-run max — immune to the status store evicting old
     # stages (spark.ui.retainedStages).
-    def _stage_snapshot() -> tuple[int, dict[int, int]]:
-        """(max stage id seen, {stage_id: executorRunTime ms})."""
-        try:
-            store = spark.sparkContext._jsc.sc().statusStore()
-            # Spark 4.1 signature: stageList(statuses, details,
-            # withSummaries, quantiles, taskStatus) — py4j sees no Scala
-            # default args, so fetch each default explicitly.
-            defaults = [
-                getattr(store, f"stageList$default${i}")() for i in (2, 3, 4, 5)
-            ]
-            seq = store.stageList(None, *defaults)
-            out: dict[int, int] = {}
-            for i in range(seq.size()):
-                s = seq.apply(i)
-                out[s.stageId()] = int(s.executorRunTime())
-            return (max(out) if out else -1), out
-        except Exception:
-            return -1, {}
-
     def run_with_task_time(name: str, d: str) -> tuple[float, int | None]:
-        max_before, _ = _stage_snapshot()
+        before = _stage_snapshot(spark)
         wall = run(name, d)
-        _, after = _stage_snapshot()
-        task_ms = sum(v for k, v in after.items() if k > max_before)
-        return wall, (task_ms if after else None)
+        after = _stage_snapshot(spark)
+        if before is None or after is None or not after[1]:
+            return wall, None  # unknown task time, never a session-wide sum
+        return wall, sum(v for k, v in after[1].items() if k > before[0])
 
     def measure_all() -> tuple[
         dict[str, float],

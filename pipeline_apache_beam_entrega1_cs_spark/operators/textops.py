@@ -467,6 +467,11 @@ def bpe_fit(docs: DataFrame, rounds: int = BPE_FIT_ROUNDS) -> DataFrame:
     -> apply merge) iterations over the wrapped-symbol corpus form, the
     kmeans_lloyd fixed-iteration recipe applied to tokenizer induction.
 
+    Input: ``docs`` needs a ``text`` column AND a ``doc_id`` column —
+    the corpus is hash-repartitioned on doc_id before the CPU-bound
+    string stages (see below); a text-only frame fails with an
+    unresolved-column error.
+
     Per round: adjacent-symbol pairs are counted corpus-wide (explode
     words, zip each word's symbol array with its own tail — linear,
     never quadratic), the most frequent pair wins (ties: lexicographic

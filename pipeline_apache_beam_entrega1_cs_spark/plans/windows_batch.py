@@ -236,34 +236,18 @@ def streaming_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     and aggregate. At-least-once replay of a committed batch id is a
     no-op, so the readback equals the source exactly — which is what the
     plain batch-aggregate oracle checks."""
-    import shutil
-    import tempfile
+    from ..streaming.sinks import IdempotentParquetSink, replay
 
-    from ..streaming.sinks import IdempotentParquetSink
-    from ..streaming.windows import _stream_events
-
-    out = tempfile.mkdtemp(prefix="graft_fb_sink_")
-    try:
-        sink = IdempotentParquetSink(out)
-        ev = _stream_events(spark, sf_dir).select("event_id", "event_type", "value")
-        q = (
-            ev.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", f"{out}/_ckpt")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        back = spark.read.parquet(f"{out}/batch_id=*")
-        res = back.groupBy("event_type").agg(
+    ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
+    # One slice, so one micro-batch; the read-off spans every committed
+    # batch_id=N directory and is one row per event_type.
+    return replay(
+        ev, F.lit(0), IdempotentParquetSink,
+        lambda back: back.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n_events"), dsum("value").alias("sum_value")
-        )
-        # Materialize (one row per event_type) before the finally deletes
-        # the sink directory the lazy plan would otherwise still reference.
-        return spark.createDataFrame(res.collect(), res.schema)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+        ),
+        n=1,
+    )
 
 
 STREAMING_FOREACH_BATCH_SQL = f"""

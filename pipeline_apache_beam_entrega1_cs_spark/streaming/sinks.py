@@ -18,13 +18,22 @@ On a real cluster the marker lives next to the data on the object store
 the overwrite is a directory rename — both already how FileStreamSink's
 _spark_metadata log works; this class just makes the contract explicit
 and testable.
+
+MERGE sinks (a state table re-aggregated per batch) share one commit
+wrapper, :class:`MergeSink`, and every ``run_*_stream`` entry drives its
+sink through one :func:`replay`.
 """
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
+import tempfile
+import time
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
+from pyspark.sql import functions as F
 
 
 class IdempotentParquetSink:
@@ -64,8 +73,6 @@ def _current_state(state: str) -> str | None:
     under ``state_old<batch_id>``; the replayed batch must merge against
     it, not start empty. Picks the NUMERICALLY largest batch-id suffix —
     lexicographic order would put ``state_old10`` before ``state_old2``."""
-    import glob
-
     if os.path.exists(state):
         return state
     olds = glob.glob(f"{state}_old*")
@@ -78,9 +85,6 @@ def _swap_state(state: str, tmp: str, batch_id: int) -> None:
     """Install ``tmp`` as the new state via rename-aside: the old state
     directory stays intact (renamed, never deleted) until the new one is
     in place, so no single crash point loses prior batches' state."""
-    import glob
-    import shutil
-
     old = None
     if os.path.exists(state):
         old = f"{state}_old{batch_id}"
@@ -90,17 +94,6 @@ def _swap_state(state: str, tmp: str, batch_id: int) -> None:
         shutil.rmtree(old)
     for stale in glob.glob(f"{state}_old*"):  # recovered-from leftovers
         shutil.rmtree(stale, ignore_errors=True)
-
-
-def _state_committed(state: str, batch_id: int) -> bool:
-    """A batch is committed iff its ``_merged_<id>`` marker exists INSIDE
-    the live state directory — marker visibility is atomic with state
-    visibility (see _install_state), so there is no crash window where
-    merged data exists without its marker or vice versa."""
-    cur = _current_state(state)
-    return cur is not None and os.path.exists(
-        os.path.join(cur, f"_merged_{batch_id}")
-    )
 
 
 def _install_state(state: str, tmp: str, batch_id: int) -> None:
@@ -115,9 +108,6 @@ def _install_state(state: str, tmp: str, batch_id: int) -> None:
     (batch uncommitted, replay re-merges from it) or the new state
     (batch committed, replay is a no-op), never merged-but-unmarked
     data that a replay would double-count."""
-    import glob
-    import shutil
-
     prev = _current_state(state)
     if prev is not None:
         for m in glob.glob(os.path.join(prev, "_merged_*")):
@@ -127,30 +117,168 @@ def _install_state(state: str, tmp: str, batch_id: int) -> None:
     _swap_state(state, tmp, batch_id)
 
 
-def _stage_slices(raw, work: str, key: str, n: int = 4) -> str:
-    """Write ``raw`` as ``n`` single-file parquet slices (``key % n``)
-    under ``work/src`` so a maxFilesPerTrigger=1 file stream replays the
-    table as ``n`` deterministic micro-batches."""
-    import glob
-    import shutil
+class MergeSink:
+    """``foreachBatch`` MERGE of each micro-batch into a parquet state
+    table, exactly once. Subclasses define only :meth:`merge`.
 
-    from pyspark.sql import functions as F
+    Exactly-once contract (every subclass): the ``_merged_N`` commit
+    markers live INSIDE the state directory and are installed by the
+    same rename that installs the merged data (_install_state), so
+    marker and state are never out of sync. Unlike
+    IdempotentParquetSink's per-batch overwrite, a MERGE is not
+    idempotent, so a marker visible before or after the data would
+    double-count a replayed batch. A replayed delivery of a committed
+    batch id is a no-op; _current_state recovers a stranded
+    ``state_old*`` (the numerically newest, markers riding along) if a
+    crash hit between the swap renames. The new state is written to
+    ``{state}_tmp{batch_id}`` — materialized before the swap — so a
+    crash mid-write leaves the live state untouched.
 
+    Every merge in this module is associative over batches (or, for the
+    carry-based state machines, over time-ordered batches), so a cold
+    replay over any slicing equals the one-shot batch computation —
+    which is what each entry's SQL oracle checks."""
+
+    def __init__(self, state_dir: str) -> None:
+        self.state = state_dir
+        os.makedirs(os.path.dirname(state_dir), exist_ok=True)
+
+    def is_committed(self, batch_id: int) -> bool:
+        """A batch is committed iff its ``_merged_<id>`` marker exists
+        inside the live state directory (see _install_state)."""
+        cur = _current_state(self.state)
+        return cur is not None and os.path.exists(
+            os.path.join(cur, f"_merged_{batch_id}")
+        )
+
+    def merge(self, batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
+        """The new state frame from this batch and the previous state
+        (``None`` before the first commit)."""
+        raise NotImplementedError
+
+    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+        if self.is_committed(batch_id):
+            return  # replayed delivery of a committed batch: no-op
+        cur = _current_state(self.state)
+        prev = None if cur is None else batch_df.sparkSession.read.parquet(cur)
+        tmp = f"{self.state}_tmp{batch_id}"
+        self.merge(batch_df, prev).write.mode("overwrite").parquet(tmp)
+        _install_state(self.state, tmp, batch_id)  # marker atomic w/ state
+
+
+def _fold(prev: DataFrame | None, inc: DataFrame, keys, *aggs) -> DataFrame:
+    """Merge a batch's partial aggregate ``inc`` into the previous state:
+    union and re-aggregate by ``keys`` (the identity before the first
+    commit)."""
+    if prev is None:
+        return inc
+    return prev.unionByName(inc).groupBy(*keys).agg(*aggs)
+
+
+def _range_bucket(raw: DataFrame, x, n: int = 4):
+    """Slice index of ``x`` over ``n`` equal-width ranges of
+    [min x, max x] — the replay order of an ordered ingest (``x`` = event
+    time, or an ingest sequence such as event_id). Equal ``x`` values
+    always land in the same slice, so per-key (ts, id) ordering is never
+    split across batches."""
+    mn, mx = raw.agg(F.min(x), F.max(x)).first()
+    span = max(int(mx) - int(mn), 1)
+    return F.least(
+        F.floor((x - F.lit(int(mn))) * n / F.lit(span + 1)), F.lit(n - 1)
+    )
+
+
+def _stage(raw: DataFrame, work: str, bucket, n: int) -> str:
+    """Write ``raw`` as ``n`` single-file parquet slices (``bucket`` ==
+    0..n-1) under ``work/src``, with strictly increasing file mtimes so
+    a maxFilesPerTrigger=1 file stream replays them in slice order — one
+    deterministic micro-batch per slice. Order-sensitive state (carries)
+    needs that order; for the associative merges it is merely
+    deterministic."""
     src = os.path.join(work, "src")
     os.makedirs(src)
+    now = time.time()
     for i in range(n):
         stage = os.path.join(work, f"stage_{i}")
-        (
-            raw.filter(F.col(key) % n == i)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(stage)
-        )
-        shutil.copy(
-            glob.glob(os.path.join(stage, "part-*.parquet"))[0],
-            os.path.join(src, f"{i:02d}.parquet"),
-        )
+        raw.filter(bucket == i).coalesce(1).write.mode("overwrite").parquet(stage)
+        dst = os.path.join(src, f"{i:02d}.parquet")
+        shutil.copy(glob.glob(os.path.join(stage, "part-*.parquet"))[0], dst)
+        os.utime(dst, (now + i, now + i))  # force pickup order
     return src
+
+
+def replay(raw: DataFrame, bucket, sink_for, read_off, n: int = 4,
+           work: str | None = None) -> DataFrame:
+    """Replay the static frame ``raw`` as ``n`` micro-batches through a
+    foreachBatch sink and return ``read_off`` of what the sink wrote.
+
+    ``raw`` is staged as ``n`` slices by ``bucket`` (a column valued
+    0..n-1: ``key % n`` or :func:`_range_bucket`), read back by a file
+    stream with maxFilesPerTrigger=1 and delivered to
+    ``sink_for(state_dir)`` under a checkpoint; the query is stopped
+    even when a batch fails, and the failure propagates.
+    ``read_off`` receives the parquet under ``state_dir``.
+
+    Scratch lifecycle: by default slices, checkpoint and state live in
+    a fresh temp directory deleted on return, so the read-off is
+    collected first — bounded by construction for every collecting
+    entry (aggregates, sketches, reports). With ``work`` given the
+    directory is cleared first and kept afterwards, and the read-off is
+    returned lazily: the path for corpus-sized outputs."""
+    from ..schemas import ensure_session_confs
+
+    spark = raw.sparkSession
+    ensure_session_confs(spark)
+    keep = work is not None
+    if keep:
+        shutil.rmtree(work, ignore_errors=True)
+    else:
+        work = tempfile.mkdtemp(prefix="graft_replay_")
+    try:
+        src = _stage(raw, work, bucket, n)
+        state = os.path.join(work, "state")
+        stream = (
+            spark.readStream.schema(raw.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        q = (
+            stream.writeStream.foreachBatch(sink_for(state))
+            .option("checkpointLocation", os.path.join(work, "ckpt"))
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        out = read_off(spark.read.parquet(state))
+        return out if keep else spark.createDataFrame(out.collect(), out.schema)
+    finally:
+        if not keep:
+            shutil.rmtree(work, ignore_errors=True)
+
+
+class RollupMergeSink(MergeSink):
+    """``foreachBatch`` MERGE for a continuous hourly rollup: each
+    batch's (hour, event_type) partial count and DECIMAL(38,4) sum are
+    merged into the state by re-aggregation — the engine-only form of a
+    Delta/Iceberg ``MERGE INTO`` continuous rollup. Decimal state keeps
+    the cross-batch accumulation exact."""
+
+    def merge(self, batch_df, prev):
+        inc = batch_df.groupBy(
+            F.date_trunc("hour", F.col("ts")).alias("hour"), "event_type"
+        ).agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(F.col("value").cast("decimal(18,4)"))
+            .cast("decimal(38,4)")
+            .alias("sum_dec"),
+        )
+        return _fold(
+            prev, inc, ["hour", "event_type"],
+            F.sum("n_events").alias("n_events"),
+            F.sum("sum_dec").cast("decimal(38,4)").alias("sum_dec"),
+        )
 
 
 def run_rollup_upsert_stream(spark, sf_dir: str):
@@ -170,78 +298,21 @@ def run_rollup_upsert_stream(spark, sf_dir: str):
     state (DECIMAL(38,4)) keeps the cross-batch accumulation exact; the
     double conversion happens once at the end via the string-cast
     convention (plans/spec.py)."""
-    import shutil
-    import tempfile
+    from ..schemas import load_table
 
-    from pyspark.sql import functions as F
-
-    from ..schemas import ensure_session_confs, normalize_nanos_ts
-
-    ensure_session_confs(spark)
-    work = tempfile.mkdtemp(prefix="graft_rollup_")
-    try:
-        raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-        src = _stage_slices(raw, work, "event_id")
-        state = os.path.join(work, "state")
-
-        def merge_batch(batch_df, batch_id: int) -> None:
-            if _state_committed(state, batch_id):
-                return  # at-least-once replay of a committed batch: no-op
-            bdf = normalize_nanos_ts(batch_df)
-            inc = (
-                bdf.groupBy(
-                    F.date_trunc("hour", F.col("ts")).alias("hour"), "event_type"
-                ).agg(
-                    F.count(F.lit(1)).alias("n_events"),
-                    F.sum(F.col("value").cast("decimal(18,4)"))
-                    .cast("decimal(38,4)")
-                    .alias("sum_dec"),
-                )
-            )
-            s = bdf.sparkSession
-            prev = _current_state(state)
-            if prev is not None:
-                inc = (
-                    s.read.parquet(prev)
-                    .unionByName(inc)
-                    .groupBy("hour", "event_type")
-                    .agg(
-                        F.sum("n_events").alias("n_events"),
-                        F.sum("sum_dec").cast("decimal(38,4)").alias("sum_dec"),
-                    )
-                )
-            tmp = f"{state}_tmp{batch_id}"
-            inc.write.mode("overwrite").parquet(tmp)  # materializes BEFORE swap
-            _install_state(state, tmp, batch_id)  # marker atomic w/ state
-
-        stream = (
-            spark.readStream.schema(raw.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        out = spark.read.parquet(state).select(
+    raw = load_table(spark, sf_dir, "events")
+    return replay(
+        raw, F.col("event_id") % 4, RollupMergeSink,
+        lambda st: st.select(
             F.unix_timestamp("hour").cast("long").alias("hour_s"),
             "event_type",
             "n_events",
             F.col("sum_dec").cast("string").cast("double").alias("sum_value"),
-        )
-        # Materialize before the finally deletes the backing files: the
-        # rollup state is small by construction (hour x event_type).
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        ),
+    )
 
 
-class FingerprintMergeSink:
+class FingerprintMergeSink(MergeSink):
     """``foreachBatch`` MERGE for streaming near-duplicate dedup: the
     incremental-corpus-ingest case. Each micro-batch's documents are
     fingerprinted (md5 of the sorted distinct token set —
@@ -250,33 +321,13 @@ class FingerprintMergeSink:
     fingerprint table keyed by fp with (keep_doc_id = min over all
     batches, n_copies = total over all batches).
 
-    Exactly-once: the ``_merged_N`` markers live INSIDE the state
-    directory and are installed by the same rename that installs the
-    merged data (_install_state), so marker and state are never out of
-    sync — unlike IdempotentParquetSink's per-batch overwrite, this
-    MERGE is not idempotent, so a marker visible before/after the data
-    would double-count a replayed batch. _current_state recovers a
-    stranded state_old* (markers ride along) if a crash hit between the
-    swap renames.
-
     min/sum are associative, so the final table is independent of batch
     boundaries: a cold replay over any slicing equals the one-shot batch
     dedup over the whole corpus — which is what the SQL oracle checks.
     At 100 TB each merge shuffles fingerprints (32-hex keys), never
     document bodies, and state size is bounded by |distinct fp|."""
 
-    def __init__(self, state_dir: str) -> None:
-        self.state = state_dir
-        os.makedirs(os.path.dirname(state_dir), exist_ok=True)
-
-    def is_committed(self, batch_id: int) -> bool:
-        return _state_committed(self.state, batch_id)
-
-    def __call__(self, batch_df, batch_id: int) -> None:
-        if self.is_committed(batch_id):
-            return  # replayed delivery of a committed batch: no-op
-        from pyspark.sql import functions as F
-
+    def merge(self, batch_df, prev):
         from ..operators.textops import fingerprint_col
 
         inc = (
@@ -289,23 +340,14 @@ class FingerprintMergeSink:
                 F.count(F.lit(1)).alias("n_copies"),
             )
         )
-        prev = _current_state(self.state)
-        if prev is not None:
-            inc = (
-                batch_df.sparkSession.read.parquet(prev)
-                .unionByName(inc)
-                .groupBy("fp")
-                .agg(
-                    F.min("keep_doc_id").alias("keep_doc_id"),
-                    F.sum("n_copies").cast("long").alias("n_copies"),
-                )
-            )
-        tmp = f"{self.state}_tmp{batch_id}"
-        inc.write.mode("overwrite").parquet(tmp)  # materializes BEFORE swap
-        _install_state(self.state, tmp, batch_id)  # marker atomic w/ state
+        return _fold(
+            prev, inc, ["fp"],
+            F.min("keep_doc_id").alias("keep_doc_id"),
+            F.sum("n_copies").cast("long").alias("n_copies"),
+        )
 
 
-class DocFreqMergeSink:
+class DocFreqMergeSink(MergeSink):
     """``foreachBatch`` MERGE for incremental corpus statistics: the
     TF-IDF document-frequency table maintained across micro-batches —
     the index a continuously-ingesting training pipeline needs so new
@@ -316,31 +358,16 @@ class DocFreqMergeSink:
     final state over any batch slicing equals the one-shot batch DF
     count over the union — which is what the SQL oracle checks. State
     schema: (term, df, n_docs) with n_docs (the corpus total) repeated
-    per row so the state stays one self-contained table.
+    per row so the state stays one self-contained table. At 100 TB each
+    merge shuffles terms (bounded by vocabulary, not corpus size), never
+    document bodies."""
 
-    Exactly-once follows the FingerprintMergeSink contract: in-state
-    ``_merged_N`` markers installed by the same rename as the data
-    (_install_state), crash recovery via the numerically newest
-    ``state_old*``. At 100 TB each merge shuffles terms (bounded by
-    vocabulary, not corpus size), never document bodies."""
-
-    def __init__(self, state_dir: str) -> None:
-        self.state = state_dir
-        os.makedirs(os.path.dirname(state_dir), exist_ok=True)
-
-    def is_committed(self, batch_id: int) -> bool:
-        return _state_committed(self.state, batch_id)
-
-    def __call__(self, batch_df, batch_id: int) -> None:
-        if self.is_committed(batch_id):
-            return  # replayed delivery of a committed batch: no-op
-        from pyspark.sql import functions as F
-
+    def merge(self, batch_df, prev):
         from ..operators.textops import tokens
 
         # n_docs counts ALL batch docs (incl. empty text) to mirror the
         # TF-IDF convention's corpus total (plans/llm_data.TEXT_TFIDF_SQL).
-        batch_docs = batch_df.count()
+        n_docs = batch_df.count()
         inc = (
             batch_df.filter(F.trim(F.col("text")) != "")
             .select(
@@ -350,25 +377,14 @@ class DocFreqMergeSink:
             .groupBy("term")
             .agg(F.count(F.lit(1)).cast("long").alias("df"))
         )
-        prev = _current_state(self.state)
-        prev_docs = 0
         if prev is not None:
-            s = batch_df.sparkSession
-            prev_state = s.read.parquet(prev)
             # 1-row scalar: the corpus total carried in the state
-            prev_docs = (prev_state.agg(F.max("n_docs")).collect()[0][0]) or 0
-            inc = (
-                prev_state.select("term", "df")
-                .unionByName(inc)
-                .groupBy("term")
-                .agg(F.sum("df").cast("long").alias("df"))
+            n_docs += prev.agg(F.max("n_docs")).collect()[0][0] or 0
+            inc = _fold(
+                prev.select("term", "df"), inc, ["term"],
+                F.sum("df").cast("long").alias("df"),
             )
-        out = inc.withColumn(
-            "n_docs", F.lit(int(prev_docs) + int(batch_docs)).cast("long")
-        )
-        tmp = f"{self.state}_tmp{batch_id}"
-        out.write.mode("overwrite").parquet(tmp)  # materializes BEFORE swap
-        _install_state(self.state, tmp, batch_id)  # marker atomic w/ state
+        return inc.withColumn("n_docs", F.lit(int(n_docs)).cast("long"))
 
 
 def run_tfidf_state_stream(spark, sf_dir: str, n_batches: int = 4):
@@ -385,36 +401,12 @@ def run_tfidf_state_stream(spark, sf_dir: str, n_batches: int = 4):
     amortization harness (streaming_amortization.py) replays at 1 and 8
     to demonstrate the fixed ~0.8 s/batch Structured Streaming floor
     amortizing instead of adjudicating it in prose."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from ..schemas import ensure_session_confs
-
-    ensure_session_confs(spark)
-    work = tempfile.mkdtemp(prefix="graft_tfidf_")
-    try:
-        raw = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-            "doc_id", "text"
-        )
-        src = _stage_slices(raw, work, "doc_id", n=n_batches)
-        sink = DocFreqMergeSink(os.path.join(work, "state"))
-        stream = (
-            spark.readStream.schema(raw.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        out = spark.read.parquet(sink.state).select(
+    raw = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id", "text"
+    )
+    return replay(
+        raw, F.col("doc_id") % n_batches, DocFreqMergeSink,
+        lambda st: st.select(
             "term",
             "df",
             "n_docs",
@@ -423,12 +415,9 @@ def run_tfidf_state_stream(spark, sf_dir: str, n_batches: int = 4):
                 + 1.0,
                 6,
             ).alias("idf"),
-        )
-        # Materialize before the finally deletes the backing files; the
-        # DF table is |vocabulary| rows by construction.
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        ),
+        n=n_batches,
+    )
 
 
 def run_neardup_dedup_stream(spark, sf_dir: str):
@@ -438,42 +427,16 @@ def run_neardup_dedup_stream(spark, sf_dir: str):
     (fp, keep_doc_id, n_copies). Cold replay == batch fingerprint dedup
     over the whole corpus (associative merge — see the sink docstring),
     so the oracle is the plain GROUP BY over per-document fingerprints."""
-    import shutil
-    import tempfile
-
-    from ..schemas import ensure_session_confs
-
-    ensure_session_confs(spark)
-    work = tempfile.mkdtemp(prefix="graft_neardup_")
-    try:
-        raw = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-            "doc_id", "text"
-        )
-        src = _stage_slices(raw, work, "doc_id")
-        sink = FingerprintMergeSink(os.path.join(work, "state"))
-        stream = (
-            spark.readStream.schema(raw.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        out = spark.read.parquet(sink.state).select("fp", "keep_doc_id", "n_copies")
-        # Materialize before the finally deletes the backing files; the
-        # fingerprint table is |distinct fp| rows of 32-hex keys.
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    raw = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id", "text"
+    )
+    return replay(
+        raw, F.col("doc_id") % 4, FingerprintMergeSink,
+        lambda st: st.select("fp", "keep_doc_id", "n_copies"),
+    )
 
 
-class CurationStatsMergeSink:
+class CurationStatsMergeSink(MergeSink):
     """``foreachBatch`` MERGE for incremental curation reporting: each
     arriving micro-batch of documents is decontaminated against a STATIC
     benchmark shingle set (eval suites are fixed up-front — the side
@@ -484,12 +447,9 @@ class CurationStatsMergeSink:
     Every verdict depends only on (document, static benchmark set) and
     every state column is a sum, so the merge is associative: a cold
     replay over any batch slicing equals the one-shot batch run over the
-    union — which is what the SQL oracle computes. Exactly-once follows
-    the FingerprintMergeSink contract (in-state ``_merged_N`` markers
-    installed by the same rename as the data, crash recovery via the
-    numerically newest ``state_old*``). At 100 TB each batch broadcasts
-    the benchmark set (MBs against TBs), shuffles only per-source
-    partial counters, and state stays |sources| rows."""
+    union — which is what the SQL oracle computes. At 100 TB each batch
+    broadcasts the benchmark set (MBs against TBs), shuffles only
+    per-source partial counters, and state stays |sources| rows."""
 
     COUNTERS = ("n_docs", "n_contaminated", "n_urls", "n_emails", "n_blocked")
 
@@ -501,19 +461,11 @@ class CurationStatsMergeSink:
         mod: int = 97,
         threshold: float = 0.2,
     ) -> None:
-        self.state = state_dir
+        super().__init__(state_dir)
         self.bench = bench_shingles
         self.n, self.mod, self.threshold = n, mod, threshold
-        os.makedirs(os.path.dirname(state_dir), exist_ok=True)
 
-    def is_committed(self, batch_id: int) -> bool:
-        return _state_committed(self.state, batch_id)
-
-    def __call__(self, batch_df, batch_id: int) -> None:
-        if self.is_committed(batch_id):
-            return  # replayed delivery of a committed batch: no-op
-        from pyspark.sql import functions as F
-
+    def merge(self, batch_df, prev):
         from ..operators import curation as C
 
         flags = C.decontaminate(
@@ -544,19 +496,10 @@ class CurationStatsMergeSink:
                 F.sum("n_blocked").cast("long").alias("n_blocked"),
             )
         )
-        prev = _current_state(self.state)
-        if prev is not None:
-            inc = (
-                batch_df.sparkSession.read.parquet(prev)
-                .unionByName(inc)
-                .groupBy("source")
-                .agg(
-                    *(F.sum(c).cast("long").alias(c) for c in self.COUNTERS)
-                )
-            )
-        tmp = f"{self.state}_tmp{batch_id}"
-        inc.write.mode("overwrite").parquet(tmp)  # materializes BEFORE swap
-        _install_state(self.state, tmp, batch_id)  # marker atomic w/ state
+        return _fold(
+            prev, inc, ["source"],
+            *(F.sum(c).cast("long").alias(c) for c in self.COUNTERS),
+        )
 
 
 def run_curation_stats_stream(spark, sf_dir: str):
@@ -566,63 +509,31 @@ def run_curation_stats_stream(spark, sf_dir: str):
     from the static corpus slice (doc_id % DECON_MOD == 0 — in
     production a materialized eval-suite table); returns the final
     per-source counter table."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
     from ..operators.dedup import _explode_shingles, _shingle_arrays
     from ..plans.curation import DECON_MOD, DECON_N, DECON_THRESHOLD
-    from ..schemas import ensure_session_confs
 
-    ensure_session_confs(spark)
-    work = tempfile.mkdtemp(prefix="graft_curstats_")
-    try:
-        raw = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-            "doc_id", "text", "source"
-        )
-        bench = (
-            _explode_shingles(
-                _shingle_arrays(
-                    raw.filter(F.col("doc_id") % DECON_MOD == 0), DECON_N
-                )
+    raw = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id", "text", "source"
+    )
+    bench = (
+        _explode_shingles(
+            _shingle_arrays(
+                raw.filter(F.col("doc_id") % DECON_MOD == 0), DECON_N
             )
-            .select("shingle")
-            .distinct()
         )
-        src = _stage_slices(raw, work, "doc_id")
-        sink = CurationStatsMergeSink(
-            os.path.join(work, "state"),
-            bench,
-            n=DECON_N,
-            mod=DECON_MOD,
-            threshold=DECON_THRESHOLD,
-        )
-        stream = (
-            spark.readStream.schema(raw.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        out = spark.read.parquet(sink.state).select(
-            "source", "n_docs", "n_contaminated", "n_urls", "n_emails", "n_blocked"
-        )
-        # Materialize before the finally deletes the backing files; the
-        # report is |sources| rows by construction.
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        .select("shingle")
+        .distinct()
+    )
+    return replay(
+        raw, F.col("doc_id") % 4,
+        lambda st: CurationStatsMergeSink(
+            st, bench, n=DECON_N, mod=DECON_MOD, threshold=DECON_THRESHOLD
+        ),
+        lambda st: st.select("source", *CurationStatsMergeSink.COUNTERS),
+    )
 
 
-class IvfListMergeSink:
+class IvfListMergeSink(MergeSink):
     """``foreachBatch`` MERGE for incremental ANN index maintenance: new
     embedding vectors arrive batch by batch and are assigned to the
     inverted list of their nearest centroid under a STATIC coarse
@@ -637,25 +548,15 @@ class IvfListMergeSink:
     DECIMAL sum — decimal so merge order can't perturb float addition),
     so a cold replay over any batch slicing equals the one-shot batch
     assignment — what the SQL oracle computes by replaying the same
-    unrolled-Lloyd fit as CTEs. Exactly-once follows the
-    FingerprintMergeSink contract (in-state ``_merged_N`` markers,
-    rename-aside crash recovery). At 100 TB each batch broadcasts the
+    unrolled-Lloyd fit as CTEs. At 100 TB each batch broadcasts the
     k-row centroid table and shuffles |centroids| partial rows — never
     embeddings."""
 
     def __init__(self, state_dir: str, centroids) -> None:
-        self.state = state_dir
+        super().__init__(state_dir)
         self.cents = centroids  # (cluster INT, c ARRAY<DOUBLE>), k rows
-        os.makedirs(os.path.dirname(state_dir), exist_ok=True)
 
-    def is_committed(self, batch_id: int) -> bool:
-        return _state_committed(self.state, batch_id)
-
-    def __call__(self, batch_df, batch_id: int) -> None:
-        if self.is_committed(batch_id):
-            return  # replayed delivery of a committed batch: no-op
-        from pyspark.sql import functions as F
-
+    def merge(self, batch_df, prev):
         from ..operators.similarity import _sq_dist
 
         vecs = batch_df.select(
@@ -680,21 +581,12 @@ class IvfListMergeSink:
             .cast("decimal(28,6)")
             .alias("sum_d"),
         )
-        prev = _current_state(self.state)
-        if prev is not None:
-            inc = (
-                batch_df.sparkSession.read.parquet(prev)
-                .unionByName(inc)
-                .groupBy("cluster")
-                .agg(
-                    F.sum("n_vecs").cast("long").alias("n_vecs"),
-                    F.min("min_vec_id").alias("min_vec_id"),
-                    F.sum("sum_d").cast("decimal(28,6)").alias("sum_d"),
-                )
-            )
-        tmp = f"{self.state}_tmp{batch_id}"
-        inc.write.mode("overwrite").parquet(tmp)  # materializes BEFORE swap
-        _install_state(self.state, tmp, batch_id)  # marker atomic w/ state
+        return _fold(
+            prev, inc, ["cluster"],
+            F.sum("n_vecs").cast("long").alias("n_vecs"),
+            F.min("min_vec_id").alias("min_vec_id"),
+            F.sum("sum_d").cast("decimal(28,6)").alias("sum_d"),
+        )
 
 
 def run_ivf_state_stream(spark, sf_dir: str):
@@ -705,58 +597,31 @@ def run_ivf_state_stream(spark, sf_dir: str):
     materialized to a k-row literal; returns the final per-list stats
     with the decimal distance sum converted via the string-cast
     convention."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
     from ..functions.numeric import _dec_to_double
     from ..operators.similarity import _kmeans_fit
-    from ..schemas import ensure_session_confs
 
-    ensure_session_confs(spark)
-    work = tempfile.mkdtemp(prefix="graft_ivfstate_")
-    try:
-        raw = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-            "vec_id", "embedding"
-        )
-        vecs = raw.select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        )
-        cents_df, _ = _kmeans_fit(vecs, k=8, iters=2)
-        # k rows: materialize once so the per-batch broadcast doesn't
-        # refit the quantizer (and the fit plan dies with the stream)
-        cents = spark.createDataFrame(cents_df.collect(), cents_df.schema)
-        src = _stage_slices(raw, work, "vec_id")
-        sink = IvfListMergeSink(os.path.join(work, "state"), cents)
-        stream = (
-            spark.readStream.schema(raw.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        out = spark.read.parquet(sink.state).select(
+    raw = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        "vec_id", "embedding"
+    )
+    vecs = raw.select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    )
+    cents_df, _ = _kmeans_fit(vecs, k=8, iters=2)
+    # k rows: materialize once so the per-batch broadcast doesn't
+    # refit the quantizer (and the fit plan dies with the stream)
+    cents = spark.createDataFrame(cents_df.collect(), cents_df.schema)
+    return replay(
+        raw, F.col("vec_id") % 4, lambda st: IvfListMergeSink(st, cents),
+        lambda st: st.select(
             "cluster",
             "n_vecs",
             "min_vec_id",
             _dec_to_double(F.col("sum_d")).alias("sum_dist"),
-        )
-        # Materialize before the finally deletes the backing files; the
-        # list-stats table is |centroids| rows by construction.
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        ),
+    )
 
 
-class TokenAccountingMergeSink:
+class TokenAccountingMergeSink(MergeSink):
     """``foreachBatch`` MERGE for running per-source token accounting:
     each arriving micro-batch of documents is BPE-segmented under the
     STATIC merge table (operators/textops.bpe_apply_stats — the fixed
@@ -769,27 +634,13 @@ class TokenAccountingMergeSink:
     and every state column is a sum, so the merge is associative: a cold
     replay over any batch slicing equals the one-shot batch
     bpe_apply_stats over the union — which is what the SQL oracle
-    computes. Exactly-once follows the FingerprintMergeSink contract
-    (in-state ``_merged_N`` markers installed by the same rename as the
-    data, crash recovery via the numerically newest ``state_old*``). At
-    100 TB the segmentation is narrow per-row string work (zero
-    shuffle), each batch shuffles only |sources| partial counter rows,
-    and state stays |sources| rows."""
+    computes. At 100 TB the segmentation is narrow per-row string work
+    (zero shuffle), each batch shuffles only |sources| partial counter
+    rows, and state stays |sources| rows."""
 
     COUNTERS = ("n_docs", "n_alpha_chars", "n_bpe_tokens", "n_merges_applied")
 
-    def __init__(self, state_dir: str) -> None:
-        self.state = state_dir
-        os.makedirs(os.path.dirname(state_dir), exist_ok=True)
-
-    def is_committed(self, batch_id: int) -> bool:
-        return _state_committed(self.state, batch_id)
-
-    def __call__(self, batch_df, batch_id: int) -> None:
-        if self.is_committed(batch_id):
-            return  # replayed delivery of a committed batch: no-op
-        from pyspark.sql import functions as F
-
+    def merge(self, batch_df, prev):
         from ..operators import textops as T
 
         inc = (
@@ -803,17 +654,10 @@ class TokenAccountingMergeSink:
                 F.sum("n_merges_applied").cast("long").alias("n_merges_applied"),
             )
         )
-        prev = _current_state(self.state)
-        if prev is not None:
-            inc = (
-                batch_df.sparkSession.read.parquet(prev)
-                .unionByName(inc)
-                .groupBy("source")
-                .agg(*(F.sum(c).cast("long").alias(c) for c in self.COUNTERS))
-            )
-        tmp = f"{self.state}_tmp{batch_id}"
-        inc.write.mode("overwrite").parquet(tmp)  # materializes BEFORE swap
-        _install_state(self.state, tmp, batch_id)  # marker atomic w/ state
+        return _fold(
+            prev, inc, ["source"],
+            *(F.sum(c).cast("long").alias(c) for c in self.COUNTERS),
+        )
 
 
 def run_token_accounting_stream(spark, sf_dir: str):
@@ -821,44 +665,16 @@ def run_token_accounting_stream(spark, sf_dir: str):
     as FOUR micro-batches (doc_id % 4 slices) through a
     TokenAccountingMergeSink; returns the final per-source token
     ledger."""
-    import shutil
-    import tempfile
-
-    from ..schemas import ensure_session_confs
-
-    ensure_session_confs(spark)
-    work = tempfile.mkdtemp(prefix="graft_tokacct_")
-    try:
-        raw = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-            "doc_id", "text", "source"
-        )
-        src = _stage_slices(raw, work, "doc_id")
-        sink = TokenAccountingMergeSink(os.path.join(work, "state"))
-        stream = (
-            spark.readStream.schema(raw.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        out = spark.read.parquet(sink.state).select(
-            "source", "n_docs", "n_alpha_chars", "n_bpe_tokens", "n_merges_applied"
-        )
-        # Materialize before the finally deletes the backing files; the
-        # ledger is |sources| rows by construction.
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    raw = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id", "text", "source"
+    )
+    return replay(
+        raw, F.col("doc_id") % 4, TokenAccountingMergeSink,
+        lambda st: st.select("source", *TokenAccountingMergeSink.COUNTERS),
+    )
 
 
-class HistogramMergeSink:
+class HistogramMergeSink(MergeSink):
     """``foreachBatch`` MERGE for streaming quantile summaries: each
     arriving micro-batch of events is bucketed into a fixed-width
     histogram under STATIC bounds (min/max calibrated once on the static
@@ -871,25 +687,15 @@ class HistogramMergeSink:
 
     Bucket assignment depends only on (value, static bounds) and counts
     are sums, so cold replay over any batch slicing equals the one-shot
-    batch histogram — what the SQL oracle computes. Exactly-once follows
-    the FingerprintMergeSink contract (in-state ``_merged_N`` markers,
-    rename-aside crash recovery). At 100 TB each batch shuffles at most
-    |event_types| x n_buckets partial rows and state stays that size —
-    quantile serving never re-touches raw events."""
+    batch histogram — what the SQL oracle computes. At 100 TB each batch
+    shuffles at most |event_types| x n_buckets partial rows and state
+    stays that size — quantile serving never re-touches raw events."""
 
     def __init__(self, state_dir: str, mn: float, mx: float, n_buckets: int) -> None:
-        self.state = state_dir
+        super().__init__(state_dir)
         self.mn, self.mx, self.n_buckets = mn, mx, n_buckets
-        os.makedirs(os.path.dirname(state_dir), exist_ok=True)
 
-    def is_committed(self, batch_id: int) -> bool:
-        return _state_committed(self.state, batch_id)
-
-    def __call__(self, batch_df, batch_id: int) -> None:
-        if self.is_committed(batch_id):
-            return  # replayed delivery of a committed batch: no-op
-        from pyspark.sql import functions as F
-
+    def merge(self, batch_df, prev):
         B = self.n_buckets
         x = F.col("value")
         if self.mx == self.mn:
@@ -907,17 +713,10 @@ class HistogramMergeSink:
             .groupBy("event_type", "bucket")
             .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
         )
-        prev = _current_state(self.state)
-        if prev is not None:
-            inc = (
-                batch_df.sparkSession.read.parquet(prev)
-                .unionByName(inc)
-                .groupBy("event_type", "bucket")
-                .agg(F.sum("cnt").cast("long").alias("cnt"))
-            )
-        tmp = f"{self.state}_tmp{batch_id}"
-        inc.write.mode("overwrite").parquet(tmp)  # materializes BEFORE swap
-        _install_state(self.state, tmp, batch_id)  # marker atomic w/ state
+        return _fold(
+            prev, inc, ["event_type", "bucket"],
+            F.sum("cnt").cast("long").alias("cnt"),
+        )
 
 
 def run_quantile_state_stream(spark, sf_dir: str):
@@ -927,46 +726,19 @@ def run_quantile_state_stream(spark, sf_dir: str):
     table (1-row min/max collect — the static side input, like the IVF
     stream's offline quantizer); returns the per-event-type and
     '__all__' quantile report read off the merged state."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
     from ..plans.relational import _QPM_BUCKETS, _QPM_QS
-    from ..schemas import ensure_session_confs
+    from ..schemas import load_table
 
-    ensure_session_confs(spark)
-    work = tempfile.mkdtemp(prefix="graft_qstate_")
-    try:
-        raw = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-            "event_id", "event_type", "value"
-        )
-        mn, mx = raw.agg(F.min("value"), F.max("value")).first()
-        src = _stage_slices(raw, work, "event_id")
-        sink = HistogramMergeSink(
-            os.path.join(work, "state"), float(mn), float(mx), _QPM_BUCKETS
-        )
-        stream = (
-            spark.readStream.schema(raw.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    raw = load_table(spark, sf_dir, "events").select(
+        "event_id", "event_type", "value"
+    )
+    mn, mx = raw.agg(F.min("value"), F.max("value")).first()
+    B = _QPM_BUCKETS
 
+    def read_off(partials):
         # Serving read-off from state (|types| x 64 rows): per-type and
         # '__all__' histograms -> cumulative counts -> quantile pick,
         # the agg_quantile_partial_merge recipe.
-        B = _QPM_BUCKETS
-        partials = spark.read.parquet(sink.state)
         per_type = partials.select(
             F.col("event_type").alias("scope"), "bucket", "cnt"
         )
@@ -988,7 +760,7 @@ def run_quantile_state_stream(spark, sf_dir: str):
             F.sum("cnt").over(wcum).alias("cum"),
             F.sum("cnt").over(wtot).alias("total"),
         )
-        out = (
+        return (
             cum.select(
                 "scope",
                 "bucket",
@@ -1017,49 +789,15 @@ def run_quantile_state_stream(spark, sf_dir: str):
                 "n_rows",
             )
         )
-        # Materialize before the finally deletes the backing files; the
-        # report is |types+1| x |qs| rows by construction.
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
-
-def _stage_time_slices(raw, work: str, ts_col: str, n: int = 4) -> str:
-    """Write ``raw`` as ``n`` single-file parquet slices partitioned by
-    TIME RANGE (equal-width spans of [min ts, max ts]) under
-    ``work/src``, with strictly increasing file mtimes so the
-    maxFilesPerTrigger=1 file stream replays them in event-time order —
-    the arrival order a real time-ordered ingest has, which
-    order-sensitive state (pattern carry) requires. Same-timestamp
-    events always land in the same slice, so per-key (ts, id) ordering
-    is never split across batches."""
-    import glob
-    import shutil
-    import time
-
-    from pyspark.sql import functions as F
-
-    mn, mx = raw.agg(
-        F.min(F.unix_micros(F.col(ts_col))), F.max(F.unix_micros(F.col(ts_col)))
-    ).first()
-    span = max(int(mx) - int(mn), 1)
-    bucket = F.least(
-        F.floor((F.unix_micros(F.col(ts_col)) - F.lit(int(mn))) * n / F.lit(span + 1)),
-        F.lit(n - 1),
+    return replay(
+        raw, F.col("event_id") % 4,
+        lambda st: HistogramMergeSink(st, float(mn), float(mx), B),
+        read_off,
     )
-    src = os.path.join(work, "src")
-    os.makedirs(src)
-    now = time.time()
-    for i in range(n):
-        stage = os.path.join(work, f"stage_{i}")
-        raw.filter(bucket == i).coalesce(1).write.mode("overwrite").parquet(stage)
-        dst = os.path.join(src, f"{i:02d}.parquet")
-        shutil.copy(glob.glob(os.path.join(stage, "part-*.parquet"))[0], dst)
-        os.utime(dst, (now + i, now + i))  # force pickup order
-    return src
 
 
-class PatternMatchSink:
+class PatternMatchSink(MergeSink):
     """``foreachBatch`` state machine for CROSS-BATCH event-pattern
     detection (streaming MATCH_RECOGNIZE): batches arrive in event-time
     order and each user's last ``plen - 1`` events are carried forward
@@ -1078,27 +816,15 @@ class PatternMatchSink:
     emitted matches; per batch one window pass over carry+batch."""
 
     def __init__(self, state_dir: str, pattern: tuple[str, ...]) -> None:
-        self.state = state_dir
+        super().__init__(state_dir)
         self.pattern = pattern
-        os.makedirs(os.path.dirname(state_dir), exist_ok=True)
 
-    def is_committed(self, batch_id: int) -> bool:
-        return _state_committed(self.state, batch_id)
-
-    def __call__(self, batch_df, batch_id: int) -> None:
-        if self.is_committed(batch_id):
-            return  # replayed delivery of a committed batch: no-op
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
-        spark = batch_df.sparkSession
+    def merge(self, batch_df, prev):
         plen = len(self.pattern)
         ev_cols = ["user_id", "ts", "event_id", "event_type"]
-        prev = _current_state(self.state)
         if prev is not None:
-            st = spark.read.parquet(prev)
-            carry = st.filter(F.col("kind") == "carry").select(*ev_cols)
-            matches_prev = st.filter(F.col("kind") == "match")
+            carry = prev.filter(F.col("kind") == "carry").select(*ev_cols)
+            matches_prev = prev.filter(F.col("kind") == "match")
         else:
             carry = batch_df.select(*ev_cols).limit(0)
             matches_prev = None
@@ -1158,12 +884,10 @@ class PatternMatchSink:
         new_state = carry_full.unionByName(match_full)
         if matches_prev is not None:
             new_state = new_state.unionByName(matches_prev)
-        tmp = f"{self.state}_tmp{batch_id}"
-        new_state.write.mode("overwrite").parquet(tmp)
-        _install_state(self.state, tmp, batch_id)
+        return new_state
 
 
-class ErrorBurstSink:
+class ErrorBurstSink(MergeSink):
     """``foreachBatch`` state machine for CROSS-BATCH consecutive-run
     detection — the streaming twin of the gaps-and-islands burst
     detector (plans/analytics.dq_error_burst_detector): batches arrive
@@ -1177,8 +901,7 @@ class ErrorBurstSink:
     user's next batch starts with a non-error. Unbroken trailing runs
     finalize at read-off (a batch scan over a finite table counts its
     trailing runs too, so cold replay over any time slicing equals the
-    one-shot batch detector — the SQL oracle verbatim). Exactly-once
-    follows the FingerprintMergeSink contract.
+    one-shot batch detector — the SQL oracle verbatim).
 
     100 TB shape: per batch, two per-user windows over batch rows only
     plus O(#active users) joins against the carry frame; state is one
@@ -1188,27 +911,15 @@ class ErrorBurstSink:
                    "first_event_id"]
 
     def __init__(self, state_dir: str, min_len: int = 3) -> None:
-        self.state = state_dir
+        super().__init__(state_dir)
         self.min_len = min_len
-        os.makedirs(os.path.dirname(state_dir), exist_ok=True)
 
-    def is_committed(self, batch_id: int) -> bool:
-        return _state_committed(self.state, batch_id)
-
-    def __call__(self, batch_df, batch_id: int) -> None:
-        if self.is_committed(batch_id):
-            return  # replayed delivery of a committed batch: no-op
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
-        spark = batch_df.sparkSession
-        prev = _current_state(self.state)
+    def merge(self, batch_df, prev):
         if prev is not None:
-            st = spark.read.parquet(prev)
-            carry = st.filter(F.col("kind") == "carry").select(
+            carry = prev.filter(F.col("kind") == "carry").select(
                 *self._CARRY_COLS
             )
-            runs_prev = st.filter(F.col("kind") == "run")
+            runs_prev = prev.filter(F.col("kind") == "run")
         else:
             carry = None
             runs_prev = None
@@ -1299,41 +1010,10 @@ class ErrorBurstSink:
         )
         if runs_prev is not None:
             rows = rows.unionByName(runs_prev)
-        tmp = f"{self.state}_tmp{batch_id}"
-        rows.write.mode("overwrite").parquet(tmp)
-        _install_state(self.state, tmp, batch_id)
+        return rows
 
 
-def _stage_id_slices(raw, work: str, id_col: str, n: int = 4) -> str:
-    """Sibling of _stage_time_slices that partitions by equal-width
-    ranges of an INTEGER sequence column instead of a timestamp — the
-    replay order an INGEST-sequenced stream has (event_id is the
-    arrival order; event time may run backwards inside it, which is
-    exactly what the out-of-order audit measures)."""
-    import glob
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    mn, mx = raw.agg(F.min(id_col), F.max(id_col)).first()
-    span = max(int(mx) - int(mn), 1)
-    bucket = F.least(
-        F.floor((F.col(id_col) - F.lit(int(mn))) * n / F.lit(span + 1)),
-        F.lit(n - 1),
-    )
-    src = os.path.join(work, "src")
-    os.makedirs(src)
-    for i in range(n):
-        stage = os.path.join(work, f"stage_{i}")
-        raw.filter(bucket == i).coalesce(1).write.mode("overwrite").parquet(
-            stage
-        )
-        dst = os.path.join(src, f"{i:02d}.parquet")
-        shutil.copy(glob.glob(os.path.join(stage, "part-*.parquet"))[0], dst)
-    return src
-
-
-class OutOfOrderAuditSink:
+class OutOfOrderAuditSink(MergeSink):
     """``foreachBatch`` state machine for the CROSS-BATCH out-of-order
     arrival audit — the streaming twin of plans/analytics.
     dq_out_of_order_audit: batches arrive in INGEST order (event_id
@@ -1347,15 +1027,14 @@ class OutOfOrderAuditSink:
     batch-order independent, but the carry SPLICE pairs a user's
     carried last event with their next batch's first event — adjacency
     that only means "consecutive by event_id" when micro-batches are
-    delivered in ascending event_id order (which _stage_id_slices'
-    FileStreamSource staging guarantees). Equality with the one-shot
-    batch audit therefore holds for ingest-ordered delivery; under
-    out-of-order delivery the sink DEGRADES SAFELY rather than
+    delivered in ascending event_id order (which the event_id range
+    slicing of run_out_of_order_stream guarantees). Equality with the
+    one-shot batch audit therefore holds for ingest-ordered delivery;
+    under out-of-order delivery the sink DEGRADES SAFELY rather than
     fabricating pairs: the carry keeps the max-by-event_id row across
     batches (a late batch can never regress it) and the splice is
     guarded to fire only when the carried event_id precedes the batch
     row's event_id (a non-adjacent pair is skipped, never invented).
-    Exactly-once follows the FingerprintMergeSink contract.
 
     100 TB shape: per batch, one per-user lag window over batch rows
     only + an O(#active users) join against the carry; state is one
@@ -1365,23 +1044,9 @@ class OutOfOrderAuditSink:
     _COLS = ["kind", "event_type", "n_pairs", "n_backwards",
              "max_backwards_seconds", "user_id", "last_epo", "last_eid"]
 
-    def __init__(self, state_dir: str) -> None:
-        self.state = state_dir
-        os.makedirs(os.path.dirname(state_dir), exist_ok=True)
-
-    def is_committed(self, batch_id: int) -> bool:
-        return _state_committed(self.state, batch_id)
-
-    def __call__(self, batch_df, batch_id: int) -> None:
-        if self.is_committed(batch_id):
-            return
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
-        spark = batch_df.sparkSession
-        prev = _current_state(self.state)
+    def merge(self, batch_df, prev):
         if prev is not None:
-            st = spark.read.parquet(prev)
+            st = prev
             if "last_eid" not in st.columns:
                 # Legacy state written before the carry tracked
                 # last_eid: treat the carried event_id as unknown
@@ -1481,7 +1146,7 @@ class OutOfOrderAuditSink:
         else:
             new_carry = last_in_batch
 
-        rows = merged.select(
+        return merged.select(
             F.lit("type").alias("kind"), "event_type", "n_pairs",
             "n_backwards", "max_backwards_seconds",
             F.lit(None).cast("long").alias("user_id"),
@@ -1497,9 +1162,6 @@ class OutOfOrderAuditSink:
                 "user_id", "last_epo", "last_eid",
             )
         )
-        tmp = f"{self.state}_tmp{batch_id}"
-        rows.write.mode("overwrite").parquet(tmp)
-        _install_state(self.state, tmp, batch_id)
 
 
 def run_out_of_order_stream(spark, sf_dir: str):
@@ -1508,47 +1170,22 @@ def run_out_of_order_stream(spark, sf_dir: str):
     through an OutOfOrderAuditSink; returns the per-type report with
     backwards_ppm derived at read-off — exactly the one-shot batch
     audit's frame."""
-    import shutil
-    import tempfile
+    from ..schemas import load_table
 
-    from pyspark.sql import functions as F
-
-    from ..schemas import ensure_session_confs, load_table
-
-    ensure_session_confs(spark)
-    work = tempfile.mkdtemp(prefix="graft_ooo_")
-    try:
-        raw = load_table(spark, sf_dir, "events").select(
-            "user_id", "event_id", "ts", "event_type"
-        )
-        src = _stage_id_slices(raw, work, "event_id")
-        sink = OutOfOrderAuditSink(os.path.join(work, "state"))
-        stream = (
-            spark.readStream.schema(raw.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        st = spark.read.parquet(sink.state)
-        out = st.filter(F.col("kind") == "type").select(
+    raw = load_table(spark, sf_dir, "events").select(
+        "user_id", "event_id", "ts", "event_type"
+    )
+    return replay(
+        raw, _range_bucket(raw, F.col("event_id")), OutOfOrderAuditSink,
+        lambda st: st.filter(F.col("kind") == "type").select(
             "event_type", "n_pairs", "n_backwards", "max_backwards_seconds",
             F.round(
                 F.col("n_backwards").cast("double") * 1000000
                 / F.col("n_pairs"),
                 6,
             ).alias("backwards_ppm"),
-        )
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        ),
+    )
 
 
 def run_error_burst_stream(spark, sf_dir: str, min_len: int = 3):
@@ -1556,45 +1193,19 @@ def run_error_burst_stream(spark, sf_dir: str, min_len: int = 3):
     as FOUR time-ordered micro-batches through an ErrorBurstSink;
     returns emitted runs plus finalized trailing carries (>= min_len)
     — exactly the one-shot batch detector's frame."""
-    import shutil
-    import tempfile
+    from ..schemas import load_table
 
-    from pyspark.sql import functions as F
-
-    from ..schemas import ensure_session_confs
-
-    ensure_session_confs(spark)
-    work = tempfile.mkdtemp(prefix="graft_burst_")
-    try:
-        from ..schemas import load_table
-
-        raw = load_table(spark, sf_dir, "events").select(
-            "user_id", "event_id", "ts", "event_type"
-        )
-        src = _stage_time_slices(raw, work, "ts")
-        sink = ErrorBurstSink(os.path.join(work, "state"), min_len)
-        stream = (
-            spark.readStream.schema(raw.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        st = spark.read.parquet(sink.state)
-        out = st.filter(
+    raw = load_table(spark, sf_dir, "events").select(
+        "user_id", "event_id", "ts", "event_type"
+    )
+    return replay(
+        raw, _range_bucket(raw, F.unix_micros("ts")),
+        lambda st: ErrorBurstSink(st, min_len),
+        lambda st: st.filter(
             (F.col("kind") == "run")
             | ((F.col("kind") == "carry") & (F.col("run_len") >= min_len))
-        ).select(*ErrorBurstSink._CARRY_COLS)
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        ).select(*ErrorBurstSink._CARRY_COLS),
+    )
 
 
 def run_pattern_match_stream(spark, sf_dir: str):
@@ -1602,57 +1213,28 @@ def run_pattern_match_stream(spark, sf_dir: str):
     as FOUR time-ordered micro-batches through a PatternMatchSink for
     the view->click->purchase sequence; returns the accumulated match
     table (same shape as the batch pattern_match_sequence entry)."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
     from ..plans.analytics import _PATTERN
-    from ..schemas import ensure_session_confs, load_table
+    from ..schemas import load_table
 
-    ensure_session_confs(spark)
-    work = tempfile.mkdtemp(prefix="graft_patstate_")
-    try:
-        # load_table (not a raw parquet read): the loader's NTZ->TZ
-        # timestamp normalization is what makes unix_micros legal here
-        raw = load_table(spark, sf_dir, "events").select(
-            "user_id", "ts", "event_id", "event_type"
-        )
-        src = _stage_time_slices(raw, work, "ts")
-        sink = PatternMatchSink(os.path.join(work, "state"), _PATTERN)
-        stream = (
-            spark.readStream.schema(raw.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        out = (
-            spark.read.parquet(sink.state)
-            .filter(F.col("kind") == "match")
-            .select(
-                "user_id",
-                "start_event_id",
-                "end_event_id",
-                "start_ts_us",
-                "duration_us",
-            )
-        )
-        # Materialize before the finally deletes the backing files; the
-        # match table is bounded by the batch entry's own result size.
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    # load_table (not a raw parquet read): the loader's NTZ->TZ
+    # timestamp normalization is what makes unix_micros legal here
+    raw = load_table(spark, sf_dir, "events").select(
+        "user_id", "ts", "event_id", "event_type"
+    )
+    return replay(
+        raw, _range_bucket(raw, F.unix_micros("ts")),
+        lambda st: PatternMatchSink(st, _PATTERN),
+        lambda st: st.filter(F.col("kind") == "match").select(
+            "user_id",
+            "start_event_id",
+            "end_event_id",
+            "start_ts_us",
+            "duration_us",
+        ),
+    )
 
 
-class CusumStateSink:
+class CusumStateSink(MergeSink):
     """``foreachBatch`` state machine for CROSS-BATCH CUSUM drift
     detection: per user the ONLY carried state is the current cusum
     value S (one decimal per active user — O(1) state, the smallest
@@ -1677,28 +1259,13 @@ class CusumStateSink:
     K = "0.5"
     H = "5.0"
 
-    def __init__(self, state_dir: str) -> None:
-        self.state = state_dir
-        os.makedirs(os.path.dirname(state_dir), exist_ok=True)
-
-    def is_committed(self, batch_id: int) -> bool:
-        return _state_committed(self.state, batch_id)
-
-    def __call__(self, batch_df, batch_id: int) -> None:
-        if self.is_committed(batch_id):
-            return
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
-        spark = batch_df.sparkSession
+    def merge(self, batch_df, prev):
         dec = "decimal(38,6)"
-        prev = _current_state(self.state)
         if prev is not None:
-            st = spark.read.parquet(prev)
-            carry = st.filter(F.col("kind") == "carry").select(
+            carry = prev.filter(F.col("kind") == "carry").select(
                 "user_id", F.col("payload").cast(dec).alias("s0")
             )
-            out_prev = st.filter(F.col("kind") == "out")
+            out_prev = prev.filter(F.col("kind") == "out")
         else:
             carry = None
             out_prev = None
@@ -1765,9 +1332,7 @@ class CusumStateSink:
             parts = parts.unionByName(
                 out_prev.select("kind", "event_id", "user_id", "payload")
             )
-        tmp = f"{self.state}.tmp-{batch_id}"
-        parts.write.mode("overwrite").parquet(tmp)
-        _install_state(self.state, tmp, batch_id)
+        return parts
 
 
 def run_cusum_stream(spark, sf_dir: str):
@@ -1775,43 +1340,19 @@ def run_cusum_stream(spark, sf_dir: str):
     micro-batches through CusumStateSink; returns the accumulated
     per-event cusum table (same shape/values as the batch
     timeseries_cusum_drift entry — its SQL oracle)."""
-    import shutil
+    from ..schemas import load_table
 
-    from pyspark.sql import functions as F
-
-    from ..schemas import ensure_session_confs, load_table
-
-    ensure_session_confs(spark)
+    raw = load_table(spark, sf_dir, "events").select(
+        "user_id", "ts", "event_id", "value"
+    )
     # PID-keyed scratch, cleaned at START and left on disk afterwards:
     # the per-event output is corpus-sized, so (unlike the bounded
     # match/aggregate sinks) collecting it to the driver is not an
     # option — the entry returns a lazy reader over the state table.
     tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    work = f"/tmp/spark_graft_cusumstate/{tag}-{os.getpid()}"
-    shutil.rmtree(work, ignore_errors=True)
-    raw = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id", "value"
-    )
-    src = _stage_time_slices(raw, work, "ts")
-    sink = CusumStateSink(os.path.join(work, "state"))
-    stream = (
-        spark.readStream.schema(raw.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return (
-        spark.read.parquet(sink.state)
-        .filter(F.col("kind") == "out")
-        .select(
+    return replay(
+        raw, _range_bucket(raw, F.unix_micros("ts")), CusumStateSink,
+        lambda st: st.filter(F.col("kind") == "out").select(
             "event_id",
             "user_id",
             F.round(
@@ -1822,11 +1363,12 @@ def run_cusum_stream(spark, sf_dir: str):
                 F.col("payload").cast("decimal(38,6)")
                 > F.lit(CusumStateSink.H).cast("decimal(38,6)")
             ).alias("drifting"),
-        )
+        ),
+        work=f"/tmp/spark_graft_cusumstate/{tag}-{os.getpid()}",
     )
 
 
-class UrlDedupMergeSink:
+class UrlDedupMergeSink(MergeSink):
     """``foreachBatch`` MERGE for streaming URL-canonicalization dedup —
     the streaming twin of plans/llm_data.dedup_url_canonicalize, giving
     the web-crawl ingest the same batch<->streaming parity the dedup/
@@ -1842,28 +1384,14 @@ class UrlDedupMergeSink:
     is min/sum (associative), and the final per-canonical report is a
     pure read-off (n_raw_variants = state rows per canonical). Cold
     replay over any batch slicing therefore equals the one-shot batch
-    dedup — what the SQL oracle computes. Exactly-once follows the
-    FingerprintMergeSink contract (in-state ``_merged_N`` markers
-    installed by the same rename as the data, crash recovery via the
-    numerically newest ``state_old*``). At 100 TB: canonicalization is
-    a narrow codegen'd per-row pass, each batch shuffles one mergeable
-    hash-agg of its own distinct (canonical, raw) pairs, and state is
-    bounded by the corpus's distinct raw URLs (the exact-distinct
-    cost; the HLL family is the sketch alternative when cardinality
-    must stay O(1))."""
+    dedup — what the SQL oracle computes. At 100 TB: canonicalization
+    is a narrow codegen'd per-row pass, each batch shuffles one
+    mergeable hash-agg of its own distinct (canonical, raw) pairs, and
+    state is bounded by the corpus's distinct raw URLs (the
+    exact-distinct cost; the HLL family is the sketch alternative when
+    cardinality must stay O(1))."""
 
-    def __init__(self, state_dir: str) -> None:
-        self.state = state_dir
-        os.makedirs(os.path.dirname(state_dir), exist_ok=True)
-
-    def is_committed(self, batch_id: int) -> bool:
-        return _state_committed(self.state, batch_id)
-
-    def __call__(self, batch_df, batch_id: int) -> None:
-        if self.is_committed(batch_id):
-            return  # replayed delivery of a committed batch: no-op
-        from pyspark.sql import functions as F
-
+    def merge(self, batch_df, prev):
         from ..operators.dedup import canonical_url_col
 
         inc = (
@@ -1878,20 +1406,11 @@ class UrlDedupMergeSink:
                 F.count(F.lit(1)).cast("long").alias("n_docs"),
             )
         )
-        prev = _current_state(self.state)
-        if prev is not None:
-            inc = (
-                batch_df.sparkSession.read.parquet(prev)
-                .unionByName(inc)
-                .groupBy("canonical_url", "raw_url")
-                .agg(
-                    F.min("keeper_id").alias("keeper_id"),
-                    F.sum("n_docs").cast("long").alias("n_docs"),
-                )
-            )
-        tmp = f"{self.state}_tmp{batch_id}"
-        inc.write.mode("overwrite").parquet(tmp)  # materializes BEFORE swap
-        _install_state(self.state, tmp, batch_id)  # marker atomic w/ state
+        return _fold(
+            prev, inc, ["canonical_url", "raw_url"],
+            F.min("keeper_id").alias("keeper_id"),
+            F.sum("n_docs").cast("long").alias("n_docs"),
+        )
 
 
 def run_url_dedup_stream(spark, sf_dir: str):
@@ -1899,56 +1418,24 @@ def run_url_dedup_stream(spark, sf_dir: str):
     table (with the deterministic crawl-URL fixture column) replayed as
     FOUR micro-batches through a UrlDedupMergeSink; returns the final
     per-canonical-URL dedup report (keeper, n_docs, n_raw_variants)."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
     from ..operators.dedup import with_url_column
-    from ..schemas import ensure_session_confs
 
-    ensure_session_confs(spark)
-    work = tempfile.mkdtemp(prefix="graft_urldedup_")
-    try:
-        raw = with_url_column(
-            spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-                "doc_id", "source"
-            )
-        ).select("doc_id", "url")
-        src = _stage_slices(raw, work, "doc_id")
-        sink = UrlDedupMergeSink(os.path.join(work, "state"))
-        stream = (
-            spark.readStream.schema(raw.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+    raw = with_url_column(
+        spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+            "doc_id", "source"
         )
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        out = (
-            spark.read.parquet(sink.state)
-            .groupBy("canonical_url")
-            .agg(
-                F.min("keeper_id").alias("keeper_id"),
-                F.sum("n_docs").cast("long").alias("n_docs"),
-                F.count(F.lit(1)).cast("long").alias("n_raw_variants"),
-            )
-        )
-        # Materialize before the finally deletes the backing files; the
-        # report is one row per canonical URL (bounded fixture: <= 37
-        # keys per source x case variants).
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    ).select("doc_id", "url")
+    return replay(
+        raw, F.col("doc_id") % 4, UrlDedupMergeSink,
+        lambda st: st.groupBy("canonical_url").agg(
+            F.min("keeper_id").alias("keeper_id"),
+            F.sum("n_docs").cast("long").alias("n_docs"),
+            F.count(F.lit(1)).cast("long").alias("n_raw_variants"),
+        ),
+    )
 
 
-class CdcApplyMergeSink:
+class CdcApplyMergeSink(MergeSink):
     """``foreachBatch`` MERGE for streaming CDC changelog compaction —
     the streaming twin of plans/pipeline_ops.cdc_apply_changelog: each
     arriving micro-batch of sequenced changes collapses to per-key
@@ -1963,23 +1450,12 @@ class CdcApplyMergeSink:
     tombstones are kept IN STATE (a later batch may carry an older
     seq for the key after a crash-replay; dropping early would lose
     the max-seq evidence) and filtered at read-off, exactly like the
-    batch plan's HAVING. Exactly-once follows the FingerprintMergeSink
-    contract (in-state ``_merged_N`` markers, rename-aside crash
-    recovery). At 100 TB each batch shuffles one mergeable hash-agg of
-    its own keys and state is one row per live-or-tombstoned key —
-    the Delta/Hudi MERGE INTO economics without a table format."""
-
-    def __init__(self, state_dir: str) -> None:
-        self.state = state_dir
-        os.makedirs(os.path.dirname(state_dir), exist_ok=True)
-
-    def is_committed(self, batch_id: int) -> bool:
-        return _state_committed(self.state, batch_id)
+    batch plan's HAVING. At 100 TB each batch shuffles one mergeable
+    hash-agg of its own keys and state is one row per live-or-tombstoned
+    key — the Delta/Hudi MERGE INTO economics without a table format."""
 
     @staticmethod
     def _collapse(df):
-        from pyspark.sql import functions as F
-
         return df.groupBy("key").agg(
             F.max("seq").alias("last_seq"),
             F.max_by("op", "seq").alias("last_op"),
@@ -1987,89 +1463,42 @@ class CdcApplyMergeSink:
             F.sum("n_changes").cast("bigint").alias("n_changes"),
         )
 
-    def __call__(self, batch_df, batch_id: int) -> None:
-        if self.is_committed(batch_id):
-            return  # replayed delivery of a committed batch: no-op
-        from pyspark.sql import functions as F
-
+    def merge(self, batch_df, prev):
         inc = self._collapse(
             batch_df.select(
                 "key", "seq", "op", "price", F.lit(1).alias("n_changes")
             )
         )
-        prev = _current_state(self.state)
-        if prev is not None:
-            inc = self._collapse(
-                batch_df.sparkSession.read.parquet(prev)
-                .selectExpr(
-                    "key", "last_seq AS seq", "last_op AS op", "price",
-                    "n_changes",
-                )
-                .unionByName(
-                    inc.selectExpr(
-                        "key", "last_seq AS seq", "last_op AS op", "price",
-                        "n_changes",
-                    )
-                )
-            )
-        tmp = f"{self.state}_tmp{batch_id}"
-        inc.write.mode("overwrite").parquet(tmp)  # materializes BEFORE swap
-        _install_state(self.state, tmp, batch_id)  # marker atomic w/ state
+        if prev is None:
+            return inc
+        cols = ["key", "last_seq AS seq", "last_op AS op", "price", "n_changes"]
+        return self._collapse(
+            prev.selectExpr(*cols).unionByName(inc.selectExpr(*cols))
+        )
 
 
 def run_cdc_apply_stream(spark, sf_dir: str):
     """Streaming CDC compaction end-to-end: the orders-derived changelog
     replayed as FOUR micro-batches through a CdcApplyMergeSink; returns
     the live snapshot (tombstoned keys filtered at read-off)."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from ..schemas import ensure_session_confs
-
-    ensure_session_confs(spark)
-    work = tempfile.mkdtemp(prefix="graft_cdcapply_")
-    try:
-        o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-        raw = o.select(
-            (F.col("o_orderkey") % 20000).alias("key"),
-            F.col("o_orderkey").alias("seq"),
-            F.when(F.col("o_orderkey") % 11 == 0, F.lit("D"))
-            .otherwise(F.lit("U"))
-            .alias("op"),
-            F.col("o_totalprice").alias("price"),
-        )
-        src = _stage_slices(raw, work, "seq")
-        sink = CdcApplyMergeSink(os.path.join(work, "state"))
-        stream = (
-            spark.readStream.schema(raw.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        out = (
-            spark.read.parquet(sink.state)
-            .filter(F.col("last_op") != "D")
-            .select("key", "last_seq", "price", "n_changes")
-        )
-        # Materialize before the finally deletes the backing files;
-        # the snapshot is bounded by distinct keys (<= 20000 by the
-        # key residue construction).
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    raw = o.select(
+        (F.col("o_orderkey") % 20000).alias("key"),
+        F.col("o_orderkey").alias("seq"),
+        F.when(F.col("o_orderkey") % 11 == 0, F.lit("D"))
+        .otherwise(F.lit("U"))
+        .alias("op"),
+        F.col("o_totalprice").alias("price"),
+    )
+    return replay(
+        raw, F.col("seq") % 4, CdcApplyMergeSink,
+        lambda st: st.filter(F.col("last_op") != "D").select(
+            "key", "last_seq", "price", "n_changes"
+        ),
+    )
 
 
-class Scd2MergeSink:
+class Scd2MergeSink(MergeSink):
     """``foreachBatch`` MERGE that maintains an SCD2 dimension
     incrementally — the write-side streaming twin of
     plans/pipeline_ops.scd2_build_from_changes (per VERDICT r9
@@ -2085,8 +1514,7 @@ class Scd2MergeSink:
     chain is a deterministic function of the SET of its changes, and
     (key, seq) dedup makes replayed rows no-ops, so cold replay over
     any batch slicing equals the one-shot batch build the SQL oracle
-    computes. Exactly-once follows the FingerprintMergeSink contract
-    (in-state ``_merged_N`` markers, rename-aside crash recovery).
+    computes.
 
     100 TB shape: per batch, one mergeable distinct on the batch's
     keys, one semi + one anti join against state (both equi, broadcast
@@ -2095,20 +1523,10 @@ class Scd2MergeSink:
     never read, shuffled, or rewritten; this is Delta/Hudi MERGE INTO
     economics for the classic warehouse SCD2 maintenance job."""
 
-    def __init__(self, state_dir: str) -> None:
-        self.state = state_dir
-        os.makedirs(os.path.dirname(state_dir), exist_ok=True)
-
-    def is_committed(self, batch_id: int) -> bool:
-        return _state_committed(self.state, batch_id)
-
     _RAW = ["key", "seq", "attr_price", "valid_from"]
 
     @staticmethod
     def _version(raw):
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
         w = Window.partitionBy("key").orderBy("valid_from", "seq")
         return raw.select(
             "key", "seq", "attr_price", "valid_from",
@@ -2116,29 +1534,19 @@ class Scd2MergeSink:
             F.lead("valid_from").over(w).isNull().alias("is_current"),
         )
 
-    def __call__(self, batch_df, batch_id: int) -> None:
-        if self.is_committed(batch_id):
-            return  # replayed delivery of a committed batch: no-op
-        from pyspark.sql import functions as F
-
+    def merge(self, batch_df, prev):
         inc = batch_df.select(*self._RAW).dropDuplicates(["key", "seq"])
-        prev = _current_state(self.state)
         if prev is None:
-            out = self._version(inc)
-        else:
-            state_df = batch_df.sparkSession.read.parquet(prev)
-            keys = inc.select("key").distinct()
-            untouched = state_df.join(keys, "key", "left_anti")
-            affected = (
-                state_df.join(keys, "key", "left_semi")
-                .select(*self._RAW)
-                .unionByName(inc)
-                .dropDuplicates(["key", "seq"])
-            )
-            out = untouched.unionByName(self._version(affected))
-        tmp = f"{self.state}_tmp{batch_id}"
-        out.write.mode("overwrite").parquet(tmp)  # materializes BEFORE swap
-        _install_state(self.state, tmp, batch_id)  # marker atomic w/ state
+            return self._version(inc)
+        keys = inc.select("key").distinct()
+        untouched = prev.join(keys, "key", "left_anti")
+        affected = (
+            prev.join(keys, "key", "left_semi")
+            .select(*self._RAW)
+            .unionByName(inc)
+            .dropDuplicates(["key", "seq"])
+        )
+        return untouched.unionByName(self._version(affected))
 
 
 def run_scd2_stream(spark, sf_dir: str):
@@ -2146,226 +1554,106 @@ def run_scd2_stream(spark, sf_dir: str):
     orders-derived per-customer change stream (the exact
     scd2_build_from_changes fixture) replayed as FOUR micro-batches
     through an Scd2MergeSink; returns the maintained dimension."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from ..schemas import ensure_session_confs
-
-    ensure_session_confs(spark)
-    work = tempfile.mkdtemp(prefix="graft_scd2_")
-    try:
-        o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-        raw = o.select(
-            F.col("o_custkey").alias("key"),
-            F.col("o_orderkey").alias("seq"),
-            F.col("o_totalprice").alias("attr_price"),
-            F.col("o_orderdate").alias("valid_from"),
-        )
-        src = _stage_slices(raw, work, "seq")
-        sink = Scd2MergeSink(os.path.join(work, "state"))
-        stream = (
-            spark.readStream.schema(raw.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        out = spark.read.parquet(sink.state).select(
+    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    raw = o.select(
+        F.col("o_custkey").alias("key"),
+        F.col("o_orderkey").alias("seq"),
+        F.col("o_totalprice").alias("attr_price"),
+        F.col("o_orderdate").alias("valid_from"),
+    )
+    return replay(
+        raw, F.col("seq") % 4, Scd2MergeSink,
+        lambda st: st.select(
             "key", "seq", "attr_price", "valid_from", "valid_to",
             "is_current",
-        )
-        # Materialize before the finally deletes the backing files; the
-        # dimension is one row per change (bounded by the orders table).
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        ),
+    )
 
 
-class BottomKMergeSink:
+class BottomKMergeSink(MergeSink):
     """``foreachBatch`` MERGE for the streaming bottom-k sample — the
     minimal mergeable-sketch state: the state table IS the k-row
     sample. Per batch: take the batch's own bottom-k by sample key,
     union with state, dedup by doc_id (a replayed row can never
     displace a distinct one), re-take bottom-k, swap. Associativity is
     the KMV identity bottom-k(A ∪ B) = bottom-k(bottom-k(A) ∪
-    bottom-k(B)); idempotence comes from the dedup. Exactly-once
-    follows the FingerprintMergeSink contract. State is k rows forever
-    — O(1) in stream length."""
+    bottom-k(B)); idempotence comes from the dedup. State is k rows
+    forever — O(1) in stream length."""
 
     def __init__(self, state_dir: str, k: int) -> None:
-        self.state = state_dir
+        super().__init__(state_dir)
         self.k = k
-        os.makedirs(os.path.dirname(state_dir), exist_ok=True)
 
-    def is_committed(self, batch_id: int) -> bool:
-        return _state_committed(self.state, batch_id)
-
-    def __call__(self, batch_df, batch_id: int) -> None:
-        if self.is_committed(batch_id):
-            return  # replayed delivery of a committed batch: no-op
-
+    def merge(self, batch_df, prev):
         inc = batch_df.orderBy("sample_key").limit(self.k)
-        prev = _current_state(self.state)
-        if prev is not None:
-            inc = (
-                batch_df.sparkSession.read.parquet(prev)
-                .unionByName(inc)
-                .dropDuplicates(["doc_id"])
-                .orderBy("sample_key")
-                .limit(self.k)
-            )
-        tmp = f"{self.state}_tmp{batch_id}"
-        inc.write.mode("overwrite").parquet(tmp)  # materializes BEFORE swap
-        _install_state(self.state, tmp, batch_id)  # marker atomic w/ state
+        if prev is None:
+            return inc
+        return (
+            prev.unionByName(inc)
+            .dropDuplicates(["doc_id"])
+            .orderBy("sample_key")
+            .limit(self.k)
+        )
 
 
 def run_bottom_k_stream(spark, sf_dir: str, k: int):
     """Streaming bottom-k sample end-to-end: documents (with the md5
     sample key precomputed) replayed as FOUR micro-batches through a
     BottomKMergeSink; returns the maintained k-row sample."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from ..schemas import ensure_session_confs
-
-    ensure_session_confs(spark)
-    work = tempfile.mkdtemp(prefix="graft_bottomk_")
-    try:
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        raw = docs.select(
-            "doc_id",
-            "source",
-            F.md5(
-                F.concat(F.lit("bks:"), F.col("doc_id").cast("string"))
-            ).alias("sample_key"),
-        )
-        src = _stage_slices(raw, work, "doc_id")
-        sink = BottomKMergeSink(os.path.join(work, "state"), k)
-        stream = (
-            spark.readStream.schema(raw.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        out = spark.read.parquet(sink.state).select(
-            "doc_id", "source", "sample_key"
-        )
-        # k rows by construction; materialize before cleanup
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    raw = docs.select(
+        "doc_id",
+        "source",
+        F.md5(
+            F.concat(F.lit("bks:"), F.col("doc_id").cast("string"))
+        ).alias("sample_key"),
+    )
+    return replay(
+        raw, F.col("doc_id") % 4, lambda st: BottomKMergeSink(st, k),
+        lambda st: st.select("doc_id", "source", "sample_key"),
+    )
 
 
-class TopKCountMergeSink:
+class TopKCountMergeSink(MergeSink):
     """``foreachBatch`` MERGE for streaming exact heavy-hitters: state
     is the per-key count table (cell-wise ADDITIVE, the simplest
     mergeable summary there is), and the top-k report is a read-off —
     kept out of state on purpose, because "current top 10" is not
     mergeable but per-key counts are. Cold replay over any batch
-    slicing equals the one-shot batch GROUP BY. Exactly-once follows
-    the FingerprintMergeSink contract (commit markers + crash-safe
-    swap).
+    slicing equals the one-shot batch GROUP BY.
 
     State is O(#distinct keys) — the EXACT path, right when the key
     space is customer-sized. When it isn't (URLs, ngrams at 100 TB),
     the bounded-state twin is streaming_countmin_state: a constant
     2048-cell grid in exchange for an overestimate-only error bar."""
 
-    def __init__(self, state_dir: str) -> None:
-        self.state = state_dir
-        os.makedirs(os.path.dirname(state_dir), exist_ok=True)
-
-    def is_committed(self, batch_id: int) -> bool:
-        return _state_committed(self.state, batch_id)
-
-    def __call__(self, batch_df, batch_id: int) -> None:
-        if self.is_committed(batch_id):
-            return  # replayed delivery of a committed batch: no-op
-
-        from pyspark.sql import functions as F
-
+    def merge(self, batch_df, prev):
         inc = batch_df.groupBy("o_custkey").agg(
             F.count(F.lit(1)).cast("long").alias("cnt")
         )
-        prev = _current_state(self.state)
-        if prev is not None:
-            inc = (
-                batch_df.sparkSession.read.parquet(prev)
-                .unionByName(inc)
-                .groupBy("o_custkey")
-                .agg(F.sum("cnt").cast("long").alias("cnt"))
-            )
-        tmp = f"{self.state}_tmp{batch_id}"
-        inc.write.mode("overwrite").parquet(tmp)  # materialize BEFORE swap
-        _install_state(self.state, tmp, batch_id)
+        return _fold(
+            prev, inc, ["o_custkey"], F.sum("cnt").cast("long").alias("cnt")
+        )
 
 
 def run_topk_stream(spark, sf_dir: str, k: int = 10):
     """Streaming exact top-k heavy hitters end-to-end: orders replayed
     as FOUR micro-batches through a TopKCountMergeSink, then the top-k
     report (count DESC, key ASC) derived FROM THE STATE."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from ..schemas import ensure_session_confs
-
-    ensure_session_confs(spark)
-    work = tempfile.mkdtemp(prefix="graft_topk_")
-    try:
-        raw = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-            "o_orderkey", "o_custkey"
+    raw = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+        "o_orderkey", "o_custkey"
+    )
+    return replay(
+        raw, F.col("o_orderkey") % 4, TopKCountMergeSink,
+        lambda st: st.select(
+            "o_custkey", F.col("cnt").cast("long").alias("n_orders")
         )
-        src = _stage_slices(raw, work, "o_orderkey")
-        sink = TopKCountMergeSink(os.path.join(work, "state"))
-        stream = (
-            spark.readStream.schema(raw.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        out = (
-            spark.read.parquet(sink.state)
-            .select(
-                "o_custkey", F.col("cnt").cast("long").alias("n_orders")
-            )
-            .orderBy(F.desc("n_orders"), F.asc("o_custkey"))
-            .limit(k)
-        )
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        .orderBy(F.desc("n_orders"), F.asc("o_custkey"))
+        .limit(k),
+    )
 
 
-class TokenFreqMergeSink:
+class TokenFreqMergeSink(MergeSink):
     """``foreachBatch`` MERGE for streaming corpus token-frequency
     maintenance: state is the (token, freq) table — additive, hence
     mergeable, hence replay-order-independent — the live corpus
@@ -2373,40 +1661,19 @@ class TokenFreqMergeSink:
     (text_zipf_tail_fit / text_token_coverage_curve): maintain counts
     on the stream, derive any spectrum report at read-off. Cold
     replay over any batch slicing equals the one-shot batch count.
-    Exactly-once follows the FingerprintMergeSink contract. State is
-    O(vocabulary) — sublinear in the corpus (Heaps' law); the
+    State is O(vocabulary) — sublinear in the corpus (Heaps' law); the
     bounded-state fallback for adversarial key spaces is
     streaming_countmin_state."""
 
-    def __init__(self, state_dir: str) -> None:
-        self.state = state_dir
-        os.makedirs(os.path.dirname(state_dir), exist_ok=True)
-
-    def is_committed(self, batch_id: int) -> bool:
-        return _state_committed(self.state, batch_id)
-
-    def __call__(self, batch_df, batch_id: int) -> None:
-        if self.is_committed(batch_id):
-            return  # replayed delivery of a committed batch: no-op
-
-        from pyspark.sql import functions as F
-
+    def merge(self, batch_df, prev):
         from ..operators.textops import explode_tokens
 
         inc = explode_tokens(batch_df).groupBy("tok").agg(
             F.count(F.lit(1)).cast("long").alias("freq")
         )
-        prev = _current_state(self.state)
-        if prev is not None:
-            inc = (
-                batch_df.sparkSession.read.parquet(prev)
-                .unionByName(inc)
-                .groupBy("tok")
-                .agg(F.sum("freq").cast("long").alias("freq"))
-            )
-        tmp = f"{self.state}_tmp{batch_id}"
-        inc.write.mode("overwrite").parquet(tmp)  # materialize BEFORE swap
-        _install_state(self.state, tmp, batch_id)
+        return _fold(
+            prev, inc, ["tok"], F.sum("freq").cast("long").alias("freq")
+        )
 
 
 def run_token_freq_stream(spark, sf_dir: str):
@@ -2415,42 +1682,10 @@ def run_token_freq_stream(spark, sf_dir: str):
     vocabulary-coverage curve derived FROM THE STATE (the exact
     text_token_coverage_curve report, so the batch entry's oracle
     checks the streaming path)."""
-    import shutil
-    import tempfile
+    from ..plans.llm_data import _COVERAGE_KS
 
-    from pyspark.sql import functions as F
-    from pyspark.sql import Window
-
-    from ..schemas import ensure_session_confs
-
-    ensure_session_confs(spark)
-    work = tempfile.mkdtemp(prefix="graft_tokfreq_")
-    try:
-        raw = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-            "doc_id", "text"
-        )
-        src = _stage_slices(raw, work, "doc_id")
-        sink = TokenFreqMergeSink(os.path.join(work, "state"))
-        stream = (
-            spark.readStream.schema(raw.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        from ..plans.llm_data import _COVERAGE_KS
-
-        freq = spark.read.parquet(sink.state).select(
-            "tok", F.col("freq").cast("bigint").alias("freq")
-        )
+    def read_off(st):
+        freq = st.select("tok", F.col("freq").cast("bigint").alias("freq"))
         totals = freq.agg(
             F.sum("freq").cast("bigint").alias("total_occurrences"),
             F.count(F.lit(1)).cast("bigint").alias("vocab_size"),
@@ -2478,7 +1713,7 @@ def run_token_freq_stream(spark, sf_dir: str):
                 F.count(F.lit(1)).cast("bigint").alias("types_in_budget"),
             )
         )
-        out = (
+        return (
             per_k.crossJoin(F.broadcast(totals))
             .select(
                 "k", "types_in_budget", "covered_occurrences",
@@ -2490,12 +1725,14 @@ def run_token_freq_stream(spark, sf_dir: str):
             )
             .orderBy("k")
         )
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    raw = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id", "text"
+    )
+    return replay(raw, F.col("doc_id") % 4, TokenFreqMergeSink, read_off)
 
 
-class FreshnessMergeSink:
+class FreshnessMergeSink(MergeSink):
     """``foreachBatch`` MERGE for the streaming event-time freshness
     monitor — the twin of plans/analytics.dq_event_freshness and the
     form that audit actually RUNS as (freshness is a property of an
@@ -2507,21 +1744,9 @@ class FreshnessMergeSink:
     mark, which moves): they are computed at read-off from a
     per-(type, hour-bucket) count grid kept in state — bucket counts
     are sums (mergeable), and any window anchored at the final HWM is
-    a read-off over O(#types x #hours) rows. Exactly-once follows the
-    FingerprintMergeSink contract."""
+    a read-off over O(#types x #hours) rows."""
 
-    def __init__(self, state_dir: str) -> None:
-        self.state = state_dir
-        os.makedirs(os.path.dirname(state_dir), exist_ok=True)
-
-    def is_committed(self, batch_id: int) -> bool:
-        return _state_committed(self.state, batch_id)
-
-    def __call__(self, batch_df, batch_id: int) -> None:
-        if self.is_committed(batch_id):
-            return  # replayed delivery of a committed batch: no-op
-        from pyspark.sql import functions as F
-
+    def merge(self, batch_df, prev):
         inc = batch_df.groupBy(
             "event_type",
             F.date_trunc("hour", F.col("ts")).alias("hour_bucket"),
@@ -2530,21 +1755,12 @@ class FreshnessMergeSink:
             F.min("ts").alias("min_ts"),
             F.max("ts").alias("max_ts"),
         )
-        prev = _current_state(self.state)
-        if prev is not None:
-            inc = (
-                batch_df.sparkSession.read.parquet(prev)
-                .unionByName(inc)
-                .groupBy("event_type", "hour_bucket")
-                .agg(
-                    F.sum("n_events").cast("long").alias("n_events"),
-                    F.min("min_ts").alias("min_ts"),
-                    F.max("max_ts").alias("max_ts"),
-                )
-            )
-        tmp = f"{self.state}_tmp{batch_id}"
-        inc.write.mode("overwrite").parquet(tmp)  # materializes BEFORE swap
-        _install_state(self.state, tmp, batch_id)  # marker atomic w/ state
+        return _fold(
+            prev, inc, ["event_type", "hour_bucket"],
+            F.sum("n_events").cast("long").alias("n_events"),
+            F.min("min_ts").alias("min_ts"),
+            F.max("max_ts").alias("max_ts"),
+        )
 
 
 def run_freshness_stream(spark, sf_dir: str):
@@ -2552,41 +1768,14 @@ def run_freshness_stream(spark, sf_dir: str):
     micro-batches through a FreshnessMergeSink; the final per-type
     freshness report (counts, epoch bounds, lag vs HWM, trailing-24 h
     count) is a pure read-off of the (type, hour-bucket) state grid."""
-    import shutil
-    import tempfile
+    from ..schemas import load_table
 
-    from pyspark.sql import functions as F
-
-    from ..schemas import ensure_session_confs, normalize_nanos_ts
-
-    ensure_session_confs(spark)
-    work = tempfile.mkdtemp(prefix="graft_fresh_")
-    try:
-        raw = normalize_nanos_ts(
-            spark.read.parquet(f"{sf_dir}/events.parquet")
-        ).select("event_id", "ts", "event_type")
-        src = _stage_slices(raw, work, "event_id")
-        sink = FreshnessMergeSink(os.path.join(work, "state"))
-        stream = (
-            spark.readStream.schema(raw.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        state = spark.read.parquet(sink.state)
+    def read_off(state):
         hwm = state.agg(
             F.max("max_ts").alias("hwm"),
             F.date_trunc("hour", F.max("max_ts")).alias("hwm_hour"),
         )
-        out = (
+        return (
             state.crossJoin(F.broadcast(hwm))
             .withColumn(
                 "in_window",
@@ -2615,14 +1804,14 @@ def run_freshness_stream(spark, sf_dir: str):
                 ).cast("bigint").alias("n_last_24_buckets"),
             )
         )
-        # Materialize before the finally deletes the backing files; the
-        # report is one row per event type.
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    raw = load_table(spark, sf_dir, "events").select(
+        "event_id", "ts", "event_type"
+    )
+    return replay(raw, F.col("event_id") % 4, FreshnessMergeSink, read_off)
 
 
-class MarkovMergeSink:
+class MarkovMergeSink(MergeSink):
     """``foreachBatch`` MERGE for streaming first-order Markov
     transition counting — the streaming twin of
     plans/analytics.analytics_markov_transitions. State is ONE parquet
@@ -2634,36 +1823,20 @@ class MarkovMergeSink:
       event_type) so the batch-boundary transition (previous batch's
       tail -> this batch's head) is counted exactly once. The carry is
       an arg-max by (ts, event_id) — associative, and correct because
-      the time-sliced replay (``_stage_time_slices``) never splits a
+      the time-sliced replay (``_range_bucket`` over ts) never splits a
       same-timestamp group across batches.
 
     Cold replay over any time slicing therefore equals the one-shot
-    batch transition count — what ANALYTICS_MARKOV_SQL computes.
-    Exactly-once via the family's in-state commit markers + crash-safe
-    rename swap. At 100 TB: each batch does one user-local window over
-    (carry ∪ batch) and one hash-agg to the #types² cell frame; state
-    is #types² + one row per active user."""
+    batch transition count — what ANALYTICS_MARKOV_SQL computes. At
+    100 TB: each batch does one user-local window over (carry ∪ batch)
+    and one hash-agg to the #types² cell frame; state is #types² + one
+    row per active user."""
 
-    def __init__(self, state_dir: str) -> None:
-        self.state = state_dir
-        os.makedirs(os.path.dirname(state_dir), exist_ok=True)
-
-    def is_committed(self, batch_id: int) -> bool:
-        return _state_committed(self.state, batch_id)
-
-    def __call__(self, batch_df, batch_id: int) -> None:
-        if self.is_committed(batch_id):
-            return  # replayed delivery of a committed batch: no-op
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
-        spark = batch_df.sparkSession
+    def merge(self, batch_df, prev):
         ev_cols = ["user_id", "ts", "event_id", "event_type"]
-        prev = _current_state(self.state)
         if prev is not None:
-            st = spark.read.parquet(prev)
-            carry = st.filter(F.col("kind") == "carry").select(*ev_cols)
-            cells_prev = st.filter(F.col("kind") == "cell").select(
+            carry = prev.filter(F.col("kind") == "carry").select(*ev_cols)
+            cells_prev = prev.filter(F.col("kind") == "cell").select(
                 "from_type", "to_type", "n_trans"
             )
         else:
@@ -2681,12 +1854,10 @@ class MarkovMergeSink:
             .groupBy("from_type", F.col("event_type").alias("to_type"))
             .agg(F.count(F.lit(1)).cast("long").alias("n_trans"))
         )
-        if cells_prev is not None:
-            cells_new = (
-                cells_prev.unionByName(cells_new)
-                .groupBy("from_type", "to_type")
-                .agg(F.sum("n_trans").cast("long").alias("n_trans"))
-            )
+        cells_new = _fold(
+            cells_prev, cells_new, ["from_type", "to_type"],
+            F.sum("n_trans").cast("long").alias("n_trans"),
+        )
         wtail = Window.partitionBy("user_id").orderBy(
             F.col("ts").desc(), F.col("event_id").desc()
         )
@@ -2696,7 +1867,7 @@ class MarkovMergeSink:
             .select(*ev_cols)
         )
         null = lambda t: F.lit(None).cast(t)
-        combined = cells_new.select(
+        return cells_new.select(
             F.lit("cell").alias("kind"),
             "from_type", "to_type", "n_trans",
             null("bigint").alias("user_id"),
@@ -2712,9 +1883,6 @@ class MarkovMergeSink:
                 "user_id", "ts", "event_id", "event_type",
             )
         )
-        tmp = f"{self.state}_tmp{batch_id}"
-        combined.write.mode("overwrite").parquet(tmp)
-        _install_state(self.state, tmp, batch_id)
 
 
 def run_markov_stream(spark, sf_dir: str):
@@ -2722,60 +1890,34 @@ def run_markov_stream(spark, sf_dir: str):
     replayed as FOUR time-ordered micro-batches through a
     MarkovMergeSink; returns the final row-normalized transition
     report (from_type, to_type, n_trans, p)."""
-    import shutil
-    import tempfile
+    from ..schemas import load_table
 
-    from pyspark.sql import functions as F
-
-    from ..schemas import ensure_session_confs, load_table
-
-    ensure_session_confs(spark)
-    work = tempfile.mkdtemp(prefix="graft_markov_")
-    try:
-        # load_table (not a raw parquet read): the loader's NTZ->TZ
-        # timestamp normalization is what makes unix_micros legal in
-        # _stage_time_slices
-        raw = load_table(spark, sf_dir, "events").select(
-            "user_id", "ts", "event_id", "event_type"
-        )
-        src = _stage_time_slices(raw, work, "ts")
-        sink = MarkovMergeSink(os.path.join(work, "state"))
-        stream = (
-            spark.readStream.schema(raw.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        cells = (
-            spark.read.parquet(sink.state)
-            .filter(F.col("kind") == "cell")
-            .select("from_type", "to_type", F.col("n_trans").cast("bigint").alias("n_trans"))
+    def read_off(st):
+        cells = st.filter(F.col("kind") == "cell").select(
+            "from_type", "to_type", F.col("n_trans").cast("bigint").alias("n_trans")
         )
         marg = cells.groupBy("from_type").agg(
             F.sum("n_trans").cast("bigint").alias("n_from")
         )
-        out = cells.join(marg, "from_type").select(
+        return cells.join(marg, "from_type").select(
             "from_type", "to_type", "n_trans",
             F.round(
                 F.col("n_trans").cast("double") / F.col("n_from"), 6
             ).alias("p"),
         )
-        # Materialize before the finally deletes the backing files; the
-        # report is #event_types^2 rows.
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    # load_table (not a raw parquet read): the loader's NTZ->TZ
+    # timestamp normalization is what makes unix_micros legal in the
+    # time-range slicing
+    raw = load_table(spark, sf_dir, "events").select(
+        "user_id", "ts", "event_id", "event_type"
+    )
+    return replay(
+        raw, _range_bucket(raw, F.unix_micros("ts")), MarkovMergeSink, read_off
+    )
 
 
-class CountMinMergeSink:
+class CountMinMergeSink(MergeSink):
     """``foreachBatch`` MERGE for the streaming count-min sketch — the
     twin of plans/relational2.agg_countmin_heavy_hitters and the form
     frequency monitoring actually runs as: the sketch grid is cell-wise
@@ -2787,22 +1929,9 @@ class CountMinMergeSink:
     state), 'key' rows are per-key exact counts that exist ONLY so the
     final report can carry the same true-vs-estimate audit as the
     batch entry (a production monitor would keep just the grid and
-    probe ad hoc). Exactly-once follows the FingerprintMergeSink
-    contract (commit markers + crash-safe swap)."""
+    probe ad hoc)."""
 
-    def __init__(self, state_dir: str) -> None:
-        self.state = state_dir
-        os.makedirs(os.path.dirname(state_dir), exist_ok=True)
-
-    def is_committed(self, batch_id: int) -> bool:
-        return _state_committed(self.state, batch_id)
-
-    def __call__(self, batch_df, batch_id: int) -> None:
-        if self.is_committed(batch_id):
-            return  # replayed delivery of a committed batch: no-op
-
-        from pyspark.sql import functions as F
-
+    def merge(self, batch_df, prev):
         from ..plans.relational2 import _CMS_D as d, cms_bucket
 
         rows = batch_df.withColumn(
@@ -2821,18 +1950,10 @@ class CountMinMergeSink:
             F.lit(None).cast("long").alias("bucket"),
             F.col("o_custkey").cast("long").alias("key"),
         ).agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        inc = grid.unionByName(keys)
-        prev = _current_state(self.state)
-        if prev is not None:
-            inc = (
-                batch_df.sparkSession.read.parquet(prev)
-                .unionByName(inc)
-                .groupBy("kind", "r", "bucket", "key")
-                .agg(F.sum("cnt").cast("long").alias("cnt"))
-            )
-        tmp = f"{self.state}_tmp{batch_id}"
-        inc.write.mode("overwrite").parquet(tmp)  # materialize BEFORE swap
-        _install_state(self.state, tmp, batch_id)
+        return _fold(
+            prev, grid.unionByName(keys), ["kind", "r", "bucket", "key"],
+            F.sum("cnt").cast("long").alias("cnt"),
+        )
 
 
 def run_countmin_stream(spark, sf_dir: str):
@@ -2840,36 +1961,9 @@ def run_countmin_stream(spark, sf_dir: str):
     micro-batches through a CountMinMergeSink, then the batch entry's
     true-vs-estimate top-10 report is derived FROM THE STATE (top keys
     from the 'key' frame, estimates probed from the 'grid' frame)."""
-    import shutil
-    import tempfile
+    from ..plans.relational2 import _CMS_D as d, cms_bucket
 
-    from pyspark.sql import functions as F
-
-    from ..schemas import ensure_session_confs
-
-    ensure_session_confs(spark)
-    work = tempfile.mkdtemp(prefix="graft_cms_")
-    try:
-        raw = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-            "o_orderkey", "o_custkey"
-        )
-        src = _stage_slices(raw, work, "o_orderkey")
-        sink = CountMinMergeSink(os.path.join(work, "state"))
-        stream = (
-            spark.readStream.schema(raw.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        state = spark.read.parquet(sink.state)
+    def read_off(state):
         top = (
             state.filter(F.col("kind") == "key")
             .select(F.col("key").alias("o_custkey"),
@@ -2877,8 +1971,6 @@ def run_countmin_stream(spark, sf_dir: str):
             .orderBy(F.desc("true_cnt"), F.asc("o_custkey"))
             .limit(10)
         )
-        from ..plans.relational2 import _CMS_D as d, cms_bucket
-
         probes = top.withColumn(
             "r", F.explode(F.array(*[F.lit(i) for i in range(d)]))
         ).select(
@@ -2888,7 +1980,7 @@ def run_countmin_stream(spark, sf_dir: str):
         grid = state.filter(F.col("kind") == "grid").select(
             "r", "bucket", F.col("cnt").alias("cell")
         )
-        out = (
+        return (
             probes.join(grid, ["r", "bucket"])
             .groupBy("o_custkey")
             .agg(
@@ -2896,6 +1988,8 @@ def run_countmin_stream(spark, sf_dir: str):
                 F.min("cell").alias("est_cnt"),
             )
         )
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    raw = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+        "o_orderkey", "o_custkey"
+    )
+    return replay(raw, F.col("o_orderkey") % 4, CountMinMergeSink, read_off)

@@ -22,17 +22,13 @@ import sys
 import time
 
 
-def read_steal() -> int | None:
-    try:
-        with open("/proc/stat") as f:
-            parts = f.readline().split()
-        return int(parts[8]) if parts[0] == "cpu" and len(parts) > 8 else None
-    except (OSError, ValueError):
-        return None
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    # warm up on the sibling sf0.001 when the fixture set has one
+    warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
+    if not os.path.isdir(warm_dir):
+        warm_dir = sf_dir
+    from bench import read_steal_ticks
     from pipeline_apache_beam_entrega1_cs_spark.session import get_spark
     from pipeline_apache_beam_entrega1_cs_spark.streaming.sinks import (
         run_tfidf_state_stream,
@@ -40,7 +36,7 @@ def main() -> None:
 
     spark = get_spark("streaming_amortization")
     # warmup: JIT + codegen + streaming machinery
-    run_tfidf_state_stream(spark, "/root/testdata/sf0.001").count()
+    run_tfidf_state_stream(spark, warm_dir).count()
 
     batch_counts = [1, 4, 8]
     out: dict = {"sf_dir": sf_dir, "entry": "streaming_tfidf_state", "runs": {}}
@@ -48,12 +44,12 @@ def main() -> None:
     for n in batch_counts:
         runs = []
         for _ in range(3):
-            s0 = read_steal()
+            s0 = read_steal_ticks()
             t0 = time.perf_counter()
             df = run_tfidf_state_stream(spark, sf_dir, n_batches=n)
             nrows = df.count()
             dt = time.perf_counter() - t0
-            s1 = read_steal()
+            s1 = read_steal_ticks()
             steal = (
                 round((s1 - s0) / 100, 2)
                 if s0 is not None and s1 is not None

@@ -2123,9 +2123,12 @@ def test_cosine_lsh_duplicate_vec_id_pairs_match_expression_path(spark, sf_dir):
     )
     from pipeline_apache_beam_entrega1_cs_spark.schemas import load_table
 
-    emb = load_table(spark, sf_dir, "embeddings").limit(20)
-    dup = emb.limit(1)  # same vec_id AND same embedding as row 1
+    emb = load_table(spark, sf_dir, "embeddings").orderBy("vec_id").limit(20)
+    # the min-vec_id row again: same vec_id AND same embedding
+    dup = emb.orderBy("vec_id").limit(1)
     corpus = emb.union(dup)
+    ids = [r.vec_id for r in corpus.select("vec_id").collect()]
+    assert len(ids) == 21 and len(set(ids)) == 20, "no repeated vec_id"
 
     fast = {
         (r.vec_a, r.vec_b): r.cos_sim

@@ -128,6 +128,34 @@ def test_foreachbatch_sink(spark, sf_dir, tmp_path):
     assert spark.read.parquet(out).select("event_id").distinct().count() == n_batch
 
 
+def test_replay_failure_stops_query_and_removes_scratch(spark, tmp_path, monkeypatch):
+    """streaming/sinks.replay's failure path: a sink raising on batch 1
+    propagates its error, no streaming query is left running, and a
+    collecting replay deletes its scratch directory."""
+    import tempfile
+
+    from pipeline_apache_beam_entrega1_cs_spark.streaming.sinks import replay
+
+    scratch = tmp_path / "scratch"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    seen = []
+
+    def failing_sink(state_dir):
+        def sink(df, batch_id):
+            seen.append(batch_id)
+            if batch_id == 1:
+                raise RuntimeError("planted failure on batch 1")
+
+        return sink
+
+    raw = spark.range(40).withColumnRenamed("id", "k")
+    with pytest.raises(Exception, match="planted failure on batch 1"):
+        replay(raw, F.col("k") % 4, failing_sink, lambda st: st)
+    assert seen == [0, 1]
+    assert spark.streams.active == []
+    assert list(scratch.iterdir()) == []
+
 def test_fidelity_pipeline_streaming(spark):
     """The reference ETL executed as a Structured Streaming job produces
     exactly the batch (= golden) result."""

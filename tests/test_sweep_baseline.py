@@ -190,3 +190,35 @@ def test_regression_gate_logic_on_synthetic_sweeps(tmp_path, monkeypatch):
     # (d) ratio >2x but under the absolute floor -> pass
     write(2, {"x": 1.2, "y": 0.3})
     sb.test_sweep_no_per_entry_regression_vs_previous_round()
+
+
+def test_bench_stage_snapshot_none_when_status_store_fails():
+    """bench._stage_snapshot reports an unreadable status store as None,
+    never as an empty "no stages yet" snapshot whose -1 max id would
+    charge a run with every stage of the session."""
+    from types import SimpleNamespace
+
+    import bench
+
+    def raising():
+        raise RuntimeError("status store unavailable")
+
+    class Store:
+        def __getattr__(self, name):  # stageList$default$N
+            return lambda: None
+
+        def stageList(self, *args):
+            stages = [
+                SimpleNamespace(stageId=lambda: 3, executorRunTime=lambda: 70),
+                SimpleNamespace(stageId=lambda: 5, executorRunTime=lambda: 20),
+            ]
+            return SimpleNamespace(size=lambda: 2, apply=lambda i: stages[i])
+
+    def stub(status_store):
+        sc = SimpleNamespace(statusStore=status_store)
+        return SimpleNamespace(
+            sparkContext=SimpleNamespace(_jsc=SimpleNamespace(sc=lambda: sc))
+        )
+
+    assert bench._stage_snapshot(stub(raising)) is None
+    assert bench._stage_snapshot(stub(Store)) == (5, {3: 70, 5: 20})
