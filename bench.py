@@ -19,6 +19,12 @@ import subprocess
 import sys
 import time
 
+from measure import (
+    Window, load_avg, run_min, sf_of, timed_noop, warm_dir, write_json,
+)
+
+HERE = os.path.dirname(__file__) or "."
+
 # Queries present since BENCH_r01 — their subtotal is the cross-round
 # comparable number (curation_pipeline joined in r04, dedup_span_ngram
 # in r06; see notes on BENCH_QUERIES below).
@@ -33,6 +39,24 @@ R01_COMPARABLE = 16
 # establish that; this makes it diagnosable from the JSON alone).
 CONTROL_ITERS = 2_000_000
 
+# Pre-start drain: wait (START_WAIT_S at a time, at most START_MAX_WAITS
+# times) until the 1-min load is <= START_LOAD and the 5-min load is
+# <= START_LOAD5 — and, likewise, until the control loop runs within
+# 1.3x its calibration.
+START_LOAD = 3.0
+START_LOAD5 = 4.0
+START_WAIT_S = 30.0
+START_MAX_WAITS = 16
+# Per-query ambient-load guard: above MAX_LOAD, wait LOAD_WAIT_S, at
+# most MAX_LOAD_WAITS times per bench.
+MAX_LOAD = 8.0
+LOAD_WAIT_S = 30.0
+MAX_LOAD_WAITS = 3
+# Steal retry: a pass that accrued more than MAX_STEAL_S of steal is
+# re-run, at most STEAL_ATTEMPTS passes in all.
+MAX_STEAL_S = 1.5
+STEAL_ATTEMPTS = 4
+
 
 def control_loop_s() -> float:
     t0 = time.perf_counter()
@@ -43,37 +67,10 @@ def control_loop_s() -> float:
     return time.perf_counter() - t0
 
 
-def read_steal_ticks() -> int | None:
-    """Cumulative hypervisor-steal ticks from /proc/stat (field 9)."""
-    try:
-        with open("/proc/stat") as f:
-            parts = f.readline().split()
-        return int(parts[8]) if parts[0] == "cpu" and len(parts) > 8 else None
-    except (OSError, ValueError):
-        return None
-
-
-def _stage_snapshot(spark) -> tuple[int, dict[int, int]] | None:
-    """(max stage id seen, {stage_id: executorRunTime ms}) from the app
-    status store, or None when the store cannot be read — a failed
-    snapshot must not pass for "no stages yet", or a run would be
-    charged every stage of the session."""
-    try:
-        store = spark.sparkContext._jsc.sc().statusStore()
-        # Spark 4.1 signature: stageList(statuses, details,
-        # withSummaries, quantiles, taskStatus) — py4j sees no Scala
-        # default args, so fetch each default explicitly.
-        defaults = [
-            getattr(store, f"stageList$default${i}")() for i in (2, 3, 4, 5)
-        ]
-        seq = store.stageList(None, *defaults)
-        out: dict[int, int] = {}
-        for i in range(seq.size()):
-            s = seq.apply(i)
-            out[s.stageId()] = int(s.executorRunTime())
-        return (max(out) if out else -1), out
-    except Exception:
-        return None
+def subtotal_r01(timings: dict[str, float]) -> float:
+    return round(
+        sum(t for t in list(timings.values())[:R01_COMPARABLE] if t >= 0), 3
+    )
 
 
 BENCH_QUERIES = [
@@ -201,7 +198,7 @@ BENCH_QUERIES = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    sf = sf_of(sf_dir)
 
     # Pre-start ambient drain: BEFORE Spark exists, the 1-min load is
     # genuinely ambient (not the bench's own), so a strict threshold is
@@ -214,33 +211,28 @@ def main() -> None:
     # the pass accrued 2.46 s of steal: the 1-min average dips before
     # the machine has actually drained. Gate on the 5-MIN average too,
     # with a larger bounded wait budget.
-    pre_threshold = float(os.environ.get("SPARK_GRAFT_BENCH_START_LOAD", "3.0"))
-    pre_threshold5 = float(os.environ.get("SPARK_GRAFT_BENCH_START_LOAD5", "4.0"))
-    pre_wait_s = float(os.environ.get("SPARK_GRAFT_BENCH_START_WAIT", "30"))
-    pre_max_waits = int(os.environ.get("SPARK_GRAFT_BENCH_START_MAX_WAITS", "16"))
     start_waits = 0
     while (
-        os.getloadavg()[0] > pre_threshold
-        or os.getloadavg()[1] > pre_threshold5
-    ) and start_waits < pre_max_waits:
-        time.sleep(pre_wait_s)
+        os.getloadavg()[0] > START_LOAD or os.getloadavg()[1] > START_LOAD5
+    ) and start_waits < START_MAX_WAITS:
+        time.sleep(START_WAIT_S)
         start_waits += 1
-    load_avg_start = [round(x, 2) for x in os.getloadavg()]
+    load_avg_start = load_avg()
 
     # Calibrated control loop + retry-on-steal: if the pure-Python loop
     # runs >1.3x its quiet-machine calibration, the window is steal/load
     # inflated — wait (bounded) for it to settle before measuring.
     calibration = None
     try:
-        with open(os.path.join(os.path.dirname(__file__), "BENCH_CALIBRATION.json")) as f:
+        with open(os.path.join(HERE, "BENCH_CALIBRATION.json")) as f:
             calibration = json.load(f)["control_loop_s"]
     except (OSError, KeyError, ValueError):
         pass
     control_start = control_loop_s()
     control_waits = 0
     if calibration:
-        while control_start > 1.3 * calibration and control_waits < pre_max_waits:
-            time.sleep(pre_wait_s)
+        while control_start > 1.3 * calibration and control_waits < START_MAX_WAITS:
+            time.sleep(START_WAIT_S)
             control_waits += 1
             control_start = control_loop_s()
     from pipeline_apache_beam_entrega1_cs_spark.plans.registry import all_queries
@@ -249,107 +241,54 @@ def main() -> None:
     spark = get_spark("bench")
     registry = all_queries()
 
-    def run(name: str, d: str) -> float:
-        t0 = time.perf_counter()
-        df = registry[name].fn(spark, d)
-        df.write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-
     # Warmup at the smallest SF: JVM JIT, codegen cache, shuffle services.
     for name in BENCH_QUERIES:
-        try:
-            run(name, "/root/testdata/sf0.001")
-        except Exception as ex:  # keep the bench robust: report, don't die
-            print(f"warmup {name} failed: {ex}", file=sys.stderr)
+        _, err, _ = timed_noop(spark, registry[name].fn, warm_dir(sf_dir), 1)
+        if err:  # keep the bench robust: report, don't die
+            print(f"warmup {name} failed: {err}", file=sys.stderr)
 
-    # Ambient-load guard: a busy host inflates every wall time uniformly
-    # and masquerades as a regression (rounds 2 and 4 both hit this). If
-    # the 1-min load average is above threshold before a query's runs,
-    # wait once for it to drain and record what happened either way.
-    # Threshold is calibrated above the bench's own steady-state
-    # contribution on local[32] (~4-6 in the round-3/4 quiet readings),
-    # and total waiting is capped so self-load can't stall the harness.
-    load_threshold = float(os.environ.get("SPARK_GRAFT_BENCH_MAX_LOAD", "8.0"))
-    load_wait_s = float(os.environ.get("SPARK_GRAFT_BENCH_LOAD_WAIT", "30"))
-    max_load_waits = int(os.environ.get("SPARK_GRAFT_BENCH_MAX_WAITS", "3"))
     load_events: list[dict] = []
 
-    def load_guard(name: str) -> None:
-        load1 = os.getloadavg()[0]
-        if load1 <= load_threshold:
-            return
-        if len(load_events) < max_load_waits:
-            time.sleep(load_wait_s)
-            load_events.append(
-                {
-                    "query": name,
-                    "load_before": round(load1, 2),
-                    "load_after": round(os.getloadavg()[0], 2),
-                    "waited_s": load_wait_s,
-                }
-            )
-
-    hz = os.sysconf("SC_CLK_TCK") if hasattr(os, "sysconf") else 100
-
-    # Executor task-time accounting (PERF_r15 scaling.suspect_cpus_ignored;
-    # VERDICT r15 item 2): at sf0.1 every wall time is overhead-dominated,
-    # so an 8-core and a 32-core run look identical and the driver cannot
-    # tell "parallelises fine, SF too small" from "serial". Summing the
-    # executor task durations (StageData.executorRunTime from the app
-    # status store — populated with or without the UI) gives a
-    # parallelism-legible signal: task_time / wall_time ≈ effective
-    # cores on the data-heavy queries, at any SF. Stage IDs increase
-    # monotonically, so "stages created by THIS run" is exactly the IDs
-    # above the pre-run max — immune to the status store evicting old
-    # stages (spark.ui.retainedStages).
-    def run_with_task_time(name: str, d: str) -> tuple[float, int | None]:
-        before = _stage_snapshot(spark)
-        wall = run(name, d)
-        after = _stage_snapshot(spark)
-        if before is None or after is None or not after[1]:
-            return wall, None  # unknown task time, never a session-wide sum
-        return wall, sum(v for k, v in after[1].items() if k > before[0])
-
-    def measure_all() -> tuple[
-        dict[str, float],
-        dict[str, list[float]],
-        float | None,
-        dict[str, int],
-    ]:
+    def measure_all() -> tuple[dict, dict, float | None, dict]:
         """One full pass over BENCH_QUERIES; returns (timings, runs,
         steal seconds accrued during THIS pass, per-query executor
         task-time ms for the min-wall run)."""
-        t_start = read_steal_ticks()
+        window = Window()
         timings: dict[str, float] = {}
         runs: dict[str, list[float]] = {}
         task_times: dict[str, int] = {}
         for name in BENCH_QUERIES:
+            # Ambient-load guard: a busy host inflates every wall time
+            # uniformly and masquerades as a regression (rounds 2 and 4
+            # both hit this). If the 1-min load average is above
+            # threshold before a query's runs, wait once for it to drain
+            # and record what happened. Threshold is calibrated above the
+            # bench's own steady-state contribution on local[32] (~4-6 in
+            # the round-3/4 quiet readings), and total waiting is capped
+            # so self-load can't stall the harness.
+            load1 = os.getloadavg()[0]
+            if load1 > MAX_LOAD and len(load_events) < MAX_LOAD_WAITS:
+                time.sleep(LOAD_WAIT_S)
+                load_events.append({
+                    "query": name, "load_before": round(load1, 2),
+                    "load_after": round(os.getloadavg()[0], 2), "waited_s": LOAD_WAIT_S,
+                })
             # min of 3 measured runs: local-mode wall times swing ±20%
             # under shared-machine load; min is the stable estimator.
-            # Each run gets its own try so one transient failure doesn't
-            # discard valid measurements from the others.
-            load_guard(name)
-            measured: list[tuple[float, int | None]] = []
-            for _ in range(3):
-                try:
-                    measured.append(run_with_task_time(name, sf_dir))
-                except Exception as ex:
-                    print(f"bench {name} failed: {ex}", file=sys.stderr)
-            runs[name] = [round(m, 3) for m, _ in measured]
-            if measured:
-                best_wall, best_task = min(measured, key=lambda t: t[0])
-                timings[name] = round(best_wall, 3)
-                if best_task is not None:
-                    task_times[name] = best_task
-            else:
-                timings[name] = -1.0
-        t_end = read_steal_ticks()
-        steal = (
-            round((t_end - t_start) / hz, 2)
-            if t_start is not None and t_end is not None
-            else None
-        )
-        return timings, runs, steal, task_times
+            runs[name], err, task = timed_noop(
+                spark, registry[name].fn, sf_dir, 3, task_time=True
+            )
+            if err:
+                print(f"bench {name} failed: {err}", file=sys.stderr)
+            timings[name] = run_min(runs[name])
+            # Executor task-time accounting (PERF_r15
+            # scaling.suspect_cpus_ignored; VERDICT r15 item 2): at sf0.1
+            # every wall time is overhead-dominated, so an 8-core and a
+            # 32-core run look identical; task_time / wall ≈ effective
+            # cores on the data-heavy queries, at any SF.
+            if task is not None:
+                task_times[name] = task
+        return timings, runs, window.steal_s(), task_times
 
     # Steal-robust measurement (round-8 lesson: BENCH_r08 carried
     # steal_delta_s=25.4 s and every wall time inflated 7-25% — the
@@ -360,31 +299,23 @@ def main() -> None:
     # Threshold dropped 5 -> 1.5 s in round 13: BENCH_r12's kept pass
     # carried 2.46 s of steal (a ~65% subtotal overstatement vs the
     # quiet cross-check) without tripping a retry.
-    steal_threshold = float(os.environ.get("SPARK_GRAFT_BENCH_MAX_STEAL_S", "1.5"))
-    max_attempts = int(os.environ.get("SPARK_GRAFT_BENCH_STEAL_RETRIES", "4"))
     attempts: list[dict] = []
-    best = None  # (steal_key, timings, runs, steal, task_times)
-    for attempt in range(1, max_attempts + 1):
-        timings, all_runs, steal_delta_s, task_times = measure_all()
-        sub = round(
-            sum(t for n, t in list(timings.items())[:R01_COMPARABLE] if t >= 0), 3
-        )
+    passes = []
+    for attempt in range(1, STEAL_ATTEMPTS + 1):
+        passes.append(measure_all())
+        steal = passes[-1][2]
         attempts.append(
-            {"attempt": attempt, "steal_delta_s": steal_delta_s,
-             "subtotal_r01_comparable": sub}
+            {"attempt": attempt, "steal_delta_s": steal,
+             "subtotal_r01_comparable": subtotal_r01(passes[-1][0])}
         )
-        key = steal_delta_s if steal_delta_s is not None else 0.0
-        if best is None or key < best[0]:
-            best = (key, timings, all_runs, steal_delta_s, task_times)
-        if steal_delta_s is None or steal_delta_s <= steal_threshold:
+        if steal is None or steal <= MAX_STEAL_S:
             break
-        time.sleep(pre_wait_s)  # let the neighbor drain before retrying
-    _, timings, all_runs, steal_delta_s, task_times = best
+        time.sleep(START_WAIT_S)  # let the neighbor drain before retrying
+    # the first lowest-steal pass (an unreadable steal counts as 0)
+    timings, all_runs, steal_delta_s, task_times = min(passes, key=lambda p: p[2] or 0.0)
 
     total = round(sum(t for t in timings.values() if t >= 0), 3)
-    subtotal = round(
-        sum(t for n, t in list(timings.items())[:R01_COMPARABLE] if t >= 0), 3
-    )
+    subtotal = subtotal_r01(timings)
     control_end = control_loop_s()
     result = {
         "metric": "headline_queries_total_time",
@@ -404,12 +335,12 @@ def main() -> None:
         # totals are comparable to a quiet-machine baseline.
         "load_avg_start": load_avg_start,
         "start_waits": start_waits,
-        "load_avg": [round(x, 2) for x in os.getloadavg()],
+        "load_avg": load_avg(),
         # each time the pre-query guard saw load above threshold
         # and paused: empty list == quiet machine throughout.
         "load_waits": load_events,
-        # hypervisor-steal seconds accrued DURING the kept pass
-        # (/proc/stat field 9 delta): nonzero-large == inflated run.
+        # hypervisor-steal seconds accrued DURING the kept pass:
+        # nonzero-large == inflated run.
         "steal_delta_s": steal_delta_s,
         # per-query executor task-time (ms) for the min-wall run:
         # task_time_ms / (wall * 1000) ≈ effective parallel cores, the
@@ -437,11 +368,7 @@ def main() -> None:
     # prev_bench_ok=false). A truncated stdout tail can no longer lose
     # the measurement: BENCH_LAST.json always holds the full payload.
     try:
-        with open(
-            os.path.join(os.path.dirname(__file__) or ".", "BENCH_LAST.json"),
-            "w",
-        ) as f:
-            json.dump(result, f, indent=1)
+        write_json(os.path.join(HERE, "BENCH_LAST.json"), result)
     except OSError as ex:
         print(f"BENCH_LAST.json write failed: {ex}", file=sys.stderr)
     print(json.dumps(result))
@@ -457,7 +384,7 @@ def main() -> None:
         and (calibration is None or control_start <= 1.3 * calibration)
     )
     if quiet and all(t >= 0 for t in timings.values()):
-        quiet_path = os.path.join(os.path.dirname(__file__), "BENCH_quiet.json")
+        quiet_path = os.path.join(HERE, "BENCH_quiet.json")
         try:
             with open(quiet_path) as f:
                 prev = json.load(f)["subtotal_r01_comparable"]
@@ -467,14 +394,12 @@ def main() -> None:
             try:
                 sha = subprocess.run(
                     ["git", "rev-parse", "--short", "HEAD"],
-                    capture_output=True, text=True,
-                    cwd=os.path.dirname(__file__) or ".",
+                    capture_output=True, text=True, cwd=HERE,
                 ).stdout.strip()
             except OSError:
                 sha = None
             result["git_sha"] = sha
-            with open(quiet_path, "w") as f:
-                json.dump(result, f, indent=1)
+            write_json(quiet_path, result)
 
 
 if __name__ == "__main__":

@@ -18,9 +18,7 @@ adjudication recorded in SCALING.md.
 Usage:
     python growth_sweep.py [GROWTH_r<N>.json]
 
-Resumable like registry_sweep.py: finished entries append to
-<out>.jsonl; a restarted sweep skips them (delete an entry's line to
-re-measure it).
+Resumable like registry_sweep.py (see ``measure.resume``).
 """
 
 from __future__ import annotations
@@ -28,7 +26,11 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
+
+from measure import (
+    SWEEP_RUNS, Window, carried, error_fields, resume, run_min, sf_of,
+    timed_noop, write_json,
+)
 
 
 def main() -> None:
@@ -38,116 +40,54 @@ def main() -> None:
     big_dir = os.environ.get(
         "SPARK_GRAFT_GROWTH_BIG_DIR", "/root/testdata/sf0.1"
     )
-    sf_small = small_dir.rstrip("/").rsplit("sf", 1)[-1]
-    sf_big = big_dir.rstrip("/").rsplit("sf", 1)[-1]
     out_path = sys.argv[1] if len(sys.argv) > 1 else "GROWTH.json"
-    n_runs = int(os.environ.get("SPARK_GRAFT_SWEEP_RUNS", "2"))
-    jsonl_path = out_path + ".jsonl"
 
-    from bench import read_steal_ticks
     from pipeline_apache_beam_entrega1_cs_spark.plans.registry import all_queries
     from pipeline_apache_beam_entrega1_cs_spark.session import get_spark
 
-    load_avg_start = round(os.getloadavg()[0], 2)
-    steal_t0 = read_steal_ticks()
+    window = Window()
     spark = get_spark("growth-sweep")
     registry = all_queries()
-    results: dict[str, dict] = {}
-    # Carry hand-added waiver adjudications forward across reruns /
-    # resumes (ADVICE r14): a resumed sweep must not silently clobber
-    # growth_waivers back to {} and re-arm the gate on waived entries.
-    prior_waivers: dict[str, str] = {}
-    if os.path.exists(out_path):
-        try:
-            with open(out_path) as f:
-                prior_waivers = json.load(f).get("growth_waivers", {}) or {}
-        except (OSError, ValueError):
-            pass
-    if os.path.exists(jsonl_path):
-        with open(jsonl_path) as f:
-            for line in f:
-                rec = json.loads(line)
-                results[rec.pop("name")] = rec
-        print(
-            f"resuming: {len(results)} entries already measured",
-            file=sys.stderr,
+
+    def measure(name: str) -> tuple[dict, str]:
+        small_runs, err_s, _ = timed_noop(spark, registry[name].fn, small_dir, SWEEP_RUNS)
+        big_runs, err_b, _ = timed_noop(spark, registry[name].fn, big_dir, SWEEP_RUNS)
+        small_min, big_min = run_min(small_runs), run_min(big_runs)
+        # Record WHICH side failed (ADVICE r15): with a single combined
+        # message, a small-side error could mask or misattribute a
+        # big-side failure when triaging the artifact.
+        sides = "; ".join(
+            f"{label}: {e}" for label, e in (("small", err_s), ("big", err_b)) if e
         )
-
-    def time_runs(spec, sf_dir: str) -> tuple[list[float], str | None]:
-        runs: list[float] = []
-        err = None
-        for _ in range(n_runs):
-            t0 = time.perf_counter()
-            try:
-                spec.fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                runs.append(round(time.perf_counter() - t0, 3))
-            except Exception as ex:  # record, keep sweeping
-                err = f"{type(ex).__name__}: {ex}"[:300]
-        return runs, err
-
-    session_names: set[str] = set()
-    for i, (name, spec) in enumerate(registry.items(), 1):
-        if name in results:
-            continue
-        session_names.add(name)
-        small_runs, err_s = time_runs(spec, small_dir)
-        big_runs, err_b = time_runs(spec, big_dir)
-        small_min = min(small_runs) if small_runs else -1.0
-        big_min = min(big_runs) if big_runs else -1.0
         rec: dict = {
             "small_runs": small_runs,
             "big_runs": big_runs,
             "small_min": small_min,
             "big_min": big_min,
             "growth": (
-                round(big_min / small_min, 2)
-                if small_min > 0 and big_min > 0
-                else -1.0
+                round(big_min / small_min, 2) if small_min > 0 and big_min > 0 else -1.0
             ),
+            **error_fields(sides, bool(small_runs and big_runs)),
         }
-        # "error" means the entry produced NO valid measurement on a
-        # side; one transient failure next to a valid min is recorded
-        # separately so it cannot permanently fail the no-errors gate
-        # (ADVICE r14). Record WHICH side failed (ADVICE r15): with a
-        # single combined message, a small-side error could mask or
-        # misattribute a big-side failure when triaging the artifact.
-        err = err_s or err_b
-        if err:
-            sides = "; ".join(
-                f"{label}: {e}"
-                for label, e in (("small", err_s), ("big", err_b))
-                if e
-            )
-            if not small_runs or not big_runs:
-                rec["error"] = sides
-            else:
-                rec["transient_error"] = sides
-        results[name] = rec
-        with open(jsonl_path, "a") as f:
-            f.write(json.dumps({"name": name, **rec}) + "\n")
-        print(
-            f"[{i}/{len(registry)}] {name}: {small_min}s -> {big_min}s "
-            f"(x{rec['growth']}){' ERROR' if err else ''}",
-            file=sys.stderr,
-            flush=True,
+        return rec, (
+            f"{small_min}s -> {big_min}s (x{rec['growth']}){' ERROR' if sides else ''}"
         )
-    steal_t1 = read_steal_ticks()
-    payload = {
-        "sf_small": sf_small,
-        "sf_big": sf_big,
-        "load_avg_start": load_avg_start,
-        "load_avg_end": round(os.getloadavg()[0], 2),
-        "steal_delta_s": (
-            round((steal_t1 - steal_t0) / os.sysconf("SC_CLK_TCK"), 2)
-            if steal_t0 is not None and steal_t1 is not None
-            else None
-        ),
+
+    results, session_names = resume(out_path, registry, measure)
+
+    def executed_s(names) -> float:
+        """Seconds of every run, both sides, of the entries ``names``."""
+        return round(sum(sum(r.get("small_runs", []) + r.get("big_runs", []))
+                         for r in map(results.get, names)), 1)
+
+    write_json(out_path, {
+        "sf_small": sf_of(small_dir),
+        "sf_big": sf_of(big_dir),
+        **window.fields(),
         # name -> reason; every name must also appear in SCALING.md
         # (tests/test_growth_baseline.py enforces both directions).
         # Prior adjudications are carried forward verbatim (ADVICE r14).
-        "growth_waivers": prior_waivers,
+        "growth_waivers": carried(out_path, "growth_waivers"),
         "n_entries": len(results),
         "total_big_min_s": round(
             sum(r["big_min"] for r in results.values() if r["big_min"] > 0),
@@ -156,36 +96,15 @@ def main() -> None:
         # The NOISE-scaling basis: steal accrues over everything the
         # sweep executed (both SFs, all runs), not just the big-side
         # minimums — the gate's 5% threshold must scale off this.
-        "total_all_runs_s": round(
-            sum(
-                sum(r.get("small_runs", [])) + sum(r.get("big_runs", []))
-                for r in results.values()
-            ),
-            1,
-        ),
+        "total_all_runs_s": executed_s(results),
         # Steal accrues only over THIS process's lifetime, so on a
         # resumed sweep the noise gate must scale off seconds executed
         # THIS session, not the all-sessions total above (ADVICE r14).
-        "steal_basis_s": round(
-            sum(
-                sum(results[n].get("small_runs", []))
-                + sum(results[n].get("big_runs", []))
-                for n in session_names
-            ),
-            1,
-        ),
+        "steal_basis_s": executed_s(session_names),
         "entries": results,
-    }
-    with open(out_path, "w") as f:
-        json.dump(payload, f, indent=1)
-    worst = sorted(
-        (
-            (r["growth"], n)
-            for n, r in results.items()
-            if r["growth"] > 0 and r["big_min"] >= 1.0
-        ),
-        reverse=True,
-    )[:20]
+    })
+    worst = sorted(((r["growth"], n) for n, r in results.items()
+                    if r["growth"] > 0 and r["big_min"] >= 1.0), reverse=True)[:20]
     print(json.dumps({"worst_growth": [[n, g] for g, n in worst]}))
 
 

@@ -492,6 +492,16 @@ def bpe_fit(docs: DataFrame, rounds: int = BPE_FIT_ROUNDS) -> DataFrame:
     between rounds. Measured A/B and oracle row-parity in round 16's
     OPTIMIZATION log.
 
+    Storage: one invocation keeps 2·rounds−1 lazy ``localCheckpoint``
+    RDDs (``rounds`` one-row winners plus ``rounds − 1`` copies of the
+    wrapped corpus, at MEMORY_AND_DISK once an action materializes
+    them). Nothing unpersists them: the returned frame is lazy and
+    still reads every one of them, so they cannot be released before
+    the caller is done with it. They are reclaimed only when the
+    returned frame is garbage-collected (Spark's ContextCleaner), so a
+    long session that keeps many results alive accumulates
+    block-manager storage.
+
     Returns the learned table: (round, left_sym, right_sym,
     n_occurrences) — one row per merge, integer counts, engine-exact.
     """

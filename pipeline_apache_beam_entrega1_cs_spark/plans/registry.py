@@ -14,19 +14,20 @@ never-driver-checked set from CORRECTNESS_r*.json and fails if any
 front slot is spent on an already-checked entry while a never-checked
 one waits (the round-7/round-9 undercount failure mode, now CI-caught).
 
-CURRENT WINDOW (round 16; r15 was 50/50 green): the pending set is
+CURRENT WINDOW (round 17; r16 was 49/50, the one miss being the
+oracle-less agg_hll_intersection): the pending set is
 EMPTY (cumulative driver evidence reached 400/400 in r12), so the
 window is pure staleness back-fill — byte-exactly the 50-entry
-proposal `python -m …plans.rotation` printed at the start of the
-round: the entire r08-stale class (the partial-merge/bitmap/countmin
-aggregates, the ANN rescore/retrieval pair, the dedup governance
-forms, the join asof/bloom/DPP/skew family, the pattern-match trio,
-the r08 streaming entries, the timeseries robust-stats entries, and
-the rest listed below). Retiring all 50 moves the staleness
-histogram's oldest class from r08 to r09 (the monotone-shrink
-invariant, VERDICT r12 item 1). NO new registry entries this round by
-design (optimization round): the window is exactly 50 wide and the
-r08 class is exactly 50 deep.
+proposal `python -m …plans.rotation` printed from CORRECTNESS_r01-r16:
+the entire r09-stale class (the covariance/gini/entropy/mode/variance/
+weighted-percentile aggregates, the dq checks, the eval metrics, the
+multimodal meta/dedup forms, the streaming cdc/cusum/file-source/
+url-dedup state entries, the text cleanup/stats family, the timeseries
+drift/seasonal/survival entries, and the rest listed below). Retiring
+all 50 moves the staleness histogram's oldest class from r09 to r10
+(the monotone-shrink invariant, VERDICT r12 item 1). NO new registry
+entries: the window is exactly 50 wide and the r09 class is exactly 50
+deep.
 
 NEXT-ROUND CHORE: no longer hand-maintained prose (VERDICT r11 item 7
 — the round-7/round-9 drift mode). It is COMPUTED from the same
@@ -57,60 +58,60 @@ from . import (
 from .spec import QuerySpec
 
 DRIVER_PRIORITY: list[str] = [
-    # ================= round-16 window =================
-    # Pure r08-staleness back-fill (pending set is empty; this list is
-    # byte-exactly the `plans.rotation` proposal computed at the start
-    # of round 16 from CORRECTNESS_r01-r15 evidence).
-    "agg_bitmap_distinct",
-    "agg_countmin_heavy_hitters",
-    "agg_hll_intersection",
-    "agg_quantile_partial_merge",
-    "agg_weighted_median",
-    "ann_retrieval_pipeline",
-    "ann_truncated_rescore",
-    "dataset_shuffle_shards",
-    "dedup_binary_payload",
-    "dedup_containment",
-    "dedup_cross_source_overlap",
-    "dedup_keep_best",
-    "dedup_semantic_clusters",
-    "dq_distribution_drift",
-    "dq_ks_bucketed",
-    "embedding_norm_profile",
-    "eval_langid_confusion",
-    "eval_retrieval_metrics",
-    "filter_not_in_null_trap",
-    "graph_bfs_levels",
-    "graph_link_prediction",
-    "graph_sssp_weighted",
-    "join_asof_tolerance",
-    "join_bloom_prefilter",
-    "join_dynamic_partition_pruning",
-    "join_null_skew_split",
-    "join_pointintime_scd2",
-    "maintenance_incremental_manifest",
-    "maintenance_partition_overwrite",
-    "maintenance_retention_ttl",
-    "multimodal_pcm_frame_energy",
-    "multimodal_resize_plumbing",
-    "pattern_match_runs",
-    "pattern_match_sequence",
-    "pipeline_observe_metrics",
-    "sample_neyman_allocation",
-    "sample_temperature_mixture",
-    "sample_weighted_priority",
-    "source_json_permissive",
-    "streaming_pattern_match",
-    "streaming_quantile_state",
-    "streaming_token_accounting",
-    "text_perplexity_backoff",
-    "timeseries_anomaly_mad",
-    "timeseries_forecast_backtest",
-    "timeseries_moving_median",
-    "window_interval_coalesce",
-    "window_max_drawdown",
-    "window_reset_cumsum",
-    "window_running_distinct",
+    # ================= round-17 window =================
+    # Pure r09-staleness back-fill (pending set is empty; this list is
+    # byte-exactly the `plans.rotation` proposal computed from
+    # CORRECTNESS_r01-r16 evidence).
+    "agg_covariance_matrix",
+    "agg_gini_concentration",
+    "agg_group_entropy",
+    "agg_mode_per_group",
+    "agg_variance_partial_merge",
+    "agg_weighted_percentile",
+    "analytics_dau_cumulative",
+    "attribution_linear_touch",
+    "cdc_apply_changelog",
+    "dataset_curriculum_interleave",
+    "dataset_kfold_splits",
+    "dedup_boundary_stitch",
+    "dedup_typo_neighborhood",
+    "dedup_url_canonicalize",
+    "dq_benford_check",
+    "dq_column_profile",
+    "dq_event_freshness",
+    "dq_primary_key_uniqueness",
+    "dq_referential_integrity",
+    "embedding_standardize",
+    "eval_ab_proportions",
+    "eval_model_auc",
+    "eval_pr_curve_thresholds",
+    "eval_quality_agreement",
+    "eval_score_calibration",
+    "geo_bucket_join",
+    "graph_kcore_prune",
+    "graph_modularity_eval",
+    "maintenance_snapshot_diff",
+    "multimodal_ahash_dedup",
+    "multimodal_audio_trim_bounds",
+    "multimodal_base64_roundtrip",
+    "multimodal_cdc_chunking",
+    "multimodal_npy_meta",
+    "sample_poisson_bootstrap",
+    "scd2_build_from_changes",
+    "streaming_cdc_apply_state",
+    "streaming_cusum_state",
+    "streaming_file_source_incremental",
+    "streaming_url_dedup_state",
+    "text_code_detect",
+    "text_html_strip",
+    "text_mojibake_fix",
+    "text_ngram_novelty",
+    "text_pii_redact",
+    "text_readability",
+    "text_sentence_stats",
+    "timeseries_cusum_drift",
+    "timeseries_seasonal_residual",
+    "timeseries_survival_km",
 ]
 
 

@@ -5,7 +5,7 @@ sf0.1) with the same noop-sink shape bench.py uses, and writes one JSON
 file (default SWEEP_sf<sf>.json) mapping name -> {"runs": [...],
 "min": s}. The headline bench structurally cannot see regressions in
 the ~360 non-headline entries — the round-11 sweep caught 93 s / 25 s /
-13 s defects this way. Usage:
+13 s defects this way. Resumable (see ``measure.resume``). Usage:
 
     python registry_sweep.py [out.json]
 """
@@ -15,85 +15,45 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
+
+from measure import (
+    SWEEP_RUNS, Window, carried, error_fields, resume, run_min, sf_of,
+    timed_noop, write_json,
+)
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    sf = sf_of(sf_dir)
     out_path = sys.argv[1] if len(sys.argv) > 1 else f"SWEEP_sf{sf}.json"
-    n_runs = int(os.environ.get("SPARK_GRAFT_SWEEP_RUNS", "2"))
-    # Incremental/resumable: each finished entry appends one JSONL line
-    # to <out>.jsonl; a restarted sweep skips names already recorded,
-    # so a killed run (driver restart, wall-clock cap) loses at most
-    # one entry's work. The final JSON file is assembled at the end.
-    jsonl_path = out_path + ".jsonl"
 
-    from bench import read_steal_ticks
     from pipeline_apache_beam_entrega1_cs_spark.plans.registry import all_queries
     from pipeline_apache_beam_entrega1_cs_spark.session import get_spark
 
     # Machine-noise telemetry: tests/test_sweep_baseline.py's regression
     # diff (VERDICT r12 item 5) skips itself when a sweep self-reports a
     # dirty window, the same guard bench.py applies.
-    load_avg_start = round(os.getloadavg()[0], 2)
-    steal_t0 = read_steal_ticks()
+    window = Window()
     spark = get_spark("sweep")
     registry = all_queries()
-    results: dict[str, dict] = {}
-    if os.path.exists(jsonl_path):
-        with open(jsonl_path) as f:
-            for line in f:
-                rec = json.loads(line)
-                results[rec.pop("name")] = rec
-        print(f"resuming: {len(results)} entries already swept", file=sys.stderr)
-    for i, (name, spec) in enumerate(registry.items(), 1):
-        if name in results:
-            continue
-        runs: list[float] = []
-        err = None
-        for _ in range(n_runs):
-            t0 = time.perf_counter()
-            try:
-                spec.fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                runs.append(round(time.perf_counter() - t0, 3))
-            except Exception as ex:  # record, keep sweeping
-                err = f"{type(ex).__name__}: {ex}"[:300]
-        results[name] = {"runs": runs, "min": min(runs) if runs else -1.0}
-        if err:
-            results[name]["error"] = err
-        with open(jsonl_path, "a") as f:
-            f.write(json.dumps({"name": name, **results[name]}) + "\n")
-        print(
-            f"[{i}/{len(registry)}] {name}: "
-            f"{results[name]['min']}s{' ERROR' if err else ''}",
-            file=sys.stderr,
-            flush=True,
-        )
-    steal_t1 = read_steal_ticks()
-    payload = {
+
+    def measure(name: str) -> tuple[dict, str]:
+        runs, err, _ = timed_noop(spark, registry[name].fn, sf_dir, SWEEP_RUNS)
+        rec = {"runs": runs, "min": run_min(runs), **error_fields(err, bool(runs))}
+        return rec, f"{rec['min']}s{' ERROR' if err else ''}"
+
+    results, _ = resume(out_path, registry, measure)
+    write_json(out_path, {
         "sf": sf,
-        "load_avg_start": load_avg_start,
-        "load_avg_end": round(os.getloadavg()[0], 2),
-        "steal_delta_s": (
-            round((steal_t1 - steal_t0) / os.sysconf("SC_CLK_TCK"), 2)
-            if steal_t0 is not None and steal_t1 is not None
-            else None
-        ),
+        **window.fields(),
         # name -> reason; tests/test_sweep_baseline.py exempts these
         # from the cross-round regression diff (adjudicate in SCALING.md)
-        "regression_waivers": {},
+        "regression_waivers": carried(out_path, "regression_waivers"),
         "n_entries": len(results),
         "total_min_s": round(sum(r["min"] for r in results.values() if r["min"] > 0), 1),
         "entries": results,
-    }
-    with open(out_path, "w") as f:
-        json.dump(payload, f, indent=1)
-    slow = sorted(
-        ((r["min"], n) for n, r in results.items()), reverse=True
-    )[:20]
+    })
+    slow = sorted(((r["min"], n) for n, r in results.items()), reverse=True)[:20]
     print(json.dumps({"slowest": [[n, s] for s, n in slow]}))
 
 

@@ -11,8 +11,8 @@ the only thing that varies is how the fixed per-query machinery
 amortizes over batches. Writes STREAMING_AMORT_r16.json.
 
 Methodology matches bench.py: min-of-3, noop-equivalent end state (the
-runner materializes the final DF table), /proc/stat steal deltas per
-run, warmup pass at sf0.001.
+runner materializes the final DF table), hypervisor steal per run
+(``measure.Window``), warmup pass at sf0.001.
 """
 from __future__ import annotations
 
@@ -21,14 +21,11 @@ import os
 import sys
 import time
 
+from measure import Window, load_avg, warm_dir, write_json
+
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    # warm up on the sibling sf0.001 when the fixture set has one
-    warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
-    if not os.path.isdir(warm_dir):
-        warm_dir = sf_dir
-    from bench import read_steal_ticks
     from pipeline_apache_beam_entrega1_cs_spark.session import get_spark
     from pipeline_apache_beam_entrega1_cs_spark.streaming.sinks import (
         run_tfidf_state_stream,
@@ -36,28 +33,17 @@ def main() -> None:
 
     spark = get_spark("streaming_amortization")
     # warmup: JIT + codegen + streaming machinery
-    run_tfidf_state_stream(spark, warm_dir).count()
+    run_tfidf_state_stream(spark, warm_dir(sf_dir)).count()
 
-    batch_counts = [1, 4, 8]
     out: dict = {"sf_dir": sf_dir, "entry": "streaming_tfidf_state", "runs": {}}
-    rows_ref = None
-    for n in batch_counts:
+    for n in (1, 4, 8):
         runs = []
         for _ in range(3):
-            s0 = read_steal_ticks()
+            window = Window()
             t0 = time.perf_counter()
-            df = run_tfidf_state_stream(spark, sf_dir, n_batches=n)
-            nrows = df.count()
-            dt = time.perf_counter() - t0
-            s1 = read_steal_ticks()
-            steal = (
-                round((s1 - s0) / 100, 2)
-                if s0 is not None and s1 is not None
-                else None
-            )
-            runs.append({"wall_s": round(dt, 3), "steal_s": steal})
-        if rows_ref is None:
-            rows_ref = nrows
+            nrows = run_tfidf_state_stream(spark, sf_dir, n_batches=n).count()
+            wall = round(time.perf_counter() - t0, 3)
+            runs.append({"wall_s": wall, "steal_s": window.steal_s()})
         best = min(r["wall_s"] for r in runs)
         out["runs"][str(n)] = {
             "n_batches": n,
@@ -66,21 +52,14 @@ def main() -> None:
             "sec_per_batch": round(best / n, 3),
             "state_rows": nrows,
         }
-        assert nrows == rows_ref, (
-            f"final state differs across slicings: {nrows} != {rows_ref}"
-        )
-        print(
-            f"n_batches={n}: min {best}s = {round(best / n, 3)} s/batch "
-            f"({nrows} state rows)",
-            file=sys.stderr,
-            flush=True,
-        )
-    out["load_avg"] = [round(x, 2) for x in os.getloadavg()]
-    path = os.path.join(
-        os.path.dirname(__file__) or ".", "STREAMING_AMORT_r16.json"
+        print(f"n_batches={n}: min {best}s = {round(best / n, 3)} s/batch "
+              f"({nrows} state rows)", file=sys.stderr, flush=True)
+    rows = {r["state_rows"] for r in out["runs"].values()}
+    assert len(rows) == 1, f"final state differs across slicings: {rows}"
+    out["load_avg"] = load_avg()
+    write_json(
+        os.path.join(os.path.dirname(__file__) or ".", "STREAMING_AMORT_r16.json"), out
     )
-    with open(path, "w") as f:
-        json.dump(out, f, indent=1)
     print(json.dumps(out))
 
 

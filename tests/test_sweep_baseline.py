@@ -193,12 +193,12 @@ def test_regression_gate_logic_on_synthetic_sweeps(tmp_path, monkeypatch):
 
 
 def test_bench_stage_snapshot_none_when_status_store_fails():
-    """bench._stage_snapshot reports an unreadable status store as None,
+    """measure.stage_snapshot reports an unreadable status store as None,
     never as an empty "no stages yet" snapshot whose -1 max id would
     charge a run with every stage of the session."""
     from types import SimpleNamespace
 
-    import bench
+    import measure
 
     def raising():
         raise RuntimeError("status store unavailable")
@@ -220,5 +220,5 @@ def test_bench_stage_snapshot_none_when_status_store_fails():
             sparkContext=SimpleNamespace(_jsc=SimpleNamespace(sc=lambda: sc))
         )
 
-    assert bench._stage_snapshot(stub(raising)) is None
-    assert bench._stage_snapshot(stub(Store)) == (5, {3: 70, 5: 20})
+    assert measure.stage_snapshot(stub(raising)) is None
+    assert measure.stage_snapshot(stub(Store)) == (5, {3: 70, 5: 20})
