@@ -1,7 +1,12 @@
 #!/usr/bin/env python
-"""Physical-plan audit: prints the scale-relevant plan properties of the
-headline queries (pushdown, pruning, join strategies, exchange counts) as
-a compact report. Regenerate EXPLAIN.md with:
+"""Plan capture, scale-smell detection and the physical-plan audit.
+
+The one owner of plan capture: :func:`physical_plan` is the returned
+frame's ``explain("formatted")``, and :func:`entry_plans` adds the plan
+of every SQL execution a registry entry runs while it builds that frame
+(pins, caches, eager fits, layout writes). The registry plan gates in
+``tests/test_scale_idioms.py`` and the audit below read :func:`smells`
+and :func:`operator_counts` over those plans. Regenerate EXPLAIN.md with:
 
     python explain_audit.py > EXPLAIN.md
 """
@@ -12,95 +17,169 @@ import contextlib
 import io
 import os
 import re
+from collections import Counter
 
-# Round 13 (VERDICT r12 item 6): the audit covers the FULL registry —
-# every entry gets a section, and any entry carrying plan_waivers has
-# its waivers printed inline, so "every waiver has a matching EXPLAIN
-# note" holds by construction. Hand-written adjudications for plans
-# whose TEXT over-counts executed work stay in NOTES below.
+# Entries whose build runs side effects (stream replays, sink writes);
+# the registry plan gates do not build them.
+SIDE_EFFECT_PREFIXES = ("streaming_", "sink_")
+
+JOINS = (
+    "BroadcastHashJoin",
+    "SortMergeJoin",
+    "ShuffledHashJoin",
+    # nested-loop strategies are usually scale smells — count them so a
+    # cartesian can't hide from the audit
+    "BroadcastNestedLoopJoin",
+    "CartesianProduct",
+)
+
+# Operators whose presence anywhere in a plan is a smell, keyed by the
+# QuerySpec.plan_waivers key that can sanction it ("cartesian": none can).
+_SMELL_OPERATORS = {"cartesian": "CartesianProduct", "bnlj": "BroadcastNestedLoopJoin"}
+
+# Nodes a SinglePartition exchange's rows flow through unchanged in
+# cardinality on their way to a consumer: if only these separate the
+# exchange from a Window, every input row is sorted in ONE task — the
+# global-window shape the gate exists to catch. Anything else (an
+# aggregate, a join, another Exchange) re-shapes the data first.
+_PASS_THROUGH_NODES = frozenset({
+    "Sort", "Project", "Filter", "ColumnarToRow", "InputAdapter",
+    "WholeStageCodegen", "AQEShuffleRead", "ShuffleQueryStage",
+    "ReusedExchange", "Coalesce",
+})
+
+# A tree line: branch glyphs (whose width is the depth), an optional
+# whole-stage-codegen "* ", the operator name, then its id as the first
+# parenthesised number. Detail lines ("(3) Filter", "Output [2]: ...")
+# never match: they start with "(" or carry a ":" before any "(".
+_NODE = re.compile(r"^([ :+|-]*)(?:\* )?([A-Za-z]\w*)[^(:\n]*\((\d+)\)")
+_INITIAL_PLAN = re.compile(r"^([ :+|-]*)== Initial Plan ==")
 
 
-# Caveats printed under an entry — for plans whose EXPLAIN text
-# over-counts: a cached relation's subtree is re-printed at every
-# reference, so entries that materialize a bounded frame (the MMR
-# candidate/pair cache) show far more Exchanges in TEXT than execute.
-NOTES = {
-    "analytics_abc_xyz_matrix": (
-        "exchange count is inflated by the two 1-row scalar attaches "
-        "(month-count/total and max-revenue, the waived BNLJs) re-printed "
-        "per reference; executed work is two rollups, the 256-bucket "
-        "two-level prefix, and one final hash-agg (2.3 s at sf0.1, "
-        "2.4x over 100x rows — SCALING.md round 12)"
-    ),
-    "embedding_matryoshka_eval": (
-        "plan-TEXT inflation: the topk subtree is re-printed at each of "
-        "its two consumers (per-dim lists and the dim-64 baseline) and "
-        "the waived BNLJ is the broadcast query-panel attach re-printed "
-        "per reference; an eager cache+release was tried and measured "
-        "1.6x SLOWER than the double execution (docstring A/B)"
-    ),
-    "text_bpe_fit": (
-        "the printed plan is a Union of three 1-row localCheckpoint "
-        "scans: the round-16 pin rewrite materializes each merge "
-        "round's winner and corpus form per invocation (inside the "
-        "timed region — never across runs), so the pair-count work "
-        "runs in the pin jobs the plan text cannot show; unpinned, "
-        "round r re-embedded every prior round's pair-count subtree "
-        "(measured 5.65-5.84 s -> 1.79-2.0 s at sf0.1 with the doc_id "
-        "spread, OPTIMIZATION_r16.md)"
-    ),
-    "eval_kendall_tau_rankers": (
-        "same double-reference shape as embedding_matryoshka_eval: the "
-        "top-20 item list feeds both sides of the k^2-bounded pair "
-        "self-join; BNLJ = the broadcast query-panel attach"
-    ),
-    "graph_sssp_weighted": (
-        "cached-subtree inflation (see graph_bfs_levels): each "
-        "Bellman-Ford round's dist frame is a cached materialization "
-        "point — the round feeds the next twice (keep-min + relax), so "
-        "an uncached lineage doubles per round"
-    ),
-    "graph_bfs_levels": (
-        "cached-subtree inflation (see ann_mmr_rerank): each hop's "
-        "frontier and the cumulative visited frame are cached Pregel "
-        "materialization points (measured 2.1x at sf0.1 — SCALING.md); "
-        "the plan text re-prints every cached lineage at each anti-join "
-        "reference"
-    ),
-    "dedup_cross_source_overlap": (
-        "cached-subtree inflation: the (fp, source) frame feeds three "
-        "consumers from ONE cached evaluation (released after the "
-        "190-row result materializes); the fingerprint aggregate "
-        "combines map-side so the shuffle carries ~one row per document"
-    ),
-    "ann_mmr_rerank": (
-        "counts above are inflated by cached-subtree re-prints; the "
-        "retrieval stage executes ONCE into the k/m-bounded candidate/"
-        "pair cache and the unrolled rounds reuse it (measured: cold "
-        "7.6s->5.8s, warm 2.4s->1.5s at sf0.1 vs uncached — SCALING.md)"
-    ),
-    "ann_retrieval_pipeline": (
-        "same cached-candidate inflation as ann_mmr_rerank; at runtime "
-        "the IVF-PQ stage materializes once per query set and the MMR "
-        "rounds run on the bounded cache. Since round 8 both MMR entries "
-        "materialize their pick_rank*|queries|-row result eagerly and "
-        "RELEASE the candidate/pair caches (ADVICE r7: no cache "
-        "accumulation across invocations); the plan shown is the cached "
-        "final frame over the full lineage"
-    ),
-    "eval_model_auc": (
-        "plan-TEXT inflation: the quality-model scoring subtree is "
-        "re-printed at each reference (per-score collapse + the 1-row "
-        "bounds and 256-row bucket-base attaches — the waived BNLJs); "
-        "executed work is one scoring pass, one per-distinct-score "
-        "aggregate, and windows over the 256-bucket frame"
-    ),
-    "timeseries_survival_km": (
-        "the BNLJ count is the waived 1-row observation-end and "
-        "total-count scalar attaches re-printed per reference; the "
-        "cumulative windows run over the #distinct-exit-days frame"
-    ),
-}
+def physical_plan(df) -> str:
+    """The frame's ``explain("formatted")`` text."""
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+def _sql_store(spark):
+    """The SQL status store, once the listener bus has delivered every
+    event posted so far."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return spark._jsparkSession.sharedState().statusStore()
+
+
+def _newest_execution(store) -> int:
+    # the store's view is sorted by execution id and evicts the oldest
+    # first, so its last element is the newest execution
+    n = store.executionsCount()
+    return store.executionsList(n - 1, 1).head().executionId() if n else -1
+
+
+def entry_plans(spark, fn, sf_dir: str) -> tuple[object, str, list[str]]:
+    """Build ``fn(spark, sf_dir)`` and return (the frame, its formatted
+    plan, the ``physicalPlanDescription`` of every SQL execution that
+    started while ``fn`` ran).
+
+    Execution ids increase monotonically, so the build's executions are
+    exactly the ids above the newest one before the build, whatever the
+    store evicted past ``spark.sql.ui.retainedExecutions``. Raises when
+    the store cannot be read or no longer holds one of them: an
+    unreadable store must fail a plan gate, never pass it as "no
+    executions"."""
+    first = _newest_execution(_sql_store(spark)) + 1
+    df = fn(spark, sf_dir)
+    store = _sql_store(spark)
+    builds = []
+    for i in range(first, _newest_execution(store) + 1):
+        execution = store.execution(i)
+        if execution.isEmpty():
+            raise RuntimeError(f"SQL execution {i} is not in the status store")
+        builds.append(execution.get().physicalPlanDescription())
+    return df, physical_plan(df), builds
+
+
+def _plan_tree_nodes(plan: str) -> list[tuple[int, str, int]]:
+    """Parse the formatted plan's tree sections into (indent_depth,
+    node_name, node_id) in render order — parents render above their
+    children at smaller indentation. An executed adaptive plan prints
+    its "== Initial Plan ==" below its final plan; that subtree never
+    ran as printed and is skipped."""
+    nodes: list[tuple[int, str, int]] = []
+    skip_from = None
+    for line in plan.splitlines():
+        if m := _INITIAL_PLAN.match(line):
+            skip_from = len(m.group(1))
+        elif m := _NODE.match(line):
+            depth = len(m.group(1))
+            if skip_from is not None and depth >= skip_from:
+                continue
+            skip_from = None
+            nodes.append((depth, m.group(2), int(m.group(3))))
+    return nodes
+
+
+def _walk(plan: str):
+    """Yield (node_name, node_id, ancestor names nearest first) for each
+    tree node; ancestors are the nearest preceding nodes at strictly
+    smaller depth."""
+    stack: list[tuple[int, str]] = []
+    for depth, name, nid in _plan_tree_nodes(plan):
+        while stack and stack[-1][0] >= depth:
+            stack.pop()
+        yield name, nid, [a for _, a in reversed(stack)]
+        stack.append((depth, name))
+
+
+def operator_counts(plan: str) -> tuple[Counter, Counter]:
+    """(operators of the plan, operators under an InMemoryRelation), each
+    as {name: number of distinct operator ids}. A subtree printed again
+    at every reference counts once; cached operators ran when the
+    relation was materialized, not in this plan's execution."""
+    ids: dict[bool, dict[str, set[int]]] = {False: {}, True: {}}
+    for name, nid, ancestors in _walk(plan):
+        ids["InMemoryRelation" in ancestors].setdefault(name, set()).add(nid)
+    live, cached = (Counter({k: len(v) for k, v in ids[c].items()}) for c in (False, True))
+    return live, cached
+
+
+def has_single_partition_window(plan: str) -> bool:
+    """True iff a Window/WindowGroupLimit consumes an Exchange
+    SinglePartition through pass-through nodes only — walking the tree
+    section's ancestor chain, not the detail numbering (consecutive
+    detail ids do not guarantee a consumer relationship: ADVICE r05)."""
+    single = set()
+    for m in re.finditer(r"^\((\d+)\) Exchange\b", plan, re.M):
+        am = re.search(r"^Arguments: (.*)$", plan[m.end(): m.end() + 500], re.M)
+        if am and am.group(1).startswith("SinglePartition"):
+            single.add(int(m.group(1)))
+    if not single:
+        return False
+    for name, nid, ancestors in _walk(plan):
+        if name != "Exchange" or nid not in single:
+            continue
+        for a in ancestors:
+            if a in ("Window", "WindowGroupLimit"):
+                return True
+            if a not in _PASS_THROUGH_NODES:
+                break  # cardinality re-shaped before any Window
+    return False
+
+
+def smells(plan: str) -> set[str]:
+    """The scale smells of one formatted plan, each named by the
+    plan_waivers key that sanctions it: "cartesian", "bnlj",
+    "global_window"."""
+    found = {k for k, op in _SMELL_OPERATORS.items() if op in plan}
+    if has_single_partition_window(plan):
+        found.add("global_window")
+    return found
+
+
+def _joins(counts: Counter) -> dict[str, int]:
+    return {k: counts[k] for k in JOINS if counts[k]}
 
 
 def main() -> None:
@@ -116,40 +195,34 @@ def main() -> None:
     print()
     print(f"Generated by `python explain_audit.py` at `{sf_dir}`. For each")
     print("query: join strategies chosen, exchange (shuffle) count, filters")
-    print("pushed into the parquet scan, columns actually read, and — for")
-    print("entries carrying plan_waivers — the waiver text (the sanctioned")
-    print("BNLJ / global-window uses the plan gates police).")
+    print("pushed into the parquet scan, columns actually read, the SQL")
+    print("executions the entry ran while building its frame (pins, caches,")
+    print("eager fits, layout writes) and — for entries carrying")
+    print("plan_waivers — the waiver text (the sanctioned BNLJ / global-window")
+    print("uses the plan gates police in the returned plan and the build")
+    print("executions alike). Operators are counted once per operator id, so a")
+    print("subtree printed again at each reference counts once; exchanges")
+    print("under an InMemoryRelation are counted apart as cached (they ran")
+    print("when the relation was materialized); an executed adaptive plan")
+    print("counts its final plan only.")
     print()
     print(f"Entries: {len(registry)} (full registry).")
     print()
     for name, spec in registry.items():
-        df = spec.fn(spark, sf_dir)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue()
-        joins = {
-            k: plan.count(k)
-            for k in (
-                "BroadcastHashJoin",
-                "SortMergeJoin",
-                "ShuffledHashJoin",
-                # nested-loop strategies are usually scale smells — count
-                # them so a cartesian can't hide from the audit
-                "BroadcastNestedLoopJoin",
-                "CartesianProduct",
-            )
-            if plan.count(k)
-        }
-        n_exchange = len(re.findall(r"\(\d+\) Exchange", plan))
-        pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
-        pushed_nonempty = [p for p in pushed if p.strip()]
+        _, plan, builds = entry_plans(spark, spec.fn, sf_dir)
+        live, cached = operator_counts(plan)
+        pushed = [p for p in re.findall(r"PushedFilters: \[([^\]]*)\]", plan) if p.strip()]
         schemas = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
         print(f"## {name}")
-        print(f"- joins: {joins or 'none'}")
-        print(f"- shuffles (Exchange): {n_exchange}")
-        if pushed_nonempty:
-            print(f"- pushed filters: {len(pushed_nonempty)} scan(s), e.g. `{pushed_nonempty[0][:120]}`")
+        print(f"- joins: {_joins(live) or 'none'}")
+        extra = f" (+{cached['Exchange']} cached)" if cached["Exchange"] else ""
+        print(f"- shuffles (Exchange): {live['Exchange']}{extra}")
+        if builds:
+            built = sum((operator_counts(p)[0] for p in builds), Counter())
+            print(f"- build executions: {len(builds)} (joins: "
+                  f"{_joins(built) or 'none'}; shuffles: {built['Exchange']})")
+        if pushed:
+            print(f"- pushed filters: {len(pushed)} scan(s), e.g. `{pushed[0][:120]}`")
         else:
             print("- pushed filters: none (no scan-level predicates in this plan)")
         if schemas:
@@ -157,8 +230,6 @@ def main() -> None:
             print(f"- first scan reads {len(cols)} column(s): `{schemas[0][:120]}`")
         for wk, wv in (spec.plan_waivers or {}).items():
             print(f"- waiver `{wk}`: {wv}")
-        if name in NOTES:
-            print(f"- note: {NOTES[name]}")
         print()
 
 

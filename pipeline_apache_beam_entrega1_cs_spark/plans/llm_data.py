@@ -7201,12 +7201,13 @@ QUERIES: dict[str, QuerySpec] = {
     "ann_truncated_rescore": QuerySpec(
         ann_truncated_rescore, ANN_TRUNCATED_RESCORE_SQL, "similarity",
         plan_waivers={"bnlj": "|queries| x corpus stream (coarse prefix stage)"}),
-    # No plan_waivers since round 14: the IVF-PQ candidate stage (whose
-    # k-row centroid/codebook BNLJ broadcasts are waivered on
-    # ann_pq_ivf_adc_topk itself) is driver-pinned at the index ->
-    # re-rank boundary, so the FINAL plan is MMR-only.
     "ann_retrieval_pipeline": QuerySpec(
-        ann_retrieval_pipeline, _retrieval_pipeline_sql(), "similarity"),
+        ann_retrieval_pipeline, _retrieval_pipeline_sql(), "similarity",
+        plan_waivers={"bnlj": (
+            "k-row coarse-centroid/codebook broadcasts of the IVF-PQ "
+            "candidate stage (quantizer fit + probe scoring), run in the "
+            "build executions that pin it at the index -> re-rank "
+            "boundary: k = 8 rows whatever the corpus size")}),
     "eval_langid_confusion": QuerySpec(
         eval_langid_confusion, EVAL_LANGID_SQL, "text"),
     "eval_score_calibration": QuerySpec(
@@ -7237,9 +7238,12 @@ QUERIES: dict[str, QuerySpec] = {
     "text_token_stats": QuerySpec(text_token_stats, TEXT_TOKEN_STATS_SQL, "text"),
     "text_bpe_token_count": QuerySpec(text_bpe_token_count, TEXT_BPE_TOKEN_SQL, "text"),
     "text_bpe_apply": QuerySpec(text_bpe_apply, _bpe_apply_sql(), "text"),
-    # no bnlj waiver: the per-round merge-pair BNLJ runs inside the
-    # localCheckpoint pin jobs, which the explain-plan gate cannot see
-    "text_bpe_fit": QuerySpec(text_bpe_fit, _bpe_fit_sql(), "text"),
+    "text_bpe_fit": QuerySpec(
+        text_bpe_fit, _bpe_fit_sql(), "text",
+        plan_waivers={"bnlj": (
+            "per-round merge-pair attach: the round's 1-row winning pair "
+            "broadcast onto the corpus form, run in the localCheckpoint "
+            "pin executions — one row per round whatever the corpus size")}),
     "text_lang_id": QuerySpec(text_lang_id, TEXT_LANG_ID_SQL, "text"),
     "text_quality": QuerySpec(text_quality, TEXT_QUALITY_SQL, "text"),
     "text_gopher_quality_filters": QuerySpec(

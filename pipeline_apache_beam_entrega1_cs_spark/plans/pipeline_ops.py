@@ -2044,9 +2044,6 @@ QUERIES: dict[str, QuerySpec] = {
         streaming_error_burst_state, DQ_ERROR_BURST_SQL, "streaming"),
     "streaming_out_of_order_state": QuerySpec(
         streaming_out_of_order_state, DQ_OUT_OF_ORDER_SQL, "streaming"),
-    # the 1-row MAX-scalar BNLJ lives in the eager compaction WRITE, not
-    # in the returned report plan (a plain scan + groupBy over the
-    # compacted files) — so no plan waiver is needed or allowed here
     "pipeline_observe_metrics": QuerySpec(
         pipeline_observe_metrics, PIPELINE_OBSERVE_SQL, "pipeline"),
     "dataset_shuffle_shards": QuerySpec(
@@ -2055,11 +2052,15 @@ QUERIES: dict[str, QuerySpec] = {
             "window input = 256 md5-prefix buckets (O(1) cumulative "
             "offsets for two-phase ranking)")}),
     "maintenance_compact_small_files": QuerySpec(
-        maintenance_compact_small_files, COMPACT_SQL, "pipeline"),
-    # like compaction, the 1-row min/max-scalar BNLJ lives in the eager
-    # layout WRITE; the returned report plan is a plain scan + groupBy
+        maintenance_compact_small_files, COMPACT_SQL, "pipeline",
+        plan_waivers={"bnlj": (
+            "1-row MAX(doc_id) scalar broadcast onto the fragments in the "
+            "eager compaction write (the bucket-boundary domain)")}),
     "maintenance_zorder_layout": QuerySpec(
-        maintenance_zorder_layout, _zorder_sql(), "pipeline"),
+        maintenance_zorder_layout, _zorder_sql(), "pipeline",
+        plan_waivers={"bnlj": (
+            "1-row min/max(doc_id, n_chars) scalar broadcast onto the "
+            "documents in the eager layout write (the bucketizer bounds)")}),
     "maintenance_partition_overwrite": QuerySpec(
         maintenance_partition_overwrite, MAINT_PARTITION_OVERWRITE_SQL, "pipeline"),
     "maintenance_retention_ttl": QuerySpec(

@@ -41,10 +41,15 @@ class QuerySpec:
     doc: str = ""
     # Plan-shape waivers consumed by the regression gate
     # (tests/test_scale_idioms.py::test_no_cartesian_in_registry_plans).
-    # The gate fails any registry plan containing a CartesianProduct, an
-    # unsanctioned BroadcastNestedLoopJoin, or a single-partition-fed
-    # Window; a sanction lives HERE, next to the operator it excuses,
-    # as {"bnlj": "<why the broadcast side is provably tiny>"} or
+    # The gate reads the returned frame's plan AND the plan of every SQL
+    # execution the entry runs while building it (pins, caches, eager
+    # fits, layout writes — explain_audit.entry_plans), and fails any
+    # containing a CartesianProduct, an unsanctioned
+    # BroadcastNestedLoopJoin, or a single-partition-fed Window; a
+    # waiver whose smell appears in none of them fails as stale
+    # (test_plan_waivers_not_stale). A sanction lives HERE, next to the
+    # operator it excuses, as
+    # {"bnlj": "<why the broadcast side is provably tiny>"} or
     # {"global_window": "<why the window input is scale-independent, or
     # which scale-safe twin ships alongside>"} — never as a hardcoded
     # name inside the test.

@@ -1,15 +1,14 @@
 #!/usr/bin/env python
 """Dump `.explain("formatted")` for named registry queries into
 plans/r15/<query>_<suffix>.txt — the before/after plan evidence for
-OPTIMIZATION_r15.md.
+OPTIMIZATION_r15.md — followed by the plan of every SQL execution the
+entry ran while building its frame (pins, caches, eager fits).
 
 Usage: python plans/r15/dump_plans.py <before|after> name [name ...]
 """
 
 from __future__ import annotations
 
-import contextlib
-import io
 import os
 import sys
 
@@ -21,6 +20,7 @@ def main() -> None:
     names = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+    from explain_audit import entry_plans
     from pipeline_apache_beam_entrega1_cs_spark.plans.registry import all_queries
     from pipeline_apache_beam_entrega1_cs_spark.session import get_spark
 
@@ -28,13 +28,12 @@ def main() -> None:
     registry = all_queries()
     out_dir = os.path.dirname(os.path.abspath(__file__))
     for name in names:
-        df = registry[name].fn(spark, sf_dir)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
+        _, plan, builds = entry_plans(spark, registry[name].fn, sf_dir)
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
-            f.write(buf.getvalue())
+            f.write(plan)
+            for i, build in enumerate(builds, 1):
+                f.write(f"\n== Build execution {i} of {len(builds)} ==\n{build}")
         print(f"wrote {path}", file=sys.stderr)
 
 

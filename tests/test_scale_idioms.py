@@ -5,20 +5,21 @@ Streaming."""
 
 from __future__ import annotations
 
-import io
 import json
-import contextlib
 from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
-
-def physical_plan(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+import explain_audit
+from explain_audit import (
+    JOINS,
+    entry_plans,
+    has_single_partition_window,
+    operator_counts,
+    physical_plan,
+    smells,
+)
 
 
 def test_bucketed_join_has_no_shuffle(spark, sf_dir):
@@ -294,65 +295,6 @@ def test_observe_single_pass_metrics(spark, sf_dir):
     assert metrics["gross"] == expected["g"]
 
 
-# Nodes a SinglePartition exchange's rows flow through unchanged in
-# cardinality on their way to a consumer: if only these separate the
-# exchange from a Window, every input row is sorted in ONE task — the
-# global-window shape the gate exists to catch. Anything else (an
-# aggregate, a join, another Exchange) re-shapes the data first.
-_PASS_THROUGH_NODES = frozenset({
-    "Sort", "Project", "Filter", "ColumnarToRow", "InputAdapter",
-    "WholeStageCodegen", "AQEShuffleRead", "ShuffleQueryStage",
-    "ReusedExchange", "Coalesce",
-})
-
-
-def _plan_tree_nodes(plan: str) -> list[tuple[int, str, int]]:
-    """Parse the formatted plan's tree section into (indent_depth,
-    node_name, node_id) in render order — parents render above their
-    children at smaller indentation."""
-    import re
-
-    nodes = []
-    for line in plan.splitlines():
-        m = re.match(r"^([ :+|*-]*)([A-Za-z]\w*)[^(\n]*\((\d+)\)", line)
-        if m:
-            nodes.append((len(m.group(1)), m.group(2), int(m.group(3))))
-    return nodes
-
-
-def has_single_partition_window(plan: str) -> bool:
-    """True iff a Window/WindowGroupLimit consumes an Exchange
-    SinglePartition through pass-through nodes only — walking the tree
-    section's ancestor chain, not the detail numbering (consecutive
-    detail ids do not guarantee a consumer relationship: ADVICE r05)."""
-    import re
-
-    args_by_id: dict[int, str] = {}
-    for m in re.finditer(r"^\((\d+)\) Exchange\b", plan, re.M):
-        tail = plan[m.end(): m.end() + 500]
-        am = re.search(r"^Arguments: (.*)$", tail, re.M)
-        args_by_id[int(m.group(1))] = am.group(1) if am else ""
-    if not args_by_id:
-        return False
-    nodes = _plan_tree_nodes(plan)
-    for idx, (depth, name, nid) in enumerate(nodes):
-        if name != "Exchange" or not args_by_id.get(nid, "").startswith(
-            "SinglePartition"
-        ):
-            continue
-        # ancestors: nearest preceding lines at strictly smaller depth
-        d = depth
-        for adepth, aname, _ in reversed(nodes[:idx]):
-            if adepth >= d:
-                continue
-            d = adepth
-            if aname in ("Window", "WindowGroupLimit"):
-                return True
-            if aname not in _PASS_THROUGH_NODES:
-                break  # cardinality re-shaped before any Window
-    return False
-
-
 def test_single_partition_window_detector(spark, sf_dir):
     """The detector itself: fires on a real global-ORDER-BY window plan
     (including one with interposed Project/Filter nodes the old 2-node
@@ -383,52 +325,107 @@ def test_single_partition_window_detector(spark, sf_dir):
     assert not has_single_partition_window(physical_plan(one_row))
 
 
-def test_no_cartesian_in_registry_plans(spark, sf_dir):
+def test_join_counts_are_per_operator_not_per_line(spark, sf_dir):
+    """q3 joins three tables: two joins, though each operator's name is
+    printed on its tree line and again on its detail line."""
+    from pipeline_apache_beam_entrega1_cs_spark.plans.registry import all_queries
+
+    live, _ = operator_counts(physical_plan(all_queries()["q3_shipping_priority"].fn(spark, sf_dir)))
+    assert sum(live[j] for j in JOINS) == 2
+
+
+def test_cached_subtree_counts_once(spark):
+    """A materialized cache referenced by both sides of a self-join is
+    printed twice, each time with its final and initial adaptive plan;
+    its one exchange counts once, as cached, not as this plan's."""
+    grouped = spark.range(100).withColumn("k", F.col("id") % 7).groupBy("k").count().cache()
+    try:
+        grouped.count()
+        live, cached = operator_counts(physical_plan(grouped.alias("a").join(grouped.alias("b"), "k")))
+        assert cached["Exchange"] == 1 and live["Exchange"] == 0
+    finally:
+        grouped.unpersist()
+
+
+def test_entry_plans_sees_build_time_executions(spark, sf_dir):
+    """A BNLJ collected while the frame is built never shows in the
+    returned frame's plan; entry_plans reports it from the build's SQL
+    execution."""
+    from pipeline_apache_beam_entrega1_cs_spark.schemas import load_table
+
+    def entry(spark, sf_dir):
+        nation = load_table(spark, sf_dir, "nation")
+        pairs = nation.alias("a").crossJoin(nation.alias("b")).where(
+            F.col("a.n_nationkey") < F.col("b.n_nationkey")).collect()
+        return spark.createDataFrame([(len(pairs),)], "pairs long")
+
+    df, plan, builds = entry_plans(spark, entry, sf_dir)
+    assert df.collect()[0].pairs == 300
+    assert "bnlj" not in smells(plan)
+    assert any("bnlj" in smells(b) for b in builds)
+
+
+def test_entry_plans_raises_when_status_store_fails(spark, sf_dir, monkeypatch):
+    """An unreadable status store fails the capture, never reads as "the
+    build ran no executions"."""
+    class Unreadable:
+        def __getattr__(self, name):
+            raise RuntimeError("status store unavailable")
+
+    monkeypatch.setattr(explain_audit, "_sql_store", lambda spark: Unreadable())
+    with pytest.raises(RuntimeError, match="status store unavailable"):
+        entry_plans(spark, lambda spark, sf_dir: spark.range(1), sf_dir)
+
+
+@pytest.fixture(scope="module")
+def registry_smells(spark, sf_dir):
+    """{entry: (plan_waivers, smells)} for every gated registry entry,
+    each built once: the smells of its returned plan together with those
+    of every SQL execution it ran while building (pins, caches, eager
+    fits, layout writes)."""
+    from pipeline_apache_beam_entrega1_cs_spark.plans.registry import all_queries
+
+    out = {}
+    for name, spec in all_queries().items():
+        if not name.startswith(explain_audit.SIDE_EFFECT_PREFIXES):
+            _, plan, builds = entry_plans(spark, spec.fn, sf_dir)
+            out[name] = (spec.plan_waivers or {}, set().union(*map(smells, [plan, *builds])))
+    return out
+
+
+def test_no_cartesian_in_registry_plans(registry_smells):
     """Scale guard (the explain-audit, promoted to a regression gate): no
     registry plan may contain a CartesianProduct; BroadcastNestedLoopJoin
     is allowed only where the broadcast side is a provably tiny
     scalar/query set; and a Window fed by an Exchange SinglePartition —
     the global-sort-into-one-task shape — is allowed only where the
     window input cardinality is scale-independent or the entry is the
-    documented exact-tier exception. Sanctions are NOT hardcoded here:
-    each lives on its operator's QuerySpec.plan_waivers with a
-    justification (plans/spec.py), so the registry stays the single
-    source of truth and a new entry can't ride an unrelated waiver."""
-    from pipeline_apache_beam_entrega1_cs_spark.plans.registry import all_queries
-
-    skip_prefixes = ("streaming_", "sink_")  # these execute side effects
+    documented exact-tier exception. The plans are the returned frame's
+    and those of every SQL execution the entry ran while building it.
+    Sanctions are NOT hardcoded here: each lives on its operator's
+    QuerySpec.plan_waivers with a justification (plans/spec.py), so the
+    registry stays the single source of truth and a new entry can't ride
+    an unrelated waiver."""
     failures = []
-    for name, spec in all_queries().items():
-        if name.startswith(skip_prefixes):
-            continue
-        waivers = spec.plan_waivers or {}
-        plan = physical_plan(spec.fn(spark, sf_dir))
-        if "CartesianProduct" in plan:
+    for name, (waivers, found) in registry_smells.items():
+        if "cartesian" in found:
             failures.append(f"{name}: CartesianProduct")
-        if "BroadcastNestedLoopJoin" in plan and "bnlj" not in waivers:
+        if "bnlj" in found and "bnlj" not in waivers:
             failures.append(f"{name}: unsanctioned BroadcastNestedLoopJoin")
-        if has_single_partition_window(plan) and "global_window" not in waivers:
+        if "global_window" in found and "global_window" not in waivers:
             failures.append(f"{name}: single-partition Window")
     assert not failures, f"scale smells in plans: {failures}"
 
 
-def test_plan_waivers_not_stale(spark, sf_dir):
+def test_plan_waivers_not_stale(registry_smells):
     """Every declared waiver must still be needed: a waiver whose smell
-    no longer appears in the plan is dead weight that could silently
-    sanction a future regression."""
-    from pipeline_apache_beam_entrega1_cs_spark.plans.registry import all_queries
-
-    skip_prefixes = ("streaming_", "sink_")
+    no longer appears in the returned plan or any build execution is
+    dead weight that could silently sanction a future regression."""
     stale = []
-    for name, spec in all_queries().items():
-        if not spec.plan_waivers or name.startswith(skip_prefixes):
-            continue
-        plan = physical_plan(spec.fn(spark, sf_dir))
-        if "bnlj" in spec.plan_waivers and "BroadcastNestedLoopJoin" not in plan:
+    for name, (waivers, found) in registry_smells.items():
+        if "bnlj" in waivers and "bnlj" not in found:
             stale.append(f"{name}: bnlj waiver but no BNLJ in plan")
-        if "global_window" in spec.plan_waivers and not has_single_partition_window(
-            plan
-        ):
+        if "global_window" in waivers and "global_window" not in found:
             stale.append(f"{name}: global_window waiver but no such shape")
     assert not stale, f"stale plan waivers: {stale}"
 
