@@ -70,17 +70,24 @@ def build_lut(csv_path: str) -> dict:
     return lut
 
 
+def parse_dict(line: str) -> dict | None:
+    """The reference's ParseJson: the line's ``json.loads`` value if it
+    is a dict, else None."""
+    try:
+        row = json.loads(line)
+    except Exception:
+        return None
+    return row if isinstance(row, dict) else None
+
+
 def python_runner(in_paths: list[Path], out_path: Path, lut: dict) -> int:
     n = 0
     with open(out_path, "w", encoding="utf-8") as fout:
       for in_path in in_paths:
        with open(in_path, encoding="utf-8") as fin:
         for line in fin:
-            try:
-                row = json.loads(line)
-            except Exception:
-                continue
-            if not isinstance(row, dict):
+            row = parse_dict(line)
+            if row is None:
                 continue
             if str(row.get("DeviceType", "")).strip() == "Other":
                 continue

@@ -2,14 +2,14 @@
 (reference src/pipeline.py:279-296) as native Spark —
 
     read text glob -> json-object filter -> DeviceType filter ->
-    RaceID normalization -> broadcast country enrichment ->
-    KEEP projection -> JSONL sink
+    RaceID normalization -> country lookup -> KEEP projection -> JSONL sink
 
-Zero Python UDFs: every transform is a Catalyst expression, so the whole
-chain is ONE narrow stage under whole-stage codegen (the Spark analog of
-Beam DirectRunner's ParDo fusion), and the enrichment join is a broadcast
-hash join (the analog of the reference's pickled driver-dict lookup,
-reference src/pipeline.py:275,288).
+Zero Python UDFs and no join: every transform is a Catalyst expression,
+so the whole chain is ONE narrow stage under whole-stage codegen (the
+Spark analog of Beam DirectRunner's ParDo fusion). The country table is
+the reference's in-memory dict (reference src/pipeline.py:270,288), read
+in plain Python by ``read_country_lut`` and looked up through one literal
+map, so batch and stream share one definition.
 
 Fidelity traps replicated (SURVEY.md §7 known-hard list):
 - missing/null DeviceType is KEPT (``str(None)``/"" != "Other");
@@ -26,21 +26,27 @@ import argparse
 import os
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..functions.strings import apply_country_alias, norm_country_key, standardize_race_id
-from ..schemas import FAN_ENGAGEMENT_SCHEMA, KEEP, LOCATION_FIELDS
-from ..sources.csv_tolerant import read_country_dim
-from ..sources.jsonl import read_jsonl_dicts
+from ..functions.strings import (
+    apply_country_alias,
+    norm_country_key,
+    py_strip,
+    standardize_race_id,
+)
+from ..schemas import FAN_ENGAGEMENT_SCHEMA, KEEP, LOCATION_FIELDS, LOCATION_SCHEMA
+from ..sources.csv_tolerant import read_country_lut
+from ..sources.jsonl import read_jsonl_dicts, stream_jsonl_dicts
 
 
 def filter_device_other(df: DataFrame) -> DataFrame:
-    """Drop rows whose trimmed DeviceType equals "Other" (reference
+    """Drop rows whose ``str.strip()``-ed DeviceType equals "Other" (reference
     src/pipeline.py:147-151). Null-safe: a bare ``!=`` would silently drop
     null DeviceType rows under SQL three-valued logic, but the reference
     KEEPS them — hence the coalesce."""
-    return df.filter(F.trim(F.coalesce(F.col("DeviceType"), F.lit(""))) != "Other")
+    return df.filter(py_strip(F.coalesce(F.col("DeviceType"), F.lit(""))) != "Other")
 
 
 JSON_KEYS_COL = "_json_keys"
@@ -68,36 +74,25 @@ def standardize_race(df: DataFrame) -> DataFrame:
     )
 
 
-def enrich_with_country(df: DataFrame, country_dim: DataFrame) -> DataFrame:
-    """Broadcast left join against the country dimension + fallback struct
-    (reference src/pipeline.py:162-182). The fact-side key is normalized
-    then alias-rewritten BEFORE lookup (reference :170-171)."""
+def enrich_with_country(df: DataFrame, country_lut: dict[str, tuple[str, ...]]) -> DataFrame:
+    """Country lookup + fallback struct (reference src/pipeline.py:162-182).
+    The fact-side key is normalized then alias-rewritten BEFORE lookup
+    (reference :170-171). The map is typed so an empty LUT still yields a
+    ``LocationData`` struct; a matched payload is never falsy here (struct
+    of 5 strings), so the reference's ``lut.get(key) or fallback`` is a
+    null coalesce."""
     key = apply_country_alias(norm_country_key(F.col("ViewerLocationCountry")))
-    fact = df.withColumn("_ckey", key)
-
-    dim = country_dim.select(
-        F.col("key").alias("_dimkey"),
-        F.struct(*[F.col(f"`{f}`") for f in LOCATION_FIELDS]).alias("_loc"),
-    )
-
-    joined = fact.join(F.broadcast(dim), fact._ckey == dim._dimkey, "left")
-
+    pairs: list[Column] = []
+    for k, payload in country_lut.items():
+        pairs.append(F.lit(k))
+        pairs.append(F.struct(*[F.lit(v).alias(f) for f, v in zip(LOCATION_FIELDS, payload)]))
+    lookup = F.create_map(*pairs).cast(T.MapType(T.StringType(), LOCATION_SCHEMA))
     fallback = F.struct(
-        F.trim(F.coalesce(F.col("ViewerLocationCountry"), F.lit(""))).alias("country"),
-        F.lit("").alias("capital"),
-        F.lit("").alias("continent"),
-        F.lit("").alias("official language"),
-        F.lit("").alias("currency"),
+        py_strip(F.coalesce(F.col("ViewerLocationCountry"), F.lit(""))).alias("country"),
+        *[F.lit("").alias(f) for f in LOCATION_FIELDS[1:]],
     )
-    # The reference also falls back when the payload dict is falsy; a
-    # matched payload is never falsy here (struct of 5 strings), so
-    # isNull() is the exact condition.
-    return (
-        joined.withColumn(
-            "LocationData",
-            F.when(F.col("_dimkey").isNull(), fallback).otherwise(F.col("_loc")),
-        )
-        .drop("_ckey", "_dimkey", "_loc", "ViewerLocationCountry")
+    return df.withColumn("LocationData", F.coalesce(lookup[key], fallback)).drop(
+        "ViewerLocationCountry"
     )
 
 
@@ -107,9 +102,9 @@ def project_output(df: DataFrame) -> DataFrame:
     return df.select(*KEEP)
 
 
-def _transforms(events: DataFrame, country_dim: DataFrame) -> DataFrame:
+def _transforms(events: DataFrame, country_lut: dict[str, tuple[str, ...]]) -> DataFrame:
     return project_output(
-        enrich_with_country(standardize_race(filter_device_other(events)), country_dim)
+        enrich_with_country(standardize_race(filter_device_other(events)), country_lut)
     )
 
 
@@ -117,24 +112,16 @@ def build_fidelity_df(spark: SparkSession, json_glob: str, csv_path: str) -> Dat
     """Assemble the full lazy plan (the analog of the reference's Beam
     graph construction at src/pipeline.py:279-296)."""
     events = read_jsonl_dicts(spark, json_glob, FAN_ENGAGEMENT_SCHEMA, keys_col=JSON_KEYS_COL)
-    return _transforms(events, read_country_dim(spark, csv_path))
+    return _transforms(events, read_country_lut(csv_path))
 
 
 def build_fidelity_stream(spark: SparkSession, json_glob: str, csv_path: str) -> DataFrame:
     """The same pipeline under Structured Streaming: a text file-source
-    stream through the identical transform chain (all narrow + a
-    stream-static broadcast join — legal in append mode with no
-    aggregation). One pipeline definition, two execution modes — the
+    stream through the identical transform chain (all narrow, legal in
+    append mode). One pipeline definition, two execution modes — the
     declarative-plan payoff the reference's DoFn chain can't offer."""
-    from ..sources.jsonl import stream_jsonl_dicts
-
     events = stream_jsonl_dicts(spark, json_glob, FAN_ENGAGEMENT_SCHEMA, keys_col=JSON_KEYS_COL)
-    # Streaming plans reject monotonically_increasing_id even on the
-    # static join side — materialize the (tiny, by definition) dimension
-    # driver-side, the same eager-LUT shape the reference uses.
-    lazy_dim = read_country_dim(spark, csv_path)
-    country_dim = spark.createDataFrame(lazy_dim.collect(), lazy_dim.schema)
-    return _transforms(events, country_dim)
+    return _transforms(events, read_country_lut(csv_path))
 
 
 def write_jsonl(df: DataFrame, out_dir: str, single_shard: bool = True,
@@ -149,12 +136,9 @@ def write_jsonl(df: DataFrame, out_dir: str, single_shard: bool = True,
     writer = df.coalesce(1) if single_shard else df
     writer.write.mode("overwrite").json(out_dir)
     if prefix is not None and single_shard:
-        import glob as _glob
-        import os as _os
-
-        parts = _glob.glob(_os.path.join(out_dir, "part-*.json"))
+        parts = list(Path(out_dir).glob("part-*.json"))
         if len(parts) == 1:
-            _os.replace(parts[0], _os.path.join(out_dir, f"{prefix}-00000-of-00001.jsonl"))
+            parts[0].replace(Path(out_dir) / f"{prefix}-00000-of-00001.jsonl")
 
 
 def resolve_paths(

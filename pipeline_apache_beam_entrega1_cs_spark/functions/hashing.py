@@ -23,8 +23,3 @@ def md5_u32(col: Column) -> Column:
     """First 8 hex chars of md5(col) as an unsigned 32-bit value in a
     LONG — uniform on [0, 2^32)."""
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
-
-
-def md5_bucket(col: Column, modulus: int) -> Column:
-    """md5_u32 reduced to a bucket index in [0, modulus)."""
-    return md5_u32(col) % modulus

@@ -115,10 +115,6 @@ def dsum_dec(col: Column) -> Column:
     return _dec_to_double(F.sum(col))
 
 
-def davg_dec(col: Column) -> Column:
-    return _dec_to_double(F.sum(col)) / F.count(col)
-
-
 def sql_money(expr: str) -> str:
     return f"CAST({expr} AS DECIMAL(12,2))"
 

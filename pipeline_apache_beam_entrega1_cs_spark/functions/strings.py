@@ -11,7 +11,8 @@ reference functions in tests/test_race_id.py):
   "Cup 25" -> "cup25", "league:04" -> "league04", "c1u2p3" -> "cup123",
   "!!!" -> "".
 - ``_norm_country_key`` (reference src/pipeline.py:42-44):
-  ``(name or "").strip().lower()``.
+  ``(name or "").strip().lower()``, where ``strip()`` is Python's
+  (``py_strip``: every ``str.isspace()`` character, not only U+0020).
 - ``ALIAS`` rewrite (reference src/pipeline.py:47-53, applied at :171).
 """
 
@@ -30,6 +31,18 @@ COUNTRY_ALIAS = {
     "uk": "united kingdom",
     "uae": "united arab emirates",
 }
+
+
+# The characters ``str.isspace()`` is true for: what ``str.strip()`` removes.
+PY_WHITESPACE = (
+    "\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680\u2000\u2001\u2002\u2003"
+    "\u2004\u2005\u2006\u2007\u2008\u2009\u200a\u2028\u2029\u202f\u205f\u3000"
+)
+
+
+def py_strip(col: Column) -> Column:
+    """Python's ``str.strip()``; ``F.trim`` strips only U+0020."""
+    return F.btrim(col, F.lit(PY_WHITESPACE))
 
 
 def standardize_race_id(col: Column) -> Column:
@@ -53,7 +66,7 @@ def standardize_race_id(col: Column) -> Column:
 def norm_country_key(col: Column) -> Column:
     """``(name or "").strip().lower()`` — null-safe, whitespace-trimmed,
     lowercased join key (reference src/pipeline.py:42-44)."""
-    return F.lower(F.trim(F.coalesce(col, F.lit(""))))
+    return F.lower(py_strip(F.coalesce(col, F.lit(""))))
 
 
 def apply_country_alias(key: Column) -> Column:

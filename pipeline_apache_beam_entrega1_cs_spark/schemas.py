@@ -110,13 +110,3 @@ def normalize_nanos_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     for c in ntz:
         df = df.withColumn(c, F.col(c).cast(TT.TimestampType()))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TESTDATA_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for the SQL API."""
-    for name in TESTDATA_TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

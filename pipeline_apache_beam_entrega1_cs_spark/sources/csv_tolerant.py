@@ -1,27 +1,27 @@
 """Tolerant CSV dimension-table source.
 
-Replicates the reference's ``build_country_lut`` reader semantics
-(reference src/pipeline.py:56-130) Spark-first:
+Builds the country lookup table the way the reference's
+``build_country_lut`` does (reference src/pipeline.py:56-130): once, in
+plain Python before any Spark job, as a dict read with the ``csv``
+module. The table is small by construction (a country table), so Spark
+only ever sees it as a literal map in the enrichment expression.
 
-- delimiter sniffing over ``; , | \\t`` (reference :88-94) — stays
-  driver-side Python exactly as in the reference (it reads a 4 KiB sample);
-- UTF-8 BOM tolerated (Spark's CSV reader strips a BOM from the first
-  header cell; we additionally normalize it away);
+- delimiter sniffing over ``; , | \\t`` from a 4 KiB sample
+  (reference :88-94);
+- UTF-8 BOM stripped by the ``utf-8-sig`` codec (reference :87); quoted
+  fields may span lines;
 - header aliasing: each logical field accepts many spellings, matched
   after lowercasing and removing spaces/underscores/hyphens
-  (reference ``FIELD_ALIASES``/:67-80, ``_norm_header``/:82-83) — a
-  driver-side rename over ``df.columns``, no UDF;
+  (reference ``FIELD_ALIASES``/:67-80, ``_norm_header``/:82-83); per
+  field, the first non-empty stripped value across its alias columns
+  (reference ``get_value``/:98-107);
 - rows with empty country skipped (reference :111-112);
 - duplicate (normalized) country keys: LAST occurrence wins
-  (reference :123 ``lut[key] = payload``) — implemented with
-  ``max_by(payload, file_order)`` which is a single partial-aggregatable
-  shuffle, not a window sort;
+  (reference :123 ``lut[key] = payload``);
 - alias keys (usa/us/u.s./uk/uae) back-filled ONLY when the canonical
-  long name is already a key (reference :126-128) — the asymmetry that
-  produces the 28 fallback rows in the golden output.
-
-The dimension result is small by construction (a country table); callers
-broadcast it into the enrichment join.
+  long name is already a key, overwriting a same-named row
+  (reference :126-128) — the asymmetry that produces the 28 fallback rows
+  in the golden output.
 """
 
 from __future__ import annotations
@@ -31,11 +31,13 @@ import io
 import re
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..functions.strings import COUNTRY_ALIAS, norm_country_key
+from ..functions.strings import COUNTRY_ALIAS
+from ..schemas import LOCATION_SCHEMA
 
-# Logical field -> accepted header spellings (reference src/pipeline.py:67-80).
+# Logical field -> accepted header spellings (reference src/pipeline.py:67-80),
+# in LocationData field order (schemas.LOCATION_FIELDS).
 FIELD_ALIASES: dict[str, list[str]] = {
     "country": ["Country", "Country Name", "Country_Name", "CountryName", "Name"],
     "capital": ["Capital", "Capital City", "Capital_City", "CapitalCity"],
@@ -50,8 +52,6 @@ FIELD_ALIASES: dict[str, list[str]] = {
         "Currency Name", "Currency_Name", "CurrencyName", "ISO Currency",
     ],
 }
-
-LOGICAL_FIELDS = list(FIELD_ALIASES)
 
 
 def _norm_header(h: str) -> str:
@@ -71,67 +71,36 @@ def sniff_delimiter(csv_path: str) -> str:
         return ","
 
 
-def read_country_dim(spark: SparkSession, csv_path: str) -> DataFrame:
-    """Read the country CSV into a 6-column dimension DataFrame:
-    ``key`` (normalized join key) + the 5 payload fields of LocationData.
-
-    Alias keys are back-filled canonical-only, so with the shipped CSV
-    (rows named "UK"/"USA") zero alias rows are added — faithfully
-    reproducing the reference's fallback behavior for UK/USA facts.
-    """
+def read_country_lut(csv_path: str) -> dict[str, tuple[str, ...]]:
+    """Read the country CSV into ``{normalized country: (country, capital,
+    continent, official language, currency)}``, the reference's LUT with
+    each payload as a tuple in ``FIELD_ALIASES`` order."""
     delim = sniff_delimiter(csv_path)
-    raw = (
-        spark.read.option("header", True)
-        .option("sep", delim)
-        .option("encoding", "UTF-8")
-        .csv(csv_path)
-    )
+    lut: dict[str, tuple[str, ...]] = {}
+    with io.open(csv_path, "r", encoding="utf-8-sig", newline="") as f:
+        reader = csv.DictReader(f, delimiter=delim)
+        header_map = {_norm_header(h): h for h in reader.fieldnames or []}
+        columns = [
+            [header_map[n] for n in map(_norm_header, aliases) if n in header_map]
+            for aliases in FIELD_ALIASES.values()
+        ]
+        for row in reader:
+            payload = tuple(
+                next((v for v in ((row.get(c) or "").strip() for c in cols) if v), "")
+                for cols in columns
+            )
+            if payload[0]:
+                lut[payload[0].lower()] = payload
+    for alias, canonical in COUNTRY_ALIAS.items():
+        if canonical in lut:
+            lut[alias] = lut[canonical]
+    return lut
 
-    # Header aliasing: first matching spelling (in alias order) wins, and a
-    # non-empty value in an earlier alias column shadows later ones — the
-    # reference's get_value (:98-107) falls through empty values, which we
-    # reproduce with coalesce(nullif(trim(col), '')...).
-    header_map = {_norm_header(c): c for c in raw.columns}
 
-    def logical_col(field: str) -> F.Column:
-        candidates = []
-        for cand in FIELD_ALIASES[field]:
-            actual = header_map.get(_norm_header(cand))
-            if actual is not None:
-                candidates.append(F.nullif(F.trim(F.col(f"`{actual}`")), F.lit("")))
-        if not candidates:
-            return F.lit("")
-        return F.coalesce(*candidates, F.lit(""))
-
-    with_order = raw.withColumn("_file_order", F.monotonically_increasing_id())
-    dim = with_order.select(
-        *[logical_col(f).alias(f) for f in LOGICAL_FIELDS], "_file_order"
-    ).filter(F.col("country") != "")
-
-    # Last duplicate wins (reference :123): max_by over file order — a
-    # partial-aggregatable groupBy, no global sort.
-    payload = F.struct(*[F.col(f"`{f}`") for f in LOGICAL_FIELDS]).alias("payload")
-    deduped = (
-        dim.select(norm_country_key(F.col("country")).alias("key"), payload, "_file_order")
-        .groupBy("key")
-        .agg(F.max_by("payload", "_file_order").alias("payload"))
+def read_country_dim(spark: SparkSession, csv_path: str) -> DataFrame:
+    """The country LUT as a 6-column DataFrame: ``key`` (normalized
+    country) + the 5 payload fields of LocationData."""
+    schema = T.StructType([T.StructField("key", T.StringType()), *LOCATION_SCHEMA.fields])
+    return spark.createDataFrame(
+        [(key, *payload) for key, payload in read_country_lut(csv_path).items()], schema
     )
-
-    # Canonical-only alias back-fill (reference :126-128). The reference
-    # does ``lut[alias] = lut[canonical]`` — i.e. a back-filled alias key
-    # OVERWRITES a same-named CSV row — so we union with a priority column
-    # and keep the alias payload on conflict.
-    alias_rows = spark.createDataFrame(
-        [(a, c) for a, c in COUNTRY_ALIAS.items()], ["alias_key", "canonical_key"]
-    )
-    alias_backfill = (
-        deduped.join(alias_rows, deduped.key == alias_rows.canonical_key, "inner")
-        .select(F.col("alias_key").alias("key"), "payload", F.lit(1).alias("_prio"))
-    )
-    merged = (
-        deduped.withColumn("_prio", F.lit(0))
-        .unionByName(alias_backfill)
-        .groupBy("key")
-        .agg(F.max_by("payload", "_prio").alias("payload"))
-    )
-    return merged.select("key", "payload.*")

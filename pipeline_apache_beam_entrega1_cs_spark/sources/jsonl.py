@@ -5,14 +5,29 @@ src/pipeline.py:136-144): ``json.loads`` each line, keep only results that
 are dicts, silently drop anything else (malformed JSON, scalars, arrays,
 JSON ``null``).
 
-Spark-first translation: ``from_json`` alone cannot express "dict-only" —
-in PERMISSIVE mode it returns an all-null struct for BOTH ``{}`` (a dict,
-must be kept) and ``null``/``[1,2]``/garbage (must be dropped); verified
-empirically on PySpark 4.1. We therefore gate on the Variant parser:
-``try_parse_json`` returns NULL for malformed input, and
-``schema_of_variant`` starts with ``OBJECT`` exactly when the value is a
-JSON object. All native expressions — the scan + parse + filter is one
-narrow whole-stage-codegen pass, no Python involved.
+Spark-first translation, all native expressions (verified against
+``json.loads`` by a differential property test in tests/test_sources.py):
+
+- ``from_json(value, map<string,string>)`` is non-null exactly when the
+  line starts with a JSON object (single quotes disabled; ``NaN``,
+  ``Infinity`` and duplicate keys accepted, like ``json.loads``). Its
+  ``map_keys`` is the object's key list. The schema projection,
+  ``from_json(value, schema)``, keeps a duplicate key's last value, as
+  ``json.loads`` does.
+- That parse ignores anything after the object, so a second parse of
+  ``[<line>,0]`` as ``array<string>`` must give exactly 2 elements: it
+  fails on trailing data (``{..} x``, ``{..}{..}``) and counts more or
+  fewer elements when the line closes or continues the array
+  (``{..}]``, ``{..},{..}``). Jackson also accepts ``+Infinity``,
+  ``+INF`` and ``-INF``, which ``json.loads`` rejects, so this parse
+  disallows non-numeric numbers after rewriting the tokens ``json.loads``
+  accepts (``NaN``, ``Infinity``, and so ``-Infinity``) to ``0``. The
+  rewrite cannot make an invalid line valid: the first parse already
+  rejected it, and no valid string escape contains either token.
+
+``from_json`` with a struct schema alone cannot express "dict-only": in
+PERMISSIVE mode it returns an all-null struct for BOTH ``{}`` (a dict,
+must be kept) and ``null``/``[1,2]``/garbage (must be dropped).
 
 Scale note: the glob can span millions of files; the schema is explicit so
 no inference pass runs over the data.
@@ -25,10 +40,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def json_object_lines(lines: DataFrame, col: str = "value") -> DataFrame:
-    """Filter a text DataFrame down to lines that parse as JSON objects."""
-    v = F.try_parse_json(F.col(col))
-    return lines.filter(v.isNotNull() & F.startswith(F.schema_of_variant(v), F.lit("OBJECT")))
+_NO_SINGLE_QUOTES = {"allowSingleQuotes": "false"}
+_STRICT = {**_NO_SINGLE_QUOTES, "allowNonNumericNumbers": "false"}
 
 
 def parse_jsonl_dicts(
@@ -37,14 +50,20 @@ def parse_jsonl_dicts(
     """Apply the dict-only rule + schema projection to a text DataFrame
     (batch or streaming — the expressions are identical).
 
-    ``keys_col`` optionally attaches the object's top-level key list
-    (native ``json_object_keys``): ``from_json`` collapses an ABSENT key
-    and an explicit JSON ``null`` into the same struct-field null, but
-    reference semantics can differ between the two (dict.get default vs
-    a stored None) — the key list lets downstream operators tell them
-    apart."""
-    kept = json_object_lines(lines)
-    extras = [F.json_object_keys(F.col("value")).alias(keys_col)] if keys_col else []
+    ``keys_col`` optionally attaches the object's top-level key list:
+    ``from_json`` collapses an ABSENT key and an explicit JSON ``null``
+    into the same struct-field null, but reference semantics can differ
+    between the two (dict.get default vs a stored None) — the key list
+    lets downstream operators tell them apart."""
+    obj = F.from_json(F.col("value"), "map<string,string>", _NO_SINGLE_QUOTES)
+    numbers_as_zero = F.col("value")
+    for token in ("Infinity", "NaN"):
+        numbers_as_zero = F.replace(numbers_as_zero, F.lit(token), F.lit("0"))
+    one_value = F.from_json(
+        F.concat(F.lit("["), numbers_as_zero, F.lit(",0]")), "array<string>", _STRICT
+    )
+    kept = lines.filter(obj.isNotNull() & (F.size(one_value) == 2))
+    extras = [F.map_keys(obj).alias(keys_col)] if keys_col else []
     rec = kept.select(F.from_json(F.col("value"), schema).alias("rec"), *extras)
     return rec.select("rec.*", *([keys_col] if keys_col else []))
 

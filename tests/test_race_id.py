@@ -53,7 +53,11 @@ def test_race_id_edge_cases(spark):
 def test_norm_country_key_edge_cases(spark):
     from pipeline_apache_beam_entrega1_cs_spark.functions.strings import norm_country_key
 
-    values = ["  UK ", "usa", "South Africa", "", "  ", "Côte d'Ivoire", None]
+    every_space = "".join(c for c in map(chr, range(0x110000)) if c.isspace())
+    values = [
+        "  UK ", "usa", "South Africa", "", "  ", "Côte d'Ivoire", None,
+        "\tUK\n", "\xa0usa", "\u3000Brazil", every_space + "Chile" + every_space,
+    ]
     df = spark.createDataFrame([(v,) for v in values], "v: string")
     got = [r.out for r in df.select(norm_country_key(F.col("v")).alias("out")).collect()]
     want = [ref_norm_country_key(v) for v in values]

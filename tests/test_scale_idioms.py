@@ -157,6 +157,14 @@ def test_replay_failure_stops_query_and_removes_scratch(spark, tmp_path, monkeyp
     assert spark.streams.active == []
     assert list(scratch.iterdir()) == []
 
+
+def _canon_rows(df):
+    return Counter(
+        json.dumps(r.asDict(recursive=True), sort_keys=True, ensure_ascii=False)
+        for r in df.collect()
+    )
+
+
 def test_fidelity_pipeline_streaming(spark):
     """The reference ETL executed as a Structured Streaming job produces
     exactly the batch (= golden) result."""
@@ -171,15 +179,68 @@ def test_fidelity_pipeline_streaming(spark):
     stream_out = _drain(build_fidelity_stream(spark, glob, csv), "append")
     batch_out = build_fidelity_df(spark, glob, csv)
 
-    def canon_rows(df):
-        return Counter(
-            json.dumps(r.asDict(recursive=True), sort_keys=True, ensure_ascii=False)
-            for r in df.collect()
-        )
-
-    s, b = canon_rows(stream_out), canon_rows(batch_out)
+    s, b = _canon_rows(stream_out), _canon_rows(batch_out)
     assert sum(s.values()) == 237
     assert s == b
+
+
+def _small_fidelity_input(tmp_path):
+    """A few fan events and a country CSV covering the fidelity traps:
+    UK/USA alias fallbacks, a padded Other, a null and an absent RaceID."""
+    csv = tmp_path / "countries.csv"
+    csv.write_text(
+        "Country,Capital,Continent,Main_Official_Language,Currency\n"
+        "UK,London,Europe,English,GBP\n"
+        "USA,Washington,North America,English,USD\n"
+        "Brazil,Brasília,South America,Portuguese,BRL\n",
+        encoding="utf-8",
+    )
+    events = [
+        {"FanID": "f1", "RaceID": "Cup 25", "DeviceType": "Mobile", "ViewerLocationCountry": "UK"},
+        {"FanID": "f2", "RaceID": "race_11", "DeviceType": " Other ", "ViewerLocationCountry": "Brazil"},
+        {"FanID": "f3", "RaceID": None, "DeviceType": "Web", "ViewerLocationCountry": "USA"},
+        {"FanID": "f4", "DeviceType": None, "ViewerLocationCountry": " brazil "},
+    ]
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    (in_dir / "part-0.json").write_text(
+        "\n".join(json.dumps(e, ensure_ascii=False) for e in events) + "\n", encoding="utf-8"
+    )
+    return str(in_dir / "*.json"), str(csv)
+
+
+def test_fidelity_stream_equals_batch_on_small_input(spark, tmp_path):
+    """Batch and stream share one definition, so they agree row for row;
+    the batch rows carry the reference's answers."""
+    from pipeline_apache_beam_entrega1_cs_spark.fidelity.pipeline import (
+        build_fidelity_df,
+        build_fidelity_stream,
+    )
+    from pipeline_apache_beam_entrega1_cs_spark.streaming.windows import _drain
+
+    glob, csv = _small_fidelity_input(tmp_path)
+    stream_out = _drain(build_fidelity_stream(spark, glob, csv), "append")
+    batch_out = build_fidelity_df(spark, glob, csv)
+
+    assert _canon_rows(stream_out) == _canon_rows(batch_out)
+    got = {
+        r.FanID: (r.RaceID, r.LocationData.country, r.LocationData.capital)
+        for r in batch_out.collect()
+    }
+    assert got == {
+        "f1": ("cup25", "UK", ""),
+        "f3": (None, "USA", ""),
+        "f4": ("", "Brazil", "Brasília"),
+    }
+
+
+def test_fidelity_plan_is_one_narrow_stage(spark, tmp_path):
+    """The country lookup is a literal map, not a join: the whole batch
+    plan has no Exchange and no Join."""
+    from pipeline_apache_beam_entrega1_cs_spark.fidelity.pipeline import build_fidelity_df
+
+    plan = physical_plan(build_fidelity_df(spark, *_small_fidelity_input(tmp_path)))
+    assert "Exchange" not in plan and "Join" not in plan, plan
 
 
 def test_dynamic_partition_pruning(spark, sf_dir, tmp_path):

@@ -1,12 +1,22 @@
 """Unit tests for the tolerant sources (FIXTURES.md edge variants):
 CSV delimiter sniffing, header aliasing, duplicate/empty-country rows,
-alias back-fill override; JSONL dict-only rule."""
+alias back-fill override, multi-line and whitespace-padded fields,
+header-only tables; JSONL dict-only rule, also differentially against
+``json.loads``."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
+import itertools
+import json
+from collections import Counter
 
+import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+import bench_fidelity
 from pipeline_apache_beam_entrega1_cs_spark.schemas import FAN_ENGAGEMENT_SCHEMA
 
 
@@ -106,6 +116,107 @@ def test_jsonl_dict_only_rule(spark, tmp_path):
     assert len(rows) == 3
     fanids = sorted(str(r.FanID) for r in rows)
     assert fanids == ["7", "F1", "None"]
+
+
+def test_csv_quoted_capital_spans_lines(spark, tmp_path):
+    """A quoted field may contain a newline (csv module semantics); it
+    must not split the row in two."""
+    from pipeline_apache_beam_entrega1_cs_spark.sources.csv_tolerant import read_country_dim
+
+    csv = (
+        "Country,Capital,Continent,Main_Official_Language,Currency\n"
+        'Multiland,"North\nSouth",X,Y,Z\n'
+        "Otherland,Ocity,X,Y,Z\n"
+    )
+    path = write(tmp_path, "multiline.csv", csv)
+    rows = {r.key: r for r in read_country_dim(spark, path).collect()}
+    assert sorted(rows) == ["multiland", "otherland"]
+    assert rows["multiland"].capital == "North\nSouth"
+
+
+def test_csv_tab_padded_country(spark, tmp_path):
+    """Values are stripped like ``str.strip()``: tabs too, not only spaces."""
+    from pipeline_apache_beam_entrega1_cs_spark.sources.csv_tolerant import read_country_dim
+
+    csv = "Country,Capital,Continent,Main_Official_Language,Currency\n\tTabland\t,Tcity,X,Y,Z\n"
+    path = write(tmp_path, "tab.csv", csv)
+    rows = {r.key: r for r in read_country_dim(spark, path).collect()}
+    assert list(rows) == ["tabland"]
+    assert rows["tabland"].country == "Tabland"
+
+
+def test_csv_header_only_gives_every_fact_the_fallback(spark, tmp_path):
+    """An empty LUT still types the lookup: every fact gets the fallback
+    struct, whose country is the raw value ``str.strip()``-ed."""
+    from pipeline_apache_beam_entrega1_cs_spark.fidelity.pipeline import build_fidelity_df
+
+    csv = write(tmp_path, "header_only.csv", "Country,Capital,Continent,Main_Official_Language,Currency\n")
+    countries = ["UK", " USA ", "\tBrazil\n", "\u3000Chile", None]
+    facts = [json.dumps({"FanID": f"F{i}", "ViewerLocationCountry": c}) for i, c in enumerate(countries)]
+    path = write(tmp_path, "facts.jsonl", "\n".join(facts))
+    got = {r.FanID: r.LocationData.asDict() for r in build_fidelity_df(spark, path, csv).collect()}
+    empty = {"capital": "", "continent": "", "official language": "", "currency": ""}
+    assert got == {f"F{i}": {"country": (c or "").strip(), **empty} for i, c in enumerate(countries)}
+
+
+# --- the dict-only rule against the reference's json.loads ---
+
+_STRING = st.text(max_size=6).map(lambda t: json.dumps(t, ensure_ascii=False))
+_VALUE = st.one_of(
+    _STRING,
+    st.sampled_from([
+        "1", "-0.5e3", "1e400", "01", "1.", "true", "True", "null", "NaN", "-NaN", "Infinity",
+        "-Infinity", "+Infinity", "-INF", "+INF", '"NaN"', '"\\u00e9"', '"\\x"', "[1,NaN]",
+        '{"b":{}}', "'s'",
+    ]),
+)
+_PAIR = st.one_of(
+    st.tuples(st.just("FanID"), st.one_of(_STRING, st.just("null"))),
+    st.tuples(st.sampled_from(["RaceID", "a", "é", "Infinity"]).map(json.dumps), _VALUE),
+    st.tuples(st.just("'q'"), _VALUE),
+)
+_SPACE = st.sampled_from(["", " ", "\t", "\xa0", "\u3000", "\x0b"])
+
+
+@st.composite
+def _json_line(draw):
+    pairs = draw(st.lists(_PAIR, max_size=4))
+    obj = "{" + ",".join(f"{k}{draw(_SPACE)}:{v}" for k, v in pairs) + "}"
+    shape = draw(st.sampled_from([
+        "{o}", "{o} x", "{o}{o}", "{o}]", "[{o}]", "{o},{o}", "{o},0", "{o} NaN", "{o}//",
+    ]))
+    return draw(_SPACE) + shape.format(o=obj) + draw(_SPACE)
+
+
+_LINE = st.one_of(_json_line(), st.text(st.characters(blacklist_characters="\r\n"), max_size=12))
+_file_ids = itertools.count()
+
+
+@settings(max_examples=40, deadline=None, suppress_health_check=list(HealthCheck))
+@given(st.lists(_LINE, min_size=1, max_size=30))
+@example([
+    '{"FanID":"d","FanID":"D2"}', '{"FanID":"n","a":NaN}', '{"FanID":"t"} x',
+    '{"FanID":"c"}{"b":2}', "{'FanID':'q'}", '{"FanID":"b"}]', ' {"FanID":"w"}\t',
+    '\xa0{"FanID":"l"}', '{"FanID":"r"}\xa0', '{"FanID":"é","ü":"ß"}', '{"a":+Infinity}',
+    '{"a":-INF}', '{"a":Infinity,"b":-Infinity}', "[1,2]", "null", "{}", "garbage",
+])
+def test_jsonl_dict_only_rule_matches_json_loads(spark, tmp_path, lines):
+    """``read_jsonl_dicts`` keeps exactly the lines ``json.loads`` turns
+    into a dict (bench_fidelity's ParseJson), with the same key set and
+    the same last-wins value for a duplicated key."""
+    from pipeline_apache_beam_entrega1_cs_spark.sources.jsonl import read_jsonl_dicts
+
+    path = tmp_path / f"fuzz-{next(_file_ids)}.jsonl"
+    path.write_text("\n".join(lines) + "\n", encoding="utf-8")
+    schema = T.StructType([T.StructField("FanID", T.StringType())])
+    got = Counter(
+        (tuple(sorted(set(r.key_list))), r.FanID)
+        for r in read_jsonl_dicts(spark, str(path), schema, keys_col="key_list").collect()
+    )
+    with open(path, encoding="utf-8") as f:
+        kept = [d for d in map(bench_fidelity.parse_dict, f) if d is not None]
+    want = Counter((tuple(sorted(d)), d.get("FanID")) for d in kept)
+    assert got == want
 
 
 def test_custom_python_datasource_partitions(spark):
