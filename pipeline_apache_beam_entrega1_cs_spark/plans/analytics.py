@@ -383,8 +383,9 @@ FROM framed
 """
 
 
-_CUSUM_K = "0.5"   # reference value (allowed drift per event)
-_CUSUM_H = "5.0"   # decision threshold
+# reference value k (allowed drift per event) and decision threshold h,
+# shared with the streaming twin (streaming/sinks.CusumStateSink)
+_CUSUM_K, _CUSUM_H = "0.5", "5.0"
 
 
 def timeseries_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -406,7 +407,18 @@ def timeseries_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB shape: one keyed window shuffle; both frames are running
     (O(1) per row); output is linear in events."""
-    ev = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
+    dec = "decimal(38,6)"
+    zero = F.lit("0").cast(dec)
+    s = F.col("pt").cast(dec) - F.least(zero, F.col("mn").cast(dec))
+    return cusum_report(cusum_prefix(_t(spark, sf_dir, "events")), s)
+
+
+def cusum_prefix(ev: DataFrame) -> DataFrame:
+    """(event_id, user_id, ts, pt, mn) per non-null value: pt is the
+    running sum P_t of x - k per user over (ts, event_id), exact in
+    DECIMAL, and mn its running min. Shared by timeseries_cusum_drift
+    (S_t = P_t - min(0, mn)) and the streaming twin's per-batch core
+    (streaming/sinks.CusumStateSink adds the carried S0)."""
     dec = "decimal(18,6)"
     step = F.col("value").cast(dec) - F.lit(_CUSUM_K).cast(dec)
     w = (
@@ -414,12 +426,18 @@ def timeseries_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("ts", "event_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    pt = F.sum(step).over(w)
-    base = ev.select("event_id", "user_id", "ts", pt.alias("pt"))
-    mn = F.min("pt").over(w)
-    zero = F.lit("0").cast("decimal(38,6)")
-    s = F.col("pt").cast("decimal(38,6)") - F.least(zero, mn.cast("decimal(38,6)"))
-    return base.select(
+    return (
+        ev.filter(F.col("value").isNotNull())
+        .select("event_id", "user_id", "ts", F.sum(step).over(w).alias("pt"))
+        .withColumn("mn", F.min("pt").over(w))
+    )
+
+
+def cusum_report(scored: DataFrame, s) -> DataFrame:
+    """The (event_id, user_id, cusum, drifting) report of the exact
+    DECIMAL cusum ``s``: cusum converts to double via string, the
+    threshold compare stays exact."""
+    return scored.select(
         "event_id",
         "user_id",
         F.round(s.cast("string").cast("double"), 6).alias("cusum"),
@@ -649,26 +667,39 @@ def pattern_match_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle; overlapping matches are reported (each row anchors at most
     one match start), which is MATCH_RECOGNIZE AFTER MATCH SKIP TO NEXT
     ROW semantics."""
-    ev = _t(spark, sf_dir, "events")
+    return pattern_matches(event_sequence(spark, sf_dir), _PATTERN)
+
+
+def event_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(user_id, ts, event_id, event_type): the per-user event sequence
+    fixture of the pattern, Markov, error-burst and out-of-order entries
+    and of their streaming twins' replays."""
+    return _t(spark, sf_dir, "events").select(
+        "user_id", "ts", "event_id", "event_type"
+    )
+
+
+def pattern_matches(events: DataFrame, pattern: tuple[str, ...]) -> DataFrame:
+    """Every consecutive occurrence of ``pattern`` in each user's
+    (ts, event_id)-ordered ``events``, by chained lead() navigation:
+    (user_id, start_event_id, end_event_id, start_ts_us, duration_us).
+    The batch scan, and the streaming sink's per-batch detection over
+    (carry ∪ batch)."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    df = ev.select("user_id", "event_type", "ts", "event_id")
-    for i in (1, 2):
+    last = len(pattern) - 1
+    df = events.select("user_id", "event_type", "ts", "event_id")
+    cond = F.col("event_type") == pattern[0]
+    for i in range(1, last + 1):
         df = df.withColumn(f"t{i}", F.lead("event_type", i).over(w))
         df = df.withColumn(f"ts{i}", F.lead("ts", i).over(w))
         df = df.withColumn(f"id{i}", F.lead("event_id", i).over(w))
-    return (
-        df.filter(
-            (F.col("event_type") == _PATTERN[0])
-            & (F.col("t1") == _PATTERN[1])
-            & (F.col("t2") == _PATTERN[2])
-        )
-        .select(
-            "user_id",
-            F.col("event_id").alias("start_event_id"),
-            F.col("id2").alias("end_event_id"),
-            F.unix_micros("ts").alias("start_ts_us"),
-            (F.unix_micros("ts2") - F.unix_micros("ts")).alias("duration_us"),
-        )
+        cond = cond & (F.col(f"t{i}") == pattern[i])
+    return df.filter(cond).select(
+        "user_id",
+        F.col("event_id").alias("start_event_id"),
+        F.col(f"id{last}").alias("end_event_id"),
+        F.unix_micros("ts").alias("start_ts_us"),
+        (F.unix_micros(f"ts{last}") - F.unix_micros("ts")).alias("duration_us"),
     )
 
 
@@ -4593,8 +4624,7 @@ def dq_error_burst_detector(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB shape: identical to the null detector — two per-user
     windows on ONE user-keyed shuffle, then a mergeable island agg."""
-    ev = _t(spark, sf_dir, "events")
-    base = ev.select(
+    base = event_sequence(spark, sf_dir).select(
         "user_id", "event_id",
         F.unix_timestamp("ts").alias("es"),
         (F.col("event_type") == "error").alias("is_missing"),
@@ -5722,10 +5752,17 @@ def analytics_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     user-local — never a global sort) + one hash-agg to the #types²
     cell frame; the row normalizer joins back on the tiny from_type
     marginal. Probabilities divide exact BIGINT counts, rounded 6dp."""
-    ev = _t(spark, sf_dir, "events")
+    return markov_report(markov_cells(event_sequence(spark, sf_dir)))
+
+
+def markov_cells(events: DataFrame) -> DataFrame:
+    """(from_type, to_type, n_trans): each event paired with its
+    predecessor in the user's (ts, event_id) order, counted per cell —
+    the batch fit, and the streaming sink's per-batch count over
+    (carry ∪ batch)."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    trans = (
-        ev.select(
+    return (
+        events.select(
             "user_id", "event_type",
             F.lag("event_type").over(w).alias("from_type"),
         )
@@ -5733,17 +5770,16 @@ def analytics_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("from_type", F.col("event_type").alias("to_type"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_trans"))
     )
-    marg = trans.groupBy("from_type").agg(
+
+
+def markov_report(cells: DataFrame) -> DataFrame:
+    """Row-normalize transition counts: p = n_trans / n_from (6dp)."""
+    marg = cells.groupBy("from_type").agg(
         F.sum("n_trans").cast("bigint").alias("n_from")
     )
-    return (
-        trans.join(marg, "from_type")
-        .select(
-            "from_type", "to_type", "n_trans",
-            F.round(
-                F.col("n_trans").cast("double") / F.col("n_from"), 6
-            ).alias("p"),
-        )
+    return cells.join(marg, "from_type").select(
+        "from_type", "to_type", "n_trans",
+        F.round(F.col("n_trans").cast("double") / F.col("n_from"), 6).alias("p"),
     )
 
 
@@ -8329,7 +8365,7 @@ def dq_out_of_order_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: one partitioned lag window (user_id — millions of
     partitions, no skew) + one mergeable hash-agg; epoch math stays on
     exact BIGINT seconds."""
-    ev = _t(spark, sf_dir, "events").select(
+    ev = event_sequence(spark, sf_dir).select(
         "user_id", "event_id", "event_type",
         F.unix_timestamp("ts").cast("long").alias("epo"),
     )
@@ -8338,23 +8374,34 @@ def dq_out_of_order_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         (F.lag("epo").over(w) - F.col("epo")).alias("back_s"),
     ).filter(F.col("back_s").isNotNull())
-    return pairs.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
-        F.sum(F.when(F.col("back_s") > 0, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_backwards"),
-        F.coalesce(
-            F.max(F.when(F.col("back_s") > 0, F.col("back_s"))), F.lit(0)
-        )
+    return out_of_order_counters(pairs, ppm=True)
+
+
+def out_of_order_counters(pairs: DataFrame, ppm: bool = False) -> DataFrame:
+    """Per-type counters over adjacent (event_type, back_s) pairs:
+    n_pairs, n_backwards and max_backwards_seconds — additive and
+    max-mergeable, which is what the streaming sink folds across
+    batches. ``ppm`` adds the report's backwards_ppm in the same
+    aggregate (the batch entry; the stream derives it at read-off)."""
+    backwards = F.col("back_s") > 0
+    n_pairs = F.count(F.lit(1))
+    n_backwards = F.sum(F.when(backwards, 1).otherwise(0))
+    aggs = [
+        n_pairs.cast("bigint").alias("n_pairs"),
+        n_backwards.cast("bigint").alias("n_backwards"),
+        F.coalesce(F.max(F.when(backwards, F.col("back_s"))), F.lit(0))
         .cast("bigint")
         .alias("max_backwards_seconds"),
-        F.round(
-            F.sum(F.when(F.col("back_s") > 0, 1).otherwise(0))
-            .cast("double")
-            * 1000000
-            / F.count(F.lit(1)),
-            6,
-        ).alias("backwards_ppm"),
+    ]
+    if ppm:
+        aggs.append(backwards_ppm(n_backwards, n_pairs))
+    return pairs.groupBy("event_type").agg(*aggs)
+
+
+def backwards_ppm(n_backwards, n_pairs):
+    """Backwards pairs per million pairs, 6dp."""
+    return F.round(n_backwards.cast("double") * 1000000 / n_pairs, 6).alias(
+        "backwards_ppm"
     )
 
 

@@ -2854,11 +2854,23 @@ def text_token_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrdered(max K) head and the 1-row total; the per-budget
     conditional sums run on the ≤ max-K frame; the total attaches as a
     1-row broadcast (QPM recipe)."""
-    freq = (
-        T.explode_tokens(_docs(spark, sf_dir))
+    return coverage_curve(token_freq(_docs(spark, sf_dir)))
+
+
+def token_freq(docs: DataFrame) -> DataFrame:
+    """(tok, freq): token occurrence counts — the batch count, and the
+    streaming sink's per-batch partial."""
+    return (
+        T.explode_tokens(docs)
         .groupBy("tok")
         .agg(F.count(F.lit(1)).cast("bigint").alias("freq"))
     )
+
+
+def coverage_curve(freq: DataFrame) -> DataFrame:
+    """The coverage report of a (tok, freq) table: per budget K, the
+    occurrences the K most frequent types cover. Read off the batch
+    count and off the streaming twin's merged state alike."""
     totals = freq.agg(
         F.sum("freq").cast("bigint").alias("total_occurrences"),
         F.count(F.lit(1)).cast("bigint").alias("vocab_size"),

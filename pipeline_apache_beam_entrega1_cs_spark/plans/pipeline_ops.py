@@ -87,15 +87,26 @@ def sample_bottom_k_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject — per-partition bottom-k then a k-row driver
     merge, never a global sort shuffle; the sample is a pure function
     of ids (stable across runs/engines/partitionings)."""
-    docs = _t(spark, sf_dir, "documents")
-    keyed = docs.select(
+    return bottom_k(bottom_k_keyed(spark, sf_dir), _BOTTOM_K)
+
+
+def bottom_k_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The bottom-k fixture: (doc_id, source, sample_key = md5 of the
+    salted id) — the input of both sample_bottom_k_sketch and the
+    streaming twin's replay."""
+    return _t(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
         F.md5(F.concat(F.lit("bks:"), F.col("doc_id").cast("string"))).alias(
             "sample_key"
         ),
     )
-    return keyed.orderBy("sample_key").limit(_BOTTOM_K)
+
+
+def bottom_k(keyed: DataFrame, k: int) -> DataFrame:
+    """The k rows with the smallest sample_key: the batch sketch, and
+    the streaming sink's per-batch take and re-take."""
+    return keyed.orderBy("sample_key").limit(k)
 
 
 SAMPLE_BOTTOM_K_SQL = f"""
@@ -528,8 +539,13 @@ def cdc_apply_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: ONE mergeable hash aggregate (max/max_by/count) on
     the change key — no window, no join, no sort; this is exactly why
     compaction services prefer arg-max-by-seq over per-key ordering."""
-    o = _t(spark, sf_dir, "orders")
-    ch = o.select(
+    return cdc_live(cdc_collapse(cdc_changelog(spark, sf_dir), F.count(F.lit(1))))
+
+
+def cdc_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The changelog fixture (key, seq, op, price) of cdc_apply_changelog
+    and its streaming twin."""
+    return _t(spark, sf_dir, "orders").select(
         (F.col("o_orderkey") % 20000).alias("key"),
         F.col("o_orderkey").alias("seq"),
         F.when(F.col("o_orderkey") % 11 == 0, F.lit("D"))
@@ -537,16 +553,26 @@ def cdc_apply_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("op"),
         F.col("o_totalprice").alias("price"),
     )
-    return (
-        ch.groupBy("key")
-        .agg(
-            F.max("seq").alias("last_seq"),
-            F.max_by("op", "seq").alias("last_op"),
-            F.max_by("price", "seq").alias("price"),
-            F.count(F.lit(1)).cast("bigint").alias("n_changes"),
-        )
-        .filter(F.col("last_op") != "D")
-        .select("key", "last_seq", "price", "n_changes")
+
+
+def cdc_collapse(changes: DataFrame, n_changes) -> DataFrame:
+    """Last-writer-wins per key: max seq, and the op and price at that
+    seq. ``n_changes`` is the change-count aggregate — ``count(1)`` over
+    raw changes, ``sum("n_changes")`` over collapsed partials, which is
+    how the streaming sink merges a batch into its state."""
+    return changes.groupBy("key").agg(
+        F.max("seq").alias("last_seq"),
+        F.max_by("op", "seq").alias("last_op"),
+        F.max_by("price", "seq").alias("price"),
+        n_changes.cast("bigint").alias("n_changes"),
+    )
+
+
+def cdc_live(collapsed: DataFrame) -> DataFrame:
+    """The live snapshot: keys whose last change is a delete tombstone
+    drop out (the oracle's HAVING)."""
+    return collapsed.filter(F.col("last_op") != "D").select(
+        "key", "last_seq", "price", "n_changes"
     )
 
 
@@ -647,15 +673,26 @@ def scd2_build_from_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     small partitions, never global) with a single lead(); no join, no
     aggregate. valid_to as the NEXT ts (not ts-1 day) follows the
     half-open [from, to) convention every PIT join here uses."""
-    o = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("key").orderBy("valid_from", "seq")
-    ch = o.select(
+    return scd2_version(scd2_changes(spark, sf_dir))
+
+
+def scd2_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The change fixture (key, valid_from, seq, attr_price) of
+    scd2_build_from_changes and its streaming twin."""
+    return _t(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("key"),
         F.col("o_orderdate").alias("valid_from"),
         F.col("o_orderkey").alias("seq"),
         F.col("o_totalprice").alias("attr_price"),
     )
-    return ch.select(
+
+
+def scd2_version(changes: DataFrame) -> DataFrame:
+    """SCD2 versioning of a change set: per key, each change is valid
+    until the next one (lead over (valid_from, seq)); the last is
+    open-ended and current."""
+    w = Window.partitionBy("key").orderBy("valid_from", "seq")
+    return changes.select(
         "key",
         "seq",
         "attr_price",

@@ -1941,24 +1941,37 @@ def agg_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     regardless of input size — plus the exact top-10 (orderBy + limit =
     TakeOrdered, no global sort) that exists only to pick probe keys."""
     orders = _t(spark, sf_dir, "orders").select("o_custkey")
-    rows = orders.withColumn(
-        "r", F.explode(F.array(*[F.lit(i) for i in range(_CMS_D)]))
+    true_counts = orders.groupBy("o_custkey").agg(
+        F.count(F.lit(1)).alias("true_cnt")
     )
-    bucket = cms_bucket(F.col("r"), F.col("o_custkey"))
-    sketch = rows.groupBy("r", bucket.alias("bucket")).agg(
-        F.count(F.lit(1)).alias("cell")
+    return cms_report(true_counts, cms_grid(orders))
+
+
+def _cms_rows():
+    return F.explode(F.array(*[F.lit(i) for i in range(_CMS_D)]))
+
+
+def cms_grid(keys: DataFrame) -> DataFrame:
+    """The d x w sketch (r, bucket, cell) of the o_custkey column: the
+    batch sketch, and the streaming sink's per-batch partial grid
+    (cells add across batches)."""
+    rows = keys.withColumn("r", _cms_rows())
+    return rows.groupBy(
+        "r", cms_bucket(F.col("r"), F.col("o_custkey")).alias("bucket")
+    ).agg(F.count(F.lit(1)).alias("cell"))
+
+
+def cms_report(true_counts: DataFrame, grid: DataFrame) -> DataFrame:
+    """The true-vs-estimate report for the top-10 keys of
+    ``true_counts`` (o_custkey, true_cnt): each key probes its d cells
+    of ``grid`` (r, bucket, cell), est_cnt = the min cell."""
+    true_top = true_counts.orderBy(F.desc("true_cnt"), F.asc("o_custkey")).limit(10)
+    probes = true_top.withColumn("r", _cms_rows()).select(
+        "o_custkey", "true_cnt", "r",
+        cms_bucket(F.col("r"), F.col("o_custkey")).alias("bucket"),
     )
-    true_top = (
-        orders.groupBy("o_custkey")
-        .agg(F.count(F.lit(1)).alias("true_cnt"))
-        .orderBy(F.desc("true_cnt"), F.asc("o_custkey"))
-        .limit(10)
-    )
-    probes = true_top.withColumn(
-        "r", F.explode(F.array(*[F.lit(i) for i in range(_CMS_D)]))
-    ).select("o_custkey", "true_cnt", "r", bucket.alias("bucket"))
     return (
-        probes.join(sketch, ["r", "bucket"])
+        probes.join(grid, ["r", "bucket"])
         .groupBy("o_custkey")
         .agg(
             F.min("true_cnt").alias("true_cnt"),

@@ -1,8 +1,10 @@
 """Time-window operators over the events table, batch form
-(SURVEY.md §2B "Streaming" row). The SAME window expressions run under
-Structured Streaming in streaming/windows.py — batch form here so the
-DuckDB oracle can check values; the streaming tests assert
-batch==streaming equivalence.
+(SURVEY.md §2B "Streaming" row). Each window aggregation is defined once
+here (tumbling_agg, sliding_agg, session_agg) and streaming/windows.py
+applies the same function to the watermarked event stream. Both forms
+of each pair share one DuckDB oracle, which is what checks the stream;
+tests/test_streaming.py also compares tumbling batch against stream
+row for row.
 
 Window starts are emitted as epoch integers: Spark's F.window aligns to
 the Unix epoch, so `unix_timestamp(window.start)` equals
@@ -24,9 +26,13 @@ from .spec import QuerySpec
 
 def window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour windows × event_type: count + value sum."""
-    ev = load_table(spark, sf_dir, "events")
+    return tumbling_agg(load_table(spark, sf_dir, "events"))
+
+
+def tumbling_agg(events: DataFrame) -> DataFrame:
+    """Per (1-hour tumbling window, event_type): count + value sum."""
     return (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        events.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"), dsum("value").alias("sum_value"))
         .select(
             F.unix_timestamp(F.col("w.start")).alias("window_start_s"),
@@ -49,9 +55,13 @@ def window_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding windows (1 hour, slide 30 min): each event lands in
     exactly 2 windows. Oracle reproduces the window-assignment rule with
     generate_series over slide-aligned starts."""
-    ev = load_table(spark, sf_dir, "events")
+    return sliding_agg(load_table(spark, sf_dir, "events"))
+
+
+def sliding_agg(events: DataFrame) -> DataFrame:
+    """Per sliding window (1 hour, slide 30 min): count + value sum."""
     return (
-        ev.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
+        events.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"), dsum("value").alias("sum_value"))
         .select(
             F.unix_timestamp(F.col("w.start")).alias("window_start_s"),
@@ -78,8 +88,15 @@ def window_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows (30-min inactivity gap) per user via native
     F.session_window. Oracle: the lag+cumsum islands idiom — semantically
     identical (new session when gap >= 30 min, microsecond precision)."""
-    ev = load_table(spark, sf_dir, "events")
-    return session_window_agg(ev, key="user_id", ts="ts", gap="30 minutes", value="value")
+    return session_agg(load_table(spark, sf_dir, "events"))
+
+
+def session_agg(events: DataFrame) -> DataFrame:
+    """Per (user_id, 30-min-gap session): start (epoch micros), count,
+    value sum."""
+    return session_window_agg(
+        events, key="user_id", ts="ts", gap="30 minutes", value="value"
+    )
 
 
 WINDOW_SESSION_SQL = f"""

@@ -21,7 +21,11 @@ and testable.
 
 MERGE sinks (a state table re-aggregated per batch) share one commit
 wrapper, :class:`MergeSink`, and every ``run_*_stream`` entry drives its
-sink through one :func:`replay`.
+sink through one :func:`replay`, which stages, streams and reads off in
+one temp directory that is gone when it returns. Where a sink is the
+twin of a batch entry, the fixture, the per-batch core and the report
+are that batch module's functions; the sink adds only its fold or
+carry.
 """
 
 from __future__ import annotations
@@ -32,6 +36,7 @@ import shutil
 import tempfile
 import time
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -189,26 +194,37 @@ def _range_bucket(raw: DataFrame, x, n: int = 4):
 
 
 def _stage(raw: DataFrame, work: str, bucket, n: int) -> str:
-    """Write ``raw`` as ``n`` single-file parquet slices (``bucket`` ==
-    0..n-1) under ``work/src``, with strictly increasing file mtimes so
-    a maxFilesPerTrigger=1 file stream replays them in slice order — one
-    deterministic micro-batch per slice. Order-sensitive state (carries)
-    needs that order; for the associative merges it is merely
-    deterministic."""
+    """Write ``raw`` as single-file parquet slices (``bucket`` ==
+    0..n-1) under ``work/src`` in ONE Spark job — one task writes the
+    frame partitioned by the slice index — then give the files strictly
+    increasing mtimes so a maxFilesPerTrigger=1 file stream replays them
+    in slice order: one deterministic micro-batch per non-empty slice
+    (an empty slice writes no file, so it is no batch; an empty ``raw``
+    is one empty batch). Order-sensitive state (carries) needs that
+    order; for the associative merges it is merely deterministic."""
+    staged = os.path.join(work, "staged")
+    raw.withColumn("_slice", bucket).coalesce(1).write.partitionBy(
+        "_slice"
+    ).parquet(staged)
+    parts = [
+        glob.glob(os.path.join(staged, f"_slice={i}", "*.parquet"))
+        for i in range(n)
+    ]
+    if not any(parts):  # no rows: one empty batch, so the sink still commits
+        raw.limit(0).write.parquet(os.path.join(work, "empty"))
+        parts = [glob.glob(os.path.join(work, "empty", "*.parquet"))]
     src = os.path.join(work, "src")
     os.makedirs(src)
     now = time.time()
-    for i in range(n):
-        stage = os.path.join(work, f"stage_{i}")
-        raw.filter(bucket == i).coalesce(1).write.mode("overwrite").parquet(stage)
-        dst = os.path.join(src, f"{i:02d}.parquet")
-        shutil.copy(glob.glob(os.path.join(stage, "part-*.parquet"))[0], dst)
-        os.utime(dst, (now + i, now + i))  # force pickup order
+    for i, part in enumerate(parts):
+        if part:
+            dst = os.path.join(src, f"{i:02d}.parquet")
+            os.rename(part[0], dst)
+            os.utime(dst, (now + i, now + i))  # force pickup order
     return src
 
 
-def replay(raw: DataFrame, bucket, sink_for, read_off, n: int = 4,
-           work: str | None = None) -> DataFrame:
+def replay(raw: DataFrame, bucket, sink_for, read_off, n: int = 4) -> DataFrame:
     """Replay the static frame ``raw`` as ``n`` micro-batches through a
     foreachBatch sink and return ``read_off`` of what the sink wrote.
 
@@ -219,21 +235,18 @@ def replay(raw: DataFrame, bucket, sink_for, read_off, n: int = 4,
     even when a batch fails, and the failure propagates.
     ``read_off`` receives the parquet under ``state_dir``.
 
-    Scratch lifecycle: by default slices, checkpoint and state live in
-    a fresh temp directory deleted on return, so the read-off is
-    collected first — bounded by construction for every collecting
-    entry (aggregates, sketches, reports). With ``work`` given the
-    directory is cleared first and kept afterwards, and the read-off is
-    returned lazily: the path for corpus-sized outputs."""
+    Scratch lifecycle: slices, checkpoint and state live in one fresh
+    temp directory, deleted on return whether or not a batch failed.
+    The read-off is pinned before that with an eager DISK_ONLY
+    ``localCheckpoint``: its rows stay in the block manager's local
+    files (not the heap, where retained pins slowed later queries of
+    the same session), the returned frame reads no scratch file, and
+    a corpus-sized read-off never passes through the driver."""
     from ..schemas import ensure_session_confs
 
     spark = raw.sparkSession
     ensure_session_confs(spark)
-    keep = work is not None
-    if keep:
-        shutil.rmtree(work, ignore_errors=True)
-    else:
-        work = tempfile.mkdtemp(prefix="graft_replay_")
+    work = tempfile.mkdtemp(prefix="graft_replay_")
     try:
         src = _stage(raw, work, bucket, n)
         state = os.path.join(work, "state")
@@ -251,11 +264,11 @@ def replay(raw: DataFrame, bucket, sink_for, read_off, n: int = 4,
             q.processAllAvailable()
         finally:
             q.stop()
-        out = read_off(spark.read.parquet(state))
-        return out if keep else spark.createDataFrame(out.collect(), out.schema)
+        return read_off(spark.read.parquet(state)).localCheckpoint(
+            eager=True, storageLevel=StorageLevel.DISK_ONLY
+        )
     finally:
-        if not keep:
-            shutil.rmtree(work, ignore_errors=True)
+        shutil.rmtree(work, ignore_errors=True)
 
 
 class RollupMergeSink(MergeSink):
@@ -820,6 +833,8 @@ class PatternMatchSink(MergeSink):
         self.pattern = pattern
 
     def merge(self, batch_df, prev):
+        from ..plans.analytics import pattern_matches
+
         plen = len(self.pattern)
         ev_cols = ["user_id", "ts", "event_id", "event_type"]
         if prev is not None:
@@ -830,25 +845,8 @@ class PatternMatchSink(MergeSink):
             matches_prev = None
 
         events_now = carry.unionByName(batch_df.select(*ev_cols))
-        w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        nav = events_now
-        for i in range(1, plen):
-            nav = nav.withColumn(f"t{i}", F.lead("event_type", i).over(w))
-        nav = nav.withColumn(
-            f"ts{plen - 1}", F.lead("ts", plen - 1).over(w)
-        ).withColumn(f"id{plen - 1}", F.lead("event_id", plen - 1).over(w))
-        cond = F.col("event_type") == self.pattern[0]
-        for i in range(1, plen):
-            cond = cond & (F.col(f"t{i}") == self.pattern[i])
-        matches_new = nav.filter(cond).select(
-            F.lit("match").alias("kind"),
-            "user_id",
-            F.col("event_id").alias("start_event_id"),
-            F.col(f"id{plen - 1}").alias("end_event_id"),
-            F.unix_micros("ts").alias("start_ts_us"),
-            (F.unix_micros(F.col(f"ts{plen - 1}")) - F.unix_micros("ts")).alias(
-                "duration_us"
-            ),
+        matches_new = pattern_matches(events_now, self.pattern).select(
+            F.lit("match").alias("kind"), "*"
         )
         wtail = Window.partitionBy("user_id").orderBy(
             F.col("ts").desc(), F.col("event_id").desc()
@@ -1045,6 +1043,8 @@ class OutOfOrderAuditSink(MergeSink):
              "max_backwards_seconds", "user_id", "last_epo", "last_eid"]
 
     def merge(self, batch_df, prev):
+        from ..plans.analytics import out_of_order_counters
+
         if prev is not None:
             st = prev
             if "last_eid" not in st.columns:
@@ -1087,18 +1087,7 @@ class OutOfOrderAuditSink(MergeSink):
         pairs = seq.filter(F.col("prev_epo").isNotNull()).select(
             "event_type", (F.col("prev_epo") - F.col("epo")).alias("back_s")
         )
-        batch_counts = pairs.groupBy("event_type").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
-            F.sum(F.when(F.col("back_s") > 0, 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_backwards"),
-            F.coalesce(
-                F.max(F.when(F.col("back_s") > 0, F.col("back_s"))),
-                F.lit(0),
-            )
-            .cast("bigint")
-            .alias("max_backwards_seconds"),
-        )
+        batch_counts = out_of_order_counters(pairs)
         if counters is not None:
             merged = (
                 counters.select(
@@ -1170,20 +1159,14 @@ def run_out_of_order_stream(spark, sf_dir: str):
     through an OutOfOrderAuditSink; returns the per-type report with
     backwards_ppm derived at read-off — exactly the one-shot batch
     audit's frame."""
-    from ..schemas import load_table
+    from ..plans.analytics import backwards_ppm, event_sequence
 
-    raw = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_id", "ts", "event_type"
-    )
+    raw = event_sequence(spark, sf_dir)
     return replay(
         raw, _range_bucket(raw, F.col("event_id")), OutOfOrderAuditSink,
         lambda st: st.filter(F.col("kind") == "type").select(
             "event_type", "n_pairs", "n_backwards", "max_backwards_seconds",
-            F.round(
-                F.col("n_backwards").cast("double") * 1000000
-                / F.col("n_pairs"),
-                6,
-            ).alias("backwards_ppm"),
+            backwards_ppm(F.col("n_backwards"), F.col("n_pairs")),
         ),
     )
 
@@ -1193,11 +1176,9 @@ def run_error_burst_stream(spark, sf_dir: str, min_len: int = 3):
     as FOUR time-ordered micro-batches through an ErrorBurstSink;
     returns emitted runs plus finalized trailing carries (>= min_len)
     — exactly the one-shot batch detector's frame."""
-    from ..schemas import load_table
+    from ..plans.analytics import event_sequence
 
-    raw = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_id", "ts", "event_type"
-    )
+    raw = event_sequence(spark, sf_dir)
     return replay(
         raw, _range_bucket(raw, F.unix_micros("ts")),
         lambda st: ErrorBurstSink(st, min_len),
@@ -1213,14 +1194,9 @@ def run_pattern_match_stream(spark, sf_dir: str):
     as FOUR time-ordered micro-batches through a PatternMatchSink for
     the view->click->purchase sequence; returns the accumulated match
     table (same shape as the batch pattern_match_sequence entry)."""
-    from ..plans.analytics import _PATTERN
-    from ..schemas import load_table
+    from ..plans.analytics import _PATTERN, event_sequence
 
-    # load_table (not a raw parquet read): the loader's NTZ->TZ
-    # timestamp normalization is what makes unix_micros legal here
-    raw = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id", "event_type"
-    )
+    raw = event_sequence(spark, sf_dir)
     return replay(
         raw, _range_bucket(raw, F.unix_micros("ts")),
         lambda st: PatternMatchSink(st, _PATTERN),
@@ -1256,10 +1232,9 @@ class CusumStateSink(MergeSink):
     string. 100 TB shape: per batch one user-keyed window shuffle +
     a broadcast-size carry join; state is one row per active user."""
 
-    K = "0.5"
-    H = "5.0"
-
     def merge(self, batch_df, prev):
+        from ..plans.analytics import cusum_prefix
+
         dec = "decimal(38,6)"
         if prev is not None:
             carry = prev.filter(F.col("kind") == "carry").select(
@@ -1270,19 +1245,7 @@ class CusumStateSink(MergeSink):
             carry = None
             out_prev = None
 
-        step = F.col("value").cast("decimal(18,6)") - F.lit(self.K).cast(
-            "decimal(18,6)"
-        )
-        w = (
-            Window.partitionBy("user_id")
-            .orderBy("ts", "event_id")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        base = batch_df.filter(F.col("value").isNotNull()).select(
-            "event_id", "user_id", "ts",
-            F.sum(step).over(w).cast(dec).alias("pt"),
-        )
-        base = base.withColumn("mn", F.min("pt").over(w))
+        base = cusum_prefix(batch_df)
         if carry is not None:
             base = base.join(carry, "user_id", "left")
         else:
@@ -1340,31 +1303,18 @@ def run_cusum_stream(spark, sf_dir: str):
     micro-batches through CusumStateSink; returns the accumulated
     per-event cusum table (same shape/values as the batch
     timeseries_cusum_drift entry — its SQL oracle)."""
+    from ..plans.analytics import cusum_report
     from ..schemas import load_table
 
     raw = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "value"
     )
-    # PID-keyed scratch, cleaned at START and left on disk afterwards:
-    # the per-event output is corpus-sized, so (unlike the bounded
-    # match/aggregate sinks) collecting it to the driver is not an
-    # option — the entry returns a lazy reader over the state table.
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
     return replay(
         raw, _range_bucket(raw, F.unix_micros("ts")), CusumStateSink,
-        lambda st: st.filter(F.col("kind") == "out").select(
-            "event_id",
-            "user_id",
-            F.round(
-                F.col("payload").cast("decimal(38,6)")
-                .cast("string").cast("double"), 6
-            ).alias("cusum"),
-            (
-                F.col("payload").cast("decimal(38,6)")
-                > F.lit(CusumStateSink.H).cast("decimal(38,6)")
-            ).alias("drifting"),
+        lambda st: cusum_report(
+            st.filter(F.col("kind") == "out"),
+            F.col("payload").cast("decimal(38,6)"),
         ),
-        work=f"/tmp/spark_graft_cusumstate/{tag}-{os.getpid()}",
     )
 
 
@@ -1454,26 +1404,16 @@ class CdcApplyMergeSink(MergeSink):
     hash-agg of its own keys and state is one row per live-or-tombstoned
     key — the Delta/Hudi MERGE INTO economics without a table format."""
 
-    @staticmethod
-    def _collapse(df):
-        return df.groupBy("key").agg(
-            F.max("seq").alias("last_seq"),
-            F.max_by("op", "seq").alias("last_op"),
-            F.max_by("price", "seq").alias("price"),
-            F.sum("n_changes").cast("bigint").alias("n_changes"),
-        )
-
     def merge(self, batch_df, prev):
-        inc = self._collapse(
-            batch_df.select(
-                "key", "seq", "op", "price", F.lit(1).alias("n_changes")
-            )
-        )
+        from ..plans.pipeline_ops import cdc_collapse
+
+        inc = cdc_collapse(batch_df, F.count(F.lit(1)))
         if prev is None:
             return inc
         cols = ["key", "last_seq AS seq", "last_op AS op", "price", "n_changes"]
-        return self._collapse(
-            prev.selectExpr(*cols).unionByName(inc.selectExpr(*cols))
+        return cdc_collapse(
+            prev.selectExpr(*cols).unionByName(inc.selectExpr(*cols)),
+            F.sum("n_changes"),
         )
 
 
@@ -1481,20 +1421,11 @@ def run_cdc_apply_stream(spark, sf_dir: str):
     """Streaming CDC compaction end-to-end: the orders-derived changelog
     replayed as FOUR micro-batches through a CdcApplyMergeSink; returns
     the live snapshot (tombstoned keys filtered at read-off)."""
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    raw = o.select(
-        (F.col("o_orderkey") % 20000).alias("key"),
-        F.col("o_orderkey").alias("seq"),
-        F.when(F.col("o_orderkey") % 11 == 0, F.lit("D"))
-        .otherwise(F.lit("U"))
-        .alias("op"),
-        F.col("o_totalprice").alias("price"),
-    )
+    from ..plans.pipeline_ops import cdc_changelog, cdc_live
+
     return replay(
-        raw, F.col("seq") % 4, CdcApplyMergeSink,
-        lambda st: st.filter(F.col("last_op") != "D").select(
-            "key", "last_seq", "price", "n_changes"
-        ),
+        cdc_changelog(spark, sf_dir), F.col("seq") % 4, CdcApplyMergeSink,
+        cdc_live,
     )
 
 
@@ -1525,19 +1456,12 @@ class Scd2MergeSink(MergeSink):
 
     _RAW = ["key", "seq", "attr_price", "valid_from"]
 
-    @staticmethod
-    def _version(raw):
-        w = Window.partitionBy("key").orderBy("valid_from", "seq")
-        return raw.select(
-            "key", "seq", "attr_price", "valid_from",
-            F.lead("valid_from").over(w).alias("valid_to"),
-            F.lead("valid_from").over(w).isNull().alias("is_current"),
-        )
-
     def merge(self, batch_df, prev):
+        from ..plans.pipeline_ops import scd2_version
+
         inc = batch_df.select(*self._RAW).dropDuplicates(["key", "seq"])
         if prev is None:
-            return self._version(inc)
+            return scd2_version(inc)
         keys = inc.select("key").distinct()
         untouched = prev.join(keys, "key", "left_anti")
         affected = (
@@ -1546,7 +1470,7 @@ class Scd2MergeSink(MergeSink):
             .unionByName(inc)
             .dropDuplicates(["key", "seq"])
         )
-        return untouched.unionByName(self._version(affected))
+        return untouched.unionByName(scd2_version(affected))
 
 
 def run_scd2_stream(spark, sf_dir: str):
@@ -1554,15 +1478,10 @@ def run_scd2_stream(spark, sf_dir: str):
     orders-derived per-customer change stream (the exact
     scd2_build_from_changes fixture) replayed as FOUR micro-batches
     through an Scd2MergeSink; returns the maintained dimension."""
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    raw = o.select(
-        F.col("o_custkey").alias("key"),
-        F.col("o_orderkey").alias("seq"),
-        F.col("o_totalprice").alias("attr_price"),
-        F.col("o_orderdate").alias("valid_from"),
-    )
+    from ..plans.pipeline_ops import scd2_changes
+
     return replay(
-        raw, F.col("seq") % 4, Scd2MergeSink,
+        scd2_changes(spark, sf_dir), F.col("seq") % 4, Scd2MergeSink,
         lambda st: st.select(
             "key", "seq", "attr_price", "valid_from", "valid_to",
             "is_current",
@@ -1585,31 +1504,23 @@ class BottomKMergeSink(MergeSink):
         self.k = k
 
     def merge(self, batch_df, prev):
-        inc = batch_df.orderBy("sample_key").limit(self.k)
+        from ..plans.pipeline_ops import bottom_k
+
+        inc = bottom_k(batch_df, self.k)
         if prev is None:
             return inc
-        return (
-            prev.unionByName(inc)
-            .dropDuplicates(["doc_id"])
-            .orderBy("sample_key")
-            .limit(self.k)
-        )
+        return bottom_k(prev.unionByName(inc).dropDuplicates(["doc_id"]), self.k)
 
 
 def run_bottom_k_stream(spark, sf_dir: str, k: int):
     """Streaming bottom-k sample end-to-end: documents (with the md5
     sample key precomputed) replayed as FOUR micro-batches through a
     BottomKMergeSink; returns the maintained k-row sample."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    raw = docs.select(
-        "doc_id",
-        "source",
-        F.md5(
-            F.concat(F.lit("bks:"), F.col("doc_id").cast("string"))
-        ).alias("sample_key"),
-    )
+    from ..plans.pipeline_ops import bottom_k_keyed
+
     return replay(
-        raw, F.col("doc_id") % 4, lambda st: BottomKMergeSink(st, k),
+        bottom_k_keyed(spark, sf_dir), F.col("doc_id") % 4,
+        lambda st: BottomKMergeSink(st, k),
         lambda st: st.select("doc_id", "source", "sample_key"),
     )
 
@@ -1666,11 +1577,9 @@ class TokenFreqMergeSink(MergeSink):
     streaming_countmin_state."""
 
     def merge(self, batch_df, prev):
-        from ..operators.textops import explode_tokens
+        from ..plans.llm_data import token_freq
 
-        inc = explode_tokens(batch_df).groupBy("tok").agg(
-            F.count(F.lit(1)).cast("long").alias("freq")
-        )
+        inc = token_freq(batch_df)
         return _fold(
             prev, inc, ["tok"], F.sum("freq").cast("long").alias("freq")
         )
@@ -1682,54 +1591,12 @@ def run_token_freq_stream(spark, sf_dir: str):
     vocabulary-coverage curve derived FROM THE STATE (the exact
     text_token_coverage_curve report, so the batch entry's oracle
     checks the streaming path)."""
-    from ..plans.llm_data import _COVERAGE_KS
-
-    def read_off(st):
-        freq = st.select("tok", F.col("freq").cast("bigint").alias("freq"))
-        totals = freq.agg(
-            F.sum("freq").cast("bigint").alias("total_occurrences"),
-            F.count(F.lit(1)).cast("bigint").alias("vocab_size"),
-        )
-        top = freq.orderBy(F.desc("freq"), F.asc("tok")).limit(
-            max(_COVERAGE_KS)
-        )
-        w = Window.orderBy(F.desc("freq"), F.asc("tok"))
-        ranked = top.withColumn(
-            "rank", F.row_number().over(w).cast("bigint")
-        )
-        per_k = (
-            ranked.select(
-                F.explode(
-                    F.array(
-                        *[F.lit(k).cast("bigint") for k in _COVERAGE_KS]
-                    )
-                ).alias("k"),
-                "rank", "freq",
-            )
-            .filter(F.col("rank") <= F.col("k"))
-            .groupBy("k")
-            .agg(
-                F.sum("freq").cast("bigint").alias("covered_occurrences"),
-                F.count(F.lit(1)).cast("bigint").alias("types_in_budget"),
-            )
-        )
-        return (
-            per_k.crossJoin(F.broadcast(totals))
-            .select(
-                "k", "types_in_budget", "covered_occurrences",
-                "total_occurrences", "vocab_size",
-                F.round(
-                    F.col("covered_occurrences").cast("double")
-                    / F.col("total_occurrences"), 6,
-                ).alias("coverage"),
-            )
-            .orderBy("k")
-        )
+    from ..plans.llm_data import coverage_curve
 
     raw = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     )
-    return replay(raw, F.col("doc_id") % 4, TokenFreqMergeSink, read_off)
+    return replay(raw, F.col("doc_id") % 4, TokenFreqMergeSink, coverage_curve)
 
 
 class FreshnessMergeSink(MergeSink):
@@ -1833,6 +1700,8 @@ class MarkovMergeSink(MergeSink):
     row per active user."""
 
     def merge(self, batch_df, prev):
+        from ..plans.analytics import markov_cells
+
         ev_cols = ["user_id", "ts", "event_id", "event_type"]
         if prev is not None:
             carry = prev.filter(F.col("kind") == "carry").select(*ev_cols)
@@ -1844,18 +1713,8 @@ class MarkovMergeSink(MergeSink):
             cells_prev = None
 
         events_now = carry.unionByName(batch_df.select(*ev_cols))
-        w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        cells_new = (
-            events_now.select(
-                "event_type",
-                F.lag("event_type").over(w).alias("from_type"),
-            )
-            .filter(F.col("from_type").isNotNull())
-            .groupBy("from_type", F.col("event_type").alias("to_type"))
-            .agg(F.count(F.lit(1)).cast("long").alias("n_trans"))
-        )
         cells_new = _fold(
-            cells_prev, cells_new, ["from_type", "to_type"],
+            cells_prev, markov_cells(events_now), ["from_type", "to_type"],
             F.sum("n_trans").cast("long").alias("n_trans"),
         )
         wtail = Window.partitionBy("user_id").orderBy(
@@ -1890,30 +1749,12 @@ def run_markov_stream(spark, sf_dir: str):
     replayed as FOUR time-ordered micro-batches through a
     MarkovMergeSink; returns the final row-normalized transition
     report (from_type, to_type, n_trans, p)."""
-    from ..schemas import load_table
+    from ..plans.analytics import event_sequence, markov_report
 
-    def read_off(st):
-        cells = st.filter(F.col("kind") == "cell").select(
-            "from_type", "to_type", F.col("n_trans").cast("bigint").alias("n_trans")
-        )
-        marg = cells.groupBy("from_type").agg(
-            F.sum("n_trans").cast("bigint").alias("n_from")
-        )
-        return cells.join(marg, "from_type").select(
-            "from_type", "to_type", "n_trans",
-            F.round(
-                F.col("n_trans").cast("double") / F.col("n_from"), 6
-            ).alias("p"),
-        )
-
-    # load_table (not a raw parquet read): the loader's NTZ->TZ
-    # timestamp normalization is what makes unix_micros legal in the
-    # time-range slicing
-    raw = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id", "event_type"
-    )
+    raw = event_sequence(spark, sf_dir)
     return replay(
-        raw, _range_bucket(raw, F.unix_micros("ts")), MarkovMergeSink, read_off
+        raw, _range_bucket(raw, F.unix_micros("ts")), MarkovMergeSink,
+        lambda st: markov_report(st.filter(F.col("kind") == "cell")),
     )
 
 
@@ -1932,18 +1773,15 @@ class CountMinMergeSink(MergeSink):
     probe ad hoc)."""
 
     def merge(self, batch_df, prev):
-        from ..plans.relational2 import _CMS_D as d, cms_bucket
+        from ..plans.relational2 import cms_grid
 
-        rows = batch_df.withColumn(
-            "r", F.explode(F.array(*[F.lit(i) for i in range(d)]))
-        )
-        bucket = cms_bucket(F.col("r"), F.col("o_custkey"))
-        grid = rows.groupBy(
+        grid = cms_grid(batch_df).select(
             F.lit("grid").alias("kind"),
             F.col("r").cast("long").alias("r"),
-            bucket.alias("bucket"),
+            "bucket",
             F.lit(None).cast("long").alias("key"),
-        ).agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+            F.col("cell").cast("long").alias("cnt"),
+        )
         keys = batch_df.groupBy(
             F.lit("key").alias("kind"),
             F.lit(None).cast("long").alias("r"),
@@ -1961,32 +1799,16 @@ def run_countmin_stream(spark, sf_dir: str):
     micro-batches through a CountMinMergeSink, then the batch entry's
     true-vs-estimate top-10 report is derived FROM THE STATE (top keys
     from the 'key' frame, estimates probed from the 'grid' frame)."""
-    from ..plans.relational2 import _CMS_D as d, cms_bucket
+    from ..plans.relational2 import cms_report
 
     def read_off(state):
-        top = (
-            state.filter(F.col("kind") == "key")
-            .select(F.col("key").alias("o_custkey"),
-                    F.col("cnt").alias("true_cnt"))
-            .orderBy(F.desc("true_cnt"), F.asc("o_custkey"))
-            .limit(10)
-        )
-        probes = top.withColumn(
-            "r", F.explode(F.array(*[F.lit(i) for i in range(d)]))
-        ).select(
-            "o_custkey", "true_cnt", F.col("r").cast("long").alias("r"),
-            cms_bucket(F.col("r"), F.col("o_custkey")).alias("bucket"),
-        )
-        grid = state.filter(F.col("kind") == "grid").select(
-            "r", "bucket", F.col("cnt").alias("cell")
-        )
-        return (
-            probes.join(grid, ["r", "bucket"])
-            .groupBy("o_custkey")
-            .agg(
-                F.min("true_cnt").alias("true_cnt"),
-                F.min("cell").alias("est_cnt"),
-            )
+        return cms_report(
+            state.filter(F.col("kind") == "key").select(
+                F.col("key").alias("o_custkey"), F.col("cnt").alias("true_cnt")
+            ),
+            state.filter(F.col("kind") == "grid").select(
+                "r", "bucket", F.col("cnt").alias("cell")
+            ),
         )
 
     raw = spark.read.parquet(f"{sf_dir}/orders.parquet").select(

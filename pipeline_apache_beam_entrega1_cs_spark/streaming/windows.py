@@ -1,9 +1,11 @@
 """Structured Streaming forms of the time-window operators.
 
-Same window expressions as plans/windows_batch.py, executed through
-readStream -> withWatermark -> groupBy(window) -> memory sink. On a real
-cluster the source becomes Kafka/files-in-arrival-order and the sink a
-Delta/parquet append — the aggregation code does not change.
+The aggregations are the batch module's own functions
+(plans/windows_batch.tumbling_agg, sliding_agg, session_agg), applied
+to the events parquet read as a stream with a 2-hour watermark and
+drained to a memory sink. On a real cluster the source becomes
+Kafka/files-in-arrival-order and the sink a Delta/parquet append — the
+aggregation code does not change.
 
 The memory sink + processAllAvailable pattern drains a bounded source
 synchronously, which is how the tests (and the rows-only driver check)
@@ -15,10 +17,6 @@ from __future__ import annotations
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from ..functions.numeric import dsum
-from ..schemas import load_table
 
 
 def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -58,21 +56,10 @@ def _drain(stream_df: DataFrame, output_mode: str) -> DataFrame:
     return spark.table(name)
 
 
-def tumbling_agg_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Watermarked tumbling aggregation — the streaming twin of
-    plans/windows_batch.window_tumbling. The watermark bounds state:
-    windows older than max(event time) - watermark finalize and evict."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"), dsum("value").alias("sum_value"))
-        .select(
-            F.unix_timestamp(F.col("w.start")).alias("window_start_s"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
+def _watermarked_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The event stream with a 2-hour watermark: windows older than
+    max(event time) - 2 h finalize and leave state."""
+    return _stream_events(spark, sf_dir).withWatermark("ts", "2 hours")
 
 
 def run_tumbling_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -80,30 +67,27 @@ def run_tumbling_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet as a stream; complete mode because a cold replay is one batch
     (append mode would emit nothing until the watermark advances past a
     window in a LATER batch)."""
-    return _drain(tumbling_agg_stream(_stream_events(spark, sf_dir)), "complete")
+    from ..plans.windows_batch import tumbling_agg
 
-
-def sliding_agg_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Watermarked sliding-window aggregation (1 h window, 30 min slide)
-    — the streaming twin of plans/windows_batch.window_sliding. Each
-    event updates exactly 2 overlapping windows; the watermark bounds
-    how many window states stay live."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"), dsum("value").alias("sum_value"))
-        .select(
-            F.unix_timestamp(F.col("w.start")).alias("window_start_s"),
-            "n_events",
-            "sum_value",
-        )
-    )
+    return _drain(tumbling_agg(_watermarked_events(spark, sf_dir)), "complete")
 
 
 def run_sliding_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Execute the watermarked sliding aggregation as a one-batch cold
     replay (complete mode — see run_tumbling_stream)."""
-    return _drain(sliding_agg_stream(_stream_events(spark, sf_dir)), "complete")
+    from ..plans.windows_batch import sliding_agg
+
+    return _drain(sliding_agg(_watermarked_events(spark, sf_dir)), "complete")
+
+
+def run_session_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Execute streaming sessionization over the events parquet; the
+    watermark tells session_window when a session can no longer grow.
+    Complete mode because a cold replay is one batch (sessions would
+    otherwise wait for a later batch's watermark advance to finalize)."""
+    from ..plans.windows_batch import session_agg
+
+    return _drain(session_agg(_watermarked_events(spark, sf_dir)), "complete")
 
 
 def run_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -114,30 +98,3 @@ def run_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = ev.dropDuplicatesWithinWatermark(["user_id", "event_type"])
     out = deduped.select("user_id", "event_type", "event_id")
     return _drain(out, "append")
-
-
-def session_agg_stream(events: DataFrame, gap: str = "30 minutes",
-                       watermark: str = "2 hours") -> DataFrame:
-    """Watermarked streaming session windows — the streaming twin of
-    operators/sessionize.session_window_agg. session_window under
-    Structured Streaming needs the watermark to know when a session can
-    no longer grow (no new event within gap after watermark) and be
-    finalized + evicted from state."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window(F.col("ts"), gap).alias("sw"), F.col("user_id"))
-        .agg(F.count(F.lit(1)).alias("n_events"), dsum("value").alias("sum_value"))
-        .select(
-            "user_id",
-            F.unix_micros(F.col("sw.start")).alias("session_start_us"),
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-def run_session_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Execute streaming sessionization over the events parquet; complete
-    mode because a cold replay is one batch (sessions would otherwise wait
-    for a later batch's watermark advance to finalize)."""
-    return _drain(session_agg_stream(_stream_events(spark, sf_dir)), "complete")

@@ -158,6 +158,64 @@ def test_replay_failure_stops_query_and_removes_scratch(spark, tmp_path, monkeyp
     assert list(scratch.iterdir()) == []
 
 
+def test_replay_success_removes_scratch_and_result_stays_readable(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A successful replay (streaming_cusum_state, whose per-event
+    read-off is corpus-sized) deletes its scratch directory, and the
+    returned frame reads no scratch file: it is still readable after
+    the call returns."""
+    import tempfile
+
+    from pipeline_apache_beam_entrega1_cs_spark.plans.analytics import (
+        timeseries_cusum_drift,
+    )
+    from pipeline_apache_beam_entrega1_cs_spark.plans.windows_batch import (
+        streaming_cusum_state,
+    )
+
+    scratch = tmp_path / "scratch"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    out = streaming_cusum_state(spark, sf_dir)
+    assert list(scratch.iterdir()) == []
+    assert out.inputFiles() == []
+    assert out.count() == timeseries_cusum_drift(spark, sf_dir).count()
+
+
+def test_stage_writes_every_slice_in_one_job(spark, tmp_path):
+    """streaming/sinks._stage writes all replay slices in ONE Spark job,
+    one file per slice, with mtimes in slice order; an empty slice has
+    no file, and an empty frame stages one empty file (one batch)."""
+    import os
+    import uuid
+
+    from pipeline_apache_beam_entrega1_cs_spark.streaming.sinks import _stage
+
+    raw = spark.range(40).withColumnRenamed("id", "k")
+    bucket = F.when(F.col("k") % 4 == 2, 3).otherwise(F.col("k") % 4)
+    sc = spark.sparkContext
+    group = f"stage_{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "replay staging")
+    try:
+        src = _stage(raw, str(tmp_path / "work"), bucket, 4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    files = sorted(os.listdir(src), key=lambda f: os.path.getmtime(f"{src}/{f}"))
+    assert files == ["00.parquet", "01.parquet", "03.parquet"]
+    seen = []
+    for f in files:
+        ks = [r.k for r in spark.read.parquet(f"{src}/{f}").collect()]
+        assert {3 if k % 4 == 2 else k % 4 for k in ks} == {int(f[:2])}
+        seen += ks
+    assert sorted(seen) == list(range(40))
+
+    empty = _stage(raw.limit(0), str(tmp_path / "empty"), bucket, 4)
+    assert os.listdir(empty) == ["00.parquet"]
+    assert spark.read.parquet(f"{empty}/00.parquet").count() == 0
+
+
 def _canon_rows(df):
     return Counter(
         json.dumps(r.asDict(recursive=True), sort_keys=True, ensure_ascii=False)
