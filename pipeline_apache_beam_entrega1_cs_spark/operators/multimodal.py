@@ -162,6 +162,31 @@ def with_magic_payload(docs: DataFrame) -> DataFrame:
     )
 
 
+def _le_uint(p, pos: int, nbytes: int):
+    """Little-endian unsigned integer (BIGINT) of the ``nbytes`` bytes
+    of binary column ``p`` from 1-based position ``pos``."""
+    v = F.lit(0).cast("long")
+    for i in range(nbytes):
+        v = v + F.conv(F.hex(F.substring(p, pos + i, 1)), 16, 10).cast(
+            "long"
+        ) * F.lit(256**i)
+    return v
+
+
+def _be_uint(p, off, nbytes: int):
+    """Big-endian unsigned integer (BIGINT) of the ``nbytes`` bytes of
+    binary column ``p`` from 0-based Column offset ``off``."""
+    return F.conv(
+        F.hex(F.substring(p, (off + 1).cast("int"), nbytes)), 16, 10
+    ).cast("long")
+
+
+def _be_hex(v, nbytes: int):
+    """Big-endian hex of integer column ``v``, zero-padded to
+    ``nbytes`` bytes — the writer's side of _be_uint."""
+    return F.lpad(F.hex(v.cast("long")), 2 * nbytes, "0")
+
+
 def with_container_payload(docs: DataFrame) -> DataFrame:
     """Binary payloads with real container structure: doc_id % 4 == 0
     rows get a PNG prefix that is structurally valid through its first
@@ -172,17 +197,14 @@ def with_container_payload(docs: DataFrame) -> DataFrame:
     from MAGIC_HEADERS. Deterministic, so fixed-offset parsing is
     testable against a SQL oracle; the `%` stays sign-preserving and
     the otherwise-branch mirrors the oracle's ELSE (empty header)."""
-    def be32_hex(c):
-        return F.lpad(F.hex(c.cast("bigint")), 8, "0")
-
     width = F.col("doc_id") % 640 + 16
     height = F.col("doc_id") % 480 + 16
     png_hdr = F.concat(
         F.lit("89504E470D0A1A0A"),  # magic
         F.lit("0000000D"),          # IHDR data length = 13
         F.lit("49484452"),          # chunk type 'IHDR'
-        be32_hex(width),
-        be32_hex(height),
+        _be_hex(width, 4),
+        _be_hex(height, 4),
         F.lit("08"),                # bit depth
         F.lit("02"),                # color type: truecolor
     )
@@ -465,19 +487,11 @@ def wav_fmt_meta(docs_with_payload: DataFrame) -> DataFrame:
         F.hex(F.substring(p, 9, 8)) == "57415645666D7420"
     )
 
-    def le_uint(pos: int, nbytes: int):
-        v = F.lit(0).cast("long")
-        for i in range(nbytes):
-            v = v + F.conv(F.hex(F.substring(p, pos + i, 1)), 16, 10).cast(
-                "long"
-            ) * F.lit(256**i)
-        return v
-
-    channels = le_uint(23, 2)
-    rate = le_uint(25, 4)
-    byte_rate = le_uint(29, 4)
-    bits = le_uint(35, 2)
-    data_len = le_uint(41, 4)
+    channels = _le_uint(p, 23, 2)
+    rate = _le_uint(p, 25, 4)
+    byte_rate = _le_uint(p, 29, 4)
+    bits = _le_uint(p, 35, 2)
+    data_len = _le_uint(p, 41, 4)
     ms = data_len * 1000
     duration_ms = (ms - ms % byte_rate) / byte_rate
     return docs_with_payload.select(
@@ -987,18 +1001,12 @@ def with_tiff_payload(docs: DataFrame) -> DataFrame:
         b = F.lpad(F.hex(v.cast("bigint")), 4, "0")
         return F.concat(F.substring(b, 3, 2), F.substring(b, 1, 2))
 
-    def be16(v):
-        return F.lpad(F.hex(v.cast("bigint")), 4, "0")
-
     def le32(v):
         b = F.lpad(F.hex(v.cast("bigint")), 8, "0")
         return F.concat(
             F.substring(b, 7, 2), F.substring(b, 5, 2),
             F.substring(b, 3, 2), F.substring(b, 1, 2),
         )
-
-    def be32(v):
-        return F.lpad(F.hex(v.cast("bigint")), 8, "0")
 
     def entry(tag: int, value, u16, u32):
         # 12-byte IFD entry: tag, type LONG (4), count 1, value
@@ -1016,8 +1024,10 @@ def with_tiff_payload(docs: DataFrame) -> DataFrame:
 
     le_hex = F.concat(F.lit("49492A00"), le32(ifd_off),
                       F.repeat(F.lit("00"), pad), ifd(le16, le32))
-    be_hex = F.concat(F.lit("4D4D002A"), be32(ifd_off),
-                      F.repeat(F.lit("00"), pad), ifd(be16, be32))
+    be_hex = F.concat(
+        F.lit("4D4D002A"), _be_hex(ifd_off, 4), F.repeat(F.lit("00"), pad),
+        ifd(lambda v: _be_hex(v, 2), lambda v: _be_hex(v, 4)),
+    )
     hdr = F.when(d % 2 == 0, F.unhex(le_hex)).otherwise(F.unhex(be_hex))
     return docs.select(
         "doc_id",
@@ -1222,14 +1232,9 @@ def tar_index(tar: DataFrame) -> DataFrame:
     across the cluster instead of the scan's partitioning."""
     p = F.col("payload")
 
-    def byte_at(off):  # 0-based offset Column/int -> unsigned byte value
-        return F.conv(
-            F.hex(F.substring(p, (off + 1).cast("int"), 1)), 16, 10
-        ).cast("long")
-
     def oct_field(off, digits):  # parse fixed-width octal at 0-based off
         # ONE conv() over the ASCII digits (ustar octal fields are
-        # ASCII '0'-'7'), NOT a per-digit byte_at fold: the fold
+        # ASCII '0'-'7'), NOT a per-digit _be_uint fold: the fold
         # referenced `off` once per digit, and since each walked offset
         # embeds the previous member's parsed size, the pass-1
         # expression tree grew ~11× per member (~4 MB task binary,
@@ -1304,7 +1309,7 @@ def tar_index(tar: DataFrame) -> DataFrame:
             lambda acc, i: acc
             + F.when(
                 (i >= 148) & (i <= 155), F.lit(32).cast("long")
-            ).otherwise(byte_at(off + i)),
+            ).otherwise(_be_uint(p, off + i, 1)),
         )
         magic_ok = (
             F.substring(p, (off + 258).cast("int"), 5).cast("string")
@@ -1354,20 +1359,17 @@ def with_jpeg_payload(docs: DataFrame) -> DataFrame:
     h = (d % 480 + 8).cast("long")
     w = (d % 640 + 8).cast("long")
 
-    def be16_hex(v):
-        return F.lpad(F.hex(v.cast("long")), 4, "0")
-
     jpeg_hex = F.concat(
         F.lit("FFD8"),                                   # SOI
         F.lit("FFE0" + "0010" + "4A46494600"             # APP0/JFIF
               + "0101" + "00" + "0048" + "0048" + "0000"),
-        F.lit("FFFE"), be16_hex(com1_payload + 2),       # COM #1
+        F.lit("FFFE"), _be_hex(com1_payload + 2, 2),     # COM #1
         F.repeat(F.lit("58"), com1_payload),
         F.when(d % 3 == 0,                               # COM #2 (some docs)
                F.concat(F.lit("FFFE0005"), F.repeat(F.lit("59"), 3))
                ).otherwise(F.lit("")),
         F.when(d % 2 == 0, F.lit("FFC0")).otherwise(F.lit("FFC2")),
-        F.lit("0011" + "08"), be16_hex(h), be16_hex(w),  # len prec H W
+        F.lit("0011" + "08"), _be_hex(h, 2), _be_hex(w, 2),  # len, prec, H, W
         F.lit("03" + "011100" + "021101" + "031101"),    # 3 components
     )
     payload = F.when(
@@ -1397,14 +1399,11 @@ def jpeg_sof_meta(jpeg: DataFrame) -> DataFrame:
     pj = F.when(is_jpeg, p)
 
     def u8(off):  # 0-based byte offset -> unsigned byte value
-        return F.conv(
-            F.hex(F.substring(pj, (off + 1).cast("int"), 1)), 16, 10
-        ).cast("long")
+        return _be_uint(pj, off, 1)
 
     def u16(off):
-        return F.conv(
-            F.hex(F.substring(pj, (off + 1).cast("int"), 2)), 16, 10
-        ).cast("long")
+        return _be_uint(pj, off, 2)
+
     # The walk is a FOLD, not an unrolled expression chain: inside
     # F.aggregate the offset accumulator is a bound variable evaluated
     # once per step, whereas unrolled off_k expressions re-inline
@@ -1672,15 +1671,7 @@ def gif_lsd_meta(gif: DataFrame) -> DataFrame:
     sig6 = F.hex(F.substring(p, 1, 6))
     is_gif = sig6.isin("474946383761", "474946383961")
 
-    def le_uint(pos: int, nbytes: int):
-        v = F.lit(0).cast("long")
-        for i in range(nbytes):
-            v = v + F.conv(F.hex(F.substring(p, pos + i, 1)), 16, 10).cast(
-                "long"
-            ) * F.lit(256**i)
-        return v
-
-    packed = le_uint(11, 1)
+    packed = _le_uint(p, 11, 1)
     has_gct = F.shiftright(packed, 7).bitwiseAND(F.lit(1)) == 1
     color_res = F.shiftright(packed, 4).bitwiseAND(F.lit(7))
     gct_size = packed.bitwiseAND(F.lit(7))
@@ -1689,8 +1680,8 @@ def gif_lsd_meta(gif: DataFrame) -> DataFrame:
         is_gif.cast("long").alias("is_gif"),
         F.when(is_gif, F.when(sig6.endswith("3761"), "87a").otherwise("89a"))
         .alias("version"),
-        F.when(is_gif, le_uint(7, 2)).alias("width"),
-        F.when(is_gif, le_uint(9, 2)).alias("height"),
+        F.when(is_gif, _le_uint(p, 7, 2)).alias("width"),
+        F.when(is_gif, _le_uint(p, 9, 2)).alias("height"),
         F.when(is_gif, has_gct).alias("has_gct"),
         F.when(is_gif, color_res.cast("long")).alias("color_resolution"),
         F.when(
@@ -1702,7 +1693,7 @@ def gif_lsd_meta(gif: DataFrame) -> DataFrame:
                 F.pow(F.lit(2.0), (gct_size + 1).cast("double")),
             ).otherwise(F.lit(0)).cast("long"),
         ).alias("gct_entries"),
-        F.when(is_gif, le_uint(12, 1)).alias("bg_index"),
+        F.when(is_gif, _le_uint(p, 12, 1)).alias("bg_index"),
     )
 
 
@@ -1757,40 +1748,24 @@ def bmp_header_meta(bmp: DataFrame) -> DataFrame:
     variant the fixture writes."""
     p = F.col("payload")
 
-    def _le_uint_of(col, pos: int, nbytes: int):
-        v = F.lit(0).cast("long")
-        for i in range(nbytes):
-            v = v + F.conv(
-                F.hex(F.substring(col, pos + i, 1)), 16, 10
-            ).cast("long") * F.lit(256**i)
-        return v
-
     is_bmp = (
         (F.hex(F.substring(p, 1, 2)) == "424D")
         & (F.octet_length(p) >= 54)
-        & (_le_uint_of(p, 15, 4) == 40)
+        & (_le_uint(p, 15, 4) == 40)
     )
 
-    def le_uint(pos: int, nbytes: int):
-        v = F.lit(0).cast("long")
-        for i in range(nbytes):
-            v = v + F.conv(F.hex(F.substring(p, pos + i, 1)), 16, 10).cast(
-                "long"
-            ) * F.lit(256**i)
-        return v
-
-    hraw = le_uint(23, 4)
+    hraw = _le_uint(p, 23, 4)
     hsigned = F.when(hraw >= 2**31, hraw - F.lit(2**32).cast("long")).otherwise(hraw)
     return bmp.select(
         "doc_id",
         is_bmp.cast("long").alias("is_bmp"),
-        F.when(is_bmp, le_uint(3, 4)).alias("file_size"),
-        F.when(is_bmp, le_uint(11, 4)).alias("data_offset"),
-        F.when(is_bmp, le_uint(19, 4)).alias("width"),
+        F.when(is_bmp, _le_uint(p, 3, 4)).alias("file_size"),
+        F.when(is_bmp, _le_uint(p, 11, 4)).alias("data_offset"),
+        F.when(is_bmp, _le_uint(p, 19, 4)).alias("width"),
         F.when(is_bmp, F.abs(hsigned)).alias("height"),
         F.when(is_bmp, (hsigned < 0)).alias("top_down"),
-        F.when(is_bmp, le_uint(29, 2)).alias("bits_per_pixel"),
-        F.when(is_bmp, le_uint(31, 4) == 0).alias("uncompressed"),
+        F.when(is_bmp, _le_uint(p, 29, 2)).alias("bits_per_pixel"),
+        F.when(is_bmp, _le_uint(p, 31, 4) == 0).alias("uncompressed"),
     )
 
 
@@ -1854,19 +1829,11 @@ def webp_meta(webp: DataFrame) -> DataFrame:
     )
     fourcc = F.substring(p, 13, 4).cast("string")
 
-    def le_uint(pos: int, nbytes: int):
-        v = F.lit(0).cast("long")
-        for i in range(nbytes):
-            v = v + F.conv(F.hex(F.substring(p, pos + i, 1)), 16, 10).cast(
-                "long"
-            ) * F.lit(256**i)
-        return v
-
     lossy_ok = F.hex(F.substring(p, 24, 3)) == "9D012A"
-    lossy_w = le_uint(27, 2).bitwiseAND(F.lit(16383))
-    lossy_h = le_uint(29, 2).bitwiseAND(F.lit(16383))
+    lossy_w = _le_uint(p, 27, 2).bitwiseAND(F.lit(16383))
+    lossy_h = _le_uint(p, 29, 2).bitwiseAND(F.lit(16383))
     vp8l_ok = F.hex(F.substring(p, 21, 1)) == "2F"
-    packed = le_uint(22, 4)
+    packed = _le_uint(p, 22, 4)
     vp8l_w = packed.bitwiseAND(F.lit(16383)) + 1
     vp8l_h = F.shiftright(packed, 14).bitwiseAND(F.lit(16383)) + 1
     vp8l_alpha = F.shiftright(packed, 28).bitwiseAND(F.lit(1)) == 1
@@ -1909,19 +1876,16 @@ def with_mp4_payload(docs: DataFrame) -> DataFrame:
     d = F.col("doc_id")
     text_len = F.octet_length(F.encode(F.col("text"), "UTF-8"))
 
-    def be_hex(v, nbytes: int):
-        return F.lpad(F.hex(v.cast("long")), 2 * nbytes, "0")
-
     free_len = d % 32 + 8
     boxes = F.concat(
-        be_hex(F.lit(20), 4), F.lit("66747970"),       # ftyp
-        F.lit("69736F6D"), be_hex(F.lit(512), 4),      # brand, minor
+        _be_hex(F.lit(20), 4), F.lit("66747970"),       # ftyp
+        F.lit("69736F6D"), _be_hex(F.lit(512), 4),      # brand, minor
         F.lit("69736F32"),                             # compatible brand
-        be_hex(free_len, 4), F.lit("66726565"),        # free
+        _be_hex(free_len, 4), F.lit("66726565"),        # free
         F.repeat(F.lit("00"), (free_len - 8).cast("int")),
-        be_hex(text_len + 8, 4), F.lit("6D646174"),    # mdat
+        _be_hex(text_len + 8, 4), F.lit("6D646174"),    # mdat
     )
-    tail = F.unhex(F.concat(be_hex(F.lit(8), 4), F.lit("6D6F6F76")))  # moov
+    tail = F.unhex(F.concat(_be_hex(F.lit(8), 4), F.lit("6D6F6F76")))  # moov
     payload = F.when(d % 5 == 4, F.encode(F.col("text"), "UTF-8")).otherwise(
         F.concat(F.unhex(boxes), F.encode(F.col("text"), "UTF-8"), tail)
     )
@@ -1947,11 +1911,6 @@ def mp4_box_index(mp4: DataFrame) -> DataFrame:
     plen = F.octet_length(p)
     is_mp4 = F.hex(F.substring(p, 5, 4)) == "66747970"
 
-    def u32(off):  # off: 0-based Column; reads BE u32
-        return F.conv(
-            F.hex(F.substring(p, (off + 1).cast("int"), 4)), 16, 10
-        ).cast("long")
-
     boxes = F.aggregate(
         F.sequence(F.lit(1), F.lit(_MP4_WALK_STEPS)),
         F.struct(
@@ -1961,14 +1920,14 @@ def mp4_box_index(mp4: DataFrame) -> DataFrame:
             ).alias("acc"),
         ),
         lambda acc, i: F.struct(
-            (acc["off"] + u32(acc["off"])).alias("off"),
+            (acc["off"] + _be_uint(p, acc["off"], 4)).alias("off"),
             F.concat(
                 acc["acc"],
                 F.array(
                     F.struct(
                         (i - 1).cast("long").alias("idx"),
                         acc["off"].alias("off"),
-                        u32(acc["off"]).alias("size"),
+                        _be_uint(p, acc["off"], 4).alias("size"),
                         F.substring(
                             p, (acc["off"] + 5).cast("int"), 4
                         ).cast("string").alias("type"),
@@ -2030,20 +1989,17 @@ def with_png_chunks_payload(docs: DataFrame) -> DataFrame:
     are bare text (rejection path)."""
     d = F.col("doc_id")
 
-    def be32(v):
-        return F.lpad(F.hex(v.cast("bigint")), 8, "0")
-
     def chunk(type_hex: str, data_hex, corrupt=None):
         body = F.concat(F.lit(type_hex), data_hex)
         crc = F.crc32(F.unhex(body))
         if corrupt is not None:
             crc = F.when(corrupt, crc.bitwiseXOR(F.lit(255))).otherwise(crc)
         return F.concat(
-            be32(F.octet_length(F.unhex(data_hex))), body, be32(crc)
+            _be_hex(F.octet_length(F.unhex(data_hex)), 4), body, _be_hex(crc, 4)
         )
 
     ihdr_data = F.concat(
-        be32(d % 480 + 8), be32(d % 640 + 8),
+        _be_hex(d % 480 + 8, 4), _be_hex(d % 640 + 8, 4),
         F.lit("08") , F.lit("02"),          # bit depth 8, color type RGB
         F.lit("000000"),                    # compression/filter/interlace
     )
@@ -2082,11 +2038,6 @@ def png_chunk_index(png: DataFrame) -> DataFrame:
     plen = F.octet_length(p)
     is_png = F.hex(F.substring(p, 1, 8)) == "89504E470D0A1A0A"
 
-    def u32(off):  # off: 0-based Column -> BE u32 at that offset
-        return F.conv(
-            F.hex(F.substring(p, (off + 1).cast("int"), 4)), 16, 10
-        ).cast("long")
-
     chunks = F.aggregate(
         F.sequence(F.lit(1), F.lit(_PNG_WALK_STEPS)),
         F.struct(
@@ -2096,14 +2047,14 @@ def png_chunk_index(png: DataFrame) -> DataFrame:
             ).alias("acc"),
         ),
         lambda acc, i: F.struct(
-            (acc["off"] + 12 + u32(acc["off"])).alias("off"),
+            (acc["off"] + 12 + _be_uint(p, acc["off"], 4)).alias("off"),
             F.concat(
                 acc["acc"],
                 F.array(
                     F.struct(
                         (i - 1).cast("long").alias("idx"),
                         acc["off"].alias("off"),
-                        u32(acc["off"]).alias("dlen"),
+                        _be_uint(p, acc["off"], 4).alias("dlen"),
                         F.substring(
                             p, (acc["off"] + 5).cast("int"), 4
                         ).cast("string").alias("type"),

@@ -1438,9 +1438,10 @@ FROM assigned GROUP BY bucket
 def _copurchase_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ONE sampled co-purchase basket frame (1-in-20 orders,
     distinct (order, part)) shared by graph_triangle_count,
-    graph_clustering_coefficient, graph_degree_assortativity, and
-    analytics_apriori_pairs — entries that all claim to analyze the
-    same graph, so they must derive it from the same definition."""
+    graph_clustering_coefficient, graph_degree_assortativity,
+    graph_link_prediction, and analytics_apriori_pairs — entries that
+    all claim to analyze the same graph, so they must derive it from
+    the same definition."""
     return (
         _t(spark, sf_dir, "lineitem")
         .filter(F.col("l_orderkey") % 20 == 0)
@@ -1461,6 +1462,22 @@ def _copurchase_edges(li: DataFrame) -> DataFrame:
                 F.col("b.l_partkey").alias("v"))
         .distinct()
     )
+
+
+# The oracle CTEs of _copurchase_edges(_copurchase_baskets(...)) and of
+# the BIGINT _copurchase_degrees: ``li``, ``edges`` and ``deg``.
+_COPURCHASE_EDGES_SQL = """li AS (
+  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem WHERE l_orderkey % 20 = 0
+),
+edges AS (
+  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
+  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+)"""
+_COPURCHASE_DEG_SQL = """deg AS (
+  SELECT node, CAST(COUNT(*) AS BIGINT) AS deg FROM (
+    SELECT u AS node FROM edges UNION ALL SELECT v FROM edges
+  ) GROUP BY node
+)"""
 
 
 def _copurchase_degrees(edges: DataFrame) -> DataFrame:
@@ -1547,14 +1564,8 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TRIANGLE_SQL = """
-WITH li AS (
-  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem WHERE l_orderkey % 20 = 0
-),
-edges AS (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-),
+TRIANGLE_SQL = f"""
+WITH {_COPURCHASE_EDGES_SQL},
 deg AS (
   SELECT node, COUNT(*) AS deg FROM (
     SELECT u AS node FROM edges UNION ALL SELECT v FROM edges
@@ -1605,19 +1616,7 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     removed with an anti-join. jaccard = one IEEE double division of two
     exact BIGINTs — deterministic in any engine; top-k is totally
     ordered (jaccard desc, u, w)."""
-    li = (
-        _t(spark, sf_dir, "lineitem")
-        .filter(F.col("l_orderkey") % 20 == 0)
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a, b = li.alias("a"), li.alias("b")
-    edges = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .distinct()
-    )
+    edges = _copurchase_edges(_copurchase_baskets(spark, sf_dir))
     adj = edges.select(F.col("u").alias("node"), F.col("v").alias("nbr")).unionAll(
         edges.select(F.col("v").alias("node"), F.col("u").alias("nbr"))
     )
@@ -1661,12 +1660,7 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 LINKPRED_SQL = f"""
-WITH li AS (
-  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem WHERE l_orderkey % 20 = 0
-), edges AS (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-), adj AS (
+WITH {_COPURCHASE_EDGES_SQL}, adj AS (
   SELECT u AS node, v AS nbr FROM edges
   UNION ALL
   SELECT v AS node, u AS nbr FROM edges
@@ -1698,6 +1692,53 @@ LIMIT {_LINKPRED_K}
 """
 
 
+def _trade_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The lineitem ⋈ orders rows of a deterministic 1-in-20 order
+    sample that the customer<->supplier trade graph is built from —
+    shared by the unweighted graph (_trade_edges) and
+    graph_sssp_weighted's weighted one."""
+    li = (
+        _t(spark, sf_dir, "lineitem")
+        .filter(F.col("l_orderkey") % 20 == 0)
+        .select("l_orderkey", "l_suppkey")
+    )
+    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    return li.join(orders, li.l_orderkey == orders.o_orderkey)
+
+
+def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The symmetric customer<->supplier trade graph: both directions of
+    every distinct (customer, supplier) trade pair, supplier ids offset
+    by 1e6 to keep the id spaces disjoint. graph_pagerank,
+    graph_modularity_eval, graph_kcore_prune, graph_label_propagation
+    and graph_bfs_levels all analyze this one definition."""
+    pairs = (
+        _trade_lines(spark, sf_dir)
+        .select(
+            F.col("o_custkey").alias("c"),
+            (F.col("l_suppkey") + 1000000).alias("s"),
+        )
+        .distinct()
+    )
+    return pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionAll(
+        pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
+    )
+
+
+def _trade_edges_sql(edges: str = "edges") -> str:
+    """The oracle CTEs of _trade_edges: ``pairs`` and the symmetric
+    edge list, named ``edges``."""
+    return f"""pairs AS (
+  SELECT DISTINCT o_custkey AS c, l_suppkey + 1000000 AS s
+  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+  WHERE l_orderkey % 20 = 0
+), {edges} AS (
+  SELECT c AS src, s AS dst FROM pairs
+  UNION ALL
+  SELECT s AS src, c AS dst FROM pairs
+)"""
+
+
 def graph_pagerank(spark: SparkSession, sf_dir: str, iters: int = 3,
                    d: float = 0.85) -> DataFrame:
     """PageRank with a FIXED iteration count as one straight-line
@@ -1705,10 +1746,9 @@ def graph_pagerank(spark: SparkSession, sf_dir: str, iters: int = 3,
     kmeans_lloyd and the recursive-CTE components (an unknown count
     would loop the body driver-side like connected_components).
 
-    Graph: the customer<->supplier trade graph from a deterministic
-    1-in-20 order sample, run as a symmetric digraph (both directions
-    of every trade edge) so no node dangles. Supplier node ids are
-    offset by 1e6 to keep the id spaces disjoint.
+    Graph: _trade_edges, the customer<->supplier trade graph from a
+    deterministic 1-in-20 order sample, run as a symmetric digraph
+    (both directions of every trade edge) so no node dangles.
 
     Determinism (the conventions that make an iterative double
     computation hash-comparable cross-engine, plans/spec.py): each
@@ -1723,23 +1763,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str, iters: int = 3,
     linear in |E|; the 1-row node-count scalar is a broadcast attach
     (waivered BNLJ). Nothing materializes between iterations: the whole
     3-iteration computation is a single plan Catalyst pipelines."""
-    li = (
-        _t(spark, sf_dir, "lineitem")
-        .filter(F.col("l_orderkey") % 20 == 0)
-        .select("l_orderkey", "l_suppkey")
-    )
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    pairs = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("c"),
-            (F.col("l_suppkey") + 1000000).alias("s"),
-        )
-        .distinct()
-    )
-    edges = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionAll(
-        pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-    )
+    edges = _trade_edges(spark, sf_dir)
     outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("odeg"))
     edges_deg = edges.join(outdeg, "src")
     nodes = edges.select(F.col("src").alias("node")).distinct()
@@ -1800,23 +1824,7 @@ def graph_modularity_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # endpoint joins and the per-community node count — an inline LPA
     # subtree would execute its unrolled iterations three times
     labels = graph_label_propagation(spark, sf_dir).localCheckpoint()
-    li = (
-        _t(spark, sf_dir, "lineitem")
-        .filter(F.col("l_orderkey") % 20 == 0)
-        .select("l_orderkey", "l_suppkey")
-    )
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    pairs = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("c"),
-            (F.col("l_suppkey") + 1000000).alias("s"),
-        )
-        .distinct()
-    )
-    edges = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionAll(
-        pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-    )
+    edges = _trade_edges(spark, sf_dir)
     lab_src = labels.select(F.col("node").alias("src"), F.col("label").alias("lsrc"))
     lab_dst = labels.select(F.col("node").alias("dst"), F.col("label").alias("ldst"))
     tagged = edges.join(lab_src, "src").join(lab_dst, "dst").localCheckpoint()
@@ -1877,15 +1885,7 @@ def _modularity_sql() -> str:
     lpa = _lpa_sql()
     return f"""
 WITH labels AS ( {lpa} ),
-pairs AS (
-  SELECT DISTINCT o_custkey AS c, l_suppkey + 1000000 AS s
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-  WHERE l_orderkey % 20 = 0
-), edges AS (
-  SELECT c AS src, s AS dst FROM pairs
-  UNION ALL
-  SELECT s AS src, c AS dst FROM pairs
-), tagged AS (
+{_trade_edges_sql()}, tagged AS (
   SELECT e.src, e.dst, a.label AS lsrc, b.label AS ldst
   FROM edges e JOIN labels a ON e.src = a.node
                JOIN labels b ON e.dst = b.node
@@ -1934,7 +1934,7 @@ def graph_kcore_prune(spark: SparkSession, sf_dir: str,
     k-core is always contained in the survivor set, and the set only
     shrinks — a fixpoint test asserts containment and monotonicity).
 
-    Same symmetric customer<->supplier trade graph as graph_pagerank.
+    Same symmetric trade graph (_trade_edges) as graph_pagerank.
     Scale shape per round: one degree hash-agg (mergeable) + two
     semi-joins of the edge list against the survivor set, all keyed on
     node ids — linear in |E|. UNLIKE pagerank/LPA (one self-reference
@@ -1947,23 +1947,7 @@ def graph_kcore_prune(spark: SparkSession, sf_dir: str,
     idiom): each round scans one materialized O(|E_t|) relation — the
     GraphX-style iteration shape that survives 100 TB. Output: the
     surviving nodes with their post-prune degree."""
-    li = (
-        _t(spark, sf_dir, "lineitem")
-        .filter(F.col("l_orderkey") % 20 == 0)
-        .select("l_orderkey", "l_suppkey")
-    )
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    pairs = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("c"),
-            (F.col("l_suppkey") + 1000000).alias("s"),
-        )
-        .distinct()
-    )
-    edges = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionAll(
-        pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-    )
+    edges = _trade_edges(spark, sf_dir)
     for _ in range(rounds):
         edges = edges.localCheckpoint()
         deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
@@ -1979,16 +1963,8 @@ def graph_kcore_prune(spark: SparkSession, sf_dir: str,
 def _kcore_sql(k: int = _KCORE_K, rounds: int = _KCORE_ROUNDS) -> str:
     """Unrolled k-core-pruning oracle: one (d_t, k_t, e_t) CTE triple
     per round mirroring the Spark loop exactly."""
-    sql = """
-WITH pairs AS (
-  SELECT DISTINCT o_custkey AS c, l_suppkey + 1000000 AS s
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-  WHERE l_orderkey % 20 = 0
-), e0 AS (
-  SELECT c AS src, s AS dst FROM pairs
-  UNION ALL
-  SELECT s AS src, c AS dst FROM pairs
-)"""
+    sql = f"""
+WITH {_trade_edges_sql("e0")}"""
     prev = "e0"
     for t in range(1, rounds + 1):
         sql += f""", d{t} AS (
@@ -2012,7 +1988,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str,
     detection) with a FIXED iteration count as one straight-line
     Catalyst plan — the fourth unrolled-iteration demonstration beside
     kmeans_lloyd, pagerank, and the recursive-CTE components. Same
-    symmetric customer↔supplier trade graph as graph_pagerank.
+    symmetric trade graph (_trade_edges) as graph_pagerank.
 
     init label = own node id; each synchronous step every node adopts
     the MOST FREQUENT label among its neighbors, ties broken by MIN
@@ -2023,24 +1999,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str,
     Scale shape per iteration: one labels⋈edges hash join shuffling on
     node ids + two keyed aggregates ((node, label) count, per-node
     struct-min argmax) — linear in |E|, no scalar attach, no BNLJ."""
-    li = (
-        _t(spark, sf_dir, "lineitem")
-        .filter(F.col("l_orderkey") % 20 == 0)
-        .select("l_orderkey", "l_suppkey")
-    )
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    pairs = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("c"),
-            (F.col("l_suppkey") + 1000000).alias("s"),
-        )
-        .distinct()
-    )
-    edges = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionAll(
-        pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-    )
-    return lpa_loop(edges, iters)
+    return lpa_loop(_trade_edges(spark, sf_dir), iters)
 
 
 def lpa_loop(edges: DataFrame, iters: int) -> DataFrame:
@@ -2082,16 +2041,8 @@ def _lpa_sql(iters: int = 2) -> str:
     argmax) CTE pair per synchronous step, argmax via row_number over
     (count DESC, label ASC) — the exact mirror of the Spark loop's
     min(struct(-c, label))."""
-    sql = """
-WITH pairs AS (
-  SELECT DISTINCT o_custkey AS c, l_suppkey + 1000000 AS s
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-  WHERE l_orderkey % 20 = 0
-), edges AS (
-  SELECT c AS src, s AS dst FROM pairs
-  UNION ALL
-  SELECT s AS src, c AS dst FROM pairs
-), nodes AS (
+    sql = f"""
+WITH {_trade_edges_sql()}, nodes AS (
   SELECT DISTINCT src AS node FROM edges
 ), l0 AS (
   SELECT node, node AS label FROM nodes
@@ -2114,16 +2065,8 @@ WITH pairs AS (
 def _pagerank_sql(iters: int = 3, d: float = 0.85) -> str:
     """Unrolled-PageRank oracle: one pr_t CTE per iteration mirroring
     the Spark loop's rounding/decimal conventions exactly."""
-    sql = """
-WITH pairs AS (
-  SELECT DISTINCT o_custkey AS c, l_suppkey + 1000000 AS s
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-  WHERE l_orderkey % 20 = 0
-), edges AS (
-  SELECT c AS src, s AS dst FROM pairs
-  UNION ALL
-  SELECT s AS src, c AS dst FROM pairs
-), outdeg AS (
+    sql = f"""
+WITH {_trade_edges_sql()}, outdeg AS (
   SELECT src, COUNT(*) AS odeg FROM edges GROUP BY src
 ), nodes AS (
   SELECT DISTINCT src AS node FROM edges
@@ -2969,7 +2912,7 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str,
     FIXED-hop straight-line plan — the graph-traversal primitive the
     reference has no analogue of (its one dataflow is join-only,
     /root/reference/src/pipeline.py:262-296). Same symmetric
-    customer<->supplier trade graph as graph_pagerank; seeds are the
+    trade graph (_trade_edges) as graph_pagerank; seeds are the
     customer-side nodes whose key is divisible by 50.
 
     This is a DELTA iteration, not a naive unroll: each hop's frontier
@@ -2989,23 +2932,7 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str,
     Scale shape per hop: one frontier⋈edges hash join shuffling node
     ids + one distinct + one anti-join — linear in the frontier's edge
     neighborhood, never in paths."""
-    li = (
-        _t(spark, sf_dir, "lineitem")
-        .filter(F.col("l_orderkey") % 20 == 0)
-        .select("l_orderkey", "l_suppkey")
-    )
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    pairs = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("c"),
-            (F.col("l_suppkey") + 1000000).alias("s"),
-        )
-        .distinct()
-    )
-    edges = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionAll(
-        pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-    )
+    edges = _trade_edges(spark, sf_dir)
     # Pin the trade graph BEFORE deriving seeds, so both the seed frame
     # and every hop read the materialized edges (bfs_levels_loop's
     # caller contract): 6.7 s -> 2.2 s warm at sf0.1, 3.1x (round-14
@@ -3076,15 +3003,7 @@ def _bfs_sql(hops: int = _BFS_HOPS) -> str:
     min-hop function (the Spark side never aggregates; the oracle
     proves its per-hop anti-join construction equals min-over-walks)."""
     return f"""
-WITH RECURSIVE pairs AS (
-  SELECT DISTINCT o_custkey AS c, l_suppkey + 1000000 AS s
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-  WHERE l_orderkey % 20 = 0
-), edges AS (
-  SELECT c AS src, s AS dst FROM pairs
-  UNION ALL
-  SELECT s AS src, c AS dst FROM pairs
-), seeds AS (
+WITH RECURSIVE {_trade_edges_sql()}, seeds AS (
   SELECT DISTINCT src AS node FROM edges
   WHERE src < 1000000 AND src % 50 = 0
 ), walk(node, level) AS (
@@ -3122,14 +3041,8 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str,
     edges (the standard Bellman-Ford invariant) — a well-defined
     deterministic output whether or not the graph needs more rounds to
     converge. Same seed rule as BFS (customer nodes % 50)."""
-    li = (
-        _t(spark, sf_dir, "lineitem")
-        .filter(F.col("l_orderkey") % 20 == 0)
-        .select("l_orderkey", "l_suppkey")
-    )
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     pairs = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
+        _trade_lines(spark, sf_dir)
         .select(
             F.col("o_custkey").alias("c"),
             (F.col("l_suppkey") + 1000000).alias("s"),
@@ -6448,19 +6361,9 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-GRAPH_ASSORTATIVITY_SQL = """
-WITH li AS (
-  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem WHERE l_orderkey % 20 = 0
-),
-edges AS (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-),
-deg AS (
-  SELECT node, CAST(COUNT(*) AS BIGINT) AS deg FROM (
-    SELECT u AS node FROM edges UNION ALL SELECT v FROM edges
-  ) GROUP BY node
-),
+GRAPH_ASSORTATIVITY_SQL = f"""
+WITH {_COPURCHASE_EDGES_SQL},
+{_COPURCHASE_DEG_SQL},
 withd AS (
   SELECT du.deg AS dx, dv.deg AS dy
   FROM edges JOIN deg du ON edges.u = du.node JOIN deg dv ON edges.v = dv.node
@@ -6807,18 +6710,8 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 GRAPH_CLUSTCOEF_SQL = f"""
-WITH li AS (
-  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem WHERE l_orderkey % 20 = 0
-),
-edges AS (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-),
-deg AS (
-  SELECT node, CAST(COUNT(*) AS BIGINT) AS deg FROM (
-    SELECT u AS node FROM edges UNION ALL SELECT v FROM edges
-  ) GROUP BY node
-),
+WITH {_COPURCHASE_EDGES_SQL},
+{_COPURCHASE_DEG_SQL},
 oriented AS (
   SELECT CASE WHEN du.deg < dv.deg OR (du.deg = dv.deg AND u < v) THEN u ELSE v END AS src,
          CASE WHEN du.deg < dv.deg OR (du.deg = dv.deg AND u < v) THEN v ELSE u END AS dst

@@ -87,28 +87,41 @@ GROUP BY 1
 """
 
 
-def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return D.ngram_jaccard_pairs(_docs(spark, sf_dir), n=3, threshold=0.5, max_df=100)
-
-
-DEDUP_NGRAM_JACCARD_SQL = rf"""
-WITH toks AS (
+# The oracles' word-3-gram shingle CTEs: ``toks`` (whitespace tokens of
+# each non-blank document) and ``sh`` (its distinct shingles).
+_SHINGLES_SQL = rf"""toks AS (
   SELECT doc_id, {_TOKS} AS tk FROM documents WHERE trim(text) <> ''
 ), sh AS (
   SELECT DISTINCT doc_id, array_to_string(tk[i:i+2], ' ') AS shingle
   FROM toks, UNNEST(generate_series(1, len(tk) - 2)) AS g(i)
-), sizes AS (
+)"""
+
+
+def _shingle_pairs_sql(pairs: str) -> str:
+    """_SHINGLES_SQL plus the capped shingle index of
+    operators/dedup.ngram_jaccard_pairs: ``sizes`` (shingles per doc),
+    ``kept`` (shingles in <= 100 docs), ``shc``, and the CTE named
+    ``pairs`` — per doc pair, the count of shared kept shingles."""
+    return _SHINGLES_SQL + f""", sizes AS (
   SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id
 ), kept AS (
   SELECT shingle FROM sh GROUP BY shingle HAVING COUNT(*) <= 100
 ), shc AS (
   SELECT sh.doc_id, sh.shingle FROM sh JOIN kept USING (shingle)
-), pairs AS (
+), {pairs} AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
   FROM shc a JOIN shc b USING (shingle)
   WHERE a.doc_id < b.doc_id
   GROUP BY 1, 2
-)
+)"""
+
+
+def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return D.ngram_jaccard_pairs(_docs(spark, sf_dir), n=3, threshold=0.5, max_df=100)
+
+
+DEDUP_NGRAM_JACCARD_SQL = f"""
+WITH {_shingle_pairs_sql("pairs")}
 SELECT doc_a, doc_b, n_common,
        round(n_common::DOUBLE / (sa.n_sh + sb.n_sh - n_common), 6) AS jaccard
 FROM pairs
@@ -127,24 +140,8 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.containment_pairs(_docs(spark, sf_dir), n=3, threshold=0.8, max_df=100)
 
 
-DEDUP_CONTAINMENT_SQL = rf"""
-WITH toks AS (
-  SELECT doc_id, {_TOKS} AS tk FROM documents WHERE trim(text) <> ''
-), sh AS (
-  SELECT DISTINCT doc_id, array_to_string(tk[i:i+2], ' ') AS shingle
-  FROM toks, UNNEST(generate_series(1, len(tk) - 2)) AS g(i)
-), sizes AS (
-  SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id
-), kept AS (
-  SELECT shingle FROM sh GROUP BY shingle HAVING COUNT(*) <= 100
-), shc AS (
-  SELECT sh.doc_id, sh.shingle FROM sh JOIN kept USING (shingle)
-), pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-  FROM shc a JOIN shc b USING (shingle)
-  WHERE a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), scored AS (
+DEDUP_CONTAINMENT_SQL = f"""
+WITH {_shingle_pairs_sql("pairs")}, scored AS (
   SELECT doc_a, doc_b, CAST(n_common AS BIGINT) AS n_common,
          round(n_common::DOUBLE / sa.n_sh, 6) AS containment_a_in_b,
          round(n_common::DOUBLE / sb.n_sh, 6) AS containment_b_in_a,
@@ -875,9 +872,10 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MARKER_VALUES = ", ".join(
     f"('{lang}', '{w}')" for lang, ws in LANG_MARKERS.items() for w in ws
 )
-
-TEXT_LANG_ID_SQL = rf"""
-WITH tok AS (
+# The oracle CTEs of operators/text.lang_id: ``tok`` (whitespace tokens),
+# ``votes`` (marker-word hits per doc and language) and ``best`` (rn = 1
+# is the most-voted language, ties to the smaller name).
+_LANG_VOTES_SQL = rf"""tok AS (
   SELECT doc_id, t FROM documents, UNNEST({_TOKS}) AS u(t)
   WHERE trim(text) <> ''
 ), votes AS (
@@ -889,7 +887,10 @@ WITH tok AS (
          row_number() OVER (PARTITION BY doc_id
                             ORDER BY votes DESC, cand_lang ASC) AS rn
   FROM votes
-)
+)"""
+
+TEXT_LANG_ID_SQL = f"""
+WITH {_LANG_VOTES_SQL}
 SELECT d.doc_id,
        COALESCE(b.cand_lang, 'und') AS pred_lang,
        COALESCE(b.votes, 0) AS votes
@@ -934,20 +935,8 @@ def eval_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EVAL_LANGID_SQL = rf"""
-WITH tok AS (
-  SELECT doc_id, t FROM documents, UNNEST({_TOKS}) AS u(t)
-  WHERE trim(text) <> ''
-), votes AS (
-  SELECT doc_id, cand_lang, COUNT(*) AS votes
-  FROM tok JOIN (VALUES {_MARKER_VALUES}) m(cand_lang, marker) ON t = marker
-  GROUP BY 1, 2
-), best AS (
-  SELECT doc_id, cand_lang, votes,
-         row_number() OVER (PARTITION BY doc_id
-                            ORDER BY votes DESC, cand_lang ASC) AS rn
-  FROM votes
-), pred AS (
+EVAL_LANGID_SQL = f"""
+WITH {_LANG_VOTES_SQL}, pred AS (
   SELECT d.doc_id, d.lang AS true_lang,
          COALESCE(b.cand_lang, 'und') AS pred_lang
   FROM documents d LEFT JOIN best b ON d.doc_id = b.doc_id AND b.rn = 1
@@ -1509,13 +1498,8 @@ def dedup_minhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ONE definition consumed by the pair oracle (DEDUP_MINHASH_BANDED_SQL)
 # and the bucket-load audit oracle (DEDUP_LSH_BUCKET_STATS_SQL), exactly
 # as the Spark side shares operators/dedup._banded_keys.
-_MINHASH_BANDKEYS_CTE = rf"""
-WITH toks AS (
-  SELECT doc_id, {_TOKS} AS tk FROM documents WHERE trim(text) <> ''
-), sh AS (
-  SELECT DISTINCT doc_id, array_to_string(tk[i:i+2], ' ') AS shingle
-  FROM toks, UNNEST(generate_series(1, len(tk) - 2)) AS g(i)
-), xs AS (
+_MINHASH_BANDKEYS_CTE = f"""
+WITH {_SHINGLES_SQL}, xs AS (
   SELECT doc_id, ('0x' || substr(md5(shingle), 1, 15))::BIGINT % 2147483647 AS x
   FROM sh
 ), sigs AS (
@@ -1668,25 +1652,9 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Shared recursive-CTE block: Jaccard pair graph -> transitive closure ->
 # per-node component label (compv). Used by DEDUP_COMPONENTS_SQL and
 # DEDUP_KEEP_BEST_SQL.
-_JACCARD_COMPONENTS_CTES = rf"""
+_JACCARD_COMPONENTS_CTES = f"""
 WITH RECURSIVE
-toks AS (
-  SELECT doc_id, {_TOKS} AS tk FROM documents WHERE trim(text) <> ''
-), sh AS (
-  SELECT DISTINCT doc_id, array_to_string(tk[i:i+2], ' ') AS shingle
-  FROM toks, UNNEST(generate_series(1, len(tk) - 2)) AS g(i)
-), sizes AS (
-  SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id
-), kept AS (
-  SELECT shingle FROM sh GROUP BY shingle HAVING COUNT(*) <= 100
-), shc AS (
-  SELECT sh.doc_id, sh.shingle FROM sh JOIN kept USING (shingle)
-), cand AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-  FROM shc a JOIN shc b USING (shingle)
-  WHERE a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), pairs AS (
+{_shingle_pairs_sql("cand")}, pairs AS (
   SELECT doc_a, doc_b
   FROM cand JOIN sizes sa ON doc_a = sa.doc_id JOIN sizes sb ON doc_b = sb.doc_id
   WHERE n_common::DOUBLE / (sa.n_sh + sb.n_sh - n_common) >= 0.5
@@ -1794,13 +1762,8 @@ def text_winnow_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TEXT_WINNOW_SQL = rf"""
-WITH toks AS (
-  SELECT doc_id, {_TOKS} AS tk FROM documents WHERE trim(text) <> ''
-), sh AS (
-  SELECT DISTINCT doc_id, array_to_string(tk[i:i+2], ' ') AS shingle
-  FROM toks, UNNEST(generate_series(1, len(tk) - 2)) AS g(i)
-), hashed AS (
+TEXT_WINNOW_SQL = f"""
+WITH {_SHINGLES_SQL}, hashed AS (
   SELECT doc_id, CAST('0x' || substr(md5(shingle), 1, 8) AS BIGINT) AS h FROM sh
 )
 SELECT doc_id,
@@ -3187,6 +3150,99 @@ _BRIER_BINS = 10
 _BRIER_LO, _BRIER_HI = -2.0, 2.0  # logit->score squash range
 
 
+def _model_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The learned quality model's logit per document next to the
+    heuristic gate's 0/1 label ``y`` (quality score >= 0.7) — the
+    scored frame of the calibration and ranking evaluation entries."""
+    scored = text_quality_model(spark, sf_dir).select("doc_id", "logit")
+    labels = _docs(spark, sf_dir).select(
+        "doc_id",
+        (T.quality_score_col(F.col("text")) >= _CALIB_QTH)
+        .cast("long").alias("y"),
+    )
+    return scored.join(labels, "doc_id")
+
+
+def _calibrated(spark: SparkSession, sf_dir: str, *keep: str):
+    """(rows, bin) for the calibration summaries: ``rows`` holds the
+    ``keep`` columns, the probability p = clip((logit+2)/4) rounded to
+    6 dp and the label y; ``bin`` is p's equal-width _BRIER_BINS bin
+    as a column expression over ``rows``."""
+    p = F.round(
+        F.least(
+            F.greatest(
+                (F.col("logit") - _BRIER_LO) / (_BRIER_HI - _BRIER_LO),
+                F.lit(0.0),
+            ),
+            F.lit(1.0),
+        ),
+        6,
+    )
+    binc = F.least(
+        F.floor(F.col("p") * _BRIER_BINS), F.lit(_BRIER_BINS - 1)
+    ).cast("long")
+    return _model_scored(spark, sf_dir).select(*keep, p.alias("p"), "y"), binc
+
+
+def _score_buckets(per_score: DataFrame) -> DataFrame:
+    """``per_score`` (per distinct logit counts) with each logit's
+    fixed-width bucket among 256 under STATIC min/max bounds (a 1-row
+    broadcast attach) — the two-phase ranking grid of eval_model_auc,
+    eval_average_precision and eval_model_gains_deciles: cumulatives
+    run across the 256-row bucket frame, then within each bucket."""
+    bounds = per_score.agg(
+        F.min("logit").alias("lo"), F.max("logit").alias("hi")
+    )
+    B = 256
+    bucket = F.when(
+        F.col("hi") > F.col("lo"),
+        F.least(
+            F.lit(B - 1),
+            F.floor(
+                (F.col("logit") - F.col("lo"))
+                / (F.col("hi") - F.col("lo"))
+                * B
+            ).cast("int"),
+        ),
+    ).otherwise(F.lit(0))
+    return per_score.crossJoin(F.broadcast(bounds)).select(
+        *per_score.columns, bucket.alias("bucket")
+    )
+
+
+def _score_bounds_sql(counts: str) -> str:
+    """The oracle CTEs of _model_scored and of its per-score counts:
+    ``m`` (the model), ``scored`` (logit + label), ``per_score``
+    (``counts`` per distinct logit) and ``bounds`` (its min/max)."""
+    return f"""
+WITH m AS ( {_qmodel_sql()} ), scored AS (
+  SELECT m.logit, CASE WHEN {_SQL_QSCORE} >= 0.7 THEN 1 ELSE 0 END AS y
+  FROM m JOIN documents d ON m.doc_id = d.doc_id
+), per_score AS (
+  SELECT logit, {counts}
+  FROM scored GROUP BY logit
+), bounds AS (SELECT MIN(logit) AS lo, MAX(logit) AS hi FROM per_score)"""
+
+
+def _score_buckets_sql(counts: str, cols: str) -> str:
+    """_score_bounds_sql plus ``withb``: the ``cols`` of per_score and
+    the logit's bucket among 256 (the oracle of _score_buckets)."""
+    return _score_bounds_sql(counts) + f""",
+withb AS (
+  SELECT logit, {cols},
+         CASE WHEN hi > lo
+              THEN least(255, CAST(floor((logit - lo) / (hi - lo) * 256)
+                                   AS INTEGER))
+              ELSE 0 END AS bucket
+  FROM per_score CROSS JOIN bounds
+)"""
+
+
+# The per_score counts of the AUC, AP and PR-curve oracles.
+_POS_NEG_SQL = """CAST(SUM(y) AS BIGINT) AS n_pos,
+         CAST(SUM(1 - y) AS BIGINT) AS n_neg"""
+
+
 def eval_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Murphy (1973) decomposition of the Brier score for the quality
     model against the heuristic label: BRIER = RELIABILITY −
@@ -3209,27 +3265,7 @@ def eval_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: scoring is the quality-model plan; then ONE
     mergeable (bin) aggregate to 10 rows, a 1-row totals broadcast
     back onto them (QPM recipe), and a 10-row final fold."""
-    scored = text_quality_model(spark, sf_dir).select("doc_id", "logit")
-    labels = _docs(spark, sf_dir).select(
-        "doc_id",
-        (T.quality_score_col(F.col("text")) >= _CALIB_QTH)
-        .cast("long").alias("y"),
-    )
-    j = scored.join(labels, "doc_id")
-    p = F.round(
-        F.least(
-            F.greatest(
-                (F.col("logit") - _BRIER_LO) / (_BRIER_HI - _BRIER_LO),
-                F.lit(0.0),
-            ),
-            F.lit(1.0),
-        ),
-        6,
-    )
-    binc = F.least(
-        F.floor(F.col("p") * _BRIER_BINS), F.lit(_BRIER_BINS - 1)
-    ).cast("long")
-    rows = j.select("doc_id", p.alias("p"), "y")
+    rows, binc = _calibrated(spark, sf_dir, "doc_id")
     pd6 = "decimal(12,6)"
     pd12 = "decimal(24,12)"
     bins = rows.groupBy(binc.alias("bin")).agg(
@@ -3339,31 +3375,12 @@ def eval_expected_calibration_error(spark: SparkSession, sf_dir: str) -> DataFra
     MCE = max_b |p̄_b − ȳ_b|. Completes the calibration trio: the
     reliability TABLE (eval_score_calibration), the Murphy
     DECOMPOSITION (eval_brier_decomposition), and THIS scalar. Same
-    libm-free linear logit squash, same decimal-sum determinism.
+    libm-free linear logit squash (_calibrated), same decimal-sum
+    determinism.
 
     100 TB shape: one mergeable (bin) aggregate to 10 rows, a 10-row
     fold; the scoring plan dominates and is shared machinery."""
-    scored = text_quality_model(spark, sf_dir).select("doc_id", "logit")
-    labels = _docs(spark, sf_dir).select(
-        "doc_id",
-        (T.quality_score_col(F.col("text")) >= _CALIB_QTH)
-        .cast("long").alias("y"),
-    )
-    j = scored.join(labels, "doc_id")
-    p = F.round(
-        F.least(
-            F.greatest(
-                (F.col("logit") - _BRIER_LO) / (_BRIER_HI - _BRIER_LO),
-                F.lit(0.0),
-            ),
-            F.lit(1.0),
-        ),
-        6,
-    )
-    binc = F.least(
-        F.floor(F.col("p") * _BRIER_BINS), F.lit(_BRIER_BINS - 1)
-    ).cast("long")
-    rows = j.select(p.alias("p"), "y")
+    rows, binc = _calibrated(spark, sf_dir)
     bins = rows.groupBy(binc.alias("bin")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_b"),
         _dec_to_double(F.sum(F.col("p").cast("decimal(12,6)"))).alias("sum_p"),
@@ -3855,34 +3872,11 @@ def eval_model_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     within-bucket cumulative over per-bucket partitions — no global
     ordering over raw rows anywhere. ONE result row; every double
     derives from exact integer counts."""
-    model = text_quality_model(spark, sf_dir).select("doc_id", "logit")
-    labels = _docs(spark, sf_dir).select(
-        "doc_id",
-        (T.quality_score_col(F.col("text")) >= 0.7).cast("long").alias("y"),
-    )
-    scored = model.join(labels, "doc_id")
-    per_score = scored.groupBy("logit").agg(
+    per_score = _model_scored(spark, sf_dir).groupBy("logit").agg(
         F.sum("y").cast("bigint").alias("n_pos"),
         F.sum(1 - F.col("y")).cast("bigint").alias("n_neg"),
     )
-    bounds = per_score.agg(
-        F.min("logit").alias("lo"), F.max("logit").alias("hi")
-    )
-    B = 256
-    bucket = F.when(
-        F.col("hi") > F.col("lo"),
-        F.least(
-            F.lit(B - 1),
-            F.floor(
-                (F.col("logit") - F.col("lo"))
-                / (F.col("hi") - F.col("lo"))
-                * B
-            ).cast("int"),
-        ),
-    ).otherwise(F.lit(0))
-    withb = per_score.crossJoin(F.broadcast(bounds)).select(
-        "logit", "n_pos", "n_neg", bucket.alias("bucket")
-    )
+    withb = _score_buckets(per_score)
     per_bucket = withb.groupBy("bucket").agg(
         F.sum("n_neg").alias("bucket_neg")
     )
@@ -3930,23 +3924,7 @@ def eval_model_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _model_auc_sql() -> str:
-    return f"""
-WITH m AS ( {_qmodel_sql()} ), scored AS (
-  SELECT m.logit, CASE WHEN {_SQL_QSCORE} >= 0.7 THEN 1 ELSE 0 END AS y
-  FROM m JOIN documents d ON m.doc_id = d.doc_id
-), per_score AS (
-  SELECT logit, CAST(SUM(y) AS BIGINT) AS n_pos,
-         CAST(SUM(1 - y) AS BIGINT) AS n_neg
-  FROM scored GROUP BY logit
-), bounds AS (SELECT MIN(logit) AS lo, MAX(logit) AS hi FROM per_score),
-withb AS (
-  SELECT logit, n_pos, n_neg,
-         CASE WHEN hi > lo
-              THEN least(255, CAST(floor((logit - lo) / (hi - lo) * 256)
-                                   AS INTEGER))
-              ELSE 0 END AS bucket
-  FROM per_score CROSS JOIN bounds
-), per_bucket AS (
+    return _score_buckets_sql(_POS_NEG_SQL, "n_pos, n_neg") + f""", per_bucket AS (
   SELECT bucket, SUM(n_neg) AS bucket_neg FROM withb GROUP BY bucket
 ), bucket_base AS (
   SELECT bucket,
@@ -3989,37 +3967,14 @@ def eval_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bounds: TP·1e12 ≤ 5e15 and pos·quotient ≤ 5e15 at sf0.1; at
     larger corpora lower the quantum) — summed as DECIMAL(38,0), so
     the sum is order-free and both engines divide the same exact
-    integer by N_pos at the end. Scale shape: identical to
-    eval_model_auc — per-distinct-score collapse, 256-bucket two-phase
-    DESC cumulatives, no global ordering over raw rows."""
-    model = text_quality_model(spark, sf_dir).select("doc_id", "logit")
-    labels = _docs(spark, sf_dir).select(
-        "doc_id",
-        (T.quality_score_col(F.col("text")) >= 0.7).cast("long").alias("y"),
-    )
-    scored = model.join(labels, "doc_id")
-    per_score = scored.groupBy("logit").agg(
+    integer by N_pos at the end. Scale shape: eval_model_auc's —
+    per-distinct-score collapse, the _score_buckets grid with DESC
+    two-phase cumulatives, no global ordering over raw rows."""
+    per_score = _model_scored(spark, sf_dir).groupBy("logit").agg(
         F.sum("y").cast("bigint").alias("n_pos"),
         F.sum(1 - F.col("y")).cast("bigint").alias("n_neg"),
     )
-    bounds = per_score.agg(
-        F.min("logit").alias("lo"), F.max("logit").alias("hi")
-    )
-    B = 256
-    bucket = F.when(
-        F.col("hi") > F.col("lo"),
-        F.least(
-            F.lit(B - 1),
-            F.floor(
-                (F.col("logit") - F.col("lo"))
-                / (F.col("hi") - F.col("lo"))
-                * B
-            ).cast("int"),
-        ),
-    ).otherwise(F.lit(0))
-    withb = per_score.crossJoin(F.broadcast(bounds)).select(
-        "logit", "n_pos", "n_neg", bucket.alias("bucket")
-    )
+    withb = _score_buckets(per_score)
     per_bucket = withb.groupBy("bucket").agg(
         F.sum("n_pos").alias("bucket_pos"),
         F.sum("n_neg").alias("bucket_neg"),
@@ -4074,23 +4029,7 @@ def eval_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _avg_precision_sql() -> str:
-    return f"""
-WITH m AS ( {_qmodel_sql()} ), scored AS (
-  SELECT m.logit, CASE WHEN {_SQL_QSCORE} >= 0.7 THEN 1 ELSE 0 END AS y
-  FROM m JOIN documents d ON m.doc_id = d.doc_id
-), per_score AS (
-  SELECT logit, CAST(SUM(y) AS BIGINT) AS n_pos,
-         CAST(SUM(1 - y) AS BIGINT) AS n_neg
-  FROM scored GROUP BY logit
-), bounds AS (SELECT MIN(logit) AS lo, MAX(logit) AS hi FROM per_score),
-withb AS (
-  SELECT logit, n_pos, n_neg,
-         CASE WHEN hi > lo
-              THEN least(255, CAST(floor((logit - lo) / (hi - lo) * 256)
-                                   AS INTEGER))
-              ELSE 0 END AS bucket
-  FROM per_score CROSS JOIN bounds
-), per_bucket AS (
+    return _score_buckets_sql(_POS_NEG_SQL, "n_pos, n_neg") + f""", per_bucket AS (
   SELECT bucket, SUM(n_pos) AS bucket_pos, SUM(n_neg) AS bucket_neg
   FROM withb GROUP BY bucket
 ), bucket_base AS (
@@ -4402,13 +4341,8 @@ def eval_pr_curve_thresholds(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 9-row threshold frame — O(|distinct scores| x 9) — then one
     9-group aggregate; every metric derives from exact integer
     TP/FP/FN cells."""
-    model = text_quality_model(spark, sf_dir).select("doc_id", "logit")
-    labels = _docs(spark, sf_dir).select(
-        "doc_id",
-        (T.quality_score_col(F.col("text")) >= 0.7).cast("long").alias("y"),
-    )
     per_score = (
-        model.join(labels, "doc_id")
+        _model_scored(spark, sf_dir)
         .groupBy("logit")
         .agg(
             F.sum("y").cast("bigint").alias("n_pos"),
@@ -4453,15 +4387,7 @@ def eval_pr_curve_thresholds(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pr_curve_sql() -> str:
-    return f"""
-WITH m AS ( {_qmodel_sql()} ), scored AS (
-  SELECT m.logit, CASE WHEN {_SQL_QSCORE} >= 0.7 THEN 1 ELSE 0 END AS y
-  FROM m JOIN documents d ON m.doc_id = d.doc_id
-), per_score AS (
-  SELECT logit, CAST(SUM(y) AS BIGINT) AS n_pos,
-         CAST(SUM(1 - y) AS BIGINT) AS n_neg
-  FROM scored GROUP BY logit
-), bounds AS (SELECT MIN(logit) AS lo, MAX(logit) AS hi FROM per_score),
+    return _score_bounds_sql(_POS_NEG_SQL) + f""",
 thr AS (
   SELECT i, lo + i::DOUBLE * (hi - lo) / 10 AS t
   FROM generate_series(1, 9) AS g(i) CROSS JOIN bounds
@@ -5989,37 +5915,15 @@ def eval_model_gains_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative capture + lift.
 
     Scale shape: scores collapse to per-distinct-score counts, the
-    below-count comes from the AUC entry's two-phase 256-bucket
+    below-count comes from the AUC entry's _score_buckets two-phase
     cumulative (no global ordering over raw rows), deciles are
     closed-form integer arithmetic, and the cumulative windows run
     over the ≤10-row decile grid (waived)."""
-    model = text_quality_model(spark, sf_dir).select("doc_id", "logit")
-    labels = _docs(spark, sf_dir).select(
-        "doc_id",
-        (T.quality_score_col(F.col("text")) >= 0.7).cast("long").alias("y"),
-    )
-    scored = model.join(labels, "doc_id")
-    per_score = scored.groupBy("logit").agg(
+    per_score = _model_scored(spark, sf_dir).groupBy("logit").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("y").cast("bigint").alias("n_pos"),
     )
-    bounds = per_score.agg(
-        F.min("logit").alias("lo"), F.max("logit").alias("hi")
-    )
-    B = 256
-    bucket = F.when(
-        F.col("hi") > F.col("lo"),
-        F.least(
-            F.lit(B - 1),
-            F.floor(
-                (F.col("logit") - F.col("lo"))
-                / (F.col("hi") - F.col("lo")) * B
-            ).cast("int"),
-        ),
-    ).otherwise(F.lit(0))
-    withb = per_score.crossJoin(F.broadcast(bounds)).select(
-        "logit", "n", "n_pos", bucket.alias("bucket")
-    )
+    withb = _score_buckets(per_score)
     per_bucket = withb.groupBy("bucket").agg(F.sum("n").alias("bn"))
     wb = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, -1)
     bucket_base = per_bucket.select(
@@ -6096,23 +6000,10 @@ def eval_model_gains_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _gains_sql() -> str:
-    return f"""
-WITH m AS ( {_qmodel_sql()} ), scored AS (
-  SELECT m.logit, CASE WHEN {_SQL_QSCORE} >= 0.7 THEN 1 ELSE 0 END AS y
-  FROM m JOIN documents d ON m.doc_id = d.doc_id
-), per_score AS (
-  SELECT logit, CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(y) AS BIGINT) AS n_pos
-  FROM scored GROUP BY logit
-), bounds AS (SELECT MIN(logit) AS lo, MAX(logit) AS hi FROM per_score),
-withb AS (
-  SELECT logit, n, n_pos,
-         CASE WHEN hi > lo
-              THEN least(255, CAST(floor((logit - lo) / (hi - lo) * 256)
-                                   AS INTEGER))
-              ELSE 0 END AS bucket
-  FROM per_score CROSS JOIN bounds
-), per_bucket AS (
+    return _score_buckets_sql(
+        """CAST(COUNT(*) AS BIGINT) AS n,
+         CAST(SUM(y) AS BIGINT) AS n_pos""", "n, n_pos",
+    ) + f""", per_bucket AS (
   SELECT bucket, SUM(n) AS bn FROM withb GROUP BY bucket
 ), bucket_base AS (
   SELECT bucket,

@@ -1609,6 +1609,48 @@ _SKIP_LO, _SKIP_HI = "1997-04-01", "1997-06-30"  # the probe predicate
 _SKIP_HASH_FILES = 28  # match the date layout's (years x quarters) count
 
 
+def _layout_tagged(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every order's o_orderdate (``dt``) tagged with its simulated file
+    under two layouts (``layout``, ``file_id``): ``date`` = ingestion
+    batch keyed by (year, quarter), ``hash`` = md5(o_orderkey) mod
+    _SKIP_HASH_FILES — the zone-map input of
+    maintenance_file_skipping_stats and maintenance_clustering_depth."""
+    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    d = F.col("o_orderdate")
+    date_file = ((F.year(d) - 1995) * 4 + F.quarter(d) - 1).cast("long")
+    hash_file = (
+        F.conv(
+            F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 8),
+            16, 10,
+        ).cast("long")
+        % _SKIP_HASH_FILES
+    )
+    return o.select(
+        F.lit("date").alias("layout"), date_file.alias("file_id"), d.alias("dt")
+    ).unionAll(
+        o.select(
+            F.lit("hash").alias("layout"), hash_file.alias("file_id"),
+            d.alias("dt"),
+        )
+    )
+
+
+# The oracle CTE of _layout_tagged.
+_LAYOUT_TAGGED_SQL = f"""tagged AS (
+  SELECT 'date' AS layout,
+         CAST((year(o_orderdate) - 1995) * 4 + quarter(o_orderdate) - 1
+              AS BIGINT) AS file_id,
+         o_orderdate AS dt
+  FROM orders
+  UNION ALL
+  SELECT 'hash',
+         ('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 8))::BIGINT
+           % {_SKIP_HASH_FILES},
+         o_orderdate
+  FROM orders
+)"""
+
+
 def maintenance_file_skipping_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zone-map data-skipping audit — the WHY behind
     maintenance_zorder_layout and every lakehouse clustering decision:
@@ -1626,25 +1668,7 @@ def maintenance_file_skipping_stats(spark: SparkSession, sf_dir: str) -> DataFra
     100 TB shape: ONE hash-agg per layout over (layout, file) keys
     (mergeable min/max/count partials), then a #files-row rollup —
     raw rows are touched once; no joins, no windows."""
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    d = F.col("o_orderdate")
-    date_file = ((F.year(d) - 1995) * 4 + F.quarter(d) - 1).cast("long")
-    hash_file = (
-        F.conv(
-            F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 8),
-            16, 10,
-        ).cast("long")
-        % _SKIP_HASH_FILES
-    )
-    tagged = o.select(
-        F.lit("date").alias("layout"), date_file.alias("file_id"), d.alias("dt")
-    ).unionAll(
-        o.select(
-            F.lit("hash").alias("layout"), hash_file.alias("file_id"),
-            d.alias("dt"),
-        )
-    )
-    zones = tagged.groupBy("layout", "file_id").agg(
+    zones = _layout_tagged(spark, sf_dir).groupBy("layout", "file_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.min("dt").alias("mn"),
         F.max("dt").alias("mx"),
@@ -1672,19 +1696,7 @@ def maintenance_file_skipping_stats(spark: SparkSession, sf_dir: str) -> DataFra
 
 
 MAINTENANCE_FILE_SKIPPING_SQL = f"""
-WITH tagged AS (
-  SELECT 'date' AS layout,
-         CAST((year(o_orderdate) - 1995) * 4 + quarter(o_orderdate) - 1
-              AS BIGINT) AS file_id,
-         o_orderdate AS dt
-  FROM orders
-  UNION ALL
-  SELECT 'hash',
-         ('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 8))::BIGINT
-           % {_SKIP_HASH_FILES},
-         o_orderdate
-  FROM orders
-), zones AS (
+WITH {_LAYOUT_TAGGED_SQL}, zones AS (
   SELECT layout, file_id, CAST(COUNT(*) AS BIGINT) AS n_rows,
          MIN(dt) AS mn, MAX(dt) AS mx
   FROM tagged GROUP BY layout, file_id
@@ -1810,26 +1822,7 @@ def maintenance_clustering_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-agg (≤ ~56 rows total); the overlap self-join runs on that
     zone FRAME, not on rows — O(#files²) with #files a layout
     constant, waived as such."""
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    d = F.col("o_orderdate")
-    date_file = ((F.year(d) - 1995) * 4 + F.quarter(d) - 1).cast("long")
-    hash_file = (
-        F.conv(
-            F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 8),
-            16, 10,
-        ).cast("long")
-        % _SKIP_HASH_FILES
-    )
-    tagged = o.select(
-        F.lit("date").alias("layout"), date_file.alias("file_id"),
-        d.alias("dt"),
-    ).unionAll(
-        o.select(
-            F.lit("hash").alias("layout"), hash_file.alias("file_id"),
-            d.alias("dt"),
-        )
-    )
-    zones = tagged.groupBy("layout", "file_id").agg(
+    zones = _layout_tagged(spark, sf_dir).groupBy("layout", "file_id").agg(
         F.min("dt").alias("mn"), F.max("dt").alias("mx")
     )
     z1, z2 = zones.alias("z1"), zones.alias("z2")
@@ -1860,19 +1853,7 @@ def maintenance_clustering_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 MAINTENANCE_CLUSTERING_DEPTH_SQL = f"""
-WITH tagged AS (
-  SELECT 'date' AS layout,
-         CAST((year(o_orderdate) - 1995) * 4 + quarter(o_orderdate) - 1
-              AS BIGINT) AS file_id,
-         o_orderdate AS dt
-  FROM orders
-  UNION ALL
-  SELECT 'hash',
-         ('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 8))::BIGINT
-           % {_SKIP_HASH_FILES},
-         o_orderdate
-  FROM orders
-), zones AS (
+WITH {_LAYOUT_TAGGED_SQL}, zones AS (
   SELECT layout, file_id, MIN(dt) AS mn, MAX(dt) AS mx
   FROM tagged GROUP BY layout, file_id
 ), ovl AS (

@@ -426,11 +426,11 @@ ASOF LEFT JOIN signups s ON p.user_id = s.user_id AND p.ts >= s.signup_ts
 """
 
 
-def join_asof_forward_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Forward as-of join: each purchase picks up the user's EARLIEST
-    click at-or-after it (operators/asof.py asof_join_forward — same
-    one-shuffle union+window idiom, mirrored ordering). Oracle: DuckDB
-    native ASOF with the inequality flipped."""
+def _purchases_asof_clicks(spark: SparkSession, sf_dir: str, asof_join):
+    """Purchases as-of joined (``asof_join``: operators/asof
+    asof_join_forward or asof_join_nearest) to the same user's clicks,
+    one click per (user, ts) keeping the max event_id, carrying
+    click_event_id and click_ts."""
     ev = _t(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts"
@@ -441,7 +441,7 @@ def join_asof_forward_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.max("event_id").alias("click_event_id"))
         .select("user_id", F.col("ts").alias("click_ts"), "click_event_id")
     )
-    joined = asof_join_forward(
+    return asof_join(
         purchases,
         clicks,
         on=["user_id"],
@@ -449,6 +449,23 @@ def join_asof_forward_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         right_ts="click_ts",
         payload_cols=["click_event_id", "click_ts"],
     )
+
+
+# The oracle CTEs of _purchases_asof_clicks' two inputs.
+_PURCHASES_CLICKS_SQL = """purchases AS (
+  SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'
+), clicks AS (
+  SELECT user_id, ts AS click_ts, max(event_id) AS click_event_id
+  FROM events WHERE event_type = 'click' GROUP BY user_id, ts
+)"""
+
+
+def join_asof_forward_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Forward as-of join: each purchase picks up the user's EARLIEST
+    click at-or-after it (operators/asof.py asof_join_forward — same
+    one-shuffle union+window idiom, mirrored ordering). Oracle: DuckDB
+    native ASOF with the inequality flipped."""
+    joined = _purchases_asof_clicks(spark, sf_dir, asof_join_forward)
     return joined.select(
         "event_id",
         "user_id",
@@ -458,13 +475,8 @@ def join_asof_forward_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-JOIN_ASOF_FORWARD_SQL = """
-WITH purchases AS (
-  SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'
-), clicks AS (
-  SELECT user_id, ts AS click_ts, max(event_id) AS click_event_id
-  FROM events WHERE event_type = 'click' GROUP BY user_id, ts
-)
+JOIN_ASOF_FORWARD_SQL = f"""
+WITH {_PURCHASES_CLICKS_SQL}
 SELECT p.event_id, p.user_id, epoch_us(p.ts) AS ts_us,
        c.click_event_id,
        epoch_us(c.click_ts) - epoch_us(p.ts) AS us_until_click
@@ -479,24 +491,7 @@ def join_asof_nearest_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchase picks the user's click CLOSEST in time, either direction,
     equidistant ties backward. Two linear union+window passes + a CASE;
     oracle composes DuckDB's two native ASOF directions the same way."""
-    ev = _t(spark, sf_dir, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts"
-    )
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .groupBy("user_id", "ts")
-        .agg(F.max("event_id").alias("click_event_id"))
-        .select("user_id", F.col("ts").alias("click_ts"), "click_event_id")
-    )
-    joined = asof_join_nearest(
-        purchases,
-        clicks,
-        on=["user_id"],
-        left_ts="ts",
-        right_ts="click_ts",
-        payload_cols=["click_event_id", "click_ts"],
-    )
+    joined = _purchases_asof_clicks(spark, sf_dir, asof_join_nearest)
     return joined.select(
         "event_id",
         "user_id",
@@ -507,13 +502,8 @@ def join_asof_nearest_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-JOIN_ASOF_NEAREST_SQL = """
-WITH purchases AS (
-  SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'
-), clicks AS (
-  SELECT user_id, ts AS click_ts, max(event_id) AS click_event_id
-  FROM events WHERE event_type = 'click' GROUP BY user_id, ts
-), bwd AS (
+JOIN_ASOF_NEAREST_SQL = f"""
+WITH {_PURCHASES_CLICKS_SQL}, bwd AS (
   SELECT p.event_id, c.click_event_id AS b_id, c.click_ts AS b_ts
   FROM purchases p
   ASOF LEFT JOIN clicks c ON p.user_id = c.user_id AND p.ts >= c.click_ts
@@ -748,6 +738,86 @@ _QPM_BUCKETS = 64
 _QPM_QS = (0.25, 0.5, 0.75, 0.95)
 
 
+def _quantile_pick(per_scope: DataFrame, partials: DataFrame) -> DataFrame:
+    """The read-off of mergeable histogram partials: ``per_scope``
+    (scope, bucket, cnt) plus the '__all__' scope summed from
+    ``partials`` over ``bucket``, cumulative counts per scope, and per
+    (scope, q in _QPM_QS) the first bucket whose cumulative count
+    reaches ceil(q*n) (``est_bucket``) with the scope's ``n_rows``.
+    The callers turn est_bucket into its upper edge; the work runs on
+    the O(#scopes x _QPM_BUCKETS) histogram, never on raw rows."""
+    overall = (
+        partials.groupBy("bucket")
+        .agg(F.sum("cnt").cast("bigint").alias("cnt"))
+        .select(F.lit("__all__").alias("scope"), "bucket", "cnt")
+    )
+    hist = per_scope.unionByName(overall)
+    wcum = (
+        Window.partitionBy("scope")
+        .orderBy("bucket")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    wtot = Window.partitionBy("scope")
+    cum = hist.select(
+        "scope",
+        "bucket",
+        F.sum("cnt").over(wcum).alias("cum"),
+        F.sum("cnt").over(wtot).alias("total"),
+    )
+    return (
+        cum.select(
+            "scope",
+            "bucket",
+            "cum",
+            "total",
+            F.explode(F.array(*[F.lit(q) for q in _QPM_QS])).alias("q"),
+        )
+        .groupBy("scope", "q")
+        .agg(
+            F.min(
+                F.when(
+                    F.col("cum") >= F.ceil(F.col("q") * F.col("total")),
+                    F.col("bucket"),
+                )
+            ).alias("est_bucket"),
+            F.max("total").cast("bigint").alias("n_rows"),
+        )
+    )
+
+
+def _quantile_pick_sql(per_scope: str) -> str:
+    """The oracle of _quantile_pick plus the upper-edge estimate: from
+    CTEs ``bounds`` (mn, mx) and ``partials`` (bucket, cnt) and the
+    ``per_scope`` SELECT of (scope, bucket, cnt), the per (scope, q)
+    quantile report."""
+    return f"""hist AS (
+  {per_scope}
+  UNION ALL
+  SELECT '__all__' AS scope, bucket, CAST(SUM(cnt) AS BIGINT) AS cnt
+  FROM partials GROUP BY 2
+),
+cum AS (
+  SELECT scope, bucket,
+         SUM(cnt) OVER (PARTITION BY scope ORDER BY bucket
+                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
+         SUM(cnt) OVER (PARTITION BY scope) AS total
+  FROM hist
+),
+picked AS (
+  SELECT scope, CAST(q AS DOUBLE) AS q,
+         MIN(CASE WHEN cum >= ceil(CAST(q AS DOUBLE) * total) THEN bucket END)
+           AS est_bucket,
+         CAST(MAX(total) AS BIGINT) AS n_rows
+  FROM cum, UNNEST([{", ".join(str(q) for q in _QPM_QS)}]) AS u(q)
+  GROUP BY 1, 2
+)
+SELECT scope, q,
+       round(mn + est_bucket * ((mx - mn) / {_QPM_BUCKETS}), 6) AS est_quantile,
+       n_rows
+FROM picked CROSS JOIN bounds
+"""
+
+
 def agg_quantile_partial_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGEABLE quantile partials — the histogram counterpart of
     agg_hll_partial_merge (VERDICT r7 next-step #7): per
@@ -797,44 +867,7 @@ def agg_quantile_partial_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("cnt").cast("bigint").alias("cnt"))
         .select(F.col("l_returnflag").alias("scope"), "bucket", "cnt")
     )
-    overall = (
-        partials.groupBy("bucket")
-        .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-        .select(F.lit("__all__").alias("scope"), "bucket", "cnt")
-    )
-    hist = per_flag.unionByName(overall)
-    wcum = (
-        Window.partitionBy("scope")
-        .orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wtot = Window.partitionBy("scope")
-    cum = hist.select(
-        "scope",
-        "bucket",
-        F.sum("cnt").over(wcum).alias("cum"),
-        F.sum("cnt").over(wtot).alias("total"),
-    )
-    picked = (
-        cum.select(
-            "scope",
-            "bucket",
-            "cum",
-            "total",
-            F.explode(F.array(*[F.lit(q) for q in _QPM_QS])).alias("q"),
-        )
-        .groupBy("scope", "q")
-        .agg(
-            F.min(
-                F.when(
-                    F.col("cum") >= F.ceil(F.col("q") * F.col("total")),
-                    F.col("bucket"),
-                )
-            ).alias("est_bucket"),
-            F.max("total").cast("bigint").alias("n_rows"),
-        )
-    )
-    return picked.crossJoin(F.broadcast(bounds)).select(
+    return _quantile_pick(per_flag, partials).crossJoin(F.broadcast(bounds)).select(
         "scope",
         "q",
         F.round(
@@ -860,33 +893,10 @@ partials AS (
   SELECT l_returnflag, l_linestatus, bucket, CAST(COUNT(*) AS BIGINT) AS cnt
   FROM assigned GROUP BY 1, 2, 3
 ),
-hist AS (
-  SELECT l_returnflag AS scope, bucket, CAST(SUM(cnt) AS BIGINT) AS cnt
-  FROM partials GROUP BY 1, 2
-  UNION ALL
-  SELECT '__all__' AS scope, bucket, CAST(SUM(cnt) AS BIGINT) AS cnt
-  FROM partials GROUP BY 2
-),
-cum AS (
-  SELECT scope, bucket,
-         SUM(cnt) OVER (PARTITION BY scope ORDER BY bucket
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-         SUM(cnt) OVER (PARTITION BY scope) AS total
-  FROM hist
-),
-picked AS (
-  SELECT scope, CAST(q AS DOUBLE) AS q,
-         MIN(CASE WHEN cum >= ceil(CAST(q AS DOUBLE) * total) THEN bucket END)
-           AS est_bucket,
-         CAST(MAX(total) AS BIGINT) AS n_rows
-  FROM cum, UNNEST([{", ".join(str(q) for q in _QPM_QS)}]) AS u(q)
-  GROUP BY 1, 2
+""" + _quantile_pick_sql(
+    """SELECT l_returnflag AS scope, bucket, CAST(SUM(cnt) AS BIGINT) AS cnt
+  FROM partials GROUP BY 1, 2"""
 )
-SELECT scope, q,
-       round(mn + est_bucket * ((mx - mn) / {_QPM_BUCKETS}), 6) AS est_quantile,
-       n_rows
-FROM picked CROSS JOIN bounds
-"""
 
 
 def agg_variance_partial_merge(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -105,6 +105,44 @@ SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
 """
 
 
+def _weighted_cum(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per l_returnflag, each line's running quantity weight ``cumw``
+    in (l_extendedprice, l_orderkey, l_linenumber) order and the group
+    total ``totw`` (BIGINT) — the one partitioned sort the weighted
+    median and percentiles read their thresholds from."""
+    li = _t(spark, sf_dir, "lineitem")
+    w = (
+        Window.partitionBy("l_returnflag")
+        .orderBy("l_extendedprice", "l_orderkey", "l_linenumber")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    wall = Window.partitionBy("l_returnflag")
+    return (
+        li.select(
+            "l_returnflag",
+            "l_extendedprice",
+            "l_orderkey",
+            "l_linenumber",
+            F.col("l_quantity").cast("long").alias("qty"),
+        )
+        .withColumn("cumw", F.sum("qty").over(w))
+        .withColumn("totw", F.sum("qty").over(wall))
+    )
+
+
+# The oracle CTE of _weighted_cum.
+_WEIGHTED_CUM_SQL = """cum AS (
+  SELECT l_returnflag, l_extendedprice,
+         SUM(CAST(l_quantity AS BIGINT)) OVER (
+           PARTITION BY l_returnflag
+           ORDER BY l_extendedprice, l_orderkey, l_linenumber
+           ROWS UNBOUNDED PRECEDING) AS cumw,
+         SUM(CAST(l_quantity AS BIGINT)) OVER (
+           PARTITION BY l_returnflag) AS totw
+  FROM lineitem
+)"""
+
+
 def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT weighted median per group: the lower weighted median of
     l_extendedprice weighted by l_quantity, per l_returnflag — the
@@ -116,24 +154,7 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpolation arithmetic — so cross-engine equality is exact by
     construction. Weights are integer-valued quantities summed as
     BIGINT. One partitioned sort per group; no global window."""
-    li = _t(spark, sf_dir, "lineitem")
-    w = (
-        Window.partitionBy("l_returnflag")
-        .orderBy("l_extendedprice", "l_orderkey", "l_linenumber")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wall = Window.partitionBy("l_returnflag")
-    cum = (
-        li.select(
-            "l_returnflag",
-            "l_extendedprice",
-            "l_orderkey",
-            "l_linenumber",
-            F.col("l_quantity").cast("long").alias("qty"),
-        )
-        .withColumn("cumw", F.sum("qty").over(w))
-        .withColumn("totw", F.sum("qty").over(wall))
-    )
+    cum = _weighted_cum(spark, sf_dir)
     return (
         cum.filter(2 * F.col("cumw") >= F.col("totw"))
         .groupBy("l_returnflag")
@@ -144,17 +165,8 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-AGG_WEIGHTED_MEDIAN_SQL = """
-WITH cum AS (
-  SELECT l_returnflag, l_extendedprice,
-         SUM(CAST(l_quantity AS BIGINT)) OVER (
-           PARTITION BY l_returnflag
-           ORDER BY l_extendedprice, l_orderkey, l_linenumber
-           ROWS UNBOUNDED PRECEDING) AS cumw,
-         SUM(CAST(l_quantity AS BIGINT)) OVER (
-           PARTITION BY l_returnflag) AS totw
-  FROM lineitem
-)
+AGG_WEIGHTED_MEDIAN_SQL = f"""
+WITH {_WEIGHTED_CUM_SQL}
 SELECT l_returnflag,
        MIN(l_extendedprice) AS weighted_median,
        CAST(MAX(totw) AS BIGINT) AS total_weight
@@ -174,27 +186,10 @@ def agg_weighted_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpolation, every answer is an input value, so cross-engine
     equality is exact by construction).
 
-    Scale shape: the same single partitioned sort per group as the
-    median (no global window); the three percentile slices reuse the
-    one windowed frame."""
-    li = _t(spark, sf_dir, "lineitem")
-    w = (
-        Window.partitionBy("l_returnflag")
-        .orderBy("l_extendedprice", "l_orderkey", "l_linenumber")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wall = Window.partitionBy("l_returnflag")
-    cum = (
-        li.select(
-            "l_returnflag",
-            "l_extendedprice",
-            "l_orderkey",
-            "l_linenumber",
-            F.col("l_quantity").cast("long").alias("qty"),
-        )
-        .withColumn("cumw", F.sum("qty").over(w))
-        .withColumn("totw", F.sum("qty").over(wall))
-    )
+    Scale shape: the median's single partitioned sort per group
+    (_weighted_cum; no global window); the three percentile slices
+    reuse the one windowed frame."""
+    cum = _weighted_cum(spark, sf_dir)
     slices = []
     for label, lhs, rhs in (
         ("p25", 4, 1),
@@ -217,17 +212,8 @@ def agg_weighted_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-AGG_WEIGHTED_PCTL_SQL = """
-WITH cum AS (
-  SELECT l_returnflag, l_extendedprice,
-         SUM(CAST(l_quantity AS BIGINT)) OVER (
-           PARTITION BY l_returnflag
-           ORDER BY l_extendedprice, l_orderkey, l_linenumber
-           ROWS UNBOUNDED PRECEDING) AS cumw,
-         SUM(CAST(l_quantity AS BIGINT)) OVER (
-           PARTITION BY l_returnflag) AS totw
-  FROM lineitem
-)
+AGG_WEIGHTED_PCTL_SQL = f"""
+WITH {_WEIGHTED_CUM_SQL}
 SELECT l_returnflag, 'p25' AS pct, MIN(l_extendedprice) AS value,
        CAST(MAX(totw) AS BIGINT) AS total_weight
 FROM cum WHERE 4 * cumw >= totw GROUP BY l_returnflag

@@ -565,7 +565,7 @@ def streaming_quantile_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _quantile_state_sql() -> str:
-    from .relational import _QPM_BUCKETS, _QPM_QS
+    from .relational import _QPM_BUCKETS, _quantile_pick_sql
 
     return f"""
 WITH bounds AS (
@@ -583,32 +583,7 @@ partials AS (
   SELECT event_type, bucket, CAST(COUNT(*) AS BIGINT) AS cnt
   FROM assigned GROUP BY 1, 2
 ),
-hist AS (
-  SELECT event_type AS scope, bucket, cnt FROM partials
-  UNION ALL
-  SELECT '__all__' AS scope, bucket, CAST(SUM(cnt) AS BIGINT) AS cnt
-  FROM partials GROUP BY 2
-),
-cum AS (
-  SELECT scope, bucket,
-         SUM(cnt) OVER (PARTITION BY scope ORDER BY bucket
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-         SUM(cnt) OVER (PARTITION BY scope) AS total
-  FROM hist
-),
-picked AS (
-  SELECT scope, CAST(q AS DOUBLE) AS q,
-         MIN(CASE WHEN cum >= ceil(CAST(q AS DOUBLE) * total) THEN bucket END)
-           AS est_bucket,
-         CAST(MAX(total) AS BIGINT) AS n_rows
-  FROM cum, UNNEST([{", ".join(str(q) for q in _QPM_QS)}]) AS u(q)
-  GROUP BY 1, 2
-)
-SELECT scope, q,
-       round(mn + est_bucket * ((mx - mn) / {_QPM_BUCKETS}), 6) AS est_quantile,
-       n_rows
-FROM picked CROSS JOIN bounds
-"""
+{_quantile_pick_sql("SELECT event_type AS scope, bucket, cnt FROM partials")}"""
 
 
 def streaming_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:

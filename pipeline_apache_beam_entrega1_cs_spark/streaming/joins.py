@@ -14,8 +14,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def purchases_after_signup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .windows import _drain, _stream_events
+def _purchases_join_signups(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """Purchases stream-joined (``how``) to the same user's signups at
+    most 24 h before them, both sides watermarked at 1 hour."""
+    from .windows import _stream_events
 
     ev = _stream_events(spark, sf_dir)
     purchases = (
@@ -36,12 +38,12 @@ def purchases_after_signup_stream(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         .withWatermark("s_ts", "1 hour")
     )
-    joined = purchases.join(
+    return purchases.join(
         signups,
         (F.col("user_id") == F.col("s_user_id"))
         & (F.col("s_ts") <= F.col("p_ts"))
         & (F.col("s_ts") >= F.col("p_ts") - F.expr("INTERVAL 24 HOURS")),
-        "inner",
+        how,
     ).select(
         "purchase_id",
         "user_id",
@@ -49,7 +51,12 @@ def purchases_after_signup_stream(spark: SparkSession, sf_dir: str) -> DataFrame
         F.unix_micros("p_ts").alias("p_ts_us"),
         F.unix_micros("s_ts").alias("s_ts_us"),
     )
-    return _drain(joined, "append")
+
+
+def purchases_after_signup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .windows import _drain
+
+    return _drain(_purchases_join_signups(spark, sf_dir, "inner"), "append")
 
 
 def purchases_left_signup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -65,41 +72,9 @@ def purchases_left_signup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     before max event time, which makes the output deterministic and
     equal to the batch left join under the same bound (the oracle)."""
     from ..schemas import load_table
-    from .windows import _drain, _stream_events
+    from .windows import _drain
 
-    ev = _stream_events(spark, sf_dir)
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "1 hour")
-    )
-    signups = (
-        ev.filter(F.col("event_type") == "signup")
-        .select(
-            F.col("event_id").alias("signup_id"),
-            F.col("user_id").alias("s_user_id"),
-            F.col("ts").alias("s_ts"),
-        )
-        .withWatermark("s_ts", "1 hour")
-    )
-    joined = purchases.join(
-        signups,
-        (F.col("user_id") == F.col("s_user_id"))
-        & (F.col("s_ts") <= F.col("p_ts"))
-        & (F.col("s_ts") >= F.col("p_ts") - F.expr("INTERVAL 24 HOURS")),
-        "leftOuter",
-    ).select(
-        "purchase_id",
-        "user_id",
-        "signup_id",
-        F.unix_micros("p_ts").alias("p_ts_us"),
-        F.unix_micros("s_ts").alias("s_ts_us"),
-    )
-    drained = _drain(joined, "append")
+    drained = _drain(_purchases_join_signups(spark, sf_dir, "leftOuter"), "append")
     max_us = (
         load_table(spark, sf_dir, "events")
         .agg(F.unix_micros(F.max("ts")))

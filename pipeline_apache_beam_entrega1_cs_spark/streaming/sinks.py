@@ -739,7 +739,7 @@ def run_quantile_state_stream(spark, sf_dir: str):
     table (1-row min/max collect — the static side input, like the IVF
     stream's offline quantizer); returns the per-event-type and
     '__all__' quantile report read off the merged state."""
-    from ..plans.relational import _QPM_BUCKETS, _QPM_QS
+    from ..plans.relational import _QPM_BUCKETS, _quantile_pick
     from ..schemas import load_table
 
     raw = load_table(spark, sf_dir, "events").select(
@@ -749,58 +749,21 @@ def run_quantile_state_stream(spark, sf_dir: str):
     B = _QPM_BUCKETS
 
     def read_off(partials):
-        # Serving read-off from state (|types| x 64 rows): per-type and
-        # '__all__' histograms -> cumulative counts -> quantile pick,
-        # the agg_quantile_partial_merge recipe.
+        # Serving read-off from state (|types| x 64 rows): the per-type
+        # histograms through relational._quantile_pick, the batch
+        # entry's read-off, with the static bounds as literals.
         per_type = partials.select(
             F.col("event_type").alias("scope"), "bucket", "cnt"
         )
-        overall = (
-            partials.groupBy("bucket")
-            .agg(F.sum("cnt").cast("long").alias("cnt"))
-            .select(F.lit("__all__").alias("scope"), "bucket", "cnt")
-        )
-        hist = per_type.unionByName(overall)
-        wcum = (
-            Window.partitionBy("scope")
-            .orderBy("bucket")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        wtot = Window.partitionBy("scope")
-        cum = hist.select(
+        return _quantile_pick(per_type, partials).select(
             "scope",
-            "bucket",
-            F.sum("cnt").over(wcum).alias("cum"),
-            F.sum("cnt").over(wtot).alias("total"),
-        )
-        return (
-            cum.select(
-                "scope",
-                "bucket",
-                "cum",
-                "total",
-                F.explode(F.array(*[F.lit(qq) for qq in _QPM_QS])).alias("q"),
-            )
-            .groupBy("scope", "q")
-            .agg(
-                F.min(
-                    F.when(
-                        F.col("cum") >= F.ceil(F.col("q") * F.col("total")),
-                        F.col("bucket"),
-                    )
-                ).alias("est_bucket"),
-                F.max("total").cast("bigint").alias("n_rows"),
-            )
-            .select(
-                "scope",
-                "q",
-                F.round(
-                    F.lit(float(mn))
-                    + F.col("est_bucket") * F.lit((float(mx) - float(mn)) / B),
-                    6,
-                ).alias("est_quantile"),
-                "n_rows",
-            )
+            "q",
+            F.round(
+                F.lit(float(mn))
+                + F.col("est_bucket") * F.lit((float(mx) - float(mn)) / B),
+                6,
+            ).alias("est_quantile"),
+            "n_rows",
         )
 
     return replay(

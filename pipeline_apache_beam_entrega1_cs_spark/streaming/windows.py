@@ -40,7 +40,9 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _drain(stream_df: DataFrame, output_mode: str) -> DataFrame:
     """Run a streaming aggregation to completion via a memory sink and
-    return the materialized result as a batch DataFrame."""
+    return the materialized result as a batch DataFrame. The sink's
+    temp view is dropped once resolved: the returned frame keeps the
+    sink's rows alive, the session catalog does not."""
     name = f"drain_{uuid.uuid4().hex[:12]}"
     q = (
         stream_df.writeStream.outputMode(output_mode)
@@ -53,7 +55,9 @@ def _drain(stream_df: DataFrame, output_mode: str) -> DataFrame:
     finally:
         q.stop()
     spark = stream_df.sparkSession
-    return spark.table(name)
+    result = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return result
 
 
 def _watermarked_events(spark: SparkSession, sf_dir: str) -> DataFrame:

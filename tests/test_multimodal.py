@@ -15,6 +15,8 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from pipeline_apache_beam_entrega1_cs_spark.operators.multimodal import (
+    _be_uint,
+    _le_uint,
     byte_chisq,
     byte_entropy,
     detect_format,
@@ -109,6 +111,37 @@ def test_byte_stats_boundary_payloads(spark):
 )
 def test_byte_stats_match_python_spec(spark, payloads):
     _check_against_spec(spark, payloads)
+
+
+@st.composite
+def _fields(draw):
+    """(offset, width, payloads): a field of 1-4 bytes at a 0-based
+    offset, and payloads long enough to hold it."""
+    off = draw(st.integers(0, 12))
+    nbytes = draw(st.integers(1, 4))
+    size = st.binary(min_size=off + nbytes, max_size=off + nbytes + 6)
+    return off, nbytes, draw(st.lists(size, min_size=1, max_size=8))
+
+
+@settings(max_examples=25, deadline=None, suppress_health_check=list(HealthCheck))
+@given(_fields())
+def test_byte_readers_match_int_from_bytes(spark, field):
+    """The payload readers every container parser uses: _le_uint (1-based
+    int position) and _be_uint (0-based Column offset) read the same
+    unsigned field as int.from_bytes in their byte order."""
+    off, nbytes, payloads = field
+    p = F.col("payload")
+    got = spark.createDataFrame(
+        list(enumerate(payloads)), "i long, payload binary"
+    ).select(
+        "i",
+        _le_uint(p, off + 1, nbytes).alias("le"),
+        _be_uint(p, F.lit(off), nbytes).alias("be"),
+    ).collect()
+    for r in got:
+        field_bytes = payloads[r.i][off:off + nbytes]
+        assert r.le == int.from_bytes(field_bytes, "little")
+        assert r.be == int.from_bytes(field_bytes, "big")
 
 
 def test_detect_format_truncated_magics(spark):

@@ -5,8 +5,10 @@ Streaming."""
 
 from __future__ import annotations
 
+import ast
 import json
-from collections import Counter
+from collections import Counter, defaultdict
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -156,6 +158,23 @@ def test_replay_failure_stops_query_and_removes_scratch(spark, tmp_path, monkeyp
     assert seen == [0, 1]
     assert spark.streams.active == []
     assert list(scratch.iterdir()) == []
+
+
+def test_drain_drops_memory_sink_view(spark, sf_dir):
+    """streaming/windows._drain drops the memory sink's temp view once
+    it has resolved it: no drain_* table outlives the call, and the
+    returned frame still counts its rows (one per distinct
+    (user_id, event_type) key of the cold one-batch replay)."""
+    from pipeline_apache_beam_entrega1_cs_spark.schemas import load_table
+    from pipeline_apache_beam_entrega1_cs_spark.streaming.windows import (
+        run_dedup_within_watermark,
+    )
+
+    out = run_dedup_within_watermark(spark, sf_dir)
+    assert [t.name for t in spark.catalog.listTables()
+            if t.name.startswith("drain_")] == []
+    keys = load_table(spark, sf_dir, "events").select("user_id", "event_type")
+    assert out.count() == keys.distinct().count() > 0
 
 
 def test_replay_success_removes_scratch_and_result_stays_readable(
@@ -979,3 +998,53 @@ def test_rollup_then_window_discipline(spark, sf_dir):
                 f"{name}: a Window runs BELOW the rollup aggregate — "
                 "windowing raw rows instead of the rolled-up series"
             )
+
+
+_COPY_RUN = 12
+
+
+def _code_lines(path: Path) -> list[tuple[int, str]]:
+    """(line number, stripped text) of every non-blank line of a module
+    except comment-only lines and import statements."""
+    src = path.read_text()
+    imports = {
+        n
+        for node in ast.walk(ast.parse(src))
+        if isinstance(node, (ast.Import, ast.ImportFrom))
+        for n in range(node.lineno, node.end_lineno + 1)
+    }
+    return [
+        (i, line.strip())
+        for i, line in enumerate(src.splitlines(), 1)
+        if line.strip() and not line.strip().startswith("#") and i not in imports
+    ]
+
+
+def test_no_copied_blocks_in_package():
+    """No run of 12 consecutive code lines (compared after strip(),
+    comments and imports skipped) occurs twice anywhere in the package:
+    a copied block is defined once, as a helper its users call. A
+    failure names each copied run by its file:line starts."""
+    root = Path(__file__).resolve().parents[1]
+    package = root / "pipeline_apache_beam_entrega1_cs_spark"
+    starts = defaultdict(list)
+    lines = {}
+    for path in sorted(package.rglob("*.py")):
+        lines[path] = _code_lines(path)
+        texts = [t for _, t in lines[path]]
+        for k in range(len(texts) - _COPY_RUN + 1):
+            starts[tuple(texts[k:k + _COPY_RUN])].append((path, k))
+    copied = {loc: run for run, locs in starts.items() if len(locs) > 1 for loc in locs}
+    # report maximal runs: skip a window whose predecessor window is
+    # also copied, since it continues a run already named
+    runs = sorted(
+        {
+            tuple(
+                f"{p.relative_to(root)}:{lines[p][j][0]}"
+                for p, j in starts[run]
+            )
+            for (path, k), run in copied.items()
+            if (path, k - 1) not in copied
+        }
+    )
+    assert runs == [], "copied blocks:\n" + "\n".join(", ".join(r) for r in runs)
