@@ -3,10 +3,16 @@
 The reference is schemaless (Python dicts end-to-end); here every reader
 gets an explicit ``StructType`` so Catalyst can prune/pushdown and no
 inference pass is ever paid — at 100 TB an inference scan is a second
-full read of the data.
+full read of the data. The JSONL/CSV inputs use the literal schemas
+below; a testdata parquet table's schema is read from its parquet footer
+on the driver (:func:`footer_schema`), so loading it runs no Spark job.
 """
 
 from __future__ import annotations
+
+import glob
+import json
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -77,9 +83,61 @@ def ensure_session_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
+# Key under which Spark's parquet writer stores the written schema.
+SPARK_FOOTER_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def as_nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field, array element and map value nullable,
+    nested ones included: the form Spark's file sources report a schema
+    in, whatever the files declare."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, as_nullable(f.dataType), True, f.metadata) for f in dt]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(as_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(as_nullable(dt.keyType), as_nullable(dt.valueType), True)
+    return dt
+
+
+def footer_schema(path: str) -> T.StructType:
+    """The ``StructType`` Spark's parquet reader yields for the parquet
+    file ``path`` (for a directory, its first part file), read from the
+    file's footer by pyarrow on the driver — no Spark job, where
+    ``spark.read.parquet(path)`` without a schema runs one to infer it.
+    As in Spark's own inference, a file Spark wrote gives the schema
+    Spark stored in its footer. Otherwise Arrow types map as Spark's
+    ``from_arrow_schema`` maps them (a tz-less timestamp as
+    TIMESTAMP_NTZ), and a TIMESTAMP(NANOS) column is LongType, what the
+    reader yields under nanosAsLong. Every field is nullable. An Arrow
+    type ``from_arrow_schema`` cannot map raises ``TypeError``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    if os.path.isdir(path):
+        path = min(glob.glob(os.path.join(path, "*.parquet")))
+    arrow = pq.read_schema(path)
+    spark_schema = (arrow.metadata or {}).get(SPARK_FOOTER_KEY)
+    if spark_schema is not None:
+        return as_nullable(T.StructType.fromJson(json.loads(spark_schema)))
+    arrow = pa.schema(
+        [
+            f.with_type(pa.int64())
+            if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+            else f
+            for f in arrow
+        ]
+    )
+    return as_nullable(from_arrow_schema(arrow, prefer_timestamp_ntz=True))
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one testdata parquet table. Parquet carries its own schema;
-    column pruning + predicate pushdown apply automatically.
+    """Load one testdata parquet table with the schema of its footer
+    (:func:`footer_schema`), so building a plan over it runs no Spark
+    job; column pruning + predicate pushdown apply as usual.
 
     Timestamp normalization — the driver has shipped the time columns
     two ways across rounds, and both must land as session-TZ TIMESTAMP
@@ -92,8 +150,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       TIMESTAMP — value-preserving under the UTC session timezone and
       identical to how the UTC-naive DuckDB oracle sees it."""
     ensure_session_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    return normalize_nanos_ts(df)
+    path = f"{sf_dir}/{name}.parquet"
+    return normalize_nanos_ts(spark.read.schema(footer_schema(path)).parquet(path))
 
 
 def normalize_nanos_ts(df: DataFrame, col: str = "ts") -> DataFrame:

@@ -40,6 +40,8 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..schemas import as_nullable, ensure_session_confs, load_table
+
 
 class IdempotentParquetSink:
     """``foreachBatch`` callable: exactly-once parquet append by batch id.
@@ -70,6 +72,10 @@ class IdempotentParquetSink:
         )
         with open(self._marker(batch_id), "w"):
             pass
+
+    def read_state(self, spark, path: str) -> DataFrame:
+        """Every batch written under ``path``, ``batch_id`` as a column."""
+        return spark.read.parquet(path)
 
 
 def _current_state(state: str) -> str | None:
@@ -146,6 +152,7 @@ class MergeSink:
 
     def __init__(self, state_dir: str) -> None:
         self.state = state_dir
+        self.schema = None  # nullable schema of the state last written
         os.makedirs(os.path.dirname(state_dir), exist_ok=True)
 
     def is_committed(self, batch_id: int) -> bool:
@@ -165,10 +172,20 @@ class MergeSink:
         if self.is_committed(batch_id):
             return  # replayed delivery of a committed batch: no-op
         cur = _current_state(self.state)
-        prev = None if cur is None else batch_df.sparkSession.read.parquet(cur)
+        prev = None if cur is None else self.read_state(batch_df.sparkSession, cur)
         tmp = f"{self.state}_tmp{batch_id}"
-        self.merge(batch_df, prev).write.mode("overwrite").parquet(tmp)
+        new = self.merge(batch_df, prev)
+        new.write.mode("overwrite").parquet(tmp)
+        self.schema = as_nullable(new.schema)
         _install_state(self.state, tmp, batch_id)  # marker atomic w/ state
+
+    def read_state(self, spark, path: str) -> DataFrame:
+        """The state parquet at ``path``, read with the schema this sink
+        last wrote, so the read runs no schema-inference job. A sink
+        that has written nothing yet over an existing state (a restarted
+        query) has no schema to give and lets Spark infer it."""
+        reader = spark.read if self.schema is None else spark.read.schema(self.schema)
+        return reader.parquet(path)
 
 
 def _fold(prev: DataFrame | None, inc: DataFrame, keys, *aggs) -> DataFrame:
@@ -233,7 +250,7 @@ def replay(raw: DataFrame, bucket, sink_for, read_off, n: int = 4) -> DataFrame:
     stream with maxFilesPerTrigger=1 and delivered to
     ``sink_for(state_dir)`` under a checkpoint; the query is stopped
     even when a batch fails, and the failure propagates.
-    ``read_off`` receives the parquet under ``state_dir``.
+    ``read_off`` receives the sink's ``read_state`` of ``state_dir``.
 
     Scratch lifecycle: slices, checkpoint and state live in one fresh
     temp directory, deleted on return whether or not a batch failed.
@@ -242,8 +259,6 @@ def replay(raw: DataFrame, bucket, sink_for, read_off, n: int = 4) -> DataFrame:
     files (not the heap, where retained pins slowed later queries of
     the same session), the returned frame reads no scratch file, and
     a corpus-sized read-off never passes through the driver."""
-    from ..schemas import ensure_session_confs
-
     spark = raw.sparkSession
     ensure_session_confs(spark)
     work = tempfile.mkdtemp(prefix="graft_replay_")
@@ -255,8 +270,9 @@ def replay(raw: DataFrame, bucket, sink_for, read_off, n: int = 4) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
+        sink = sink_for(state)
         q = (
-            stream.writeStream.foreachBatch(sink_for(state))
+            stream.writeStream.foreachBatch(sink)
             .option("checkpointLocation", os.path.join(work, "ckpt"))
             .start()
         )
@@ -264,7 +280,7 @@ def replay(raw: DataFrame, bucket, sink_for, read_off, n: int = 4) -> DataFrame:
             q.processAllAvailable()
         finally:
             q.stop()
-        return read_off(spark.read.parquet(state)).localCheckpoint(
+        return read_off(sink.read_state(spark, state)).localCheckpoint(
             eager=True, storageLevel=StorageLevel.DISK_ONLY
         )
     finally:
@@ -311,8 +327,6 @@ def run_rollup_upsert_stream(spark, sf_dir: str):
     state (DECIMAL(38,4)) keeps the cross-batch accumulation exact; the
     double conversion happens once at the end via the string-cast
     convention (plans/spec.py)."""
-    from ..schemas import load_table
-
     raw = load_table(spark, sf_dir, "events")
     return replay(
         raw, F.col("event_id") % 4, RollupMergeSink,
@@ -414,9 +428,7 @@ def run_tfidf_state_stream(spark, sf_dir: str, n_batches: int = 4):
     amortization harness (streaming_amortization.py) replays at 1 and 8
     to demonstrate the fixed ~0.8 s/batch Structured Streaming floor
     amortizing instead of adjudicating it in prose."""
-    raw = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
+    raw = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return replay(
         raw, F.col("doc_id") % n_batches, DocFreqMergeSink,
         lambda st: st.select(
@@ -440,9 +452,7 @@ def run_neardup_dedup_stream(spark, sf_dir: str):
     (fp, keep_doc_id, n_copies). Cold replay == batch fingerprint dedup
     over the whole corpus (associative merge — see the sink docstring),
     so the oracle is the plain GROUP BY over per-document fingerprints."""
-    raw = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
+    raw = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return replay(
         raw, F.col("doc_id") % 4, FingerprintMergeSink,
         lambda st: st.select("fp", "keep_doc_id", "n_copies"),
@@ -525,9 +535,7 @@ def run_curation_stats_stream(spark, sf_dir: str):
     from ..operators.dedup import _explode_shingles, _shingle_arrays
     from ..plans.curation import DECON_MOD, DECON_N, DECON_THRESHOLD
 
-    raw = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text", "source"
-    )
+    raw = load_table(spark, sf_dir, "documents").select("doc_id", "text", "source")
     bench = (
         _explode_shingles(
             _shingle_arrays(
@@ -613,9 +621,7 @@ def run_ivf_state_stream(spark, sf_dir: str):
     from ..functions.numeric import _dec_to_double
     from ..operators.similarity import _kmeans_fit
 
-    raw = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
+    raw = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     vecs = raw.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
@@ -678,9 +684,7 @@ def run_token_accounting_stream(spark, sf_dir: str):
     as FOUR micro-batches (doc_id % 4 slices) through a
     TokenAccountingMergeSink; returns the final per-source token
     ledger."""
-    raw = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text", "source"
-    )
+    raw = load_table(spark, sf_dir, "documents").select("doc_id", "text", "source")
     return replay(
         raw, F.col("doc_id") % 4, TokenAccountingMergeSink,
         lambda st: st.select("source", *TokenAccountingMergeSink.COUNTERS),
@@ -740,11 +744,7 @@ def run_quantile_state_stream(spark, sf_dir: str):
     stream's offline quantizer); returns the per-event-type and
     '__all__' quantile report read off the merged state."""
     from ..plans.relational import _QPM_BUCKETS, _quantile_pick
-    from ..schemas import load_table
-
-    raw = load_table(spark, sf_dir, "events").select(
-        "event_id", "event_type", "value"
-    )
+    raw = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
     mn, mx = raw.agg(F.min("value"), F.max("value")).first()
     B = _QPM_BUCKETS
 
@@ -1267,8 +1267,6 @@ def run_cusum_stream(spark, sf_dir: str):
     per-event cusum table (same shape/values as the batch
     timeseries_cusum_drift entry — its SQL oracle)."""
     from ..plans.analytics import cusum_report
-    from ..schemas import load_table
-
     raw = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "value"
     )
@@ -1334,9 +1332,7 @@ def run_url_dedup_stream(spark, sf_dir: str):
     from ..operators.dedup import with_url_column
 
     raw = with_url_column(
-        spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-            "doc_id", "source"
-        )
+        load_table(spark, sf_dir, "documents").select("doc_id", "source")
     ).select("doc_id", "url")
     return replay(
         raw, F.col("doc_id") % 4, UrlDedupMergeSink,
@@ -1514,9 +1510,7 @@ def run_topk_stream(spark, sf_dir: str, k: int = 10):
     """Streaming exact top-k heavy hitters end-to-end: orders replayed
     as FOUR micro-batches through a TopKCountMergeSink, then the top-k
     report (count DESC, key ASC) derived FROM THE STATE."""
-    raw = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey", "o_custkey"
-    )
+    raw = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     return replay(
         raw, F.col("o_orderkey") % 4, TopKCountMergeSink,
         lambda st: st.select(
@@ -1556,9 +1550,7 @@ def run_token_freq_stream(spark, sf_dir: str):
     checks the streaming path)."""
     from ..plans.llm_data import coverage_curve
 
-    raw = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
+    raw = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return replay(raw, F.col("doc_id") % 4, TokenFreqMergeSink, coverage_curve)
 
 
@@ -1598,8 +1590,6 @@ def run_freshness_stream(spark, sf_dir: str):
     micro-batches through a FreshnessMergeSink; the final per-type
     freshness report (counts, epoch bounds, lag vs HWM, trailing-24 h
     count) is a pure read-off of the (type, hour-bucket) state grid."""
-    from ..schemas import load_table
-
     def read_off(state):
         hwm = state.agg(
             F.max("max_ts").alias("hwm"),
@@ -1635,9 +1625,7 @@ def run_freshness_stream(spark, sf_dir: str):
             )
         )
 
-    raw = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "event_type"
-    )
+    raw = load_table(spark, sf_dir, "events").select("event_id", "ts", "event_type")
     return replay(raw, F.col("event_id") % 4, FreshnessMergeSink, read_off)
 
 
@@ -1774,7 +1762,5 @@ def run_countmin_stream(spark, sf_dir: str):
             ),
         )
 
-    raw = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey", "o_custkey"
-    )
+    raw = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     return replay(raw, F.col("o_orderkey") % 4, CountMinMergeSink, read_off)

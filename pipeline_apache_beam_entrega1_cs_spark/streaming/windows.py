@@ -20,18 +20,18 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Schema must be the RAW file schema (ts is a nanosecond long — see
+    # The file stream source needs the schema up front: the RAW file
+    # schema from the footer (ts may be a nanosecond long — see
     # schemas.load_table); the ns->us conversion reapplies on the stream.
-    from ..schemas import ensure_session_confs, normalize_nanos_ts
+    from ..schemas import ensure_session_confs, footer_schema, normalize_nanos_ts
 
     # The driver harness builds its OWN SparkSession: the nanos-timestamp
     # and UTC confs must be (re)applied here, not assumed from get_spark.
     ensure_session_confs(spark)
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     # The file stream source requires a directory; glob-filter to the one
     # events file inside the sf dir.
     stream = (
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(footer_schema(f"{sf_dir}/events.parquet"))
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )

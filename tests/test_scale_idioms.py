@@ -1048,3 +1048,46 @@ def test_no_copied_blocks_in_package():
         }
     )
     assert runs == [], "copied blocks:\n" + "\n".join(", ".join(r) for r in runs)
+
+
+def _reader_chain(call: ast.Call) -> list[str]:
+    """Attribute names along ``call``'s receiver chain, innermost last:
+    ``spark.read.schema(s).parquet(p)`` gives ``["schema", "read",
+    "spark"]``."""
+    names, node = [], call.func.value
+    while True:
+        if isinstance(node, ast.Call):
+            node = node.func
+        elif isinstance(node, ast.Attribute):
+            names.append(node.attr)
+            node = node.value
+        else:
+            if isinstance(node, ast.Name):
+                names.append(node.id)
+            return names
+
+
+def test_no_inferred_table_reads():
+    """Every parquet read of a testdata table (a ``.parquet(...)`` call
+    on a ``read``/``readStream`` chain whose path mentions ``sf_dir``)
+    passes its schema with ``.schema(...)``: without one, Spark runs a
+    schema-inference job when the plan is built. ``schemas.load_table``
+    is the read to use. A failure names each such read by file:line."""
+    root = Path(__file__).resolve().parents[1]
+    package = root / "pipeline_apache_beam_entrega1_cs_spark"
+    inferred = []
+    for path in sorted(package.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "parquet"
+                and any("sf_dir" in ast.unparse(a) for a in node.args)
+            ):
+                continue
+            chain = _reader_chain(node)
+            if {"read", "readStream"} & set(chain) and "schema" not in chain:
+                inferred.append((str(path.relative_to(root)), node.lineno))
+    assert inferred == [], "parquet reads without a schema:\n" + "\n".join(
+        f"{p}:{n}" for p, n in sorted(inferred)
+    )

@@ -2,13 +2,16 @@
 CSV delimiter sniffing, header aliasing, duplicate/empty-country rows,
 alias back-fill override, multi-line and whitespace-padded fields,
 header-only tables; JSONL dict-only rule, also differentially against
-``json.loads``."""
+``json.loads``; parquet footer schemas, differentially against Spark's
+schema inference."""
 
 from __future__ import annotations
 
 import itertools
 import json
 from collections import Counter
+from decimal import Decimal
+from pathlib import Path
 
 import pytest
 from hypothesis import HealthCheck, example, given, settings
@@ -17,7 +20,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 import bench_fidelity
-from pipeline_apache_beam_entrega1_cs_spark.schemas import FAN_ENGAGEMENT_SCHEMA
+from perfbench.layers import id_snapshot
+from pipeline_apache_beam_entrega1_cs_spark.schemas import (
+    FAN_ENGAGEMENT_SCHEMA,
+    TESTDATA_TABLES,
+    footer_schema,
+    load_table,
+    normalize_nanos_ts,
+)
 
 
 def write(tmp_path, name, content):
@@ -188,7 +198,14 @@ def _json_line(draw):
     return draw(_SPACE) + shape.format(o=obj) + draw(_SPACE)
 
 
-_LINE = st.one_of(_json_line(), st.text(st.characters(blacklist_characters="\r\n"), max_size=12))
+# lone surrogates (category Cs) cannot be written to a UTF-8 file at all
+_LINE = st.one_of(
+    _json_line(),
+    st.text(
+        st.characters(blacklist_characters="\r\n", blacklist_categories=("Cs",)),
+        max_size=12,
+    ),
+)
 _file_ids = itertools.count()
 
 
@@ -241,3 +258,103 @@ def test_custom_python_datasource_partitions(spark):
     assert all(len(r["resid"]) == 1 for r in parts)  # one residue class each
     ids = sorted(r["id"] for r in df.select("id").collect())
     assert ids == list(range(40))
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_footer_schema_matches_inferred_testdata(spark, sf):
+    """Every testdata table's footer schema is the schema Spark infers
+    for it, so reading with it changes nothing but the job count."""
+    d = Path("/root/testdata") / sf
+    if not d.is_dir():
+        pytest.skip(f"{d} absent")
+    for t in TESTDATA_TABLES:
+        p = str(d / f"{t}.parquet")
+        assert footer_schema(p) == spark.read.parquet(p).schema, t
+
+
+def _typed_parquet(tmp_path) -> str:
+    """Path of a pyarrow-written ``typed.parquet`` covering the types
+    the driver's tables use or could: timestamp[ns] (kept as
+    TIMESTAMP(NANOS)), tz-less us/ms timestamps, a UTC-adjusted
+    timestamp, a non-null column, decimal, date, bool, a float list and
+    a struct."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t0 = dt.datetime(2024, 3, 10, 6, 30, 15, 123456)
+    schema = pa.schema(
+        [
+            ("ts", pa.timestamp("ns")),
+            ("ts_us", pa.timestamp("us")),
+            ("ts_ms", pa.timestamp("ms")),
+            ("ts_utc", pa.timestamp("us", tz="UTC")),
+            pa.field("k", pa.int64(), nullable=False),
+            ("amount", pa.decimal128(12, 2)),
+            ("day", pa.date32()),
+            ("flag", pa.bool_()),
+            ("vec", pa.list_(pa.float32())),
+            ("rec", pa.struct([pa.field("a", pa.int32(), nullable=False), ("b", pa.string())])),
+        ]
+    )
+    table = pa.table(
+        {
+            "ts": [1_710_052_215_123_456_789, None],
+            "ts_us": [t0, None],
+            "ts_ms": [t0, t0],
+            "ts_utc": [t0, None],
+            "k": [1, 2],
+            "amount": [Decimal("12.34"), None],
+            "day": [dt.date(2024, 3, 10), None],
+            "flag": [True, None],
+            "vec": [[1.5, None], None],
+            "rec": [{"a": 1, "b": "x"}, None],
+        },
+        schema=schema,
+    )
+    path = str(tmp_path / "typed.parquet")
+    pq.write_table(table, path, coerce_timestamps=None)
+    assert pq.read_schema(path).field("ts").type == pa.timestamp("ns")
+    return path
+
+
+def test_footer_schema_matches_inferred_all_types(spark, tmp_path):
+    """Also for the same table written back by Spark: a directory of
+    part files whose footers carry Spark's stored schema."""
+    path = _typed_parquet(tmp_path)
+    assert footer_schema(path) == spark.read.parquet(path).schema
+    spark_dir = str(tmp_path / "spark_written")
+    spark.read.parquet(path).write.parquet(spark_dir)
+    assert footer_schema(spark_dir) == spark.read.parquet(spark_dir).schema
+
+
+def test_footer_schema_load_matches_inferred_rows_on_hostile_session(spark, tmp_path):
+    """On a session with the nanos conf unset and a non-UTC zone (the
+    shape of a harness-built session, see test_adversarial_session),
+    ``load_table``'s footer-schema read gives the same ns and NTZ
+    timestamps as the inferred read it replaces; the ns value is
+    truncated to microseconds."""
+    path = _typed_parquet(tmp_path)
+    hostile = spark.newSession()
+    hostile.conf.set("spark.sql.session.timeZone", "America/New_York")
+    hostile.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    cols = ["k", "ts", "ts_us", "ts_ms", "ts_utc"]
+    got = load_table(hostile, str(tmp_path), "typed").select(cols).collect()
+    want = normalize_nanos_ts(hostile.read.parquet(path)).select(cols).collect()
+    assert sorted(got) == sorted(want)
+    first = next(r for r in got if r.k == 1)
+    assert first.ts.microsecond == 123456  # 1_710_052_215_123_456_789 ns
+
+
+def test_table_loads_and_stream_schema_run_no_spark_job(spark, sf_dir):
+    """Loading every testdata table and building the events file
+    stream start no Spark job: their schemas come from the footers.
+    Judged by the scheduler's next job and stage ids before and after."""
+    from pipeline_apache_beam_entrega1_cs_spark.streaming.windows import _stream_events
+
+    before = id_snapshot(spark)
+    frames = [load_table(spark, sf_dir, t) for t in TESTDATA_TABLES]
+    frames.append(_stream_events(spark, sf_dir))
+    assert before is not None and id_snapshot(spark) == before
+    assert all(f.columns for f in frames)
