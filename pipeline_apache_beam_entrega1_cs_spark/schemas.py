@@ -87,32 +87,20 @@ def ensure_session_confs(spark: SparkSession) -> None:
 SPARK_FOOTER_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
-def as_nullable(dt: T.DataType) -> T.DataType:
-    """``dt`` with every field, array element and map value nullable,
-    nested ones included: the form Spark's file sources report a schema
-    in, whatever the files declare."""
-    if isinstance(dt, T.StructType):
-        return T.StructType(
-            [T.StructField(f.name, as_nullable(f.dataType), True, f.metadata) for f in dt]
-        )
-    if isinstance(dt, T.ArrayType):
-        return T.ArrayType(as_nullable(dt.elementType), True)
-    if isinstance(dt, T.MapType):
-        return T.MapType(as_nullable(dt.keyType), as_nullable(dt.valueType), True)
-    return dt
-
-
 def footer_schema(path: str) -> T.StructType:
-    """The ``StructType`` Spark's parquet reader yields for the parquet
-    file ``path`` (for a directory, its first part file), read from the
-    file's footer by pyarrow on the driver — no Spark job, where
-    ``spark.read.parquet(path)`` without a schema runs one to infer it.
-    As in Spark's own inference, a file Spark wrote gives the schema
-    Spark stored in its footer. Otherwise Arrow types map as Spark's
+    """The schema of the parquet file ``path`` (for a directory, its
+    first part file), read from the file's footer by pyarrow on the
+    driver — no Spark job, where ``spark.read.parquet(path)`` without a
+    schema runs one to infer it. ``spark.read.schema(footer_schema(p))
+    .parquet(p)`` has the schema Spark infers for ``p``: as in Spark's
+    own inference, a file Spark wrote gives the schema Spark stored in
+    its footer. Otherwise Arrow types map as Spark's
     ``from_arrow_schema`` maps them (a tz-less timestamp as
     TIMESTAMP_NTZ), and a TIMESTAMP(NANOS) column is LongType, what the
-    reader yields under nanosAsLong. Every field is nullable. An Arrow
-    type ``from_arrow_schema`` cannot map raises ``TypeError``."""
+    reader yields under nanosAsLong. Fields keep the nullability the
+    file declares; Spark's file sources read a given schema as
+    nullable. An Arrow type ``from_arrow_schema`` cannot map raises
+    ``TypeError``."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import from_arrow_schema
@@ -122,7 +110,7 @@ def footer_schema(path: str) -> T.StructType:
     arrow = pq.read_schema(path)
     spark_schema = (arrow.metadata or {}).get(SPARK_FOOTER_KEY)
     if spark_schema is not None:
-        return as_nullable(T.StructType.fromJson(json.loads(spark_schema)))
+        return T.StructType.fromJson(json.loads(spark_schema))
     arrow = pa.schema(
         [
             f.with_type(pa.int64())
@@ -131,7 +119,7 @@ def footer_schema(path: str) -> T.StructType:
             for f in arrow
         ]
     )
-    return as_nullable(from_arrow_schema(arrow, prefer_timestamp_ntz=True))
+    return from_arrow_schema(arrow, prefer_timestamp_ntz=True)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

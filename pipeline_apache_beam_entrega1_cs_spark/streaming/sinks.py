@@ -40,7 +40,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..schemas import as_nullable, ensure_session_confs, load_table
+from ..schemas import ensure_session_confs, footer_schema, load_table
 
 
 class IdempotentParquetSink:
@@ -152,7 +152,6 @@ class MergeSink:
 
     def __init__(self, state_dir: str) -> None:
         self.state = state_dir
-        self.schema = None  # nullable schema of the state last written
         os.makedirs(os.path.dirname(state_dir), exist_ok=True)
 
     def is_committed(self, batch_id: int) -> bool:
@@ -174,18 +173,15 @@ class MergeSink:
         cur = _current_state(self.state)
         prev = None if cur is None else self.read_state(batch_df.sparkSession, cur)
         tmp = f"{self.state}_tmp{batch_id}"
-        new = self.merge(batch_df, prev)
-        new.write.mode("overwrite").parquet(tmp)
-        self.schema = as_nullable(new.schema)
+        self.merge(batch_df, prev).write.mode("overwrite").parquet(tmp)
         _install_state(self.state, tmp, batch_id)  # marker atomic w/ state
 
     def read_state(self, spark, path: str) -> DataFrame:
-        """The state parquet at ``path``, read with the schema this sink
-        last wrote, so the read runs no schema-inference job. A sink
-        that has written nothing yet over an existing state (a restarted
-        query) has no schema to give and lets Spark infer it."""
-        reader = spark.read if self.schema is None else spark.read.schema(self.schema)
-        return reader.parquet(path)
+        """The state parquet at ``path``, read with the schema its part
+        files' footers carry (:func:`footer_schema`), so the read runs
+        no schema-inference job, also in a sink restarted over an
+        existing state."""
+        return spark.read.schema(footer_schema(path)).parquet(path)
 
 
 def _fold(prev: DataFrame | None, inc: DataFrame, keys, *aggs) -> DataFrame:

@@ -269,7 +269,9 @@ def test_footer_schema_matches_inferred_testdata(spark, sf):
         pytest.skip(f"{d} absent")
     for t in TESTDATA_TABLES:
         p = str(d / f"{t}.parquet")
-        assert footer_schema(p) == spark.read.parquet(p).schema, t
+        assert spark.read.schema(footer_schema(p)).parquet(p).schema == (
+            spark.read.parquet(p).schema
+        ), t
 
 
 def _typed_parquet(tmp_path) -> str:
@@ -321,12 +323,22 @@ def _typed_parquet(tmp_path) -> str:
 
 def test_footer_schema_matches_inferred_all_types(spark, tmp_path):
     """Also for the same table written back by Spark: a directory of
-    part files whose footers carry Spark's stored schema."""
+    part files whose footers carry Spark's stored schema. That is the
+    shape of a MergeSink state, which a fresh sink (a restarted query)
+    reads with no Spark job."""
+    from pipeline_apache_beam_entrega1_cs_spark.streaming.sinks import MergeSink
+
     path = _typed_parquet(tmp_path)
-    assert footer_schema(path) == spark.read.parquet(path).schema
     spark_dir = str(tmp_path / "spark_written")
     spark.read.parquet(path).write.parquet(spark_dir)
-    assert footer_schema(spark_dir) == spark.read.parquet(spark_dir).schema
+    for p in (path, spark_dir):
+        assert spark.read.schema(footer_schema(p)).parquet(p).schema == (
+            spark.read.parquet(p).schema
+        ), p
+    before = id_snapshot(spark)
+    state = MergeSink(str(tmp_path / "sink" / "state")).read_state(spark, spark_dir)
+    assert before is not None and id_snapshot(spark) == before
+    assert state.schema == spark.read.parquet(spark_dir).schema
 
 
 def test_footer_schema_load_matches_inferred_rows_on_hostile_session(spark, tmp_path):
