@@ -2,7 +2,8 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"queries": {name: sec}, "sf": ...}; progress goes to stderr, one line
+per wait, warmup query, timed query and steal-retry pass.
 
 Each query is forced end-to-end with a noop sink (full materialization on
 the executors, nothing collected to the driver — the same shape a real
@@ -20,7 +21,7 @@ import sys
 import time
 
 from measure import (
-    Window, load_avg, run_min, sf_of, timed_noop, warm_dir, write_json,
+    Window, carried, load_avg, run_min, sf_of, timed_noop, warm_dir, write_json,
 )
 
 HERE = os.path.dirname(__file__) or "."
@@ -56,6 +57,11 @@ MAX_LOAD_WAITS = 3
 # re-run, at most STEAL_ATTEMPTS passes in all.
 MAX_STEAL_S = 1.5
 STEAL_ATTEMPTS = 4
+
+
+def log(msg: str) -> None:
+    """One progress line on stderr; stdout carries only the JSON line."""
+    print(msg, file=sys.stderr, flush=True)
 
 
 def control_loop_s() -> float:
@@ -215,6 +221,7 @@ def main() -> None:
     while (
         os.getloadavg()[0] > START_LOAD or os.getloadavg()[1] > START_LOAD5
     ) and start_waits < START_MAX_WAITS:
+        log(f"start wait {start_waits + 1}/{START_MAX_WAITS}: load {load_avg()}")
         time.sleep(START_WAIT_S)
         start_waits += 1
     load_avg_start = load_avg()
@@ -222,16 +229,13 @@ def main() -> None:
     # Calibrated control loop + retry-on-steal: if the pure-Python loop
     # runs >1.3x its quiet-machine calibration, the window is steal/load
     # inflated — wait (bounded) for it to settle before measuring.
-    calibration = None
-    try:
-        with open(os.path.join(HERE, "BENCH_CALIBRATION.json")) as f:
-            calibration = json.load(f)["control_loop_s"]
-    except (OSError, KeyError, ValueError):
-        pass
+    calibration = carried(os.path.join(HERE, "BENCH_CALIBRATION.json"), "control_loop_s") or None
     control_start = control_loop_s()
     control_waits = 0
     if calibration:
         while control_start > 1.3 * calibration and control_waits < START_MAX_WAITS:
+            log(f"control-loop wait {control_waits + 1}/{START_MAX_WAITS}: "
+                f"{control_start:.3f}s vs calibration {calibration}s")
             time.sleep(START_WAIT_S)
             control_waits += 1
             control_start = control_loop_s()
@@ -242,22 +246,23 @@ def main() -> None:
     registry = all_queries()
 
     # Warmup at the smallest SF: JVM JIT, codegen cache, shuffle services.
-    for name in BENCH_QUERIES:
-        _, err, _ = timed_noop(spark, registry[name].fn, warm_dir(sf_dir), 1)
-        if err:  # keep the bench robust: report, don't die
-            print(f"warmup {name} failed: {err}", file=sys.stderr)
+    for i, name in enumerate(BENCH_QUERIES, 1):
+        runs, err, _ = timed_noop(spark, registry[name].fn, warm_dir(sf_dir), 1)
+        # keep the bench robust: report a failure, don't die
+        log(f"warmup [{i}/{len(BENCH_QUERIES)}] {name}: "
+            + (f"{runs[0]}s" if runs else f"failed: {err}"))
 
     load_events: list[dict] = []
 
-    def measure_all() -> tuple[dict, dict, float | None, dict]:
+    def measure_all(attempt: int) -> tuple[dict, dict, float | None, dict]:
         """One full pass over BENCH_QUERIES; returns (timings, runs,
-        steal seconds accrued during THIS pass, per-query executor
-        task-time ms for the min-wall run)."""
+        steal seconds accrued during THIS pass, per-query Spark counts
+        of the min-wall run, None where unreadable)."""
         window = Window()
         timings: dict[str, float] = {}
         runs: dict[str, list[float]] = {}
-        task_times: dict[str, int] = {}
-        for name in BENCH_QUERIES:
+        layers: dict[str, dict | None] = {}
+        for i, name in enumerate(BENCH_QUERIES, 1):
             # Ambient-load guard: a busy host inflates every wall time
             # uniformly and masquerades as a regression (rounds 2 and 4
             # both hit this). If the 1-min load average is above
@@ -268,6 +273,7 @@ def main() -> None:
             # so self-load can't stall the harness.
             load1 = os.getloadavg()[0]
             if load1 > MAX_LOAD and len(load_events) < MAX_LOAD_WAITS:
+                log(f"load wait before {name}: load1 {load1:.2f} > {MAX_LOAD}")
                 time.sleep(LOAD_WAIT_S)
                 load_events.append({
                     "query": name, "load_before": round(load1, 2),
@@ -275,20 +281,11 @@ def main() -> None:
                 })
             # min of 3 measured runs: local-mode wall times swing ±20%
             # under shared-machine load; min is the stable estimator.
-            runs[name], err, task = timed_noop(
-                spark, registry[name].fn, sf_dir, 3, task_time=True
-            )
-            if err:
-                print(f"bench {name} failed: {err}", file=sys.stderr)
+            runs[name], err, layers[name] = timed_noop(spark, registry[name].fn, sf_dir, 3)
             timings[name] = run_min(runs[name])
-            # Executor task-time accounting (PERF_r15
-            # scaling.suspect_cpus_ignored; VERDICT r15 item 2): at sf0.1
-            # every wall time is overhead-dominated, so an 8-core and a
-            # 32-core run look identical; task_time / wall ≈ effective
-            # cores on the data-heavy queries, at any SF.
-            if task is not None:
-                task_times[name] = task
-        return timings, runs, window.steal_s(), task_times
+            log(f"pass {attempt} [{i}/{len(BENCH_QUERIES)}] {name}: min {timings[name]}s, "
+                f"steal so far {window.steal_s()}s{f', error: {err}' if err else ''}")
+        return timings, runs, window.steal_s(), layers
 
     # Steal-robust measurement (round-8 lesson: BENCH_r08 carried
     # steal_delta_s=25.4 s and every wall time inflated 7-25% — the
@@ -302,17 +299,19 @@ def main() -> None:
     attempts: list[dict] = []
     passes = []
     for attempt in range(1, STEAL_ATTEMPTS + 1):
-        passes.append(measure_all())
+        passes.append(measure_all(attempt))
         steal = passes[-1][2]
         attempts.append(
             {"attempt": attempt, "steal_delta_s": steal,
              "subtotal_r01_comparable": subtotal_r01(passes[-1][0])}
         )
-        if steal is None or steal <= MAX_STEAL_S:
+        if steal is None or steal <= MAX_STEAL_S or attempt == STEAL_ATTEMPTS:
             break
+        log(f"steal-retry: pass {attempt} accrued {steal}s of steal > {MAX_STEAL_S}s; "
+            f"pass {attempt + 1}/{STEAL_ATTEMPTS} after {START_WAIT_S:.0f}s")
         time.sleep(START_WAIT_S)  # let the neighbor drain before retrying
     # the first lowest-steal pass (an unreadable steal counts as 0)
-    timings, all_runs, steal_delta_s, task_times = min(passes, key=lambda p: p[2] or 0.0)
+    timings, all_runs, steal_delta_s, layers = min(passes, key=lambda p: p[2] or 0.0)
 
     total = round(sum(t for t in timings.values() if t >= 0), 3)
     subtotal = subtotal_r01(timings)
@@ -348,7 +347,10 @@ def main() -> None:
         # every query is overhead-dominated (VERDICT r15 item 2 —
         # suspect_cpus_ignored despite session.py honoring
         # $SPARK_GRAFT_CPUS).
-        "task_time_ms": task_times,
+        "task_time_ms": {n: c["task_ms"] for n, c in layers.items() if c},
+        # the same run's jobs, stages, tasks, task ms, shuffle and spill
+        # bytes (None where Spark's bookkeeping could not be read)
+        "layers": layers,
         # every measured pass (steal + comparable subtotal): >1 entry
         # means the steal-retry loop fired and the kept reading is the
         # lowest-steal one.
@@ -370,7 +372,7 @@ def main() -> None:
     try:
         write_json(os.path.join(HERE, "BENCH_LAST.json"), result)
     except OSError as ex:
-        print(f"BENCH_LAST.json write failed: {ex}", file=sys.stderr)
+        log(f"BENCH_LAST.json write failed: {ex}")
     print(json.dumps(result))
 
     # Persist the session-best QUIET reading as a first-class artifact:
@@ -385,11 +387,7 @@ def main() -> None:
     )
     if quiet and all(t >= 0 for t in timings.values()):
         quiet_path = os.path.join(HERE, "BENCH_quiet.json")
-        try:
-            with open(quiet_path) as f:
-                prev = json.load(f)["subtotal_r01_comparable"]
-        except (OSError, KeyError, ValueError):
-            prev = None
+        prev = carried(quiet_path, "subtotal_r01_comparable") or None
         if prev is None or subtotal < prev:
             try:
                 sha = subprocess.run(

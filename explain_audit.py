@@ -6,7 +6,9 @@ frame's ``explain("formatted")``, and :func:`entry_plans` adds the plan
 of every SQL execution a registry entry runs while it builds that frame
 (pins, caches, eager fits, layout writes). The registry plan gates in
 ``tests/test_scale_idioms.py`` and the audit below read :func:`smells`
-and :func:`operator_counts` over those plans. Regenerate EXPLAIN.md with:
+and :func:`operator_counts` over those plans; the audit also counts
+their Python/Arrow nodes with ``perfbench.layers.python_nodes``.
+Regenerate EXPLAIN.md with:
 
     python explain_audit.py > EXPLAIN.md
 """
@@ -18,6 +20,8 @@ import io
 import os
 import re
 from collections import Counter
+
+from perfbench.layers import python_nodes
 
 # Entries whose build runs side effects (stream replays, sink writes);
 # the registry plan gates do not build them.
@@ -205,6 +209,9 @@ def main() -> None:
     print("under an InMemoryRelation are counted apart as cached (they ran")
     print("when the relation was materialized); an executed adaptive plan")
     print("counts its final plan only.")
+    print("Python nodes are the Python/Arrow exec operators")
+    print("(`perfbench.layers.python_nodes`) of the final plan and the build")
+    print("executions together.")
     print()
     print(f"Entries: {len(registry)} (full registry).")
     print()
@@ -228,6 +235,7 @@ def main() -> None:
         if schemas:
             cols = schemas[0].split(",")
             print(f"- first scan reads {len(cols)} column(s): `{schemas[0][:120]}`")
+        print(f"- python nodes: {python_nodes([plan, *builds])}")
         for wk, wv in (spec.plan_waivers or {}).items():
             print(f"- waiver `{wk}`: {wv}")
         print()

@@ -10,10 +10,12 @@ cannot tell them apart.
 
 Methodology: both SFs are measured per entry back-to-back in one
 process, min-of-N each, so both sides share the entry's plan/codegen
-JIT warmth and the ratio is not polluted by one cold side. The gate
-(tests/test_growth_baseline.py) flags big-side entries over an absolute
-floor whose growth exceeds GROWTH_RATIO without a `growth_waivers`
-adjudication recorded in SCALING.md.
+JIT warmth and the ratio is not polluted by one cold side; each side
+records its fastest run's Spark counts (``small_layers``/``big_layers``,
+see ``measure.timed_noop``). The gate (tests/test_growth_baseline.py)
+flags big-side entries over an absolute floor whose growth exceeds
+GROWTH_RATIO without a `growth_waivers` adjudication recorded in
+SCALING.md.
 
 Usage:
     python growth_sweep.py [GROWTH_r<N>.json]
@@ -50,8 +52,9 @@ def main() -> None:
     registry = all_queries()
 
     def measure(name: str) -> tuple[dict, str]:
-        small_runs, err_s, _ = timed_noop(spark, registry[name].fn, small_dir, SWEEP_RUNS)
-        big_runs, err_b, _ = timed_noop(spark, registry[name].fn, big_dir, SWEEP_RUNS)
+        fn = registry[name].fn
+        small_runs, err_s, small_layers = timed_noop(spark, fn, small_dir, SWEEP_RUNS)
+        big_runs, err_b, big_layers = timed_noop(spark, fn, big_dir, SWEEP_RUNS)
         small_min, big_min = run_min(small_runs), run_min(big_runs)
         # Record WHICH side failed (ADVICE r15): with a single combined
         # message, a small-side error could mask or misattribute a
@@ -64,6 +67,8 @@ def main() -> None:
             "big_runs": big_runs,
             "small_min": small_min,
             "big_min": big_min,
+            "small_layers": small_layers,
+            "big_layers": big_layers,
             "growth": (
                 round(big_min / small_min, 2) if small_min > 0 and big_min > 0 else -1.0
             ),

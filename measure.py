@@ -6,10 +6,11 @@ layout; this module is the one owner of:
 
 - hypervisor steal (``/proc/stat`` ticks converted with ``SC_CLK_TCK``)
   and the load-average window every artifact records (:class:`Window`);
-- the status-store stage snapshot behind executor task time
-  (:func:`stage_snapshot`);
-- one timed noop-sink run, min-of-N with a ``try`` per run
-  (:func:`timed_noop`);
+- one timed noop-sink run, min-of-N with a ``try`` per run, and the
+  fastest run's Spark counts (:func:`timed_noop`). The counts come from
+  the benchmark's own id-window readers in ``perfbench/layers.py``: the
+  jobs and stages a run created are exactly the ids between its start
+  and end snapshots, so a read costs O(window), not O(retained stages);
 - the resumable ``.jsonl`` entry loop of the sweeps (:func:`resume`).
 """
 
@@ -19,7 +20,9 @@ import json
 import os
 import sys
 import time
-from typing import Callable, Collection
+from typing import Any, Callable, Collection
+
+from perfbench.layers import STAGE_FIELDS, id_snapshot, stage_counts, wait_listener_bus
 
 # Runs per entry and SF side of the registry and growth sweeps (every
 # committed SWEEP/GROWTH artifact used 2).
@@ -77,48 +80,24 @@ class Window:
                 "steal_delta_s": self.steal_s()}
 
 
-def stage_snapshot(spark) -> tuple[int, dict[int, int]] | None:
-    """(max stage id seen, {stage_id: executorRunTime ms}) from the app
-    status store, or None when the store cannot be read — a failed
-    snapshot must not pass for "no stages yet", or a run would be
-    charged every stage of the session."""
-    try:
-        store = spark.sparkContext._jsc.sc().statusStore()
-        # Spark 4.1 signature: stageList(statuses, details,
-        # withSummaries, quantiles, taskStatus) — py4j sees no Scala
-        # default args, so fetch each default explicitly.
-        defaults = [getattr(store, f"stageList$default${i}")() for i in (2, 3, 4, 5)]
-        seq = store.stageList(None, *defaults)
-        out: dict[int, int] = {}
-        for i in range(seq.size()):
-            s = seq.apply(i)
-            out[s.stageId()] = int(s.executorRunTime())
-        return (max(out) if out else -1), out
-    except Exception:
-        return None
-
-
 def timed_noop(
-    spark, fn: Callable, sf_dir: str, n_runs: int, task_time: bool = False
-) -> tuple[list[float], str | None, int | None]:
+    spark, fn: Callable, sf_dir: str, n_runs: int
+) -> tuple[list[float], str | None, dict | None]:
     """Time ``fn(spark, sf_dir)`` plus a noop-sink write (full
     materialization on the executors, nothing collected) ``n_runs``
     times, each run in its own ``try`` so one transient failure keeps
     the other runs' walls.
 
     Returns (walls of the runs that succeeded, the last error or None,
-    executor task ms of the fastest run or None). Task time sums the
-    stages created by the run: stage ids increase monotonically, so
-    those are exactly the ids above the pre-run max, whatever the
-    status store has evicted. It is read only with ``task_time``: each
-    snapshot, taken outside the timed region, costs ~0.2 s once the
-    status store holds its 1000 retained stages (local[4] on a 4-vCPU
-    VM), which a full-registry sweep would pay 1,600-3,200 times."""
-    snapshot = stage_snapshot if task_time else (lambda _spark: None)
-    measured: list[tuple[float, int | None]] = []
+    the fastest run's counts or None). The counts are its jobs, its
+    completed stages and their summed ``STAGE_FIELDS`` (tasks, task ms,
+    shuffle read/write, spill); every read happens outside the timed
+    region. They are None, never a session-wide sum, when a snapshot or
+    the status store cannot be read."""
+    measured: list[tuple[float, tuple | None, tuple | None]] = []
     err = None
     for _ in range(n_runs):
-        before = snapshot(spark)
+        before = id_snapshot(spark)
         t0 = time.perf_counter()
         try:
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
@@ -126,15 +105,18 @@ def timed_noop(
             err = f"{type(ex).__name__}: {ex}"[:300]
             continue
         wall = round(time.perf_counter() - t0, 3)
-        after = snapshot(spark)
-        task = (
-            None  # unknown, never a session-wide sum
-            if before is None or after is None or not after[1]
-            else sum(v for k, v in after[1].items() if k > before[0])
-        )
-        measured.append((wall, task))
-    best = min(measured, key=lambda m: m[0])[1] if measured else None
-    return [w for w, _ in measured], err, best
+        measured.append((wall, before, id_snapshot(spark)))
+    walls = [w for w, _, _ in measured]
+    _, lo, hi = min(measured, key=lambda m: m[0], default=(None, None, None))
+    if lo is None or hi is None:
+        return walls, err, None
+    wait_listener_bus(spark)
+    stages = stage_counts(spark, lo[1], hi[1])
+    if stages is None:
+        return walls, err, None
+    counts = {"jobs": hi[0] - lo[0], "stages": len(stages)}
+    counts.update({k: sum(c[k] for c in stages.values()) for k in STAGE_FIELDS})
+    return walls, err, counts
 
 
 def run_min(runs: list[float]) -> float:
@@ -151,10 +133,12 @@ def error_fields(err: str | None, measured: bool) -> dict:
     return {"transient_error" if measured else "error": err}
 
 
-def carried(out_path: str, key: str) -> dict:
-    """``key`` of the artifact already at ``out_path`` ({} when absent):
-    hand-added waiver adjudications survive a rerun or resume instead
-    of being reset to {} and re-arming the gate."""
+def carried(out_path: str, key: str) -> Any:
+    """``key`` of the JSON artifact already at ``out_path`` ({} when the
+    file, the key or its value is absent or unreadable). The sweeps carry
+    hand-added waiver adjudications through a rerun or resume with it
+    instead of resetting them to {} and re-arming the gate; ``bench.py``
+    reads its calibration and stored quiet subtotal with it."""
     try:
         with open(out_path) as f:
             return json.load(f).get(key) or {}

@@ -162,12 +162,14 @@ def with_magic_payload(docs: DataFrame) -> DataFrame:
     )
 
 
-def _le_uint(p, pos: int, nbytes: int):
+def _le_uint(p, pos, nbytes: int):
     """Little-endian unsigned integer (BIGINT) of the ``nbytes`` bytes
-    of binary column ``p`` from 1-based position ``pos``."""
+    of binary column ``p`` from 1-based position ``pos`` (an int, or a
+    long Column cast to int per byte)."""
     v = F.lit(0).cast("long")
     for i in range(nbytes):
-        v = v + F.conv(F.hex(F.substring(p, pos + i, 1)), 16, 10).cast(
+        at = pos + i if isinstance(pos, int) else (pos + i).cast("int")
+        v = v + F.conv(F.hex(F.substring(p, at, 1)), 16, 10).cast(
             "long"
         ) * F.lit(256**i)
     return v
@@ -534,14 +536,7 @@ def riff_chunk_index(docs_with_payload: DataFrame) -> DataFrame:
         F.hex(F.substring(p, 9, 4)) == "57415645"
     )
 
-    def le_u32(off):  # off: 0-based Column
-        v = F.lit(0).cast("long")
-        for i in range(4):
-            v = v + F.conv(
-                F.hex(F.substring(p, (off + 1 + i).cast("int"), 1)), 16, 10
-            ).cast("long") * F.lit(256**i)
-        return v
-
+    le_u32 = lambda off: _le_uint(p, off + 1, 4)  # noqa: E731 — off: 0-based Column
     step = lambda sz: sz + 8 + sz % 2  # noqa: E731 — header + data + pad
     chunks = F.aggregate(
         F.sequence(F.lit(1), F.lit(_RIFF_WALK_STEPS)),

@@ -2107,17 +2107,7 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 CURATION_PIPELINE_SQL = rf"""
-WITH tok AS (
-  SELECT doc_id, t FROM documents, UNNEST({_TOKS}) AS u(t) WHERE trim(text) <> ''
-), votes AS (
-  SELECT doc_id, cand_lang, COUNT(*) AS votes
-  FROM tok JOIN (VALUES {_MARKER_VALUES}) m(cand_lang, marker) ON t = marker
-  GROUP BY 1, 2
-), best AS (
-  SELECT doc_id, cand_lang,
-         row_number() OVER (PARTITION BY doc_id ORDER BY votes DESC, cand_lang ASC) AS rn
-  FROM votes
-), lang AS (
+WITH {_LANG_VOTES_SQL}, lang AS (
   SELECT d.doc_id, COALESCE(b.cand_lang, 'und') AS pred_lang
   FROM documents d LEFT JOIN best b ON d.doc_id = b.doc_id AND b.rn = 1
 ), enriched AS (
@@ -3321,12 +3311,14 @@ def eval_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _brier_sql() -> str:
+def _calib_bins_sql() -> str:
+    """The calibration oracles' CTEs: ``j`` (squashed probability ``p``
+    and gate label ``y`` per document) and ``bins`` (per probability
+    bin: ``n_b``, ``sum_p``, ``sum_y`` and the squared error
+    ``sum_sqerr``)."""
     B, lo, hi = _BRIER_BINS, _BRIER_LO, _BRIER_HI
-    return f"""
-WITH j AS (
-  SELECT s.doc_id,
-         round(least(greatest((s.logit - {lo}) / ({hi} - {lo}), 0.0), 1.0), 6)
+    return f"""j AS (
+  SELECT round(least(greatest((s.logit - {lo}) / ({hi} - {lo}), 0.0), 1.0), 6)
            AS p,
          CAST({_SQL_QSCORE} >= {_CALIB_QTH} AS BIGINT) AS y
   FROM ( {_qmodel_sql()} ) s JOIN documents d ON s.doc_id = d.doc_id
@@ -3340,7 +3332,12 @@ WITH j AS (
                             AS DECIMAL(24,12))) AS VARCHAR) AS DOUBLE)
            AS sum_sqerr
   FROM j GROUP BY 1
-), totals AS (
+)"""
+
+
+def _brier_sql() -> str:
+    return f"""
+WITH {_calib_bins_sql()}, totals AS (
   SELECT CAST(SUM(n_b) AS BIGINT) AS n, CAST(SUM(sum_y) AS BIGINT) AS n_pos
   FROM bins
 ), final AS (
@@ -3406,21 +3403,8 @@ def eval_expected_calibration_error(spark: SparkSession, sf_dir: str) -> DataFra
 
 
 def _ece_sql() -> str:
-    B, lo, hi = _BRIER_BINS, _BRIER_LO, _BRIER_HI
     return f"""
-WITH j AS (
-  SELECT round(least(greatest((s.logit - {lo}) / ({hi} - {lo}), 0.0), 1.0), 6)
-           AS p,
-         CAST({_SQL_QSCORE} >= {_CALIB_QTH} AS BIGINT) AS y
-  FROM ( {_qmodel_sql()} ) s JOIN documents d ON s.doc_id = d.doc_id
-), bins AS (
-  SELECT CAST(least(floor(p * {B}), {B - 1}) AS BIGINT) AS bin,
-         CAST(COUNT(*) AS BIGINT) AS n_b,
-         CAST(CAST(SUM(CAST(p AS DECIMAL(12,6))) AS VARCHAR) AS DOUBLE)
-           AS sum_p,
-         CAST(SUM(y) AS BIGINT) AS sum_y
-  FROM j GROUP BY 1
-), final AS (
+WITH {_calib_bins_sql()}, final AS (
   SELECT CAST(SUM(n_b) AS BIGINT) AS n,
          CAST(COUNT(*) AS BIGINT) AS n_nonempty_bins,
          CAST(CAST(SUM(CAST(round(n_b * abs(sum_p / n_b
@@ -4307,13 +4291,7 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 TEXT_NGRAM_NOVELTY_SQL = f"""
-WITH toks AS (
-  SELECT doc_id, {_TOKS} AS tk FROM documents WHERE trim(text) <> ''
-), sh AS (
-  SELECT DISTINCT doc_id, array_to_string(tk[i:i+2], ' ') AS shingle
-  FROM toks, UNNEST(generate_series(1, len(tk) - 2)) AS g(i)
-  WHERE len(tk) >= 3
-), seen AS (
+WITH {_SHINGLES_SQL}, seen AS (
   SELECT DISTINCT shingle FROM sh WHERE doc_id % 2 = 0
 ), newsh AS (
   SELECT doc_id, shingle FROM sh WHERE doc_id % 2 = 1

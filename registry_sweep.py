@@ -3,9 +3,10 @@
 ritual): times EVERY registry entry at $SPARK_GRAFT_SF_DIR (default
 sf0.1) with the same noop-sink shape bench.py uses, and writes one JSON
 file (default SWEEP_sf<sf>.json) mapping name -> {"runs": [...],
-"min": s}. The headline bench structurally cannot see regressions in
-the ~360 non-headline entries — the round-11 sweep caught 93 s / 25 s /
-13 s defects this way. Resumable (see ``measure.resume``). Usage:
+"min": s, "layers": the fastest run's Spark counts, see
+``measure.timed_noop``}. The headline bench structurally cannot see
+regressions in the ~360 non-headline entries — the round-11 sweep
+caught 93 s / 25 s / 13 s defects this way. Resumable (see ``measure.resume``). Usage:
 
     python registry_sweep.py [out.json]
 """
@@ -38,8 +39,9 @@ def main() -> None:
     registry = all_queries()
 
     def measure(name: str) -> tuple[dict, str]:
-        runs, err, _ = timed_noop(spark, registry[name].fn, sf_dir, SWEEP_RUNS)
-        rec = {"runs": runs, "min": run_min(runs), **error_fields(err, bool(runs))}
+        runs, err, layers = timed_noop(spark, registry[name].fn, sf_dir, SWEEP_RUNS)
+        rec = {"runs": runs, "min": run_min(runs), "layers": layers,
+               **error_fields(err, bool(runs))}
         return rec, f"{rec['min']}s{' ERROR' if err else ''}"
 
     results, _ = resume(out_path, registry, measure)

@@ -31,14 +31,46 @@ def _query(outcomes: list[bool]):
     return lambda spark, sf_dir: _frame(fail=not next(it))
 
 
+class _Spark:
+    """A stub session with what the id-window readers use: the DAG
+    scheduler's next job and stage ids, the status store's last attempt
+    of a stage, and the listener bus. ``run`` records one job."""
+
+    def __init__(self) -> None:
+        self.jobs = 0
+        self.task_ms: list[int] = []  # stage id -> executor run time
+        self.stages_read: list[int] = []
+        sc = SimpleNamespace(
+            dagScheduler=lambda: SimpleNamespace(
+                nextJobId=lambda: self.jobs, nextStageId=lambda: len(self.task_ms)
+            ),
+            statusStore=lambda: SimpleNamespace(lastStageAttempt=self._stage),
+            listenerBus=lambda: SimpleNamespace(waitUntilEmpty=lambda: None),
+        )
+        self.sparkContext = SimpleNamespace(_jsc=SimpleNamespace(sc=lambda: sc))
+
+    def run(self, *stage_ms: int) -> None:
+        """One job whose stages took ``stage_ms`` of task time each."""
+        self.jobs += 1
+        self.task_ms.extend(stage_ms)
+
+    def _stage(self, sid: int):
+        self.stages_read.append(sid)
+        ms = self.task_ms[sid]
+        return SimpleNamespace(
+            status=lambda: "COMPLETE", numCompleteTasks=lambda: 4,
+            executorRunTime=lambda: ms, shuffleReadBytes=lambda: 10,
+            shuffleWriteBytes=lambda: 20, memoryBytesSpilled=lambda: 0,
+            diskBytesSpilled=lambda: 1,
+        )
+
+
 def test_transient_failure_keeps_valid_min():
-    # object() has no status store: task time is unknown, never a sum
-    runs, err, task = measure.timed_noop(
-        object(), _query([False, True]), "sf", 2, task_time=True
-    )
+    # object() has no scheduler: the counts are unknown, never a sum
+    runs, err, counts = measure.timed_noop(object(), _query([False, True]), "sf", 2)
     assert len(runs) == 1 and runs[0] >= 0.0
     assert err.startswith("RuntimeError: executor lost")
-    assert task is None
+    assert counts is None
     assert measure.run_min(runs) == runs[0]
     assert measure.error_fields(err, bool(runs)) == {"transient_error": err}
 
@@ -52,43 +84,25 @@ def test_all_runs_failing_is_an_error_with_min_minus_one():
 
 
 def test_task_time_is_the_fastest_runs_new_stages(monkeypatch):
-    """Each run is charged only the stages created after its pre-run
-    snapshot; the returned task ms belong to the min-wall run."""
-    stages: dict[int, int] = {1: 999}  # a stage from before the runs
-    reads = []
-
-    class Store:
-        def __getattr__(self, name):  # stageList$default$N
-            return lambda: None
-
-        def stageList(self, *args):
-            reads.append(len(stages))
-            items = [
-                SimpleNamespace(stageId=lambda k=k: k, executorRunTime=lambda v=v: v)
-                for k, v in stages.items()
-            ]
-            return SimpleNamespace(size=lambda: len(items), apply=items.__getitem__)
-
-    sc = SimpleNamespace(statusStore=Store)
-    spark = SimpleNamespace(
-        sparkContext=SimpleNamespace(_jsc=SimpleNamespace(sc=lambda: sc))
-    )
+    """Each run owns the jobs and stages between its id snapshots; the
+    counts returned are the min-wall run's window alone, and only that
+    window is read from the status store."""
+    spark = _Spark()
+    spark.run(999)  # a job from before the runs
+    per_run = iter([(100,), (150, 50)])
     clock = iter([0.0, 5.0, 10.0, 11.0])  # run 1 takes 5 s, run 2 takes 1 s
 
-    def fn(spark, sf_dir):
-        stages[max(stages) + 1] = 100 * len(stages)
+    def fn(_spark, sf_dir):
+        spark.run(*next(per_run))
         return _frame()
 
     fake_time = SimpleNamespace(perf_counter=lambda: next(clock))
     monkeypatch.setattr(measure, "time", fake_time)
-    runs, err, task = measure.timed_noop(spark, fn, "sf", 2, task_time=True)
+    runs, err, counts = measure.timed_noop(spark, fn, "sf", 2)
     assert runs == [5.0, 1.0] and err is None
-    assert task == 200  # stage 3 of run 2, not stages 1-3
-    assert len(reads) == 4  # one snapshot before and one after each run
-    # without task_time the status store is never read
-    clock = iter([0.0, 1.0])
-    assert measure.timed_noop(spark, fn, "sf", 1) == ([1.0], None, None)
-    assert len(reads) == 4
+    assert counts == {"jobs": 1, "stages": 2, "tasks": 8, "task_ms": 200,
+                      "shuffle_read": 20, "shuffle_write": 40, "spill": 2}
+    assert spark.stages_read == [2, 3]  # run 2's stages, not 0-3
 
 
 def test_resume_skips_recorded_names_and_appends_new(tmp_path, capsys):

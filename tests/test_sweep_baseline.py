@@ -192,33 +192,33 @@ def test_regression_gate_logic_on_synthetic_sweeps(tmp_path, monkeypatch):
     sb.test_sweep_no_per_entry_regression_vs_previous_round()
 
 
-def test_bench_stage_snapshot_none_when_status_store_fails():
-    """measure.stage_snapshot reports an unreadable status store as None,
-    never as an empty "no stages yet" snapshot whose -1 max id would
-    charge a run with every stage of the session."""
+def test_bench_layers_none_when_spark_bookkeeping_fails():
+    """measure.timed_noop reports a run's counts as None when the id
+    snapshot or the status store cannot be read, never as an empty
+    window or a session-wide sum."""
     from types import SimpleNamespace
 
     import measure
 
     def raising():
-        raise RuntimeError("status store unavailable")
+        raise RuntimeError("unavailable")
 
-    class Store:
-        def __getattr__(self, name):  # stageList$default$N
-            return lambda: None
+    writer = SimpleNamespace(save=lambda: None)
+    writer.format = writer.mode = lambda _arg: writer
+    ids = iter(range(100))
+    dag = SimpleNamespace(nextJobId=lambda: next(ids), nextStageId=lambda: next(ids))
 
-        def stageList(self, *args):
-            stages = [
-                SimpleNamespace(stageId=lambda: 3, executorRunTime=lambda: 70),
-                SimpleNamespace(stageId=lambda: 5, executorRunTime=lambda: 20),
-            ]
-            return SimpleNamespace(size=lambda: 2, apply=lambda i: stages[i])
-
-    def stub(status_store):
-        sc = SimpleNamespace(statusStore=status_store)
-        return SimpleNamespace(
-            sparkContext=SimpleNamespace(_jsc=SimpleNamespace(sc=lambda: sc))
+    def counts(dag_scheduler, status_store):
+        sc = SimpleNamespace(
+            dagScheduler=dag_scheduler, statusStore=status_store,
+            listenerBus=lambda: SimpleNamespace(waitUntilEmpty=lambda: None),
         )
+        spark = SimpleNamespace(sparkContext=SimpleNamespace(_jsc=SimpleNamespace(sc=lambda: sc)))
+        fn = lambda _spark, _sf: SimpleNamespace(write=writer)  # noqa: E731
+        runs, err, layers = measure.timed_noop(spark, fn, "sf", 1)
+        assert len(runs) == 1 and err is None
+        return layers
 
-    assert measure.stage_snapshot(stub(raising)) is None
-    assert measure.stage_snapshot(stub(Store)) == (5, {3: 70, 5: 20})
+    store = SimpleNamespace(lastStageAttempt=lambda sid: raising())
+    assert counts(raising, lambda: store) is None  # id_snapshot unreadable
+    assert counts(lambda: dag, raising) is None  # stage_counts unreadable
