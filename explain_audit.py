@@ -186,6 +186,21 @@ def _joins(counts: Counter) -> dict[str, int]:
     return {k: counts[k] for k in JOINS if counts[k]}
 
 
+def scan_lines(plan: str) -> list[str]:
+    """The audit's pushed-filter and first-scan lines for one plan. Session
+    expression ids (``#\\d+``) are erased, as the registry identity check
+    does, so two regenerations on one tree print the same bytes."""
+    plan = re.sub(r"#\d+", "#", plan)
+    pushed = [p for p in re.findall(r"PushedFilters: \[([^\]]*)\]", plan) if p.strip()]
+    schemas = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
+    lines = [f"- pushed filters: {len(pushed)} scan(s), e.g. `{pushed[0][:120]}`" if pushed
+             else "- pushed filters: none (no scan-level predicates in this plan)"]
+    if schemas:
+        cols = schemas[0].split(",")
+        lines.append(f"- first scan reads {len(cols)} column(s): `{schemas[0][:120]}`")
+    return lines
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -218,8 +233,6 @@ def main() -> None:
     for name, spec in registry.items():
         _, plan, builds = entry_plans(spark, spec.fn, sf_dir)
         live, cached = operator_counts(plan)
-        pushed = [p for p in re.findall(r"PushedFilters: \[([^\]]*)\]", plan) if p.strip()]
-        schemas = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
         print(f"## {name}")
         print(f"- joins: {_joins(live) or 'none'}")
         extra = f" (+{cached['Exchange']} cached)" if cached["Exchange"] else ""
@@ -228,13 +241,8 @@ def main() -> None:
             built = sum((operator_counts(p)[0] for p in builds), Counter())
             print(f"- build executions: {len(builds)} (joins: "
                   f"{_joins(built) or 'none'}; shuffles: {built['Exchange']})")
-        if pushed:
-            print(f"- pushed filters: {len(pushed)} scan(s), e.g. `{pushed[0][:120]}`")
-        else:
-            print("- pushed filters: none (no scan-level predicates in this plan)")
-        if schemas:
-            cols = schemas[0].split(",")
-            print(f"- first scan reads {len(cols)} column(s): `{schemas[0][:120]}`")
+        for line in scan_lines(plan):
+            print(line)
         print(f"- python nodes: {python_nodes([plan, *builds])}")
         for wk, wv in (spec.plan_waivers or {}).items():
             print(f"- waiver `{wk}`: {wv}")

@@ -5,11 +5,16 @@
     RaceID normalization -> country lookup -> KEEP projection -> JSONL sink
 
 Zero Python UDFs and no join: every transform is a Catalyst expression,
-so the whole chain is ONE narrow stage under whole-stage codegen (the
-Spark analog of Beam DirectRunner's ParDo fusion). The country table is
-the reference's in-memory dict (reference src/pipeline.py:270,288), read
-in plain Python by ``read_country_lut`` and looked up through one literal
-map, so batch and stream share one definition.
+so the whole chain is ONE narrow stage, one Spark job per batch pass (the
+Spark analog of Beam DirectRunner's ParDo fusion). Each line is parsed
+once (``sources/jsonl.py``). Only the DeviceType Filter runs under
+whole-stage codegen: ``from_json`` is a ``CodegenFallback``, so the
+text scan, the parse Project, the Generate that emits the kept struct
+and the final Project (whose RaceID branch holds the key-list parse) run
+outside it. The country table is the reference's in-memory dict (reference
+src/pipeline.py:270,288), read in plain Python by ``read_country_lut``
+and looked up through one literal map, so batch and stream share one
+definition.
 
 Fidelity traps replicated (SURVEY.md §7 known-hard list):
 - missing/null DeviceType is KEPT (``str(None)``/"" != "Other");
@@ -61,13 +66,14 @@ def standardize_race(df: DataFrame) -> DataFrame:
     ``isinstance(str)`` guard (src/pipeline.py:28-30). When the source
     carried the raw key list we can replicate both; otherwise (column
     fed directly, e.g. in unit tests) null is indistinguishable from
-    absent and gets the dict.get default."""
+    absent and gets the dict.get default. The key list is read only in
+    the null-RaceID branch, so its parse runs only on those rows."""
     if JSON_KEYS_COL in df.columns:
         return df.withColumn(
             "RaceID",
-            F.when(~F.array_contains(F.col(JSON_KEYS_COL), "RaceID"), F.lit(""))
-            .when(F.col("RaceID").isNull(), F.lit(None).cast("string"))
-            .otherwise(standardize_race_id(F.col("RaceID"))),
+            F.when(F.col("RaceID").isNotNull(), standardize_race_id(F.col("RaceID")))
+            .when(F.array_contains(F.col(JSON_KEYS_COL), "RaceID"), F.lit(None).cast("string"))
+            .otherwise(F.lit("")),
         )
     return df.withColumn(
         "RaceID", standardize_race_id(F.coalesce(F.col("RaceID"), F.lit("")))

@@ -5,32 +5,31 @@ src/pipeline.py:136-144): ``json.loads`` each line, keep only results that
 are dicts, silently drop anything else (malformed JSON, scalars, arrays,
 JSON ``null``).
 
-Spark-first translation, all native expressions (verified against
-``json.loads`` by a differential property test in tests/test_sources.py):
+Spark-first translation: one typed parse per line, all native expressions
+(verified against ``json.loads`` and against a per-line struct parse by
+differential property tests in tests/test_sources.py):
 
-- ``from_json(value, map<string,string>)`` is non-null exactly when the
-  line starts with a JSON object (single quotes disabled; ``NaN``,
-  ``Infinity`` and duplicate keys accepted, like ``json.loads``). Its
-  ``map_keys`` is the object's key list. The schema projection,
-  ``from_json(value, schema)``, keeps a duplicate key's last value, as
-  ``json.loads`` does.
-- That parse ignores anything after the object, so a second parse of
-  ``[<line>,0]`` as ``array<string>`` must give exactly 2 elements: it
-  fails on trailing data (``{..} x``, ``{..}{..}``) and counts more or
-  fewer elements when the line closes or continues the array
-  (``{..}]``, ``{..},{..}``). Jackson also accepts ``+Infinity``,
-  ``+INF`` and ``-INF``, which ``json.loads`` rejects, so this parse
-  disallows non-numeric numbers after rewriting the tokens ``json.loads``
-  accepts (``NaN``, ``Infinity``, and so ``-Infinity``) to ``0``. The
-  rewrite cannot make an invalid line valid: the first parse already
-  rejected it, and no valid string escape contains either token.
+- ``from_json('[' ‖ line ‖ ',{}]', array<schema>)``, single quotes
+  disabled; ``NaN``, ``Infinity`` and duplicate keys (last wins) accepted,
+  like ``json.loads``. A line is kept when the array has 2 elements and the
+  first is non-null. Malformed or trailing data nulls the array; a line
+  that closes or continues the array (``{..}]``, ``{..},{..}``) changes
+  the count; ``null``, scalars and arrays give a null element, ``{}`` an
+  all-null struct. The sentinel is ``{}`` because the elements are structs.
+- Jackson also accepts ``+Infinity``, ``+INF`` and ``-INF``, which
+  ``json.loads`` rejects, so a line containing ``INF`` or ``+Infinity``
+  must also parse as ``[<line>,0]`` into 2 ``array<string>`` elements with
+  non-numeric numbers disallowed, after rewriting the tokens ``json.loads``
+  accepts (``NaN``, ``Infinity``, so ``-Infinity``) to ``0``. The rewrite
+  cannot make an invalid line valid: the typed parse already rejected it.
+- The kept struct leaves through a Generate (``explode`` of a 0- or
+  1-element slice) over the projected array; a Filter there would be
+  pushed back through the projection and parse the line again.
+- ``keys_col`` is ``map_keys`` of a ``map<string,string>`` parse projected
+  above the Generate, so a consumer reading it in one conditional branch
+  parses only the rows that take that branch.
 
-``from_json`` with a struct schema alone cannot express "dict-only": in
-PERMISSIVE mode it returns an all-null struct for BOTH ``{}`` (a dict,
-must be kept) and ``null``/``[1,2]``/garbage (must be dropped).
-
-Scale note: the glob can span millions of files; the schema is explicit so
-no inference pass runs over the data.
+Scale note: the schema is explicit, so no inference pass runs over the data.
 """
 
 from __future__ import annotations
@@ -55,17 +54,17 @@ def parse_jsonl_dicts(
     into the same struct-field null, but reference semantics can differ
     between the two (dict.get default vs a stored None) — the key list
     lets downstream operators tell them apart."""
-    obj = F.from_json(F.col("value"), "map<string,string>", _NO_SINGLE_QUOTES)
-    numbers_as_zero = F.col("value")
-    for token in ("Infinity", "NaN"):
-        numbers_as_zero = F.replace(numbers_as_zero, F.lit(token), F.lit("0"))
-    one_value = F.from_json(
-        F.concat(F.lit("["), numbers_as_zero, F.lit(",0]")), "array<string>", _STRICT
-    )
-    kept = lines.filter(obj.isNotNull() & (F.size(one_value) == 2))
-    extras = [F.map_keys(obj).alias(keys_col)] if keys_col else []
-    rec = kept.select(F.from_json(F.col("value"), schema).alias("rec"), *extras)
-    return rec.select("rec.*", *([keys_col] if keys_col else []))
+    value, a = F.col("value"), F.col("a")
+    wrapped = F.concat(F.lit("["), value, F.lit(",{}]"))
+    typed = F.from_json(wrapped, T.ArrayType(schema), _NO_SINGLE_QUOTES)
+    zeroed = F.replace(F.replace(value, F.lit("Infinity"), F.lit("0")), F.lit("NaN"), F.lit("0"))
+    strict = F.from_json(F.concat(F.lit("["), zeroed, F.lit(",0]")), "array<string>", _STRICT)
+    rare = value.contains("INF") | value.contains("+Infinity")
+    keep = (F.size(a) == 2) & a[0].isNotNull() & F.when(rare, F.size(strict) == 2).otherwise(True)
+    parsed = lines.select(value, typed.alias("a"))
+    rec = parsed.select(value, F.explode(F.when(keep, F.slice(a, 1, 1))).alias("rec"))
+    keys = F.map_keys(F.from_json(value, "map<string,string>"))
+    return rec.select("rec.*", *([keys.alias(keys_col)] if keys_col else []))
 
 
 def read_jsonl_dicts(

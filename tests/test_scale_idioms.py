@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import ast
 import json
+import re
 from collections import Counter, defaultdict
 from pathlib import Path
 
@@ -318,6 +319,43 @@ def test_fidelity_plan_is_one_narrow_stage(spark, tmp_path):
 
     plan = physical_plan(build_fidelity_df(spark, *_small_fidelity_input(tmp_path)))
     assert "Exchange" not in plan and "Join" not in plan, plan
+
+
+def test_fidelity_plan_parses_each_line_once(spark, tmp_path):
+    """The executed batch plan holds one typed parse of the line; the
+    key-list map parse sits only in the null-RaceID branch and the strict
+    string-array parse only in the rare-token branch. A Filter pushed back
+    through the parse projection would add a second typed parse."""
+    from pipeline_apache_beam_entrega1_cs_spark.fidelity.pipeline import build_fidelity_df
+
+    df = build_fidelity_df(spark, *_small_fidelity_input(tmp_path))
+    plan = re.sub(r"#\d+", "", df._jdf.queryExecution().executedPlan().toString())
+    assert plan.count("from_json(ArrayType(StructType(") == 1, plan
+    maps = "from_json(MapType(StringType,StringType"
+    assert plan.count(maps) == 1, plan
+    assert re.search(r"CASE WHEN isnotnull\(rec\.RaceID\) THEN .* WHEN array_contains\(map_keys\("
+                     + re.escape(maps), plan), plan
+    strict = "from_json(ArrayType(StringType"
+    assert plan.count(strict) == 1, plan
+    assert re.search(r"CASE WHEN \(Contains\(value, INF\) OR Contains\(value, \+Infinity\)\) "
+                     r"THEN \(size\(" + re.escape(strict), plan), plan
+
+
+def test_audit_scan_lines_erase_expression_ids():
+    """EXPLAIN.md's scan lines carry no session expression id, so two
+    regenerations on one tree print the same bytes."""
+    plan = ("PushedFilters: [IsNotNull(p_retailprice), GreaterThan(p_retailprice,"
+            "ScalarSubquery#7824)]\nReadSchema: struct<p_partkey:bigint,p_name:string>")
+    assert explain_audit.scan_lines(plan) == explain_audit.scan_lines(
+        plan.replace("#7824", "#7826")
+    ) == [
+        "- pushed filters: 1 scan(s), e.g. "
+        "`IsNotNull(p_retailprice), GreaterThan(p_retailprice,ScalarSubquery#)`",
+        "- first scan reads 2 column(s): `p_partkey:bigint,p_name:string`",
+    ]
+    assert explain_audit.scan_lines("no scan") == [
+        "- pushed filters: none (no scan-level predicates in this plan)"
+    ]
 
 
 def test_dynamic_partition_pruning(spark, sf_dir, tmp_path):

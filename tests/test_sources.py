@@ -2,8 +2,8 @@
 CSV delimiter sniffing, header aliasing, duplicate/empty-country rows,
 alias back-fill override, multi-line and whitespace-padded fields,
 header-only tables; JSONL dict-only rule, also differentially against
-``json.loads``; parquet footer schemas, differentially against Spark's
-schema inference."""
+``json.loads``, and its typed fields against a per-line struct parse;
+parquet footer schemas, differentially against Spark's schema inference."""
 
 from __future__ import annotations
 
@@ -234,6 +234,55 @@ def test_jsonl_dict_only_rule_matches_json_loads(spark, tmp_path, lines):
         kept = [d for d in map(bench_fidelity.parse_dict, f) if d is not None]
     want = Counter((tuple(sorted(d)), d.get("FanID")) for d in kept)
     assert got == want
+
+
+# --- typed fields against a per-line struct parse ---
+
+_TYPED_VALUE = st.one_of(
+    _STRING,
+    st.integers(-(2**70), 2**70).map(str),
+    st.sampled_from([
+        '"5"', "5.0", "1e400", "9223372036854775808", '"true"', "1", "0", "true", "false",
+        "null", "NaN", "Infinity", "-Infinity", '{"x":1}', '{"x":{"y":[1]}}', "[]", '[1,"a"]',
+        '"x INF"',
+    ]),
+)
+_TYPED_PAIR = st.tuples(
+    st.sampled_from(FAN_ENGAGEMENT_SCHEMA.fieldNames() + ["fanid", "a"]).map(json.dumps),
+    _TYPED_VALUE,
+)
+
+
+@st.composite
+def _typed_line(draw):
+    obj = "{" + ",".join(f"{k}:{v}" for k, v in draw(st.lists(_TYPED_PAIR, max_size=6))) + "}"
+    return draw(st.sampled_from(["{o}", "{o}", "{o}", " {o} ", "{o} x", "{o},{o}", "[{o}]"])).format(o=obj)
+
+
+def _struct_parse_rows(spark, path: str) -> Counter:
+    """Reference arm: the per-line struct parse ``from_json(value, schema)``
+    of every line ``json.loads`` turns into a dict."""
+    lines = spark.read.text(path).select("value", F.from_json("value", FAN_ENGAGEMENT_SCHEMA).alias("r"))
+    return Counter(tuple(r.r) for r in lines.collect() if bench_fidelity.parse_dict(r.value) is not None)
+
+
+@settings(max_examples=40, deadline=None, suppress_health_check=list(HealthCheck))
+@given(st.lists(_typed_line(), min_size=1, max_size=40))
+@example([
+    '{"FanID":"x INF","EngagementMetric_secondswatched":5}', '{"FanID":"i","RaceID":-INF}',
+    '{"FanID":"p","EngagementMetric_secondswatched":+INF}', '{"FanID":"q","RaceID":+Infinity}',
+    '{"FanID":"n","EngagementMetric_secondswatched":-NaN}', '{"DeviceType":"INF","PredictionClicked":true}',
+])
+def test_jsonl_typed_fields_match_struct_parse(spark, tmp_path, lines):
+    """Every row ``read_jsonl_dicts`` keeps under the full fan-engagement
+    schema equals the per-line struct parse of a line ``json.loads`` keeps:
+    the typed fields come out of the array-wrapped parse unchanged."""
+    from pipeline_apache_beam_entrega1_cs_spark.sources.jsonl import read_jsonl_dicts
+
+    path = tmp_path / f"typed-{next(_file_ids)}.jsonl"
+    path.write_text("\n".join(lines) + "\n", encoding="utf-8")
+    got = Counter(tuple(r) for r in read_jsonl_dicts(spark, str(path), FAN_ENGAGEMENT_SCHEMA).collect())
+    assert got == _struct_parse_rows(spark, str(path))
 
 
 def test_custom_python_datasource_partitions(spark):
