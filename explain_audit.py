@@ -186,18 +186,36 @@ def _joins(counts: Counter) -> dict[str, int]:
     return {k: counts[k] for k in JOINS if counts[k]}
 
 
+def _first_read_schema(plan: str) -> list[str] | None:
+    """The top-level columns of the plan's first ``ReadSchema: struct<..>``,
+    split on the commas outside ``<..>`` and ``(..)`` so that nested types
+    and ``decimal(p,s)`` stay whole; None when no scan prints one."""
+    m = re.search(r"ReadSchema: struct<", plan)
+    if m is None:
+        return None
+    cols, depth, start = [], 0, m.end()
+    for i in range(m.end(), len(plan)):
+        if depth == 0 and plan[i] in ",>":
+            cols.append(plan[start:i])
+            start = i + 1
+            if plan[i] == ">":
+                break
+        else:
+            depth += (plan[i] in "<(") - (plan[i] in ">)")
+    return [c for c in cols if c]
+
+
 def scan_lines(plan: str) -> list[str]:
     """The audit's pushed-filter and first-scan lines for one plan. Session
     expression ids (``#\\d+``) are erased, as the registry identity check
     does, so two regenerations on one tree print the same bytes."""
     plan = re.sub(r"#\d+", "#", plan)
     pushed = [p for p in re.findall(r"PushedFilters: \[([^\]]*)\]", plan) if p.strip()]
-    schemas = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
+    cols = _first_read_schema(plan)
     lines = [f"- pushed filters: {len(pushed)} scan(s), e.g. `{pushed[0][:120]}`" if pushed
              else "- pushed filters: none (no scan-level predicates in this plan)"]
-    if schemas:
-        cols = schemas[0].split(",")
-        lines.append(f"- first scan reads {len(cols)} column(s): `{schemas[0][:120]}`")
+    if cols is not None:
+        lines.append(f"- first scan reads {len(cols)} column(s): `{','.join(cols)[:120]}`")
     return lines
 
 

@@ -16,6 +16,13 @@ src/pipeline.py:270,288), read in plain Python by ``read_country_lut``
 and looked up through one literal map, so batch and stream share one
 definition.
 
+The plan is built from SQL expression text (``functions/strings.py``):
+each transform is one ``where``/``withColumn``/``selectExpr`` call whose
+text the JVM parses, the country map included, so building the plan
+costs a few dozen Py4J round trips whatever the size of the CSV. Built
+from ``Column`` objects, every ``F.*`` call is several round trips, and
+the country map alone is several per field of every CSV row.
+
 Fidelity traps replicated (SURVEY.md §7 known-hard list):
 - missing/null DeviceType is KEPT (``str(None)``/"" != "Other");
 - padded " Other " is dropped (``.strip()`` before compare);
@@ -31,14 +38,14 @@ import argparse
 import os
 from pathlib import Path
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..functions.strings import (
     apply_country_alias,
     norm_country_key,
     py_strip,
+    sql_str,
     standardize_race_id,
 )
 from ..schemas import FAN_ENGAGEMENT_SCHEMA, KEEP, LOCATION_FIELDS, LOCATION_SCHEMA
@@ -51,7 +58,7 @@ def filter_device_other(df: DataFrame) -> DataFrame:
     src/pipeline.py:147-151). Null-safe: a bare ``!=`` would silently drop
     null DeviceType rows under SQL three-valued logic, but the reference
     KEEPS them — hence the coalesce."""
-    return df.filter(py_strip(F.coalesce(F.col("DeviceType"), F.lit(""))) != "Other")
+    return df.where(py_strip("coalesce(DeviceType, '')") + " != 'Other'")
 
 
 JSON_KEYS_COL = "_json_keys"
@@ -69,43 +76,42 @@ def standardize_race(df: DataFrame) -> DataFrame:
     absent and gets the dict.get default. The key list is read only in
     the null-RaceID branch, so its parse runs only on those rows."""
     if JSON_KEYS_COL in df.columns:
-        return df.withColumn(
-            "RaceID",
-            F.when(F.col("RaceID").isNotNull(), standardize_race_id(F.col("RaceID")))
-            .when(F.array_contains(F.col(JSON_KEYS_COL), "RaceID"), F.lit(None).cast("string"))
-            .otherwise(F.lit("")),
-        )
-    return df.withColumn(
-        "RaceID", standardize_race_id(F.coalesce(F.col("RaceID"), F.lit("")))
-    )
+        race = (f"CASE WHEN RaceID IS NOT NULL THEN {standardize_race_id('RaceID')} "
+                f"WHEN array_contains({JSON_KEYS_COL}, 'RaceID') THEN CAST(NULL AS STRING) "
+                "ELSE '' END")
+    else:
+        race = standardize_race_id("coalesce(RaceID, '')")
+    return df.withColumn("RaceID", F.expr(race))
+
+
+def _location(values: list[str]) -> str:
+    """``named_struct`` of the ``LocationData`` fields over SQL values."""
+    return "named_struct(" + ", ".join(
+        f"{sql_str(f)}, {v}" for f, v in zip(LOCATION_FIELDS, values)) + ")"
 
 
 def enrich_with_country(df: DataFrame, country_lut: dict[str, tuple[str, ...]]) -> DataFrame:
     """Country lookup + fallback struct (reference src/pipeline.py:162-182).
     The fact-side key is normalized then alias-rewritten BEFORE lookup
-    (reference :170-171). The map is typed so an empty LUT still yields a
-    ``LocationData`` struct; a matched payload is never falsy here (struct
-    of 5 strings), so the reference's ``lut.get(key) or fallback`` is a
-    null coalesce."""
-    key = apply_country_alias(norm_country_key(F.col("ViewerLocationCountry")))
-    pairs: list[Column] = []
-    for k, payload in country_lut.items():
-        pairs.append(F.lit(k))
-        pairs.append(F.struct(*[F.lit(v).alias(f) for f, v in zip(LOCATION_FIELDS, payload)]))
-    lookup = F.create_map(*pairs).cast(T.MapType(T.StringType(), LOCATION_SCHEMA))
-    fallback = F.struct(
-        py_strip(F.coalesce(F.col("ViewerLocationCountry"), F.lit(""))).alias("country"),
-        *[F.lit("").alias(f) for f in LOCATION_FIELDS[1:]],
-    )
-    return df.withColumn("LocationData", F.coalesce(lookup[key], fallback)).drop(
-        "ViewerLocationCountry"
-    )
+    (reference :170-171). The LUT is one map literal, cast so an empty LUT
+    still yields a ``LocationData`` struct; a matched payload is never
+    falsy here (struct of 5 strings), so the reference's
+    ``lut.get(key) or fallback`` is a null coalesce."""
+    key = apply_country_alias(norm_country_key("ViewerLocationCountry"))
+    entries = ", ".join(f"{sql_str(k)}, {_location([sql_str(v) for v in payload])}"
+                        for k, payload in country_lut.items())
+    fields = ", ".join(f"`{f.name}`: {f.dataType.simpleString()}" for f in LOCATION_SCHEMA)
+    lookup = f"CAST(map({entries}) AS map<string, struct<{fields}>>)"
+    fallback = _location([py_strip("coalesce(ViewerLocationCountry, '')")]
+                         + ["''"] * (len(LOCATION_FIELDS) - 1))
+    return df.selectExpr("* EXCEPT (ViewerLocationCountry)",
+                         f"coalesce({lookup}[{key}], {fallback}) AS LocationData")
 
 
 def project_output(df: DataFrame) -> DataFrame:
     """Keep exactly the 8 KEEP fields in order (reference
     src/pipeline.py:185-200)."""
-    return df.select(*KEEP)
+    return df.selectExpr(*KEEP)
 
 
 def _transforms(events: DataFrame, country_lut: dict[str, tuple[str, ...]]) -> DataFrame:

@@ -1,6 +1,15 @@
 """Scalar string expressions replicating the reference's normalization
-functions as pure native Spark column expressions (zero UDF — these run
-inside whole-stage codegen).
+functions as native Spark SQL expression text (zero UDF).
+
+Each function takes the SQL text of a string expression and returns the
+SQL text of its result, so a caller composes a whole transform as one
+string and hands it to the JVM in one ``where``/``selectExpr``/``F.expr``
+call; building the same tree from ``Column`` objects costs several Py4J
+round trips per ``F.*`` call. ``sql_str`` quotes every literal. The
+expressions compile wherever their operator does: in the fidelity plan
+``py_strip`` sits in the DeviceType Filter, under whole-stage codegen,
+but the RaceID and country expressions sit in the final Project beside
+the key-list ``from_json``, a ``CodegenFallback``, so they run outside it.
 
 Semantics replicated (verified by property tests against the vendored
 reference functions in tests/test_race_id.py):
@@ -17,9 +26,6 @@ reference functions in tests/test_race_id.py):
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 # Country-name aliases (reference src/pipeline.py:47-53). Applied to the
 # fact-side key BEFORE lookup; the LUT side only back-fills alias keys when
@@ -40,12 +46,23 @@ PY_WHITESPACE = (
 )
 
 
-def py_strip(col: Column) -> Column:
-    """Python's ``str.strip()``; ``F.trim`` strips only U+0020."""
-    return F.btrim(col, F.lit(PY_WHITESPACE))
+def sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal: ``\\`` and ``'`` escaped, and
+    every BMP character ``str.isprintable()`` rejects (all of
+    ``PY_WHITESPACE`` but the space, ``\\x00``) written as ``\\uXXXX``,
+    so the expression text stays on one readable line."""
+    body = s.replace("\\", "\\\\").replace("'", "\\'")
+    return "'" + "".join(
+        c if c.isprintable() or c > "\uffff" else f"\\u{ord(c):04x}" for c in body
+    ) + "'"
 
 
-def standardize_race_id(col: Column) -> Column:
+def py_strip(e: str) -> str:
+    """Python's ``str.strip()``; ``trim`` strips only U+0020."""
+    return f"btrim({e}, {sql_str(PY_WHITESPACE)})"
+
+
+def standardize_race_id(e: str) -> str:
     """Native-expression port of ``standardize_race_id``.
 
     Letter runs concatenate before digit runs regardless of original order
@@ -55,26 +72,24 @@ def standardize_race_id(col: Column) -> Column:
     it defaults missing RaceID to ""; callers should coalesce first if
     they need that behavior).
     """
-    letters = F.lower(F.regexp_replace(col, "[^A-Za-z]", ""))
+    letters = f"lower(regexp_replace({e}, '[^A-Za-z]', ''))"
     # Python's \d matches Unicode decimal digits (category Nd), not just
     # ASCII — \p{Nd} is the Java-regex equivalent.
-    digits = F.regexp_replace(col, r"[^\p{Nd}]", "")
-    fallback = F.lower(F.regexp_replace(col, "[^0-9a-zA-Z]", ""))
-    return F.when((letters != "") & (digits != ""), F.concat(letters, digits)).otherwise(fallback)
+    not_digit = sql_str(r"[^\p{Nd}]")
+    digits = f"regexp_replace({e}, {not_digit}, '')"
+    fallback = f"lower(regexp_replace({e}, '[^0-9a-zA-Z]', ''))"
+    return (f"CASE WHEN {letters} != '' AND {digits} != '' "
+            f"THEN concat({letters}, {digits}) ELSE {fallback} END")
 
 
-def norm_country_key(col: Column) -> Column:
+def norm_country_key(e: str) -> str:
     """``(name or "").strip().lower()`` — null-safe, whitespace-trimmed,
     lowercased join key (reference src/pipeline.py:42-44)."""
-    return F.lower(py_strip(F.coalesce(col, F.lit(""))))
+    return "lower(" + py_strip(f"coalesce({e}, '')") + ")"
 
 
-def apply_country_alias(key: Column) -> Column:
+def apply_country_alias(key: str) -> str:
     """Rewrite an already-normalized key through COUNTRY_ALIAS
     (reference src/pipeline.py:171: ``key = ALIAS.get(key, key)``)."""
-    pairs: list[Column] = []
-    for alias, canonical in COUNTRY_ALIAS.items():
-        pairs.append(F.lit(alias))
-        pairs.append(F.lit(canonical))
-    alias_map = F.create_map(*pairs)
-    return F.coalesce(alias_map[key], key)
+    pairs = ", ".join(f"{sql_str(a)}, {sql_str(c)}" for a, c in COUNTRY_ALIAS.items())
+    return f"coalesce(map({pairs})[{key}], {key})"

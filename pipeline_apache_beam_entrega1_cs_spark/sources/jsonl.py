@@ -5,23 +5,25 @@ src/pipeline.py:136-144): ``json.loads`` each line, keep only results that
 are dicts, silently drop anything else (malformed JSON, scalars, arrays,
 JSON ``null``).
 
-Spark-first translation: one typed parse per line, all native expressions
-(verified against ``json.loads`` and against a per-line struct parse by
-differential property tests in tests/test_sources.py):
+Spark-first translation: one typed parse per line, each projection one
+``selectExpr`` of SQL text (verified against ``json.loads`` and against a
+per-line struct parse by differential property tests in tests/test_sources.py):
 
 - ``from_json('[' ‖ line ‖ ',{}]', array<schema>)``, single quotes
   disabled; ``NaN``, ``Infinity`` and duplicate keys (last wins) accepted,
   like ``json.loads``. A line is kept when the array has 2 elements and the
-  first is non-null. Malformed or trailing data nulls the array; a line
-  that closes or continues the array (``{..}]``, ``{..},{..}``) changes
-  the count; ``null``, scalars and arrays give a null element, ``{}`` an
-  all-null struct. The sentinel is ``{}`` because the elements are structs.
+  first is non-null. Malformed data nulls the array; a line that closes or
+  continues the array (``{..}]``, ``{..},{..}``) changes the count;
+  ``null``, scalars and arrays give a null element, ``{}`` an all-null
+  struct. The sentinel is ``{}`` because the elements are structs.
 - Jackson also accepts ``+Infinity``, ``+INF`` and ``-INF``, which
-  ``json.loads`` rejects, so a line containing ``INF`` or ``+Infinity``
-  must also parse as ``[<line>,0]`` into 2 ``array<string>`` elements with
-  non-numeric numbers disallowed, after rewriting the tokens ``json.loads``
-  accepts (``NaN``, ``Infinity``, so ``-Infinity``) to ``0``. The rewrite
-  cannot make an invalid line valid: the typed parse already rejected it.
+  ``json.loads`` rejects, and ``from_json`` ignores what follows the first
+  top-level value (``{..},{..}],[0`` counts 2). So a line holding ``INF``,
+  ``+Infinity`` or ``]`` must also parse as ``[<line>,0,0]`` into 3
+  ``array<string>`` elements with non-numeric numbers disallowed, after
+  rewriting the tokens ``json.loads`` accepts (``NaN``, ``Infinity``) to
+  ``0``. An invalid line stays invalid: the typed parse rejected it, or it
+  closes the array early and both parses read one prefix, 2 elements.
 - The kept struct leaves through a Generate (``explode`` of a 0- or
   1-element slice) over the projected array; a Filter there would be
   pushed back through the projection and parse the line again.
@@ -35,12 +37,12 @@ Scale note: the schema is explicit, so no inference pass runs over the data.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.strings import sql_str
 
-_NO_SINGLE_QUOTES = {"allowSingleQuotes": "false"}
-_STRICT = {**_NO_SINGLE_QUOTES, "allowNonNumericNumbers": "false"}
+_NO_SINGLE_QUOTES = "map('allowSingleQuotes', 'false')"
+_STRICT = "map('allowSingleQuotes', 'false', 'allowNonNumericNumbers', 'false')"
 
 
 def parse_jsonl_dicts(
@@ -54,17 +56,16 @@ def parse_jsonl_dicts(
     into the same struct-field null, but reference semantics can differ
     between the two (dict.get default vs a stored None) — the key list
     lets downstream operators tell them apart."""
-    value, a = F.col("value"), F.col("a")
-    wrapped = F.concat(F.lit("["), value, F.lit(",{}]"))
-    typed = F.from_json(wrapped, T.ArrayType(schema), _NO_SINGLE_QUOTES)
-    zeroed = F.replace(F.replace(value, F.lit("Infinity"), F.lit("0")), F.lit("NaN"), F.lit("0"))
-    strict = F.from_json(F.concat(F.lit("["), zeroed, F.lit(",0]")), "array<string>", _STRICT)
-    rare = value.contains("INF") | value.contains("+Infinity")
-    keep = (F.size(a) == 2) & a[0].isNotNull() & F.when(rare, F.size(strict) == 2).otherwise(True)
-    parsed = lines.select(value, typed.alias("a"))
-    rec = parsed.select(value, F.explode(F.when(keep, F.slice(a, 1, 1))).alias("rec"))
-    keys = F.map_keys(F.from_json(value, "map<string,string>"))
-    return rec.select("rec.*", *([keys.alias(keys_col)] if keys_col else []))
+    array_type = sql_str(T.ArrayType(schema).json())
+    typed = f"from_json(concat('[', value, ',{{}}]'), {array_type}, {_NO_SINGLE_QUOTES})"
+    zeroed = "replace(replace(value, 'Infinity', '0'), 'NaN', '0')"
+    strict = f"size(from_json(concat('[', {zeroed}, ',0,0]'), 'array<string>', {_STRICT})) = 3"
+    rare = "contains(value, 'INF') OR contains(value, '+Infinity') OR contains(value, ']')"
+    keep = f"size(a) = 2 AND a[0] IS NOT NULL AND CASE WHEN {rare} THEN {strict} ELSE true END"
+    rec = lines.selectExpr("value", f"{typed} AS a").selectExpr(
+        "value", f"explode(CASE WHEN {keep} THEN slice(a, 1, 1) END) AS rec")
+    keys = f"map_keys(from_json(value, 'map<string,string>')) AS `{keys_col}`"
+    return rec.selectExpr("rec.*", *([keys] if keys_col else []))
 
 
 def read_jsonl_dicts(

@@ -1,15 +1,17 @@
 """Property tests: the native Spark expressions must agree with the
 reference's Python functions (vendored below as the executable spec —
-SURVEY.md §5 item 3) on randomized inputs and on every known edge case."""
+SURVEY.md §5 item 3) on randomized inputs and on every known edge case;
+the SQL string literals they are written with must round-trip any text."""
 
 from __future__ import annotations
 
 import re
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
+
+from pipeline_apache_beam_entrega1_cs_spark.functions.strings import PY_WHITESPACE, sql_str
 
 # --- executable spec: the reference's functions, vendored verbatim-in-
 #     semantics (reference src/pipeline.py:17-36 and :42-44) ---
@@ -37,9 +39,9 @@ EDGE_CASES = [
 ]
 
 
-def _spark_eval(spark, values: list[str], expr_fn) -> list[str]:
-    df = spark.createDataFrame([(v,) for v in values], ["v"])
-    return [r.out for r in df.select(expr_fn(F.col("v")).alias("out")).collect()]
+def _spark_eval(spark, values: list[str | None], expr_fn) -> list[str]:
+    df = spark.createDataFrame([(v,) for v in values], "v: string")
+    return [r.out for r in df.selectExpr(f"{expr_fn('v')} AS out").collect()]
 
 
 def test_race_id_edge_cases(spark):
@@ -58,8 +60,7 @@ def test_norm_country_key_edge_cases(spark):
         "  UK ", "usa", "South Africa", "", "  ", "Côte d'Ivoire", None,
         "\tUK\n", "\xa0usa", "\u3000Brazil", every_space + "Chile" + every_space,
     ]
-    df = spark.createDataFrame([(v,) for v in values], "v: string")
-    got = [r.out for r in df.select(norm_country_key(F.col("v")).alias("out")).collect()]
+    got = _spark_eval(spark, values, norm_country_key)
     want = [ref_norm_country_key(v) for v in values]
     assert got == want
 
@@ -81,7 +82,28 @@ def test_alias_rewrite(spark):
     )
 
     values = ["usa", "us", "u.s.", "uk", "uae", "france", ""]
-    df = spark.createDataFrame([(v,) for v in values], ["v"])
-    got = [r.out for r in df.select(apply_country_alias(F.col("v")).alias("out")).collect()]
+    got = _spark_eval(spark, values, apply_country_alias)
     want = [COUNTRY_ALIAS.get(v, v) for v in values]
     assert got == want
+
+
+# lone surrogates (category Cs) cannot cross to the JVM at all
+_SQL_TEXT = st.text(
+    st.one_of(
+        st.sampled_from(list("'\\\x00\"u07%_") + list(PY_WHITESPACE)),
+        st.characters(blacklist_categories=("Cs",)),
+        st.characters(min_codepoint=0x10000, blacklist_categories=("Cs",)),
+    ),
+    max_size=24,
+)
+
+
+@settings(max_examples=30, deadline=None, suppress_health_check=list(HealthCheck))
+@given(st.lists(_SQL_TEXT, min_size=1, max_size=20))
+@example(["Côte d'Ivoire", "C:\\u0041\\07\\%", "\x00" + PY_WHITESPACE + "\U0001f600\U000e0001", ""])
+def test_sql_str_round_trips(spark, values):
+    """Every text, quoted by ``sql_str``, parses back to itself: quotes,
+    backslashes (also before ``u`` or a digit), NUL, every
+    ``str.isspace()`` character and non-BMP characters."""
+    row = spark.range(1).selectExpr(*[f"{sql_str(v)} AS c{i}" for i, v in enumerate(values)]).first()
+    assert list(row) == values

@@ -8,6 +8,7 @@ from __future__ import annotations
 import ast
 import json
 import re
+import threading
 from collections import Counter, defaultdict
 from pathlib import Path
 
@@ -262,15 +263,19 @@ def test_fidelity_pipeline_streaming(spark):
     assert s == b
 
 
-def _small_fidelity_input(tmp_path):
+def _small_fidelity_input(tmp_path, extra_countries: int = 0):
     """A few fan events and a country CSV covering the fidelity traps:
-    UK/USA alias fallbacks, a padded Other, a null and an absent RaceID."""
+    UK/USA alias fallbacks, a padded Other, a null and an absent RaceID,
+    and LUT text that SQL quoting must carry (a quote, a backslash);
+    ``extra_countries`` appends that many more CSV rows."""
     csv = tmp_path / "countries.csv"
     csv.write_text(
         "Country,Capital,Continent,Main_Official_Language,Currency\n"
         "UK,London,Europe,English,GBP\n"
         "USA,Washington,North America,English,USD\n"
-        "Brazil,Brasília,South America,Portuguese,BRL\n",
+        "Brazil,Brasília,South America,Portuguese,BRL\n"
+        "Côte d'Ivoire,Yamoussoukro\\Abidjan,Africa,French,XOF\n"
+        + "".join(f"Land {i},City {i},C,L,X{i}\n" for i in range(extra_countries)),
         encoding="utf-8",
     )
     events = [
@@ -278,6 +283,7 @@ def _small_fidelity_input(tmp_path):
         {"FanID": "f2", "RaceID": "race_11", "DeviceType": " Other ", "ViewerLocationCountry": "Brazil"},
         {"FanID": "f3", "RaceID": None, "DeviceType": "Web", "ViewerLocationCountry": "USA"},
         {"FanID": "f4", "DeviceType": None, "ViewerLocationCountry": " brazil "},
+        {"FanID": "f5", "RaceID": "c\\1", "DeviceType": "Web", "ViewerLocationCountry": "côte d'ivoire"},
     ]
     in_dir = tmp_path / "in"
     in_dir.mkdir()
@@ -309,6 +315,7 @@ def test_fidelity_stream_equals_batch_on_small_input(spark, tmp_path):
         "f1": ("cup25", "UK", ""),
         "f3": (None, "USA", ""),
         "f4": ("", "Brazil", "Brasília"),
+        "f5": ("c1", "Côte d'Ivoire", "Yamoussoukro\\Abidjan"),
     }
 
 
@@ -337,8 +344,43 @@ def test_fidelity_plan_parses_each_line_once(spark, tmp_path):
                      + re.escape(maps), plan), plan
     strict = "from_json(ArrayType(StringType"
     assert plan.count(strict) == 1, plan
-    assert re.search(r"CASE WHEN \(Contains\(value, INF\) OR Contains\(value, \+Infinity\)\) "
-                     r"THEN \(size\(" + re.escape(strict), plan), plan
+    assert re.search(r"CASE WHEN \(\(Contains\(value, INF\) OR Contains\(value, \+Infinity\)\) "
+                     r"OR Contains\(value, \]\)\) THEN \(size\(" + re.escape(strict), plan), plan
+
+
+def test_fidelity_build_makes_few_py4j_calls(spark, tmp_path, monkeypatch):
+    """Building the batch plan or the stream costs a few dozen Py4J round
+    trips, whatever the size of the country CSV: each transform is one
+    call carrying SQL text, and the country table is one literal in it.
+    Counted on this thread: the client's finalizer thread detaches freed
+    Java objects on its own schedule."""
+    from py4j.clientserver import ClientServerConnection
+
+    from pipeline_apache_beam_entrega1_cs_spark.fidelity.pipeline import (
+        build_fidelity_df,
+        build_fidelity_stream,
+    )
+
+    me, send, calls = threading.get_ident(), ClientServerConnection.send_command, [0]
+
+    def counting(self, *args, **kwargs):
+        calls[0] += threading.get_ident() == me
+        return send(self, *args, **kwargs)
+
+    counts = {}
+    for rows in (0, 196):  # a 4-row and a 200-row CSV
+        (tmp_path / f"lut{rows}").mkdir()
+        inputs = _small_fidelity_input(tmp_path / f"lut{rows}", extra_countries=rows)
+        for build in (build_fidelity_df, build_fidelity_stream):
+            build(spark, *inputs)  # first build of a kind loads JVM classes
+            monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+            calls[0] = 0
+            build(spark, *inputs)
+            monkeypatch.undo()
+            counts[rows, build.__name__] = calls[0]
+    assert all(n <= 60 for n in counts.values()), counts
+    assert counts[0, "build_fidelity_df"] == counts[196, "build_fidelity_df"], counts
+    assert counts[0, "build_fidelity_stream"] == counts[196, "build_fidelity_stream"], counts
 
 
 def test_audit_scan_lines_erase_expression_ids():
@@ -356,6 +398,17 @@ def test_audit_scan_lines_erase_expression_ids():
     assert explain_audit.scan_lines("no scan") == [
         "- pushed filters: none (no scan-level predicates in this plan)"
     ]
+
+
+def test_audit_scan_lines_count_nested_columns():
+    """The first scan's columns are split outside ``<..>`` and ``(..)``:
+    a nested type or a ``decimal(p,s)`` is one column, printed whole."""
+    schema = "id:bigint,embedding:array<float>,price:decimal(12,2),m:map<string,struct<a:int>>"
+    plan = f"ReadSchema: struct<{schema}>\nReadSchema: struct<x:int>"
+    assert explain_audit.scan_lines(plan)[1] == f"- first scan reads 4 column(s): `{schema}`"
+    assert explain_audit.scan_lines("ReadSchema: struct<>")[1] == (
+        "- first scan reads 0 column(s): ``"
+    )
 
 
 def test_dynamic_partition_pruning(spark, sf_dir, tmp_path):

@@ -194,6 +194,7 @@ def _json_line(draw):
     obj = "{" + ",".join(f"{k}{draw(_SPACE)}:{v}" for k, v in pairs) + "}"
     shape = draw(st.sampled_from([
         "{o}", "{o} x", "{o}{o}", "{o}]", "[{o}]", "{o},{o}", "{o},0", "{o} NaN", "{o}//",
+        "{o},{o}],[0", "{o},{o}] x", "{o},{o},{o}],[0",
     ]))
     return draw(_SPACE) + shape.format(o=obj) + draw(_SPACE)
 
@@ -216,11 +217,15 @@ _file_ids = itertools.count()
     '{"FanID":"c"}{"b":2}', "{'FanID':'q'}", '{"FanID":"b"}]', ' {"FanID":"w"}\t',
     '\xa0{"FanID":"l"}', '{"FanID":"r"}\xa0', '{"FanID":"é","ü":"ß"}', '{"a":+Infinity}',
     '{"a":-INF}', '{"a":Infinity,"b":-Infinity}', "[1,2]", "null", "{}", "garbage",
+    "{},{}],[0", "{},{},{}],[0", '{"FanID":"k"},{}] x', '{"FanID":"]"}', '{"FanID":"[]","a":[1]}',
 ])
 def test_jsonl_dict_only_rule_matches_json_loads(spark, tmp_path, lines):
     """``read_jsonl_dicts`` keeps exactly the lines ``json.loads`` turns
     into a dict (bench_fidelity's ParseJson), with the same key set and
-    the same last-wins value for a duplicated key."""
+    the same last-wins value for a duplicated key. Drawn shapes include a
+    line that closes the wrapper array after two objects and goes on
+    (``{..},{..}],[0``), which both array-wrapped parses read as a
+    prefix."""
     from pipeline_apache_beam_entrega1_cs_spark.sources.jsonl import read_jsonl_dicts
 
     path = tmp_path / f"fuzz-{next(_file_ids)}.jsonl"
