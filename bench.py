@@ -180,7 +180,8 @@ BENCH_QUERIES = [
     # regressions stayed invisible for rounds. (Round 15: all three
     # were rewritten — the two pandas entries now run native
     # window/aggregate plans (the grouped-pandas calling convention
-    # lives on in their *_pandas twins + equivalence tests), and the
+    # lives on in the reference arms of
+    # tests/test_udf_surface_equivalence.py), and the
     # LSH entry verifies per bucket cell; the lines stay in the bench
     # as the regression canaries for exactly those rewrites.)
     "applyinpandas_trimmed_mean",

@@ -70,17 +70,12 @@ def standardize_race(df: DataFrame) -> DataFrame:
     Reference semantics are three-way: an ABSENT key defaults to "" via
     ``row.get("RaceID", "")`` (normalizes to ""), but an explicit JSON
     ``null`` is returned UNCHANGED by standardize_race_id's
-    ``isinstance(str)`` guard (src/pipeline.py:28-30). When the source
-    carried the raw key list we can replicate both; otherwise (column
-    fed directly, e.g. in unit tests) null is indistinguishable from
-    absent and gets the dict.get default. The key list is read only in
+    ``isinstance(str)`` guard (src/pipeline.py:28-30). The source's raw
+    key list (``JSON_KEYS_COL``) tells the two apart. It is read only in
     the null-RaceID branch, so its parse runs only on those rows."""
-    if JSON_KEYS_COL in df.columns:
-        race = (f"CASE WHEN RaceID IS NOT NULL THEN {standardize_race_id('RaceID')} "
-                f"WHEN array_contains({JSON_KEYS_COL}, 'RaceID') THEN CAST(NULL AS STRING) "
-                "ELSE '' END")
-    else:
-        race = standardize_race_id("coalesce(RaceID, '')")
+    race = (f"CASE WHEN RaceID IS NOT NULL THEN {standardize_race_id('RaceID')} "
+            f"WHEN array_contains({JSON_KEYS_COL}, 'RaceID') THEN CAST(NULL AS STRING) "
+            "ELSE '' END")
     return df.withColumn("RaceID", F.expr(race))
 
 

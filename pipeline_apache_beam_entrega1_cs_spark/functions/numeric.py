@@ -64,7 +64,7 @@ def sql_davg(expr: str) -> str:
 # decimal is NOT engine-portable: Spark rounds the shortest decimal repr
 # (BigDecimal.valueOf, HALF_UP) while DuckDB rounds the binary double, so
 # rows landing on .xxxx5 boundaries round differently and grouped sums
-# drift (this failed TPC-H Q1 sum_charge in round 1). The fix is to cast
+# drift (TPC-H Q1 sum_charge is one such sum). The fix is to cast
 # the OPERANDS to decimal and multiply in decimal: every money/rate column
 # in the testdata is an exact 2-decimal value stored as a double
 # (verified: max off-grid error < 5e-9), so DECIMAL(12,2) money ×
@@ -75,7 +75,6 @@ def sql_davg(expr: str) -> str:
 
 MONEY = "decimal(12,2)"  # price-like: 2-decimal, < 10^10
 RATE = "decimal(4,2)"  # discount/tax-like: 2-decimal in [0, ~1.1]
-QTY = "decimal(4,0)"  # integer-valued quantity, < 10^4
 
 
 def dmoney(col: Column | str) -> Column:

@@ -32,10 +32,10 @@ def connected_components(
     # neighbor_min join re-reads `sym`, and without the checkpoint that
     # re-derives the ENTIRE upstream pair graph (shingle build →
     # frequency-capped inverted index → Jaccard filter) once per round
-    # — the cached-frontier lesson from graph_bfs_levels (2.1×), applied
-    # per VERDICT r13 item 4. Edge sets here are near-dup pair graphs
-    # (tiny relative to the corpus), so the materialization is cheap;
-    # on a cluster swap in reliable checkpointing.
+    # — the cached-frontier lesson from graph_bfs_levels. Edge sets
+    # here are near-dup pair graphs (tiny relative to the corpus), so
+    # the materialization is cheap; on a cluster swap in reliable
+    # checkpointing.
     sym = sym.localCheckpoint()
     labels = sym.select(F.col("a").alias("node")).distinct().withColumn(
         "comp", F.col("node")

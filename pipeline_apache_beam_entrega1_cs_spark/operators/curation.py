@@ -180,7 +180,7 @@ def repetition_stats(docs: DataFrame, n: int = 3, threshold: float = 0.5) -> Dat
     total and report 0.0. No explode and no keyed aggregation: both
     counts come from one per-row array expression. The only exchange is
     the repartition barrier that materializes the tokenizer (without it
-    codegen re-evaluates the regex split per n-gram — the measured trap
+    codegen re-evaluates the regex split per n-gram — the trap
     documented in dedup._shingle_arrays); everything after is map-only.
     """
     from .textops import tokens

@@ -51,18 +51,17 @@ def _shingle_arrays(
     The tokenization is materialized behind a repartition barrier: if the
     token expression reaches the per-element transform lambda, codegen
     re-evaluates it per shingle — O(tokens²) regex work per document —
-    and CollapseProject re-inlines it through plain projections (measured
-    16× slower at sf0.1). The shuffle also spreads the downstream explode
-    across the cluster instead of leaving it with the scan's partitioning
-    — the standard move before a row-inflating generator.
+    and CollapseProject re-inlines it through plain projections. The shuffle
+    also spreads the downstream explode across the cluster instead of
+    leaving it with the scan's partitioning — the standard move before a
+    row-inflating generator.
 
     ``drop_empty``: callers must NOT bolt `.filter(n_sh > 0)` onto the
     result — PushDownPredicates rewrites that as
     ``size(array_distinct(grams(...))) > 0`` BELOW the repartition, so
     the scan side evaluates the whole shingle construction a second
-    time (measured 10×: 0.34 s → 3.5 s at sf0.1, round 13). Pass
-    drop_empty=True instead: n_sh > 0 ⟺ size(tokens) >= n, and THAT
-    predicate is one cheap split() at the scan."""
+    time. Pass drop_empty=True instead: n_sh > 0 ⟺ size(tokens) >= n, and
+    THAT predicate is one cheap split() at the scan."""
     tk = F.col("_tk")
     grams = F.transform(
         F.sequence(F.lit(0), F.size(tk) - n),
@@ -75,8 +74,8 @@ def _shingle_arrays(
         base
         # explicit count: REPARTITION_BY_COL lets AQE size this
         # exchange by BYTES and coalesce it to ~1 partition, leaving
-        # the downstream shingle/md5 work single-core (the
-        # _shuffle_partitions lesson, SCALING.md round 9)
+        # the downstream shingle/md5 work single-core (see
+        # _shuffle_partitions)
         .repartition(_shuffle_partitions(docs), "doc_id")
         .select(
             "doc_id",
@@ -93,7 +92,7 @@ def _explode_shingles(arr: DataFrame) -> DataFrame:
     InferFiltersFromGenerate: for a plain explode, that rule synthesizes
     a ``size(arr) > 0`` filter and pushes it below the repartition down
     to the scan — where it re-evaluates the entire (quadratic) shingle
-    expression per input row; measured 14× slower at sf0.1.
+    expression per input row.
     ``explode_outer`` is exempt from the rule; the null row an empty
     array produces is filtered right back out (a narrow post-filter)."""
     return arr.select(
@@ -137,14 +136,11 @@ def ngram_jaccard_pairs_from_arrays(
     arr: DataFrame, threshold: float = 0.5, max_df: int = 100
 ) -> DataFrame:
     """ngram_jaccard_pairs over a precomputed ``(doc_id, n_sh,
-    shingles)`` frame (the _shingle_arrays shape). Round-16 note: a
-    cross-arm shared-shingling rewrite of eval_dedup_quality through
-    this entry point was measured (eager pin / lazy pin / shared
-    exchange) and REJECTED — reading back materialized shingle arrays
-    costs what rebuilding them costs, and exchange reuse cannot help
-    because the quadratic gram construction lives above the exchange
-    (numbers in OPTIMIZATION_r16.md). Kept as the jaccard core's
-    internal seam."""
+    shingles)`` frame (the _shingle_arrays shape), the jaccard core's
+    internal seam. Sharing one shingling across eval_dedup_quality's
+    arms does not pay: reading back materialized shingle arrays costs
+    what rebuilding them costs, and exchange reuse cannot help because
+    the quadratic gram construction lives above the exchange."""
     return (
         _pair_intersections_from_arrays(arr, max_df)
         .withColumn(
@@ -276,13 +272,11 @@ def cross_source_overlap(docs: DataFrame, n: int = 3) -> DataFrame:
     # partial aggregation combines map-side, so the shuffle carries ~one
     # row per document, and the source column joins onto that slim frame
     # afterwards (both sides a row per doc; AQE broadcasts the small
-    # side at test SFs, a co-keyed shuffle join at 100 TB). Measured
-    # fresh-session A/B at sf0.1 (SCALING.md): this form 4.9 s cold /
-    # 1.3 s warm; the "narrow" array_min(transform(md5)) form LOOKS
-    # shuffle-free but re-evaluates the shingle construction per array
-    # element (the CollapseProject trap _shingle_arrays documents) —
-    # 8.0 s cold / ~6 s warm; joining source BEFORE the aggregate adds
-    # the explode-width join — 10.9 s.
+    # side at test SFs, a co-keyed shuffle join at 100 TB). The
+    # "narrow" array_min(transform(md5)) form LOOKS shuffle-free but
+    # re-evaluates the shingle construction per array element (the
+    # CollapseProject trap _shingle_arrays documents); joining source
+    # BEFORE the aggregate adds the explode-width join.
     fp = (
         _explode_shingles(_shingle_arrays(docs, n))
         .groupBy("doc_id")
@@ -397,11 +391,9 @@ def minhash_banded_pairs(
     chars → bigint mod P, P = 2^31-1 — DuckDB parses the same hex with
     '0x'::BIGINT), then the ``num_hashes`` functions are universal-hash
     permutations h_i(x) = ((2i+1)·x + (1000003·i+12345)) mod P — native
-    integer arithmetic. The first cut ran md5(i || shingle) per hash:
-    16 md5s per shingle, measured 4× slower at 500 k docs (SCALING.md).
-    The base-hash projection sits behind a repartition barrier so
-    CollapseProject can't re-inline the md5 into all 16 lambdas (the
-    same trap _shingle_arrays documents).
+    integer arithmetic, not 16 md5s per shingle. The base-hash projection
+    sits behind a repartition barrier so CollapseProject can't re-inline the
+    md5 into all 16 lambdas (the same trap _shingle_arrays documents).
 
     100 TB shape: one shuffle on band keys (32-hex strings), bounded
     pair fan-out, signature cost ~1 md5 + num_hashes int-ops per
@@ -495,9 +487,8 @@ def _shuffle_partitions(df: DataFrame) -> int:
     """Explicit partition count for CPU-bound repartitions: AQE sizes
     exchanges by BYTES, so a plain repartition("col") under a
     byte-light but CPU-heavy stage coalesces to one partition and the
-    stage runs single-core (measured 5.7 s -> 0.5 s at sf0.1 on
-    binary_payload_dedup, SCALING.md round 9). Uses the session's
-    spark.sql.shuffle.partitions — the user's cluster-width knob."""
+    stage runs single-core. Uses the session's spark.sql.shuffle.partitions
+    — the user's cluster-width knob."""
     spark = df.sparkSession
     try:
         return int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -561,13 +552,11 @@ def _minhash_banded_from_xs(
     interpreted higher-order-function work whose byte footprint is tiny
     — with plain ``repartition("doc_id")`` (REPARTITION_BY_COL) AQE
     sizes the exchange by bytes, coalesces it to ONE partition, and the
-    whole signature+banding pipeline runs single-core: 5.7 s at sf0.1
-    vs 0.05 s with the explicit count (full ladder in SCALING.md,
-    round 9). The sig->banding step needs no second barrier: the band
-    keys live in the Generate operator's generator expression, and
-    Generate is not a Project, so CollapseProject cannot re-inline the
-    signature expression into it — ``sig`` is referenced as a plain
-    attribute (verified in the physical plan)."""
+    whole signature+banding pipeline runs single-core. The sig->banding step
+    needs no second barrier: the band keys live in the Generate operator's
+    generator expression, and Generate is not a Project, so CollapseProject
+    cannot re-inline the signature expression into it — ``sig`` is
+    referenced as a plain attribute (verified in the physical plan)."""
     banded = _banded_keys(xsdf, num_hashes, bands)
     buckets = (
         banded.groupBy("band", "band_key")
@@ -634,11 +623,8 @@ def binary_payload_dedup(
        ARITHMETIC on the hex encoding — each 8-byte window parses as
        two 32-bit conv() halves combined mod P = 2^31−1 (where
        2^32 ≡ 2, so window mod P = (2·hi + lo) mod P exactly) — no
-       per-window md5 and no per-window 16-char string materialization.
-       The first cut md5-hashed one 16-hex-char substring per payload
-       byte; replacing it with the conv arithmetic cut the sf0.1
-       headline 5.69 s -> see SCALING.md (the CDC-chunking unroll
-       recipe applied to MinHash).
+       per-window md5 and no per-window 16-char string materialization
+       (the CDC-chunking unroll recipe applied to MinHash).
 
     Output is one frame: method='exact_sha256' rows carry
     (doc_a=keep_doc_id, n_members>=2); method='minhash_bytes' rows carry
@@ -675,35 +661,30 @@ def binary_payload_dedup(
     )
     # NO array_distinct: a MinHash signature is min-over-hashes, and the
     # min of a multiset equals the min of its set — shingle multiplicity
-    # cannot change any signature, band key, or est_jaccard, while the
-    # per-row distinct pass costs ~6% of the whole job at sf0.1
-    # (interleaved warm A/B in SCALING.md; identical 4305 output pairs).
+    # cannot change any signature, band key, or est_jaccard, so a
+    # per-row distinct pass would be pure cost.
     # Each 8-byte window at byte offset i (stride 1 byte) is sliced from
     # the BINARY payload — substring on BinaryType is an O(1) byte
-    # slice, while the first cut sliced windows out of hex(payload), a
-    # STRING, where UTF8String.substring scans characters from position
-    # 0 every call: O(len²) per document and the true source of the
-    # 5.7 s r08 headline (jstack evidence + before/after in SCALING.md,
-    # round 9). The window hashes arithmetically: its two 32-bit halves
-    # parse via hex-of-4-bytes + conv (O(1) each), combine EXACTLY mod
-    # P = 2^31−1 (2^32 ≡ 2, so window mod P = (2·hi + lo) mod P), then
-    # a NONLINEAR mix x = (w² + a1·w) mod P. The quadratic term is
+    # slice, while slicing hex(payload), a STRING, makes
+    # UTF8String.substring scan characters from position 0 every call:
+    # O(len²) per document. The window hashes arithmetically: its two 32-bit
+    # halves parse via hex-of-4-bytes + conv (O(1) each), combine EXACTLY
+    # mod P = 2^31−1 (2^32 ≡ 2, so window mod P = (2·hi + lo) mod P), then a
+    # NONLINEAR mix x = (w² + a1·w) mod P. The quadratic term is
     # load-bearing: the downstream universal-hash family is affine, and
-    # affine maps preserve pairwise DIFFERENCES — text byte-windows
-    # share difference structure, so with a linear-only mix the 16
-    # per-hash orderings correlate and the estimator collapses
-    # (measured 0.19 estimate on a true-0.86 fixture pair; w² breaks
-    # the additive structure and tracks an md5 base hash to within
-    # noise — simulation table in SCALING.md round 9). The nested
-    # transform binds w as a lambda variable so the window parse is
-    # evaluated once per window, not once per reference. Overflow:
-    # w² + a1·w ≤ (P−1)² + a1·(P−1) < 7.98e18 < 2^63−1 in both engines.
-    # DuckDB reproduces identical bigints from the hex string:
-    # hex(substr(payload,i,4)) = substr(hex(payload), 2i−1, 8).
-    # The explicit-count repartition BEFORE the window stage spreads
-    # this CPU-bound O(payload_bytes) work across cores even when the
-    # upstream scan is a single small parquet block; the exchange
-    # carries the compact (doc_id, payload) rows.
+    # affine maps preserve pairwise DIFFERENCES — text byte-windows share
+    # difference structure, so with a linear-only mix the 16 per-hash
+    # orderings correlate and the estimator collapses (w² breaks the
+    # additive structure and tracks an md5 base hash to within noise). The
+    # nested transform binds w as a lambda variable so the window parse is
+    # evaluated once per window, not once per reference. Overflow: w² + a1·w
+    # ≤ (P−1)² + a1·(P−1) < 7.98e18 < 2^63−1 in both engines. DuckDB
+    # reproduces identical bigints from the hex string:
+    # hex(substr(payload,i,4)) = substr(hex(payload), 2i−1, 8). The
+    # explicit-count repartition BEFORE the window stage spreads this
+    # CPU-bound O(payload_bytes) work across cores even when the upstream
+    # scan is a single small parquet block; the exchange carries the compact
+    # (doc_id, payload) rows.
     xs = F.expr(
         f"transform("
         f"transform(sequence(1, length(payload) - {shingle_bytes - 1}),"
@@ -712,15 +693,12 @@ def binary_payload_dedup(
         f"      ) % {_MINHASH_P}L),"
         f" w -> (w * w + 1566083941L * w) % {_MINHASH_P}L)"
     )
-    # Two back-to-back doc_id exchanges are DELIBERATE (round-9 advisory
-    # proposed dropping one; the round-10 A/B in SCALING.md declined
-    # it): the outer spreads the O(payload_bytes) xs window parse —
-    # without it xs runs at scan parallelism (one small parquet block =
-    # one core: 2.1 s -> 5.7 s measured at sf0.1) — and the inner is
-    # the CollapseProject barrier keeping xs out of the 16 sig lambdas
-    # (skipping it instead re-inlines xs 16x and lands at the same
-    # 2.1 s, so neither alternative wins and this shape keeps both
-    # invariants explicit). The shuffled rows are compact
+    # Two back-to-back doc_id exchanges are DELIBERATE: the outer
+    # spreads the O(payload_bytes) xs window parse — without it xs runs
+    # at scan parallelism (one small parquet block = one core) — and
+    # the inner is the CollapseProject barrier keeping xs out of the 16
+    # sig lambdas (skipping it instead re-inlines xs 16x). This shape
+    # keeps both invariants explicit. The shuffled rows are compact
     # (doc_id, payload) then (doc_id, xs) on a representatives-only
     # frame — bytes are not the bottleneck at any scale; CPU spread is.
     near = (

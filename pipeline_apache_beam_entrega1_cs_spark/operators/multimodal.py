@@ -123,15 +123,6 @@ def resize_image_stub(docs_with_payload: DataFrame, box: int = 224) -> DataFrame
     )
 
 
-def real_decode_image(docs_with_payload: DataFrame) -> DataFrame:
-    """Integration point for a real image decoder (PIL etc.). Not
-    available in this container."""
-    raise NotImplementedError(
-        "image codec libraries are not installed in this environment; "
-        "use fake_decode_image for plumbing tests"
-    )
-
-
 # Synthetic magic-number headers keyed by doc_id % 4 — the deterministic
 # stand-in for a mixed image corpus (real PNG/JPEG/GIF magics; slot 3
 # gets no header and detects as raw/unknown).
@@ -289,14 +280,11 @@ def byte_entropy(docs: DataFrame, max_bytes: int = 256,
     higher-order functions (run starts where s[i] != s[i-1]), giving
     byte frequencies without exploding. H = log2(n) - (Σ c·log2 c)/n
     over the run-length array via F.aggregate. Zero shuffles, zero row
-    inflation. Measured at 500 k docs (SCALING.md round 5): 11.7 s vs
-    13.4 s for the explode + double-groupBy form locally — but the
-    structural win is what matters at 100 TB: the explode form pushes a
-    ×max_bytes row inflation into its first Exchange, this form shuffles
-    nothing. (A single-pass struct-accumulator F.aggregate was also
-    measured: 2.4× SLOWER — per-element struct construction dominates.)
-    Zero-length payloads drop out (consistently with the UNNEST-based
-    oracle)."""
+    inflation: the explode + double-groupBy form pushes a ×max_bytes
+    row inflation into its first Exchange, this form shuffles nothing.
+    (A single-pass struct-accumulator F.aggregate is slower:
+    per-element struct construction dominates.) Zero-length payloads drop
+    out (consistently with the UNNEST-based oracle)."""
     frame = _byte_run_frame(docs, max_bytes, payload_col)
     n = F.size(F.col("_s"))
     sum_clogc = F.aggregate(
@@ -776,13 +764,11 @@ def cdc_chunk_stats(docs_with_payload: DataFrame,
     matched ACROSS the corpus; per doc: chunk count, bytes chunked, and
     how many of its chunks also appear in another document.
 
-    Plan shape (measured, not assumed): the hash positions are
-    EXPLODED to rows and each row evaluates one flat
-    zip_with-slice-aggregate — the frame-energy pattern. The first cut
-    computed the same hashes with a transform(filter(aggregate(...)))
-    triple-nested INSIDE one row and fell off whole-stage codegen into
-    interpreted evaluation: 190 s for 500 docs vs ~2 s for this form
-    (SCALING.md). Boundary lists come back with one collect_list
+    Plan shape: the hash positions are EXPLODED to rows and each row
+    evaluates one flat zip_with-slice-aggregate — the frame-energy
+    pattern. A transform(filter(aggregate(...))) triple-nested INSIDE
+    one row falls off whole-stage codegen into interpreted evaluation.
+    Boundary lists come back with one collect_list
     aggregate (≤ max_bytes/64 ints per doc), chunks explode bounded by
     max_bytes, and the cross-corpus match is ONE mergeable md5-keyed
     aggregate — dedup_hash's scale class with boundary-shift
@@ -805,24 +791,20 @@ def cdc_chunk_stats(docs_with_payload: DataFrame,
         .filter(F.size("_v") >= _CDC_W)
         .withColumn("_n", F.size("_v"))
     )
-    # NOTE (round 11, reversing the round-9 "kept exchange-free" call):
-    # the position-hash stage is CPU-dense but BYTE-light, so it
-    # inherits the scan's split count — one partition on a small
-    # single-file input — and runs single-core. The round-9 A/B saw no
-    # difference; re-laddered on a quiet round-11 window the explicit
-    # doc_id repartition measures 3.54 s -> 2.22 s min-of-3 at sf0.1
-    # (SCALING.md round 11). At 100 TB the same reasoning holds in
-    # reverse: the exchange is one narrow (doc_id, payload<=256B) pass,
-    # amortized by spreading the 8-term-per-byte rolling-hash burn
-    # across the cluster instead of the scan's split layout.
+    # The position-hash stage is CPU-dense but BYTE-light, so without
+    # the explicit doc_id repartition it inherits the scan's split
+    # count — one partition on a small single-file input — and runs
+    # single-core. At 100 TB the same reasoning holds in reverse: the
+    # exchange is one narrow (doc_id, payload<=256B) pass, amortized by
+    # spreading the 8-term-per-byte rolling-hash burn across the cluster
+    # instead of the scan's split layout.
     pos = base.select(
         "doc_id", "_v",
         F.explode(F.sequence(F.lit(_CDC_W), F.col("_n"))).alias("i"),
     )
     # h = Σ_j v[i-j]·31^j, UNROLLED to 8 plain element_at terms: the
     # slice/reverse/zip_with array form allocates three arrays per
-    # position (measured 63 s at 500 k docs); straight arithmetic stays
-    # in whole-stage codegen
+    # position; straight arithmetic stays in whole-stage codegen
     h = sum(
         (
             F.element_at(F.col("_v"), (F.col("i") - j).cast("int"))
@@ -946,7 +928,7 @@ def npy_header_meta(npy: DataFrame) -> DataFrame:
 
     100 TB shape: fixed-offset BINARY substring + conv arithmetic,
     O(1) per row, zero shuffle — binary substring is a byte slice
-    (never the O(len²) string-substring trap, SCALING.md round 9)."""
+    (never the O(len²) string-substring trap)."""
     p = F.col("payload")
     magic_ok = F.hex(F.substring(p, 1, 6)) == "934E554D5059"
     ver_major = F.conv(F.hex(F.substring(p, 7, 1)), 16, 10).cast("long")
@@ -1052,9 +1034,7 @@ def tiff_header_meta(tiff: DataFrame) -> DataFrame:
     one Project and referenced as a COLUMN by the two tag_value()
     filters in the next, CollapseProject's multi-reference/expensive
     guard keeps the entries construction evaluated ONCE (inline, the
-    local-expression form evaluated it three times). Same-session A/B
-    at sf0.1, min-of-4 warm: original no-barrier 5.4-6.2 s → shipped
-    2.6-3.3 s (round 13)."""
+    local-expression form evaluated it three times)."""
     tiff = tiff.repartition(_explicit_partitions(tiff), "doc_id")
     p = F.col("payload")
     le = F.hex(F.substring(p, 1, 2)) == "4949"
@@ -1221,10 +1201,9 @@ def tar_index(tar: DataFrame) -> DataFrame:
     barrier before the folds run: inlined into the 512-element lambdas
     they re-evaluate per ELEMENT (member 2's offset transitively
     re-parses members 0-1's octal sizes → ~20k interpreted ops/row and
-    a single-core scan stage; measured minutes at sf0.1 vs ~2 s with
-    the barrier — the CollapseProject lesson of _shingle_arrays, in
-    lambda form), and the same exchange spreads the CPU-bound fold
-    across the cluster instead of the scan's partitioning."""
+    a single-core scan stage — the CollapseProject lesson of
+    _shingle_arrays, in lambda form), and the same exchange spreads the
+    CPU-bound fold across the cluster instead of the scan's partitioning."""
     p = F.col("payload")
 
     def oct_field(off, digits):  # parse fixed-width octal at 0-based off
@@ -1232,17 +1211,16 @@ def tar_index(tar: DataFrame) -> DataFrame:
         # ASCII '0'-'7'), NOT a per-digit _be_uint fold: the fold
         # referenced `off` once per digit, and since each walked offset
         # embeds the previous member's parsed size, the pass-1
-        # expression tree grew ~11× per member (~4 MB task binary,
-        # ~9 s planning per fresh plan — the sweep's top fixed cost;
-        # round 13, SCALING.md). One reference per field keeps the
-        # walk's tree LINEAR in members.
+        # expression tree grew geometrically per member (a multi-MB
+        # task binary and seconds of planning per fresh plan). One
+        # reference per field keeps the walk's tree LINEAR in members.
         #
         # The parse is ANCHORED to the ustar field layout (optional
         # leading spaces, octal digits, space/NUL padding to the end):
         # a non-conforming field (GNU base-256 size, interior junk like
         # '12 34') fails the regexp and yields NULL — conv('') is null
         # — instead of concatenating surviving digits into a
-        # plausible-but-wrong number (ADVICE r13).
+        # plausible-but-wrong number.
         return F.conv(
             F.regexp_extract(
                 F.substring(p, (off + 1).cast("int"), digits).cast("string"),
@@ -1403,8 +1381,8 @@ def jpeg_sof_meta(jpeg: DataFrame) -> DataFrame:
     # F.aggregate the offset accumulator is a bound variable evaluated
     # once per step, whereas unrolled off_k expressions re-inline
     # off_{k-1} into every byte read (CollapseProject) — ~4^steps
-    # reads/row and a codegen blow-up (measured 294 s vs ~2 s at
-    # sf0.1, the tar_index lesson in lambda form).
+    # reads/row and a codegen blow-up (the tar_index lesson in lambda
+    # form).
     off = F.aggregate(
         F.sequence(F.lit(1), F.lit(_JPEG_WALK_STEPS)),
         F.lit(2).cast("long"),
@@ -1520,9 +1498,9 @@ def zip_index(z: DataFrame) -> DataFrame:
     The payload column MATERIALIZES through a repartition barrier
     before any read: zip_index makes ~30 references to it, and
     CollapseProject would otherwise re-inline the whole fixture
-    construction (concat + three crc32s) into every one — measured
-    17.6 s vs 1.6 s at sf0.1, the tar_index barrier lesson on the
-    build side instead of the walk side."""
+    construction (concat + three crc32s) into every one — the
+    tar_index barrier lesson on the build side instead of the walk
+    side."""
     z = z.repartition(_explicit_partitions(z), "doc_id")
     p = F.col("payload")
 
@@ -1570,9 +1548,8 @@ def zip_index(z: DataFrame) -> DataFrame:
     usize = u32(e + 24)
     name = F.substring(p, (e + 47).cast("int"), nl.cast("int")).cast("string")
     # explode(transform(-> struct)) rather than posexplode: GenerateExec
-    # with PosExplode measured 15 s vs 0.5 s at sf0.1 on this exact
-    # frame (pathological row-copy path); the struct-array form is the
-    # same shape tar_index uses.
+    # with PosExplode takes a pathological row-copy path on this frame;
+    # the struct-array form is the same shape tar_index uses.
     return (
         staged.select(
             "doc_id", "payload", "eocd_ok", "n_total",
@@ -1614,7 +1591,7 @@ def zip_index(z: DataFrame) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# GIF / BMP / WebP / ISO-BMFF (MP4) container parsers — round 10.
+# GIF / BMP / WebP / ISO-BMFF (MP4) container parsers.
 # The image-format corners the PNG/JPEG/TIFF family doesn't cover:
 # GIF's packed bit-field byte, BMP's SIGNED little-endian height
 # (negative = top-down row order), WebP's three-way RIFF variant

@@ -84,12 +84,12 @@ def embedding_cosine_pairs(
     block key comes from LSH bucketing (see lsh_ann_topk) rather than a
     semantic label.
 
-    ``block_cap`` bounds the quadratic (VERDICT r11 item 2): semantic
-    labels have FIXED cardinality, so at 100× data each block is 100×
-    larger and pairs grow 10,000×. With a cap, each block contributes at
-    most C(cap, 2) pairs — a deterministic hash-ordered sample (rank by
-    md5(vec_id), the same expression DuckDB evaluates, so oracles can
-    replicate the kept set exactly). Capped-block losses are reported by
+    ``block_cap`` bounds the quadratic: semantic labels have FIXED
+    cardinality, so at 100× data each block is 100× larger and pairs grow
+    10,000×. With a cap, each block contributes at most C(cap, 2) pairs — a
+    deterministic hash-ordered sample (rank by md5(vec_id), the same
+    expression DuckDB evaluates, so oracles can replicate the kept set
+    exactly). Capped-block losses are reported by
     ``dedup_cosine_threshold_sweep``'s n_capped_blocks / n_rows_dropped
     columns, mirroring dedup_lsh_bucket_stats."""
     from .dedup import _shuffle_partitions
@@ -117,8 +117,7 @@ def embedding_cosine_pairs(
     # explicit-count barrier (the dedup._shuffle_partitions rule): the
     # in-block pair cosine stage is CPU-dense but byte-light, so left
     # to AQE it coalesces to the scan's split layout and runs
-    # single-core — measured 2.16 s -> 0.71 s at sf0.1 (SCALING.md
-    # round 11). Per-block skew at scale is the known limit of
+    # single-core. Per-block skew at scale is the known limit of
     # semantic-label blocking; the LSH-bucketed variant below is the
     # geometry-bounded path.
     return (
@@ -250,82 +249,34 @@ def lsh_ann_topk(
     )
 
 
-def embedding_cosine_pairs_lsh(
+def _lsh_buckets(
     embeddings: DataFrame,
-    threshold: float = 0.35,
-    bucket_length: float = 4.0,
-    num_tables: int = 6,
-    seed: int = 42,
-    max_bucket: int = 1024,
-    dim: int | None = None,
-    arrow_verify: bool = True,
-) -> DataFrame:
-    """Near-duplicate vector pairs with LSH-bucket blocking — the 100 TB
-    variant of ``embedding_cosine_pairs``.
+    bucket_length: float,
+    num_tables: int,
+    seed: int,
+    dim: int | None,
+) -> tuple[DataFrame, Column]:
+    """Bucket assignment for ``embedding_cosine_pairs_lsh``: returns
+    ``(vecs, buckets)``, where ``vecs`` is ``(vec_id, emb)`` with every
+    embedding checked against ``dim`` in-plan, and ``buckets`` is the
+    ``array<long>`` of one bucket per table, ``floor(emb · plane_t /
+    bucket_length)`` over ``num_tables`` fixed-seed Gaussian planes.
 
-    ``embedding_cosine_pairs`` blocks on a SEMANTIC column (label): its
-    pairwise cost is Σ block², which degenerates toward all-pairs when
-    labels are coarse. Here the block key is data-independent geometry:
-    ``num_tables`` p-stable random projections (fixed-seed Gaussian
-    planes, evaluated as literal-array expressions inside the scan
-    stage — the MLlib BucketedRandomProjectionLSH fit/transform this
-    replaced cost ~2 s of driver fit + vector<->array conversions per
-    run for the identical math, measured in SCALING.md round 12) assign
-    each vector a bucket per table; candidate pairs are generated only
-    inside a (table, bucket) cell, deduped across tables on BARE IDS
-    (the round-11 93 s -> 6.4 s fix: the distinct runs on 16-byte id
-    pairs, never on 1 KB embedding rows), then exact-cosine verified.
-
-    The verify stage is the irreducible cost — on near-uniform data a
-    low threshold makes candidates ~= all pairs (measured round 12:
-    recall at 0.35 collapses below 0.9 for ANY bucket_length that
-    actually prunes, because 0.35-pairs are the bulk tail, not a
-    near-dup cluster) — so it runs VECTORIZED and PER CELL (round-15
-    restructure, guide §2.3 "shuffle keys and metadata instead of
-    payloads" + §4.2): each capped (table, bucket) cell's members are
-    collected ONCE (<= max_bucket structs of ~dim doubles), one
-    mapInArrow pass computes every within-cell pairwise cosine with
-    the exact same numpy per-pair reduction the round-12 verify used
-    (bit-identical roundings), and only SURVIVORS (cos >= threshold)
-    leave Python. The cross-table dedup then runs on the survivor set
-    (~0.2% of candidates at threshold 0.35) instead of materializing
-    |candidates| (near n²) id-pair rows through a self-join, a distinct
-    and two embedding re-attach joins — measured 3.25 s -> 1.67 s at
-    sf0.1 (min-of-3; the round-12 arrow-verify pipeline profiled at
-    3.25 s in the same session, the expression pipeline at 6.98 s;
-    candidate set and output rows IDENTICAL by construction — 4097
-    pairs, zero value mismatches). Shuffle budget: num_tables copies of
-    the corpus through ONE exchange into cells, vs the old path's 6x
-    id-explode + 2M-row distinct + ~|pairs| * 2 * dim * 8 B verify
-    materialization. ``arrow_verify=False`` keeps the round-12
-    expression pipeline (id-pair join + interpreted Catalyst fold) for
-    the A/B; tests assert both return identical pair sets.
-
-    Two knobs bound the pairwise cost: ``bucket_length`` sets the
-    expected bucket population, and ``max_bucket`` hard-caps it — cells
-    above the cap are dropped before pair generation, exactly like the
-    n-gram dedup's frequency cap, so worst-case pairwise work is
-    <= max_bucket²/2 * num_tables cosines no matter how degenerate the
-    geometry (and per-cell memory is <= max_bucket * dim * 8 B plus one
-    bounded chunk of pair rows). Recall vs the exact all-pairs baseline
-    is asserted in tests (rows-only oracle: bucket boundaries are not
-    SQL-expressible)."""
+    The plane literals must match the embedding length: ``zip_with``
+    pads the shorter array with nulls, so a dim mismatch would null
+    every dot and bucket and the bucket equi-join would silently return
+    zero pairs. ``dim=None`` derives dim from the data (one bounded
+    limit-1 probe), and every row is guarded in-plan, so a ragged
+    corpus fails loudly instead of dropping rows."""
     import numpy as np
 
-    # The plane literals must match the embedding length: zip_with pads
-    # the shorter array with nulls, so a dim mismatch would null every
-    # dot/bucket and the bucket equi-join would silently return ZERO
-    # pairs (ADVICE r12). Derive dim from the data by default (one
-    # limit-1 scan — bounded), and guard every row in-plan so a ragged
-    # corpus fails loudly instead of dropping rows.
     if dim is None:
-        # Probe only positive-size embeddings: size(NULL) is null (a
-        # None probe would crash int() with a bare TypeError, ADVICE
-        # r13), and an empty-embedding FIRST row must not mask valid
-        # rows behind it — the probe result would otherwise depend on
-        # partition order, not on the data (ADVICE r14). The ValueError
-        # is reserved for a corpus with NO positive-size embedding at
-        # all (ragged rows still fail loudly via the in-plan guard).
+        # Probe only positive-size embeddings: size(NULL) is null, and
+        # an empty-embedding first row must not mask valid rows behind
+        # it, or the probe would depend on partition order, not on the
+        # data. The ValueError is reserved for a corpus with no
+        # positive-size embedding at all (ragged rows still fail loudly
+        # via the in-plan guard).
         first = (
             embeddings.where(F.size("embedding") > 0)
             .select(F.size("embedding").alias("d"))
@@ -353,9 +304,9 @@ def embedding_cosine_pairs_lsh(
                 F.lit(
                     "embedding_cosine_pairs_lsh: embedding length "
                 ),
-                # coalesce: a NULL embedding must produce THIS labeled
+                # coalesce: a NULL embedding must produce this labeled
                 # message, not null out the whole concat into an
-                # anonymous [USER_RAISED_EXCEPTION] null (ADVICE r13)
+                # anonymous [USER_RAISED_EXCEPTION] null
                 F.coalesce(
                     F.size("embedding").cast("string"), F.lit("NULL")
                 ),
@@ -377,63 +328,66 @@ def embedding_cosine_pairs_lsh(
         bucket_exprs.append(
             F.floor(dot / F.lit(float(bucket_length))).cast("long")
         )
-    if not arrow_verify:
-        # Round-12 expression pipeline, kept verbatim as the A/B
-        # reference: id-only bucket explode, candidate self-join,
-        # 16-byte id-pair distinct, embedding re-attach, interpreted
-        # Catalyst cosine fold.
-        hashed = vecs.select(
-            "vec_id",
-            F.posexplode(F.array(*bucket_exprs)).alias("tbl", "bucket"),
-        )
-        live = (
-            hashed.groupBy("tbl", "bucket")
-            .agg(F.count(F.lit(1)).alias("_bsz"))
-            .filter((F.col("_bsz") >= 2) & (F.col("_bsz") <= max_bucket))
-            .select("tbl", "bucket")
-        )
-        pruned = hashed.join(live, ["tbl", "bucket"])
-        a = pruned.select("tbl", "bucket", F.col("vec_id").alias("vec_a"))
-        b = pruned.select("tbl", "bucket", F.col("vec_id").alias("vec_b"))
-        pair_ids = (
-            a.join(b, ["tbl", "bucket"])
-            .filter(F.col("vec_a") < F.col("vec_b"))
-            .select("vec_a", "vec_b")
-            .distinct()
-        )
-        ea = vecs.select(
-            F.col("vec_id").alias("vec_a"), F.col("emb").alias("emb_a")
-        )
-        eb = vecs.select(
-            F.col("vec_id").alias("vec_b"), F.col("emb").alias("emb_b")
-        )
-        cand = pair_ids.join(ea, "vec_a").join(eb, "vec_b")
-        return cand.select(
-            "vec_a",
-            "vec_b",
-            F.round(cosine(F.col("emb_a"), F.col("emb_b")), 6).alias("cos_sim"),
-        ).filter(F.col("cos_sim") >= threshold)
+    return vecs, F.array(*bucket_exprs)
 
-    # Per-cell vectorized verify (round 15): one exchange collects each
-    # live capped cell's members; numpy computes all within-cell
-    # cosines; only survivors leave Python; cross-table dedup runs on
-    # survivors. Candidate set identical to the expression pipeline.
-    #
-    # The live-cell pre-filter runs on ID-ONLY rows (ADVICE r15,
-    # medium): filtering on size AFTER collect_list means a degenerate
-    # over-cap cell (low-variance geometry hashing most of the corpus
-    # into one bucket) materializes the entire cell's embeddings
-    # (~n·dim·8 B) in a single aggregation buffer before being dropped.
-    # Counting on vec_id-only rows first and broadcast-joining members
-    # to the (tiny) live cell list guarantees no over-cap cell ever
-    # aggregates embedding payloads — the docstring's per-cell memory
-    # bound now holds DURING aggregation, not just after. Cost: the
-    # bucket expressions are evaluated twice (once id-only, once with
-    # emb attached), same as the expression pipeline's hashed/pruned
-    # split; the join adds no exchange (live is broadcast).
+
+def embedding_cosine_pairs_lsh(
+    embeddings: DataFrame,
+    threshold: float = 0.35,
+    bucket_length: float = 4.0,
+    num_tables: int = 6,
+    seed: int = 42,
+    max_bucket: int = 1024,
+    dim: int | None = None,
+) -> DataFrame:
+    """Near-duplicate vector pairs with LSH-bucket blocking — the 100 TB
+    variant of ``embedding_cosine_pairs``.
+
+    ``embedding_cosine_pairs`` blocks on a semantic column (label): its
+    pairwise cost is Σ block², which degenerates toward all-pairs when
+    labels are coarse. Here the block key is data-independent geometry:
+    ``num_tables`` p-stable random projections (fixed-seed Gaussian
+    planes, evaluated as literal-array expressions inside the scan
+    stage, see ``_lsh_buckets``) assign each vector a bucket per table.
+    Candidate pairs are generated only inside a (table, bucket) cell and
+    exact-cosine verified; the cross-table dedup runs on bare id pairs,
+    never on embedding rows.
+
+    The verify stage is the irreducible cost: on near-uniform data a
+    low threshold makes candidates close to all pairs, because
+    0.35-pairs are the bulk tail, not a near-dup cluster. So it runs
+    vectorized and per cell: each capped (table, bucket) cell's members
+    are collected once (<= max_bucket structs of ~dim doubles), one
+    mapInArrow pass computes every within-cell pairwise cosine with a
+    numpy per-pair reduction rounded HALF_UP like ``F.round``, and only
+    survivors (cos >= threshold) leave Python. The cross-table dedup
+    then runs on the survivor set instead of materializing
+    |candidates| (near n²) id-pair rows. Shuffle budget: num_tables
+    copies of the corpus through one exchange into cells.
+
+    Two knobs bound the pairwise cost: ``bucket_length`` sets the
+    expected bucket population, and ``max_bucket`` hard-caps it — cells
+    above the cap are dropped before pair generation, exactly like the
+    n-gram dedup's frequency cap, so worst-case pairwise work is
+    <= max_bucket²/2 * num_tables cosines no matter how degenerate the
+    geometry (and per-cell memory is <= max_bucket * dim * 8 B plus one
+    bounded chunk of pair rows). Recall vs the exact all-pairs baseline
+    is asserted in tests (rows-only oracle: bucket boundaries are not
+    SQL-expressible)."""
+    vecs, buckets = _lsh_buckets(
+        embeddings, bucket_length, num_tables, seed, dim
+    )
+    # The live-cell pre-filter runs on id-only rows: filtering on size
+    # after collect_list would let a degenerate over-cap cell (most of
+    # the corpus hashed into one bucket) materialize the whole cell's
+    # embeddings (~n·dim·8 B) in one aggregation buffer before being
+    # dropped. Counting id-only rows first and broadcast-joining members
+    # to the tiny live-cell list keeps the per-cell memory bound during
+    # aggregation, not just after. The bucket expressions are evaluated
+    # twice (id-only, then with emb attached); the join adds no
+    # exchange (live is broadcast).
     hashed = vecs.select(
-        "vec_id",
-        F.posexplode(F.array(*bucket_exprs)).alias("tbl", "bucket"),
+        "vec_id", F.posexplode(buckets).alias("tbl", "bucket")
     )
     live = (
         hashed.groupBy("tbl", "bucket")
@@ -442,9 +396,7 @@ def embedding_cosine_pairs_lsh(
         .select("tbl", "bucket")
     )
     members = vecs.select(
-        "vec_id",
-        "emb",
-        F.posexplode(F.array(*bucket_exprs)).alias("tbl", "bucket"),
+        "vec_id", "emb", F.posexplode(buckets).alias("tbl", "bucket")
     )
     cells = (
         members.join(F.broadcast(live), ["tbl", "bucket"])
@@ -472,8 +424,6 @@ def embedding_cosine_pairs_lsh(
                 ).reshape(len(ids), -1)
                 order = _np.argsort(ids, kind="stable")
                 ids, x = ids[order], x[order]
-                # per-vector norms: same (v*v).sum(axis=1) reduction the
-                # round-12 per-pair verify used — bit-identical values
                 norms = _np.sqrt((x * x).sum(axis=1))
                 ii, jj = _np.triu_indices(len(ids), k=1)
                 for s in range(0, len(ii), chunk):
@@ -483,16 +433,15 @@ def embedding_cosine_pairs_lsh(
                     )
                     # HALF_UP (away from zero), matching F.round and
                     # the DuckDB oracle — np.round is half-to-even,
-                    # which diverges on exact 6th-decimal midpoints
-                    # (ADVICE r12).
+                    # which diverges on exact 6th-decimal midpoints.
                     cs = _np.copysign(
                         _np.floor(_np.abs(raw) * 1e6 + 0.5), raw
                     ) / 1e6
                     keep = cs >= threshold
-                    # strict vec_a < vec_b semantics (ADVICE r15): two
-                    # distinct rows sharing a vec_id would otherwise
-                    # emit an (x, x) pair that both legacy paths'
-                    # strict-inequality filter drops.
+                    # strict vec_a < vec_b semantics: two distinct rows
+                    # sharing a vec_id would otherwise emit an (x, x)
+                    # pair, which a self-join's strict-inequality
+                    # filter drops.
                     keep &= ids[ai] != ids[bi]
                     if keep.any():
                         out_a.append(ids[ai][keep])
@@ -581,9 +530,7 @@ def _kmeans_fit(vecs: DataFrame, k: int, iters: int):
         # MLlib-KMeans structure (centroids live on the driver, data
         # never does). Without it every downstream reference re-plans
         # the whole fit subtree and Catalyst+AQE re-optimization
-        # dominates wall time: the lazy straight-line form cost ~3.7 s
-        # of driver work per consuming query at sf0.1 vs ~0.9 s
-        # materialized (SCALING.md round 9). Values are identical —
+        # dominates wall time. Values are identical —
         # the collect only pins the same deterministic rounded
         # centroids — so the SQL oracle's full-fit replay still
         # hash-matches.
@@ -675,7 +622,7 @@ def ivf_ann_topk_det(
 
 def _pq_fit(embeddings: DataFrame, m: int, k: int, iters: int):
     """Shared unified-pass PQ fit (see pq_codes for the conventions and
-    the measured chain-vs-unified plan comparison): returns
+    the one-keyed-pass plan shape): returns
     (sub, cents, assign) where ``sub`` is the (vec_id, s, vs) subvector
     frame, ``cents`` the final (s, cluster, c) codebooks, and
     ``assign(cents)`` the (vec_id, s, vs, d, cluster) code assignment —
@@ -755,12 +702,9 @@ def pq_codes(
     (subspace, cluster, centroid) table by HASH on the subspace key
     (m·k rows broadcast — a keyed BroadcastHashJoin, not a nested
     loop), and each Lloyd step is one (vec_id, s) struct-min groupBy
-    plus one (s, cluster, dim) mergeable-avg update. The first form of
-    this operator built m separate fit/assign chains and joined them on
-    vec_id: 16 Exchanges / 6 SortMergeJoins / 16 BNLJs at m=4 vs
-    5 Exchanges / 2 keyed BroadcastHashJoins / 0 nested loops here
-    (measured, formatted-plan node counts) — per-item work is
-    identical, the chain form just paid m× the shuffle machinery."""
+    plus one (s, cluster, dim) mergeable-avg update. m separate
+    fit/assign chains joined on vec_id would do the same per-item work
+    but pay m× the shuffle machinery."""
     sub, cents, assign = _pq_fit(embeddings, m, k, iters)
     final = assign(cents)
     return final.groupBy("vec_id").agg(
@@ -949,10 +893,11 @@ def mmr_rerank(
     greedy rounds — independent of corpus size, so at 100 TB it costs
     the same as at 1 GB. Greedy selection is UNROLLED into k
     deterministic rounds (the kmeans_lloyd/pagerank fixed-iteration
-    recipe): each round is an (anti-join remaining, max-sim penalty
+    recipe): each pick is an (anti-join remaining, max-sim penalty
     against selected, argmax via min(struct)) trio. All scores are
-    DECIMAL off round-6 cosines — bit-identical in any engine; ties
-    break on cand_id. Round-1 penalty is 0, so mmr = 0.5*rel there.
+    DECIMAL off cosines rounded to 6 dp — bit-identical in any engine;
+    ties break on cand_id. The first pick's penalty is 0, so mmr =
+    0.5*rel there.
     """
     cand = cosine_topk(embeddings, query_ids, k=m)
     emb = embeddings.select(
@@ -995,9 +940,8 @@ def _mmr_core(ce: DataFrame, k: int) -> DataFrame:
     )
     # candidates and their pair sims are k/m-bounded per query — tiny at
     # ANY corpus size. Caching them collapses the unrolled rounds' plan
-    # from ~2^k replays of the retrieval stage to one (the audit showed
-    # 45 Exchanges uncached vs a handful cached); at 100 TB this is the
-    # natural materialization point between retrieval and re-rank.
+    # from ~2^k replays of the retrieval stage to one; at 100 TB this is
+    # the natural materialization point between retrieval and re-rank.
     pair = pair.cache()
     cands = ce.select("query_id", "cand_id", "rel").cache()
 
@@ -1059,8 +1003,8 @@ def _mmr_core(ce: DataFrame, k: int) -> DataFrame:
     # Materialize the k-rows-per-query result THROUGH the cached
     # intermediates, then release them: repeated invocations in a
     # long-lived session (driver loops, bench reruns) must not
-    # accumulate cached pair/candidate relations in executor storage
-    # (ADVICE r7). The final frame stays cached — it IS the output the
+    # accumulate cached pair/candidate relations in executor storage.
+    # The final frame stays cached — it IS the output the
     # caller consumes, and it is pick_rank*|queries| rows by
     # construction, corpus-size-independent.
     result = result.cache()
@@ -1096,11 +1040,11 @@ def retrieval_pipeline_topk(
     # same bounded class as _kmeans_fit's k-row centroid pin, and the
     # natural serving handoff: a FAISS-style index returns exactly this
     # list). Without the pin, _mmr_core's pair self-join inlines the
-    # ENTIRE composed IVF-PQ chain twice into every MMR round's plan
-    # and Catalyst planning dominates wall time (the round-9 kmeans
-    # lesson, re-found by round-14 profiling of ann_retrieval_pipeline,
-    # VERDICT r13 item 3). Values are identical — the collect pins the
-    # deterministic ranked candidates the SQL oracle replays in full.
+    # ENTIRE composed IVF-PQ chain twice into every MMR pick's plan
+    # and Catalyst planning dominates wall time (the same reason
+    # _kmeans_fit pins its centroids). Values are identical — the collect
+    # pins the deterministic ranked candidates the SQL oracle replays in
+    # full.
     cand = cand.sparkSession.createDataFrame(cand.collect(), cand.schema)
     emb = embeddings.select(F.col("vec_id"), _as_double("embedding").alias("emb"))
     q = embeddings.filter(F.col("vec_id").isin(query_ids)).select(
@@ -1138,7 +1082,7 @@ def truncated_rescore_topk(
     are iid random, so the prefix is an arbitrary projection; MRL
     checkpoints would support a far more aggressive prefix), the dimension-axis analog of
     what IVF does on the row axis. Both stages are deterministic
-    (round-6 scores, cand_id tie-breaks), so the whole two-stage plan is
+    (6-dp-rounded scores, cand_id tie-breaks), so the whole two-stage plan is
     value-hash oracle-able, unlike learned-index ANN.
 
     Scale shape: stage 1 is the cosine_topk stream (broadcast queries x
@@ -1237,10 +1181,8 @@ def semantic_cluster_dedup(
     # a shared Exchange boundary directly above it, so physical
     # planning (ReusedExchange / AQE stage reuse) executes the
     # crossJoin+argmin assignment ONCE and the two extra references
-    # read shuffle output — measured 4.35 s -> 3.36 s (-23%) at sf0.1
-    # bench shape (round-10 ladder in SCALING.md; the r9 VERDICT ask).
-    # The exchange carries 2k compact rows here and O(corpus) at scale
-    # — the same rows the pair join would shuffle anyway.
+    # read shuffle output. The exchange carries 2k compact rows here and
+    # O(corpus) at scale — the same rows the pair join would shuffle anyway.
     n_part = int(
         embeddings.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
@@ -1264,17 +1206,15 @@ def semantic_cluster_dedup(
         F.col("nrm").alias("nrm_b"),
         F.explode(F.sequence(F.lit(0), F.lit(S - 1))).alias("salt"),
     )
-    # Shuffled-hash pair join, building on the UNREPLICATED a side
-    # (round 16, guide §3.1): sort-merge sorted both sides — including
-    # the S-fold-replicated b rows WITH their embedding payloads —
-    # before every pair stage. Hashing the a side skips both sorts:
-    # measured 3.40 -> 2.66-2.67 s min-of-3 at sf0.1 (quiet window,
-    # pair set bit-identical). Memory: the per-partition build holds
-    # only a-side rows, |cluster|/S vectors per (cluster, salt) key,
-    # bounded by the same cluster-population contract that bounds the
-    # pair work itself (k scales with corpus; SemDeDup runs 50k
-    # clusters), so the hash relation stays small where the operator
-    # is usable at all.
+    # Shuffled-hash pair join, building on the UNREPLICATED a side:
+    # sort-merge would sort both sides — including the
+    # S-fold-replicated b rows WITH their embedding payloads — before
+    # every pair stage; hashing the a side skips both sorts. Memory: the
+    # per-partition build holds only a-side rows, |cluster|/S vectors per
+    # (cluster, salt) key, bounded by the same cluster-population contract
+    # that bounds the pair work itself (k scales with corpus; SemDeDup runs
+    # 50k clusters), so the hash relation stays small where the operator is
+    # usable at all.
     close = (
         a.hint("shuffle_hash").join(b, ["cluster", "salt"])
         .filter(F.col("vec_a") < F.col("vec_b"))

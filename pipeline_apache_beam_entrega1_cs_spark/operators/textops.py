@@ -37,7 +37,7 @@ def explode_tokens(docs: DataFrame, distinct: bool = False,
     """(doc_id, tok) rows via explode_outer + null filter — a plain
     explode triggers InferFiltersFromGenerate, whose synthesized
     size()>0 filter re-evaluates the tokenizer at the scan (see
-    operators/dedup._explode_shingles for the measured cost)."""
+    operators/dedup._explode_shingles)."""
     toks = tokens(F.col("text"))
     if distinct:
         toks = F.array_distinct(toks)
@@ -480,17 +480,15 @@ def bpe_fit(docs: DataFrame, rounds: int = BPE_FIT_ROUNDS) -> DataFrame:
     The fit itself shuffles only (pair -> partial count) rows, and the
     argmax is a 1-row broadcast (sanctioned scalar attach).
 
-    Round 16 (the r14 cached-loop pin rule, ordered by VERDICT r15
-    item 5): each round's winner and the merged corpus form are pinned
-    with a per-invocation localCheckpoint. Unpinned, round r's plan
-    embeds best_{r-1}, whose subtree embeds best_{r-2}'s pair-count
-    aggregation over the previous corpus form, and so on — the corpus
-    regexp + pair-count explode re-derives once per DOWNSTREAM round
-    (the graph_bfs_levels 8.16→1.94 disease). Pinning makes total work
-    the linear sum of one pair-count pass per round, exactly what a
-    production fit (thousands of merges, driver-side loop) would do
-    between rounds. Measured A/B and oracle row-parity in round 16's
-    OPTIMIZATION log.
+    Each round's winner and the merged corpus form are pinned with a
+    per-invocation localCheckpoint (the cached-loop pin rule).
+    Unpinned, round r's plan embeds best_{r-1}, whose subtree embeds
+    best_{r-2}'s pair-count aggregation over the previous corpus form,
+    and so on — the corpus regexp + pair-count explode re-derives once
+    per DOWNSTREAM round (the graph_bfs_levels disease). Pinning makes
+    total work the linear sum of one pair-count pass per round, exactly
+    what a production fit (thousands of merges, driver-side loop) would
+    do between rounds.
 
     Storage: one invocation keeps 2·rounds−1 lazy ``localCheckpoint``
     RDDs (``rounds`` one-row winners plus ``rounds − 1`` copies of the
@@ -508,13 +506,13 @@ def bpe_fit(docs: DataFrame, rounds: int = BPE_FIT_ROUNDS) -> DataFrame:
     from .dedup import _shuffle_partitions
 
     base = F.regexp_replace(F.lower(F.col("text")), r"[^a-z]+", " ")
-    # Spread the corpus BEFORE the wrapped-symbol regexp (round 16): the
-    # documents scan is one small parquet file = one partition, and every
-    # downstream stage here is CPU-bound string work whose byte footprint
-    # AQE coalesces to one partition — so the whole fit ran single-core
-    # (the _shuffle_partitions lesson, SCALING.md round 9; confirmed by
-    # the A/B's "(0 + 1) / 1" stage readouts). Explicit count, keyed on
-    # doc_id, same as every other CPU-bound barrier in this package.
+    # Spread the corpus BEFORE the wrapped-symbol regexp: the documents
+    # scan is one small parquet file = one partition, and every
+    # downstream stage here is CPU-bound string work whose byte
+    # footprint AQE coalesces to one partition — so without the barrier
+    # the whole fit runs single-core (the _shuffle_partitions lesson).
+    # Explicit count, keyed on doc_id, same as every other CPU-bound
+    # barrier in this package.
     cur = docs.repartition(_shuffle_partitions(docs), "doc_id").select(
         F.regexp_replace(base, r"([a-z])", r"($1)").alias("s")
     )
@@ -571,8 +569,7 @@ def bpe_fit(docs: DataFrame, rounds: int = BPE_FIT_ROUNDS) -> DataFrame:
                 # materialized rows instead of re-deriving the regexp +
                 # all prior replaces from the scan. eager=False keeps
                 # plan construction job-free (explain-only consumers
-                # pay nothing; the query's own action materializes) —
-                # timing-equal in the round-16 A/B.
+                # pay nothing; the query's own action materializes).
                 .localCheckpoint(eager=False)
             )
 

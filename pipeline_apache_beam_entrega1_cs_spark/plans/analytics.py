@@ -1,4 +1,4 @@
-"""Product/behavioral-analytics registry (round-2 widening): funnel
+"""Product/behavioral-analytics registry: funnel
 conversion, cohort retention, time-series gap-fill + OHLC resampling,
 SCD Type-2 state intervals, Deequ-style data-quality constraints,
 z-score anomaly flagging, a salted skew-join demonstration, decile
@@ -6,10 +6,9 @@ statistics, degree-oriented triangle counting, and hash-stratified
 sampling.
 
 These are the query shapes an analytics user of the reference engine
-runs daily on event streams; none existed in round 1. All deterministic,
-all full DuckDB oracle parity. Determinism conventions follow
-plans/spec.py (decimal sums, md5-prefix hashing, explicit tie-breaks,
-epoch-integer timestamps).
+runs daily on event streams. All deterministic, all full DuckDB oracle
+parity. Determinism conventions follow plans/spec.py (decimal sums,
+md5-prefix hashing, explicit tie-breaks, epoch-integer timestamps).
 """
 
 from __future__ import annotations
@@ -1147,7 +1146,7 @@ def dq_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Snapshot totals are a second 1-row scalar attach onto the 10-row
     grouped frame. Survives any scale factor.
 
-    Determinism: shares are round-6 IEEE divisions of exact BIGINTs and
+    Determinism: shares are 6-dp-rounded IEEE divisions of exact BIGINTs and
     are clamped at 1e-6 (_DRIFT_EPS) BEFORE the log (empty buckets
     would otherwise yield ln(0)); psi_term rounds to 6 dp after the
     multiply, burying any last-ulp ln() divergence between engines."""
@@ -1604,8 +1603,7 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     N'(x) = {v ∈ N(x) : deg(v) <= _LINKPRED_MAX_DEG} is the HUB-CAPPED
     neighborhood. Intersection, degrees, and union all come from the
     SAME capped adjacency, so jaccard is the true Jaccard of the capped
-    neighbor sets (not a capped-numerator/uncapped-denominator mix —
-    ADVICE r7 flagged exactly that inconsistency).
+    neighbor sets (not a capped-numerator/uncapped-denominator mix).
 
     Scale shape (the dedup_ngram_jaccard recipe applied to graphs):
     candidate pairs are generated through the shared-neighbor inverted
@@ -1739,8 +1737,11 @@ def _trade_edges_sql(edges: str = "edges") -> str:
 )"""
 
 
-def graph_pagerank(spark: SparkSession, sf_dir: str, iters: int = 3,
-                   d: float = 0.85) -> DataFrame:
+_PR_ITERS = 3
+_PR_DAMPING = 0.85
+
+
+def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank with a FIXED iteration count as one straight-line
     Catalyst plan — the third unrolled-iteration demonstration beside
     kmeans_lloyd and the recursive-CTE components (an unknown count
@@ -1772,7 +1773,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str, iters: int = 3,
     pr = nodes.crossJoin(F.broadcast(nstats)).select(
         "node", F.round(F.lit(1.0) / F.col("n_nodes"), 9).alias("pr")
     )
-    for _ in range(iters):
+    for _ in range(_PR_ITERS):
         inc = (
             pr.join(edges_deg, pr.node == edges_deg.src)
             .select(
@@ -1790,8 +1791,8 @@ def graph_pagerank(spark: SparkSession, sf_dir: str, iters: int = 3,
             .select(
                 "node",
                 F.round(
-                    (1.0 - d) / F.col("n_nodes")
-                    + d
+                    (1.0 - _PR_DAMPING) / F.col("n_nodes")
+                    + _PR_DAMPING
                     * F.coalesce(
                         F.col("contrib"), F.lit(0).cast("decimal(28,14)")
                     ).cast("string").cast("double"),
@@ -1940,13 +1941,12 @@ def graph_kcore_prune(spark: SparkSession, sf_dir: str,
     node ids — linear in |E|. UNLIKE pagerank/LPA (one self-reference
     per iteration -> linear straight-line plans), each k-core round
     references the previous round's edges THREE times (degree agg +
-    two semi-joins), so a naive unroll is exponential — measured
-    1 000 parquet scans in the 3-round plan text with AQE reusing only
-    54 exchanges. The loop therefore materializes the shrinking edge
-    list per round with localCheckpoint (the connected_components
-    idiom): each round scans one materialized O(|E_t|) relation — the
-    GraphX-style iteration shape that survives 100 TB. Output: the
-    surviving nodes with their post-prune degree."""
+    two semi-joins), so a naive unroll is exponential in rounds. The loop
+    therefore materializes the shrinking edge list per round with
+    localCheckpoint (the connected_components idiom): each round scans one
+    materialized O(|E_t|) relation — the GraphX-style iteration shape that
+    survives 100 TB. Output: the surviving nodes with their post-prune
+    degree."""
     edges = _trade_edges(spark, sf_dir)
     for _ in range(rounds):
         edges = edges.localCheckpoint()
@@ -1982,8 +1982,10 @@ SELECT src AS node, COUNT(*) AS deg FROM {prev} GROUP BY src
 """
 
 
-def graph_label_propagation(spark: SparkSession, sf_dir: str,
-                            iters: int = 2) -> DataFrame:
+_LPA_ITERS = 2
+
+
+def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synchronous label propagation (Raghavan et al. 2007 community
     detection) with a FIXED iteration count as one straight-line
     Catalyst plan — the fourth unrolled-iteration demonstration beside
@@ -1999,7 +2001,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str,
     Scale shape per iteration: one labels⋈edges hash join shuffling on
     node ids + two keyed aggregates ((node, label) count, per-node
     struct-min argmax) — linear in |E|, no scalar attach, no BNLJ."""
-    return lpa_loop(_trade_edges(spark, sf_dir), iters)
+    return lpa_loop(_trade_edges(spark, sf_dir), _LPA_ITERS)
 
 
 def lpa_loop(edges: DataFrame, iters: int) -> DataFrame:
@@ -2036,7 +2038,7 @@ def lpa_loop(edges: DataFrame, iters: int) -> DataFrame:
     return labels
 
 
-def _lpa_sql(iters: int = 2) -> str:
+def _lpa_sql() -> str:
     """Unrolled label-propagation oracle: one (neighbor-label count,
     argmax) CTE pair per synchronous step, argmax via row_number over
     (count DESC, label ASC) — the exact mirror of the Spark loop's
@@ -2047,7 +2049,7 @@ WITH {_trade_edges_sql()}, nodes AS (
 ), l0 AS (
   SELECT node, node AS label FROM nodes
 )"""
-    for t in range(1, iters + 1):
+    for t in range(1, _LPA_ITERS + 1):
         sql += f""", nl{t} AS (
   SELECT e.src AS node, p.label, COUNT(*) AS c
   FROM edges e JOIN l{t - 1} p ON e.dst = p.node
@@ -2059,10 +2061,10 @@ WITH {_trade_edges_sql()}, nodes AS (
     FROM nl{t}
   ) WHERE rn = 1
 )"""
-    return sql + f"\nSELECT node, label FROM l{iters}\n"
+    return sql + f"\nSELECT node, label FROM l{_LPA_ITERS}\n"
 
 
-def _pagerank_sql(iters: int = 3, d: float = 0.85) -> str:
+def _pagerank_sql() -> str:
     """Unrolled-PageRank oracle: one pr_t CTE per iteration mirroring
     the Spark loop's rounding/decimal conventions exactly."""
     sql = f"""
@@ -2076,10 +2078,10 @@ WITH {_trade_edges_sql()}, outdeg AS (
   SELECT node, round(1.0 / n_nodes, 9) AS pr FROM nodes, n
 )"""
     prev = "pr0"
-    for t in range(1, iters + 1):
+    for t in range(1, _PR_ITERS + 1):
         sql += f""", pr{t} AS (
   SELECT nodes.node,
-         round({1.0 - d} / n.n_nodes + {d} *
+         round({1.0 - _PR_DAMPING} / n.n_nodes + {_PR_DAMPING} *
                CAST(CAST(COALESCE(inc.contrib, 0) AS VARCHAR) AS DOUBLE), 9) AS pr
   FROM nodes
   LEFT JOIN (
@@ -2159,8 +2161,10 @@ FROM tagged GROUP BY event_type, target_rate
 """
 
 
-def sample_fixed_k_per_stratum(spark: SparkSession, sf_dir: str,
-                               k: int = 50) -> DataFrame:
+_FIXED_K = 50
+
+
+def sample_fixed_k_per_stratum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Balanced fixed-k per-stratum sample — the eval/calibration-set
     drawer (exactly k rows per class, however skewed the class sizes):
     membership is the first k rows per stratum in md5(key) order, so the
@@ -2179,7 +2183,7 @@ def sample_fixed_k_per_stratum(spark: SparkSession, sf_dir: str,
     return (
         orders.select("o_orderpriority", "o_orderkey")
         .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
+        .filter(F.col("rk") <= _FIXED_K)
         .select(
             "o_orderpriority",
             "o_orderkey",
@@ -2188,14 +2192,14 @@ def sample_fixed_k_per_stratum(spark: SparkSession, sf_dir: str,
     )
 
 
-SAMPLE_FIXED_K_SQL = """
+SAMPLE_FIXED_K_SQL = f"""
 SELECT o_orderpriority, o_orderkey, draw_rank FROM (
   SELECT o_orderpriority, o_orderkey,
          CAST(row_number() OVER (PARTITION BY o_orderpriority
               ORDER BY md5(CAST(o_orderkey AS VARCHAR)), o_orderkey) AS BIGINT)
            AS draw_rank
   FROM orders
-) WHERE draw_rank <= 50
+) WHERE draw_rank <= {_FIXED_K}
 """
 
 
@@ -2318,8 +2322,8 @@ def timeseries_seasonal_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # is_anomaly is derived from the SAME rounded residual that is
     # reported, so no output row can show |residual| > 3·sigma with
-    # is_anomaly=false (ADVICE r8: the old flag used the floored
-    # micro-residual r_q, which disagreed at the boundary).
+    # is_anomaly=false (the floored micro-residual r_q would disagree at
+    # the boundary).
     return out.select(
         "event_id",
         F.col("hod").cast("long").alias("hod"),
@@ -2748,8 +2752,7 @@ _BOOT_CDF = (
 )
 
 
-def sample_poisson_bootstrap(spark: SparkSession, sf_dir: str,
-                             reps: int = _BOOT_R) -> DataFrame:
+def sample_poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Poisson bootstrap (Chamandy et al. 2012, "Estimating uncertainty
     for massive data streams" — the Google large-scale bootstrap): each
     replicate r re-weights every row by an independent Poisson(1) draw,
@@ -2772,7 +2775,7 @@ def sample_poisson_bootstrap(spark: SparkSession, sf_dir: str,
     )
     rep = o.select(
         "o_orderkey", "cents",
-        F.explode(F.array(*[F.lit(r) for r in range(reps)])).alias("r"),
+        F.explode(F.array(*[F.lit(r) for r in range(_BOOT_R)])).alias("r"),
     )
     u = (
         F.conv(
@@ -2807,7 +2810,7 @@ def sample_poisson_bootstrap(spark: SparkSession, sf_dir: str,
     )
 
 
-def _bootstrap_sql(reps: int = _BOOT_R) -> str:
+def _bootstrap_sql() -> str:
     return f"""
 WITH o AS (
   SELECT o_orderkey,
@@ -2818,7 +2821,7 @@ WITH o AS (
          CAST('0x' || substr(md5(CAST(o_orderkey AS VARCHAR) || '|'
                                  || CAST(g.r AS VARCHAR)), 1, 8) AS BIGINT)
            / 4294967296.0 AS u
-  FROM o, UNNEST(generate_series(0, {reps - 1})) AS g(r)
+  FROM o, UNNEST(generate_series(0, {_BOOT_R - 1})) AS g(r)
 ), wt AS (
   SELECT replicate, cents,
          CAST(CASE WHEN u < {_BOOT_CDF[0]} THEN 0
@@ -2836,8 +2839,7 @@ FROM wt GROUP BY replicate
 """
 
 
-def sample_weighted_priority(spark: SparkSession, sf_dir: str,
-                             k: int = _WPRIO_K) -> DataFrame:
+def sample_weighted_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted sampling WITHOUT replacement, k per source — the
     Efraimidis-Spirakis (2006) priority draw: each doc gets a
     deterministic md5-uniform u in (0,1) and priority key ln(u)/w with
@@ -2873,7 +2875,7 @@ def sample_weighted_priority(spark: SparkSession, sf_dir: str,
     return (
         docs.withColumn("priority_key", key)
         .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
+        .filter(F.col("rk") <= _WPRIO_K)
         .select(
             "source",
             F.col("rk").cast("long").alias("draw_rank"),
@@ -2906,8 +2908,7 @@ SELECT source, draw_rank, doc_id, weight, priority_key FROM (
 _BFS_HOPS = 4
 
 
-def graph_bfs_levels(spark: SparkSession, sf_dir: str,
-                     hops: int = _BFS_HOPS) -> DataFrame:
+def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-source BFS: minimum hop distance from a seed set, as a
     FIXED-hop straight-line plan — the graph-traversal primitive the
     reference has no analogue of (its one dataflow is join-only,
@@ -2935,16 +2936,15 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str,
     edges = _trade_edges(spark, sf_dir)
     # Pin the trade graph BEFORE deriving seeds, so both the seed frame
     # and every hop read the materialized edges (bfs_levels_loop's
-    # caller contract): 6.7 s -> 2.2 s warm at sf0.1, 3.1x (round-14
-    # profiling, VERDICT r13 item 3). On a cluster this is a checkpoint
-    # table of the edge list.
+    # caller contract). On a cluster this is a checkpoint table of the
+    # edge list.
     edges = edges.localCheckpoint()
     seeds = (
         edges.select(F.col("src").alias("node"))
         .distinct()
         .filter((F.col("node") < 1000000) & (F.col("node") % 50 == 0))
     )
-    return bfs_levels_loop(edges, seeds, hops)
+    return bfs_levels_loop(edges, seeds, _BFS_HOPS)
 
 
 def bfs_levels_loop(edges: DataFrame, seeds: DataFrame,
@@ -2957,23 +2957,20 @@ def bfs_levels_loop(edges: DataFrame, seeds: DataFrame,
     Unlike pagerank/LPA (whose per-iteration state joins only STATIC
     frames), BFS anti-joins each hop against the GROWING visited set,
     so an uncached straight-line plan re-derives every earlier
-    frontier inside every later anti-join — measured 2.1x slower at
-    sf0.1 (10.9 s vs 5.1 s, SCALING.md). Each hop's frontier and the
+    frontier inside every later anti-join. Each hop's frontier and the
     cumulative visited frame are therefore cached (both bounded by
     |V|, the Pregel materialization point), the final result is
     materialized through them MMR-style (operators/similarity.
     _mmr_core), and the per-hop caches are released — long-lived
-    sessions must not accumulate frontier relations (ADVICE r7 rule).
+    sessions must not accumulate frontier relations.
     At cluster scale the same points become checkpoint tables.
 
-    CALLER CONTRACT (round-14): pass a MATERIALIZED `edges` frame
+    CALLER CONTRACT: pass a MATERIALIZED `edges` frame
     (localCheckpoint / cached / pinned). The frontier/visited caches
     break exchange reuse across hops, so an edge frame carrying a
     derivation subtree is re-derived inside every hop's join AND the
-    seed/anti-join paths — measured 6.7 s -> 2.2 s warm at sf0.1 (3.1x)
-    when graph_bfs_levels checkpoints the trade graph before deriving
-    seeds (round-14 profiling, VERDICT r13 item 3 — the same
-    cached-static-frame class as connected_components' sym pin)."""
+    seed/anti-join paths (the same cached-static-frame class as
+    connected_components' sym pin)."""
     reached = seeds.select("node", F.lit(0).cast("long").alias("level"))
     frontier = reached.select("node")
     hop_caches: list[DataFrame] = []
@@ -2997,8 +2994,8 @@ def bfs_levels_loop(edges: DataFrame, seeds: DataFrame,
     return result
 
 
-def _bfs_sql(hops: int = _BFS_HOPS) -> str:
-    """Recursive-CTE BFS oracle: union-dedup walk bounded at `hops`,
+def _bfs_sql() -> str:
+    """Recursive-CTE BFS oracle: union-dedup walk bounded at `_BFS_HOPS`,
     then MIN(level) per node — an independent derivation of the same
     min-hop function (the Spark side never aggregates; the oracle
     proves its per-hop anti-join construction equals min-over-walks)."""
@@ -3011,7 +3008,7 @@ WITH RECURSIVE {_trade_edges_sql()}, seeds AS (
   UNION
   SELECT e.dst AS node, w.level + 1 AS level
   FROM walk w JOIN edges e ON w.node = e.src
-  WHERE w.level < {hops}
+  WHERE w.level < {_BFS_HOPS}
 )
 SELECT node, MIN(level) AS level FROM walk GROUP BY node
 """
@@ -3024,8 +3021,7 @@ SELECT node, MIN(level) AS level FROM walk GROUP BY node
 _SSSP_ROUNDS = 3
 
 
-def graph_sssp_weighted(spark: SparkSession, sf_dir: str,
-                        rounds: int = _SSSP_ROUNDS) -> DataFrame:
+def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted single-source shortest paths: Bellman-Ford with a FIXED
     round count over the trade graph, edge weight = 11 - min(10, #trade
     orders between the endpoints) — a "stronger relationship = cheaper
@@ -3067,7 +3063,7 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str,
         .distinct()
         .filter((F.col("node") < 1000000) & (F.col("node") % 50 == 0))
     )
-    return sssp_loop(edges, seeds, rounds)
+    return sssp_loop(edges, seeds, _SSSP_ROUNDS)
 
 
 def sssp_loop(edges: DataFrame, seeds: DataFrame, rounds: int) -> DataFrame:
@@ -3109,7 +3105,7 @@ def sssp_loop(edges: DataFrame, seeds: DataFrame, rounds: int) -> DataFrame:
     return result
 
 
-def _sssp_sql(rounds: int = _SSSP_ROUNDS) -> str:
+def _sssp_sql() -> str:
     """Unrolled Bellman-Ford oracle: one relax CTE pair per round,
     mirroring the full-outer keep-or-relax update exactly (BIGINT
     distances end to end)."""
@@ -3129,7 +3125,7 @@ WITH pairs AS (
   WHERE src < 1000000 AND src % 50 = 0
 )"""
     prev = "d0"
-    for r in range(1, rounds + 1):
+    for r in range(1, _SSSP_ROUNDS + 1):
         sql += f""", r{r} AS (
   SELECT e.dst AS node, MIN(p.dist + e.w) AS d
   FROM {prev} p JOIN edges e ON p.node = e.src
@@ -3269,7 +3265,7 @@ def dq_ks_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     global sort over raw rows — the deliberate non-starter at 100 TB.
 
     Determinism: cumulative counts are exact BIGINTs; the two CDFs are
-    round-6 IEEE divisions by the scalar totals; d rounds after the
+    6-dp-rounded IEEE divisions by the scalar totals; d rounds after the
     subtraction. Output carries the per-edge gap AND the overall ks_d
     on every row (a second O(64) window)."""
     grouped = _snapshot_bucket_counts(
@@ -6002,9 +5998,9 @@ def stat_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Σv of micro-unit longs into a BIGINT overflows int64 around
     # 2e10 rows × avg value 500 (ANSI abort / non-ANSI silent wrap) —
     # reachable for events at 100 TB.
-    # Decimal-promote the group sums (linear overflow class; round-14
-    # audit, VERDICT r13 item 5). The micro-unit sums are exact
-    # integers, so _dec_to_double is value-identical below 2⁵³.
+    # Decimal-promote the group sums (linear overflow class). The
+    # micro-unit sums are exact integers, so _dec_to_double is
+    # value-identical below 2⁵³.
     zd = F.lit(0).cast("decimal(18,0)")
     m = tagged.agg(
         F.sum(F.when(F.col("g") == 1, 1).otherwise(0)).cast("bigint").alias("n_a"),
@@ -6104,9 +6100,8 @@ def stat_anova_f(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = ev.select("event_type", v.alias("v"))
     vd = F.col("v").cast("decimal(18,0)")
     # Per-type Σv micro-unit sums decimal-promoted like stat_welch's —
-    # the same linear-overflow class (round-14 audit, VERDICT r13
-    # item 5); exact integers below 2⁵³, so the downstream double
-    # arithmetic is value-identical at any test SF.
+    # the same linear-overflow class; exact integers below 2⁵³, so the
+    # downstream double arithmetic is value-identical at any test SF.
     zd = F.lit(0).cast("decimal(18,0)")
     aggs = [F.count(F.lit(1)).cast("bigint").alias("n"),
             _dec_to_double(F.sum(vd * vd)).alias("q")]
@@ -6250,7 +6245,7 @@ def agg_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (ANSI Spark aborts the job; non-ANSI wraps silently — dead
     # either way) — lineitem at 100 TB is ~6e11. Same overflow class
     # as the Mann-Whitney rank sum (_rank_sum_2x): promote to decimal
-    # BEFORE the aggregate (round-14 audit, VERDICT r13 item 5).
+    # BEFORE the aggregate.
     m = ranked.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         _dec_to_double(F.sum(rx2d)).alias("sx"),
@@ -7835,7 +7830,7 @@ FROM g
 
 
 # ---------------------------------------------------------------------------
-# Round 12: rank-based inference (Mann-Whitney U, Kruskal-Wallis H)
+# Rank-based inference (Mann-Whitney U, Kruskal-Wallis H)
 # ---------------------------------------------------------------------------
 # Exact average ranks WITHOUT a global sort: collapse to distinct
 # micro-grid values (groupBy v), then a TWO-LEVEL prefix sum — a
@@ -7878,7 +7873,7 @@ def _rank_sum_2x(cg, below, c):
     ``cg``: cg·(2·below + c + 1), promoted to DECIMAL(38,0) BEFORE the
     multiply. In int64 this wraps (non-ANSI Spark) once below ≳ 1.5e18
     or the product exceeds 2⁶³ — at-scale regimes the DuckDB oracle
-    handles via HUGEINT (ADVICE r12 medium)."""
+    handles via HUGEINT."""
     return cg.cast(_RANK_DEC) * (
         F.lit(2) * below.cast(_RANK_DEC) + c + F.lit(1)
     )

@@ -1,6 +1,6 @@
 """Curation-stage registry: benchmark decontamination, blocklist/PII
 scrubbing, sliding-window chunking, repetition filtering (SURVEY.md §2B
-LLM-data rows, round-2 additions). Spark logic in operators/curation.py;
+LLM-data rows). Spark logic in operators/curation.py;
 every op here is deterministic and gets full DuckDB SQL parity.
 """
 
@@ -18,8 +18,7 @@ from .spec import QuerySpec
 _TOKS_CTE = f"SELECT doc_id, {_TOKS} AS tk FROM documents WHERE trim(text) <> ''"
 
 # One definition drives BOTH the Spark call sites and the SQL oracles
-# below — changing a parameter here keeps plan and oracle in lockstep
-# (they were previously hardcoded on the SQL side).
+# below — changing a parameter here keeps plan and oracle in lockstep.
 DECON_N, DECON_MOD, DECON_THRESHOLD = 5, 97, 0.2
 CHUNK_SIZE, CHUNK_STRIDE = 32, 16
 REP_N, REP_THRESHOLD = 3, 0.5

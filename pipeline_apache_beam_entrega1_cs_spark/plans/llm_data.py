@@ -224,9 +224,9 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.minhash_lsh_pairs(_docs(spark, sf_dir), threshold=0.5)
 
 
-# Per-block cap for label-blocked cosine pair generation (VERDICT r11
-# item 2): labels have fixed cardinality, so uncapped pairs grow
-# quadratically with data volume. 64 keeps every test-SF block intact
+# Per-block cap for label-blocked cosine pair generation: labels have
+# fixed cardinality, so uncapped pairs grow quadratically with data
+# volume. 64 keeps every test-SF block intact
 # at sf<=0.01 (max block 63) while flattening the sf0.1 growth (max
 # block 218 -> 64, i.e. C(218,2)=23.6k -> C(64,2)=2.0k pairs/block).
 # The cap is a deterministic md5(vec_id)-ordered sample replicated
@@ -383,7 +383,7 @@ def ann_truncated_rescore(spark: SparkSession, sf_dir: str) -> DataFrame:
     the dimension-axis pruning counterpart of IVF's row-axis pruning
     (MRL embeddings concentrate signal in the prefix, so the coarse
     pass reads half the vector bytes (iid synthetic embeddings; an MRL
-    checkpoint supports a far shorter prefix)). Deterministic round-6
+    checkpoint supports a far shorter prefix)). Deterministic 6-dp
     scores + cand_id tie-breaks at both stages, so the whole two-stage
     plan value-hash-matches the SQL oracle."""
     return S.truncated_rescore_topk(
@@ -535,7 +535,7 @@ def embedding_norm_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     and dimension drift (distinct dims per label must be 1).
 
     Scale shape: one narrow pass computes each vector's norm (sequential
-    array fold, round-6); per-label moments are mergeable decimal sums;
+    array fold, rounded to 6 dp); per-label moments are mergeable decimal sums;
     the outlier pass re-joins the tiny per-label stats frame by
     broadcast. Determinism: all moment arithmetic follows the decimal
     conventions of plans/spec.py, so z-flags are engine-exact."""
@@ -910,7 +910,7 @@ def eval_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary, and its row shows precisely where those docs land).
 
     Determinism: counts are exact BIGINTs; share = n / n_true is one
-    round-6 IEEE division; matrix cells and class totals come from one
+    6-dp-rounded IEEE division; matrix cells and class totals come from one
     groupBy plus a per-true-class window (partitioned by true_lang —
     #classes partitions, no global window).
 
@@ -1568,13 +1568,13 @@ def dedup_binary_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/multimodal.with_magic_payload): exact sha256 collapse of
     byte-identical blobs, then MinHash+LSH banding over byte 8-gram
     shingles of the representatives — the pre-decode image/audio dedup
-    stage of a multimodal ingest, composing two existing families
-    (VERDICT r7 next-step #4). Payloads carry the magic headers, so two
-    docs with identical TEXT but different doc_id%4 headers are NOT
-    byte-duplicates — this is genuinely byte-level, not text dedup in
-    disguise. Full SQL parity: digests are sha256-over-hex and shingle
-    hashes are pure conv()/'0x'-parse integer arithmetic on the hex
-    encoding (no per-window md5), identical in DuckDB."""
+    stage of a multimodal ingest, composing two existing families.
+    Payloads carry the magic headers, so two docs with identical TEXT but
+    different doc_id%4 headers are NOT byte-duplicates — this is genuinely
+    byte-level, not text dedup in disguise. Full SQL parity: digests are
+    sha256-over-hex and shingle hashes are pure conv()/'0x'-parse integer
+    arithmetic on the hex encoding (no per-window md5), identical in
+    DuckDB."""
     return D.binary_payload_dedup(M.with_magic_payload(_docs(spark, sf_dir)))
 
 
@@ -2125,12 +2125,11 @@ GROUP BY source
 
 
 # --------------------------------------------------------------------------
-# Corpus statistics: unigram-LM quality score + collocation PMI (round 4)
+# Corpus statistics: unigram-LM quality score + collocation PMI
 # --------------------------------------------------------------------------
 
 # Single source for the parameters used by BOTH the Spark call and the
-# SQL oracle (advisor round-3 note: hardcoding defaults in the SQL
-# desynchronizes silently).
+# SQL oracle (hardcoding defaults in the SQL desynchronizes silently).
 _LOGPROB_VOCAB_K = 1024
 _PMI_MIN_COUNT = 5
 _PMI_TOP_K = 20
@@ -3493,15 +3492,14 @@ def dedup_cosine_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_lsh_bucket_stats): a cutoff that merges half the corpus is
     visible here BEFORE the merge runs.
 
-    100 TB shape: the pair generation is CAPPED per block (VERDICT r11
-    item 2) — a deterministic md5-ordered sample of at most
-    _COS_BLOCK_CAP rows per label, so each block contributes at most
-    C(cap, 2) pairs no matter how large the data grows — then ONE
-    conditional-sum hash-agg over the thresholds. What the cap dropped
-    is REPORTED, not hidden: n_capped_blocks / n_rows_dropped ride on
-    every row (the dedup_lsh_bucket_stats n_capped_buckets move), so
-    the capacity-planning read sees exactly how much of the corpus the
-    sweep sampled away."""
+    100 TB shape: the pair generation is CAPPED per block — a
+    deterministic md5-ordered sample of at most _COS_BLOCK_CAP rows per
+    label, so each block contributes at most C(cap, 2) pairs no matter how
+    large the data grows — then ONE conditional-sum hash-agg over the
+    thresholds. What the cap dropped is REPORTED, not hidden:
+    n_capped_blocks / n_rows_dropped ride on every row (the
+    dedup_lsh_bucket_stats n_capped_buckets move), so the capacity-planning
+    read sees exactly how much of the corpus the sweep sampled away."""
     emb = _emb(spark, sf_dir)
     pairs = S.embedding_cosine_pairs(
         emb, block_col="label", threshold=-1.0, block_cap=_COS_BLOCK_CAP
@@ -4791,12 +4789,11 @@ FROM documents
 
 
 def eval_dedup_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Family-level dedup quality harness (VERDICT r9 next-step #7):
-    plant a ground-truth duplicate structure over the documents corpus,
-    run THREE dedup methods over the SAME planted corpus, and report
-    per-method precision/recall/F1 — the auditable accuracy evidence
-    the individual entries' fixtures give only per-method, in the role
-    eval_retrieval_metrics plays for the ANN family.
+    """Family-level dedup quality harness: plant a ground-truth duplicate
+    structure over the documents corpus, run THREE dedup methods over the
+    SAME planted corpus, and report per-method precision/recall/F1 — the
+    auditable accuracy evidence the individual entries' fixtures give only
+    per-method, in the role eval_retrieval_metrics plays for the ANN family.
 
     Planted corpus: every doc with doc_id%17==0 gains an EXACT copy
     (member_id = doc_id + 1e6) and every doc with doc_id%10==0 and
@@ -4844,17 +4841,14 @@ def eval_dedup_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_join(F.slice(tk, 1, keep), " ").alias("text"),
     )
     corpus = base.unionByName(copies).unionByName(variants)
-    # Round-15 pin (the r14 cached-loop rule, applied to a fan-out): the
-    # planted corpus feeds FOUR consumers (both sides of the exact arm,
-    # the jaccard arm, the minhash arm), each of which otherwise
-    # re-derives the tokenize+union subtree from the scan. One
-    # localCheckpoint materializes it once per invocation (never across
-    # runs): measured 2.96 -> 2.26 s at sf0.1, exceptAll 0 both ways.
-    # eager=False (ADVICE r15): plan construction stays side-effect-free
-    # (explain-only consumers no longer run a materialization job); the
-    # pin materializes on the query's own first action instead —
-    # timing-neutral in the round-16 A/B (mins 2.73-3.48 eager vs
-    # 2.93-2.95 lazy on the same window), results exceptAll-identical.
+    # Pin (the cached-loop rule, applied to a fan-out): the planted
+    # corpus feeds FOUR consumers (both sides of the exact arm, the
+    # jaccard arm, the minhash arm), each of which otherwise re-derives
+    # the tokenize+union subtree from the scan. One localCheckpoint
+    # materializes it once per invocation (never across runs).
+    # eager=False: plan construction stays side-effect-free
+    # (explain-only consumers run no materialization job); the pin
+    # materializes on the query's own first action instead.
     corpus = corpus.localCheckpoint(eager=False)
 
     has_copy = docs.filter(F.col("doc_id") % 17 == 0).select("doc_id")
@@ -5089,8 +5083,8 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtered join runs over DISTINCT sets, within-group pairs emit
     J = 1 directly (no verification), and qualifying set pairs expand
     to doc pairs output-bound. On this corpus (a ~270-doc identical
-    template cluster) the collapse + positional filter cut candidates
-    2.9x and wall time ~2.6x — measured A/B in SCALING.md round-10.
+    template cluster) the collapse + positional filter are what keep
+    the candidate set small.
 
     100 TB shape: the global token order needs NO rank — (df, token)
     IS the total order, so prefixes come from one array_sort over
@@ -6351,7 +6345,7 @@ FROM nk CROSS JOIN occ CROSS JOIN hits
 
 
 # ---------------------------------------------------------------------------
-# Round 12: KN bigram LM, filter ablation, matryoshka eval, incremental dedup
+# KN bigram LM, filter ablation, matryoshka eval, incremental dedup
 # ---------------------------------------------------------------------------
 
 
@@ -6544,14 +6538,13 @@ FROM f GROUP BY filter_name
 
 _MATRYOSHKA_DIMS = (8, 16, 32, 64)
 _MATRYOSHKA_K = 10
-# Fixed-SIZE deterministic query panel (VERDICT r12 item 2): the r12
-# panel was `vec_id % 97 == 0`, which grows WITH the corpus — the
-# brute-force scoring stage was corpus²/97 pairs, the one unbounded
-# in-plan growth left in the registry. Now the panel is the first
-# _EVAL_PANEL_N ids by (md5(vec_id), vec_id) — the _COS_BLOCK_CAP
-# move: pseudo-random but engine-portable and ORDER-STABLE, planned as
-# a TakeOrderedAndProject (map-side partial top-N, never a global
-# sort), so the scoring stage is corpus × panel = LINEAR in the corpus.
+# Fixed-SIZE deterministic query panel: a `vec_id % 97 == 0` panel
+# would grow WITH the corpus, making the brute-force scoring stage
+# corpus²/97 pairs. The panel is the first _EVAL_PANEL_N ids by
+# (md5(vec_id), vec_id) — the _COS_BLOCK_CAP move: pseudo-random but
+# engine-portable and ORDER-STABLE, planned as a TakeOrderedAndProject
+# (map-side partial top-N, never a global sort), so the scoring stage is
+# corpus × panel = LINEAR in the corpus.
 _EVAL_PANEL_N = 24
 
 
@@ -6590,8 +6583,8 @@ def embedding_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     reported on every output row.
 
     100 TB shape: the query panel is CONSTANT-size and BROADCAST, so
-    the brute-force scoring stage is corpus × panel — linear (the r12
-    mod-97 panel made it corpus²/97; VERDICT r12 item 2). The corpus
+    the brute-force scoring stage is corpus × panel — linear, where a
+    mod-97 panel would make it corpus²/97. The corpus
     is scanned once and exploded 4× (once per dim); top-k is a
     partitioned window per (dim, query) — never a global sort. At real
     scale the brute-force scorer can still swap for the IVF/LSH
@@ -6631,11 +6624,10 @@ def embedding_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("trunc_dim", "query_id", "cand_id")
     )
     # Two consumers re-execute the scored+ranked subtree (no common-
-    # subplan reuse in Spark) — MEASURED as the right trade here: an
-    # eager cache+release of topk was tried and ran ~1.6x SLOWER
-    # (2.5 s -> 4.1 s at sf0.1; materializing the full shuffle output
-    # costs more than recomputing the pipelined subtree twice), so the
-    # plain double-execution ships.
+    # subplan reuse in Spark). That is the right trade here: an eager
+    # cache+release of topk is slower, because materializing the full
+    # shuffle output costs more than recomputing the pipelined subtree
+    # twice.
     full = topk.filter(F.col("trunc_dim") == 64).select(
         "query_id", "cand_id"
     )
@@ -6709,14 +6701,13 @@ def eval_kendall_tau_rankers(spark: SparkSession, sf_dir: str) -> DataFrame:
     question embedding_matryoshka_eval's recall@k can't answer (two
     lists can overlap 100% yet order items oppositely — recall 1.0,
     tau −1.0). Tie-corrected tau-b from exact integer concordant /
-    discordant / tied-pair counts on round-6 cosines (ties then count
+    discordant / tied-pair counts on 6-dp-rounded cosines (ties then count
     identically in both engines); C(20,2)=190 pairs per query, so the
     pairwise stage is k²-bounded per query, never corpus-quadratic.
 
     100 TB shape: the query panel is the same FIXED-SIZE deterministic
-    _eval_panel as embedding_matryoshka_eval (VERDICT r12 item 2: the
-    mod-97 panel made brute-force scoring corpus²/97; a constant panel
-    makes it corpus × panel, linear) and broadcasts; item lists come
+    _eval_panel as embedding_matryoshka_eval (a constant panel makes
+    brute-force scoring corpus × panel, linear) and broadcasts; item lists come
     from a partitioned per-(query) top-k window; the pair stage
     self-joins k-row groups on the query key. panel_size rides on
     every output row."""

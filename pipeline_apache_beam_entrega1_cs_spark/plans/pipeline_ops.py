@@ -796,8 +796,8 @@ def dataset_curriculum_interleave(spark: SparkSession, sf_dir: str) -> DataFrame
     pos_in_tier = (md5-rank within (tier, source) − 1) · n_sources +
     source_index — collision-free by construction, and reproducible
     because every input is derived from data (n_sources is COUNTED,
-    never hardcoded — the sample_temperature_mixture lesson, ADVICE
-    r7). 100 TB shape: tiering is row-local; ranking windows are
+    never hardcoded — the sample_temperature_mixture lesson). 100 TB
+    shape: tiering is row-local; ranking windows are
     partitioned by (tier, source) — never global over docs; the source
     index + count run on the #sources frame (O(1), waived)."""
     docs = _t(spark, sf_dir, "documents")
@@ -1169,24 +1169,23 @@ FROM orders WHERE o_orderstatus <> 'X'
 
 
 def maintenance_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Small-files compaction — the table-maintenance job the
-    input-split finding in SCALING.md ("59.6 s instead of 9.5 s with an
-    identical plan" purely from file count) makes non-optional at
-    100 TB. Simulates a fragmented ingest by writing documents as 64
-    tiny parquet files, then compacts into 8 deterministic fixed-RANGE
-    buckets — one output file per bucket (asserted by
+    """Small-files compaction — the table-maintenance job that file
+    count alone (an identical plan runs far slower over many tiny
+    input splits) makes non-optional at 100 TB. Simulates a fragmented
+    ingest by writing documents as 64 tiny parquet files, then compacts into
+    8 deterministic fixed-RANGE buckets — one output file per bucket
+    (asserted by
     tests/test_scale_idioms.py::test_compaction_yields_one_file_per_bucket),
-    range-clustered so min/max row-group stats keep supporting data
-    skipping after the rewrite (a doc_id % 8 hash shuffle would destroy
-    them). Bucketing is pure integer arithmetic (``div``), so the
-    boundary each doc lands on is bit-identical across engines; the id
-    domain comes from a 1-row MAX scalar (sanctioned broadcast). Output:
-    per-bucket row count, id range, and char sum — the compaction
-    report."""
+    range-clustered so min/max row-group stats keep supporting data skipping
+    after the rewrite (a doc_id % 8 hash shuffle would destroy them).
+    Bucketing is pure integer arithmetic (``div``), so the boundary each doc
+    lands on is bit-identical across engines; the id domain comes from a
+    1-row MAX scalar (sanctioned broadcast). Output: per-bucket row count,
+    id range, and char sum — the compaction report."""
     import os
 
     # pid-keyed scratch: two concurrent sessions running this entry must
-    # not overwrite/rmtree under each other's reads (ADVICE round 6)
+    # not overwrite/rmtree under each other's reads
     tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
     scratch = f"/tmp/spark_graft_compact/{tag}-{os.getpid()}"
     frag_dir = f"{scratch}/frag"
@@ -1360,7 +1359,7 @@ def maintenance_retention_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole table. The physical assertion (surviving partition dirs
     on disk == years kept) plus the oracle hash (readback == the
     source filtered to the window) together prove scoped, lossless
-    deletion. Per-PID scratch dir (ADVICE r6 rule)."""
+    deletion. Per-PID scratch dir."""
     import os
     import shutil
 
@@ -1419,15 +1418,15 @@ def maintenance_incremental_manifest(spark: SparkSession, sf_dir: str) -> DataFr
     (orders with key % 3 = 2 plus the literal file count) hash-matching
     proves the diff picked up all of batch 2 and nothing else. Per-PID
     scratch dir; dirs of dead pids are swept at the start of each run
-    so they cannot accumulate across processes (ADVICE r8)."""
+    so they cannot accumulate across processes."""
     import os
     import shutil
 
     tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
     root = f"/tmp/spark_graft_manifest/{tag}"
     d = f"{root}/{os.getpid()}"
-    # Sweep scratch dirs left by PRIOR processes (ADVICE r8: the old
-    # per-pid-only cleanup let dead-pid dirs accumulate forever). A
+    # Sweep scratch dirs left by PRIOR processes (per-pid-only cleanup
+    # would let dead-pid dirs accumulate forever). A
     # sibling dir whose pid is no longer alive can never be read again
     # (inputFiles() laziness only spans this process), so it is safe
     # to remove; our own dir is recreated fresh below.
@@ -1874,7 +1873,7 @@ FROM ovl GROUP BY layout
 
 
 # ---------------------------------------------------------------------------
-# Round 12: dataset reproducibility + table statistics
+# Dataset reproducibility + table statistics
 # ---------------------------------------------------------------------------
 
 # order-insensitive content fingerprint: per-row 60-bit md5 value
@@ -1980,8 +1979,7 @@ def maintenance_analyze_column_stats(
     PER COLUMN, unioned. The tempting alternative — all six
     countDistincts in one Aggregate — plans as an Expand (6× rows)
     into a GLOBAL final aggregate, i.e. every expanded row funnels
-    through ONE reducer task: measured 5.25 s vs 0.9 s at sf0.1 and
-    8.4× growth over 100× rows (SCALING.md round 12). Per-column
+    through ONE reducer task. Per-column
     single-distinct aggs keep both phases hash-partitioned by the
     value, and each branch's scan reads exactly one column — at 100 TB
     on columnar storage the union costs ≈ one full-width scan, fully

@@ -1,44 +1,21 @@
 """Unified query registry: every operator from SURVEY.md §2 with its
 Spark plan and (where SQL-expressible) DuckDB oracle. Consumed by
-/root/repo/__spark_entry__.py (driver contract), tests/test_oracle.py,
-and bench.py.
+__spark_entry__.py (driver contract), tests/test_oracle.py, and
+bench.py.
 
 ORDER MATTERS: the driver's per-round correctness gate checks the FIRST
-50 registry entries, so entries lacking a driver CORRECTNESS row are
+50 registry entries, so the entries the next window should check are
 listed first (DRIVER_PRIORITY). Local tests always run ALL entries
-regardless of order. Per-round window history lives in
-/root/repo/ROTATION.md; the real source of truth is DRIVER_PRIORITY
-plus the CORRECTNESS_r{N}.json files — and since round 11 the window
-composition is MECHANIZED: tests/test_rotation.py derives the
-never-driver-checked set from CORRECTNESS_r*.json and fails if any
-front slot is spent on an already-checked entry while a never-checked
-one waits (the round-7/round-9 undercount failure mode, now CI-caught).
-
-CURRENT WINDOW (round 17; r16 was 49/50, the one miss being the
-oracle-less agg_hll_intersection): the pending set is
-EMPTY (cumulative driver evidence reached 400/400 in r12), so the
-window is pure staleness back-fill — byte-exactly the 50-entry
-proposal `python -m …plans.rotation` printed from CORRECTNESS_r01-r16:
-the entire r09-stale class (the covariance/gini/entropy/mode/variance/
-weighted-percentile aggregates, the dq checks, the eval metrics, the
-multimodal meta/dedup forms, the streaming cdc/cusum/file-source/
-url-dedup state entries, the text cleanup/stats family, the timeseries
-drift/seasonal/survival entries, and the rest listed below). Retiring
-all 50 moves the staleness histogram's oldest class from r09 to r10
-(the monotone-shrink invariant, VERDICT r12 item 1). NO new registry
-entries: the window is exactly 50 wide and the r09 class is exactly 50
-deep.
-
-NEXT-ROUND CHORE: no longer hand-maintained prose (VERDICT r11 item 7
-— the round-7/round-9 drift mode). It is COMPUTED from the same
-CORRECTNESS_r*.json diff the rotation test enforces:
+regardless of order. The window is computed, not hand-maintained:
+tests/test_rotation.py derives the never-driver-checked set from
+CORRECTNESS_r*.json and fails if any front slot is spent on an
+already-checked entry while a never-checked one waits, and
 
     python -m pipeline_apache_beam_entrega1_cs_spark.plans.rotation
 
-prints the pending set, the staleness histogram, and a composed
-window proposal. tests/test_rotation.py consumes the same helpers
-(plans/rotation.py), so the chore text and the CI gate can never
-disagree.
+prints the pending set, the staleness histogram, and a composed window
+proposal from the same helpers (plans/rotation.py), so the proposal and
+the gate cannot disagree.
 """
 
 from __future__ import annotations
@@ -58,10 +35,7 @@ from . import (
 from .spec import QuerySpec
 
 DRIVER_PRIORITY: list[str] = [
-    # ================= round-17 window =================
-    # Pure r09-staleness back-fill (pending set is empty; this list is
-    # byte-exactly the `plans.rotation` proposal computed from
-    # CORRECTNESS_r01-r16 evidence).
+    # The current window: byte-exactly the `plans.rotation` proposal.
     "agg_covariance_matrix",
     "agg_gini_concentration",
     "agg_group_entropy",

@@ -49,7 +49,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     # Products computed IN decimal (operands cast first): a double product
     # cast to decimal rounds differently in Spark vs DuckDB on .xxxx5
-    # boundaries and the grouped sum drifts (round-1 sum_charge failure).
+    # boundaries and the grouped sum drifts (sum_charge is one such sum).
     disc_price = drev()
     charge = dcharge()
     return (
@@ -820,7 +820,7 @@ FROM picked CROSS JOIN bounds
 
 def agg_quantile_partial_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGEABLE quantile partials — the histogram counterpart of
-    agg_hll_partial_merge (VERDICT r7 next-step #7): per
+    agg_hll_partial_merge: per
     (returnflag, linestatus) group, fixed-width histogram counts over
     bucket bounds from a broadcast global min/max (the
     decile_stats_bucketed recipe); any rollup — per-flag, '__all__' —
@@ -919,7 +919,7 @@ def agg_variance_partial_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     never overflows at any scale."""
     # floor() before the bigint cast: Spark's cast truncates while
     # DuckDB's rounds, so the explicit floor keeps the recipe safe to
-    # copy onto non-integral columns (ADVICE r8). l_quantity is
+    # copy onto non-integral columns. l_quantity is
     # integral, so floor is a no-op here.
     li = _t(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_linestatus",
@@ -1001,7 +1001,7 @@ def agg_covariance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: ONE mergeable aggregate produces all ten moments (a
     single Exchange to a 1-row frame); the 3×3 matrix explodes from
     literal pair structs on that 1-row frame — O(1) downstream."""
-    # floor() before the bigint cast on l_quantity too (ADVICE r8):
+    # floor() before the bigint cast on l_quantity too:
     # Spark cast truncates, DuckDB cast rounds — explicit floor keeps
     # both engines identical even on non-integral inputs.
     li = _t(spark, sf_dir, "lineitem").select(

@@ -1231,28 +1231,23 @@ def try_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     the job. All map-side; DuckDB mirrors via TRY_CAST / NULLIF / lazy
     CASE (which never evaluates the failing branch).
 
-    SCALE NOTE (round-14 profiling): Spark implements try_cast /
-    try_to_timestamp failure via a thrown-and-caught JVM exception PER
-    FAILING ROW (~9 µs each) — on a column where most rows fail (this
-    entry's o_orderstatus never parses), the try_* failure path is
-    ~15× the success path and dominated this entry's runtime (1.9 of
-    2.4 s at sf0.1; the 17.9× GROWTH_r14 ratio was mostly this). The
-    production idiom at 100 TB is a cheap codegen'd regex GUARD in
-    front of the try_* safety net: the guard must OVER-approximate the
-    accepted grammar (a false positive falls through to try_* which
-    still nulls safely; a false negative would wrongly null a
-    castable value — so the guard character classes mirror
-    UTF8String.trimAll's ≤0x20 trimming). try_* stays in the plan for
-    rows that pass the guard; values are bit-identical (exceptAll both
-    ways vs the bare form: 0 rows at sf0.1). Measured 2.42 → ~0.5 s at
-    sf0.1 (same session, warm)."""
+    SCALE NOTE: Spark implements try_cast / try_to_timestamp failure
+    via a thrown-and-caught JVM exception PER FAILING ROW — on a column
+    where most rows fail (this entry's o_orderstatus never parses), the
+    try_* failure path dominates the runtime. The production idiom at 100 TB
+    is a cheap codegen'd regex GUARD in front of the try_* safety net: the
+    guard must OVER-approximate the accepted grammar (a false positive falls
+    through to try_* which still nulls safely; a false negative would
+    wrongly null a castable value — so the guard character classes mirror
+    UTF8String.trimAll's ≤0x20 trimming). try_* stays in the plan for rows
+    that pass the guard; values are bit-identical to the bare form."""
     orders = _t(spark, sf_dir, "orders")
     # over-approximation of UTF8String.toLong's accepted grammar
     LONGISH = r"'^[\\x00-\\x20]*[+-]?(\\d+(\\.\\d*)?|\\.\\d+)([eE][+-]?\\d+)?[dDfFlL]?[\\x00-\\x20]*$'"
     # over-approximation of strict 'yyyy-MM-dd' (CORRECTED parser).
     # Optional leading sign: strict 'yyyy' uses SignStyle.EXCEEDS_PAD,
     # which accepts (indeed requires) a sign on expanded years like
-    # '+10000-01-01' — the guard must not reject those (ADVICE r14).
+    # '+10000-01-01' — the guard must not reject those.
     DATEISH = r"'^[\\x00-\\x20]*[+-]?[0-9]{4,6}-[0-9]{1,2}-[0-9]{1,2}[\\x00-\\x20]*$'"
     return orders.select(
         "o_orderkey",
@@ -1460,7 +1455,7 @@ def source_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    # pid-keyed scratch so concurrent sessions don't race (ADVICE r6)
+    # pid-keyed scratch so concurrent sessions don't race
     tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
     d = f"/tmp/spark_graft_binsrc/{tag}-{os.getpid()}"
     shutil.rmtree(d, ignore_errors=True)
@@ -1622,7 +1617,7 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     from urllib.parse import urlparse
 
-    # pid-keyed table names so concurrent sessions don't race (ADVICE r6)
+    # pid-keyed table names so concurrent sessions don't race
     tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
     pid = os.getpid()
     li_t, ord_t = f"graft_li_bkt_{tag}_{pid}", f"graft_ord_bkt_{tag}_{pid}"

@@ -1,12 +1,11 @@
-"""Mechanized driver-window bookkeeping (VERDICT r11 item 7).
+"""Mechanized driver-window bookkeeping.
 
 The driver's per-round correctness gate checks the FIRST 50 registry
-entries (``registry.DRIVER_PRIORITY``). Twice (rounds 7 and 9) a
-hand-maintained chore list in the registry docstring undercounted the
-never-driver-checked backlog. This module is now the single source of
-truth for that computation: both ``tests/test_rotation.py`` (the CI
-gate) and the human-facing chore text come from the SAME functions, so
-they cannot drift.
+entries (``registry.DRIVER_PRIORITY``). A hand-maintained chore list
+can undercount the never-driver-checked backlog, so this module is the
+single source of truth for that computation: both ``tests/test_rotation.py``
+(the CI gate) and the human-facing chore text come from the SAME functions,
+so they cannot drift.
 
 Usage::
 

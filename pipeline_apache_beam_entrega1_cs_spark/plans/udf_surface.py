@@ -1,24 +1,22 @@
-"""Remaining sanctioned UDF escape hatches (SURVEY §2B "UDF surface"):
-cogrouped applyInPandas (the two-sided per-key merge the reference has
-no analog for) and mapInArrow (the zero-copy Arrow batch path one level
-below mapInPandas). Both are deliberately oracle-checkable: outputs are
-integer-exact (cents, counts) so pandas/pyarrow vs DuckDB agree
+"""Sanctioned UDF escape hatches (SURVEY §2B "UDF surface"): mapInArrow
+(the zero-copy Arrow batch path one level below mapInPandas), a Python
+UDTF, and GROUPED_AGG / SCALAR_ITER pandas UDFs. Each is
+oracle-checkable: its Python side computes in integers (cents, counts,
+micro-units) or on exact doubles, so pandas/pyarrow vs DuckDB agree
 bit-for-bit despite the Python boundary.
 
 Policy reminder (SURVEY §1.4): these paths exist for semantics native
 expressions can't reach; nothing in the relational core routes through
-them. At 100 TB both scale linearly — per-key pandas frames stay small
-(one customer's orders), and mapInArrow streams fixed-size Arrow
-batches with no row materialization in Python objects.
+them. At 100 TB mapInArrow streams fixed-size Arrow batches with no row
+materialization in Python objects.
 
-Round-15 optimization note: cogroup_order_gaps and
-applyinpandas_trimmed_mean turned out to be fully expressible with
-built-in window/aggregate functions, so their registry entries now run
-the native plans (per-group Python overhead removed; map-side partial
-aggregation restored — guide §2.3/§4.1) and the original
-applyInPandas/cogroup forms remain here as ``*_pandas`` reference
-twins, equivalence-tested in tests/test_udf_surface_equivalence.py so
-the calling conventions stay CI-exercised.
+``cogroup_order_gaps`` and ``applyinpandas_trimmed_mean`` are fully
+expressible with built-in window/aggregate functions, so their registry
+entries run native plans: no per-group Python call, and map-side
+partial aggregation. Their cogroup and grouped applyInPandas forms live
+in tests/test_udf_surface_equivalence.py as the reference arms the
+native plans are compared against, which keeps those calling
+conventions exercised.
 """
 
 from __future__ import annotations
@@ -39,40 +37,17 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
-def _keyed(df: DataFrame, key: str) -> DataFrame:
-    """Explicit-count key repartition before grouped applyInPandas /
-    cogroup (the dedup._shuffle_partitions rule, Python edition): the
-    per-group Python invocation is CPU-dense but the grouped exchange
-    is byte-light, so AQE coalesces it to ONE partition and every
-    group's pandas call runs on a single core — measured 13.3 s ->
-    1.9 s at sf0.1 on applyinpandas_trimmed_mean (SCALING.md round
-    11). The explicit hash distribution satisfies the grouped
-    operator's required clustering, so no second exchange appears."""
-    spark = df.sparkSession
-    try:
-        n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        n = spark.sparkContext.defaultParallelism
-    return df.repartition(n, key)
-
-
 def cogroup_order_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-customer order cadence — order count, exact spend in cents,
     and the maximum gap in days between consecutive orders.
 
-    OPTIMIZED round 15 (guide §2.3/§4.1): the original cogrouped
-    applyInPandas form (kept below as ``cogroup_order_gaps_pandas``,
-    equivalence-tested in tests/test_udf_surface_equivalence.py) paid
-    one Python invocation PER CUSTOMER KEY — at sf0.1 that is 15 000
-    merge() calls each building 1-row pandas frames, ~2.6 s of pure
-    per-group Python overhead on a 3.0 s query; at 100 TB it ships
-    every order row through Arrow to Python with no partial
-    aggregation. The gap logic is a lag window + max — all built-ins:
-    one hash exchange on o_custkey feeds the window, the groupBy reuses
-    that partitioning (no second orders shuffle), and the aggregate is
-    map-side-combinable. Measured min-of-3 same-session A/B at sf0.1:
-    4.02 s -> 0.88 s (plan: FlatMapCoGroupsInPandas removed; oracle
-    hash unchanged).
+    A cogrouped applyInPandas form (the reference arm in
+    tests/test_udf_surface_equivalence.py) pays one Python call per
+    customer key, and at 100 TB ships every order row through Arrow to
+    Python with no partial aggregation. The gap logic is a lag window +
+    max — all built-ins: one hash exchange on o_custkey feeds the
+    window, the groupBy reuses that partitioning (no second orders
+    shuffle), and the aggregate is map-side-combinable.
 
     Exactness: cents are summed as int64 (round(x*100) is
     tie-rule-independent — prices carry exactly 2 decimals), the gap
@@ -104,57 +79,6 @@ def cogroup_order_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
             "spend_cents"
         ),
         "max_gap_days",
-    )
-
-
-def cogroup_order_gaps_pandas(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The pre-round-15 cogrouped applyInPandas form — kept as the
-    cogroup calling-convention reference (SURVEY §2B "UDF surface") and
-    equivalence-tested against the optimized plan above. The gap needs
-    ordered pairwise iteration within a key, a natural pandas
-    computation; spend is summed as int64 cents so the Python side and
-    the SQL oracle are integer-exact (a float64 pandas sum would differ
-    from DuckDB's unordered double sum in the last ulp)."""
-    cust = _t(spark, sf_dir, "customer").select("c_custkey")
-    orders = _t(spark, sf_dir, "orders").select(
-        "o_custkey", "o_orderkey", "o_orderdate", "o_totalprice"
-    )
-
-    def merge(key: tuple, cdf: pd.DataFrame, odf: pd.DataFrame) -> pd.DataFrame:
-        n = len(odf)
-        if n == 0:
-            return pd.DataFrame(
-                {
-                    "c_custkey": [int(key[0])],
-                    "n_orders": [0],
-                    "spend_cents": [0],
-                    "max_gap_days": [None],
-                }
-            )
-        odf = odf.sort_values(["o_orderdate", "o_orderkey"])
-        # prices carry exactly 2 decimals: *100 lands ~1e-10 from an
-        # integer, so round() is tie-rule-independent here
-        cents = int(odf["o_totalprice"].mul(100).round().astype("int64").sum())
-        gaps = odf["o_orderdate"].diff().dt.days
-        max_gap = None if n < 2 else int(gaps.max())
-        return pd.DataFrame(
-            {
-                "c_custkey": [int(key[0])],
-                "n_orders": [n],
-                "spend_cents": [cents],
-                "max_gap_days": [max_gap],
-            }
-        )
-
-    return (
-        _keyed(cust, "c_custkey").groupBy("c_custkey")
-        .cogroup(_keyed(orders, "o_custkey").groupBy("o_custkey"))
-        .applyInPandas(
-            merge,
-            "c_custkey long, n_orders long, spend_cents long, max_gap_days long",
-        )
     )
 
 
@@ -212,19 +136,13 @@ def applyinpandas_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-customer trimmed mean spend (drop one min and one max,
     average the rest).
 
-    OPTIMIZED round 15 (guide §2.3/§4.1): the original grouped
-    applyInPandas form (kept below as
-    ``applyinpandas_trimmed_mean_pandas``, equivalence-tested in
-    tests/test_udf_surface_equivalence.py) invoked Python once per
-    customer key — 10 000 trimmed() calls at sf0.1, each building a
-    1-row pandas frame, and at 100 TB every order row crosses to
-    Python with NO partial aggregation (AggregateInPandas ships whole
-    groups). The statistic is (sum-min-max)/(n-2) — four built-in
-    aggregates with map-side combine: ONE byte-light exchange of
-    partial (count,sum,min,max) rows instead of all order rows.
-    Measured min-of-3 same-session A/B at sf0.1: 1.89 s -> 0.37 s
-    (plan: FlatMapGroupsInPandas removed; partial_count/sum/min/max
-    below the exchange; oracle hash unchanged).
+    A grouped applyInPandas form (the reference arm in
+    tests/test_udf_surface_equivalence.py) calls Python once per
+    customer key, and at 100 TB every order row crosses to Python with
+    no partial aggregation (grouped pandas ships whole groups). The
+    statistic is (sum-min-max)/(n-2) — four built-in aggregates with
+    map-side combine: one byte-light exchange of partial
+    (count,sum,min,max) rows instead of all order rows.
 
     Exactness: arithmetic runs in int64 cents; only the final division
     produces a double, identical on both engines."""
@@ -249,37 +167,6 @@ def applyinpandas_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .otherwise(F.col("s").cast("double") / (n * 100))
         .alias("trimmed_mean"),
-    )
-
-
-def applyinpandas_trimmed_mean_pandas(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The pre-round-15 grouped applyInPandas form — kept as the
-    single-sided grouped-pandas calling-convention reference and
-    equivalence-tested against the optimized plan above. Arithmetic
-    runs in int64 cents inside pandas so the Python side and the SQL
-    oracle are integer-exact; only the final division produces a
-    double, identical on both engines."""
-    orders = _t(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
-
-    def trimmed(pdf: pd.DataFrame) -> pd.DataFrame:
-        cents = pdf["o_totalprice"].mul(100).round().astype("int64")
-        n = len(cents)
-        if n > 2:
-            val = float(cents.sum() - cents.min() - cents.max()) / ((n - 2) * 100)
-        else:
-            val = float(cents.sum()) / (n * 100)
-        return pd.DataFrame(
-            {
-                "o_custkey": [int(pdf["o_custkey"].iloc[0])],
-                "n_orders": [n],
-                "trimmed_mean": [val],
-            }
-        )
-
-    return _keyed(orders, "o_custkey").groupBy("o_custkey").applyInPandas(
-        trimmed, "o_custkey long, n_orders long, trimmed_mean double"
     )
 
 

@@ -634,7 +634,7 @@ def streaming_url_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     (canonical_url, raw_url) grain — min keeper, summed counts — so
     the per-canonical report (keeper_id, n_docs, n_raw_variants) is a
     pure read-off (streaming/sinks.UrlDedupMergeSink); the streaming
-    twin of dedup_url_canonicalize per VERDICT r8 next-step #7.
+    twin of dedup_url_canonicalize.
     Exactly-once via in-state commit markers + crash-safe swap;
     canonicalization depends only on the row and all state columns are
     associative, so cold replay equals the one-shot batch dedup the

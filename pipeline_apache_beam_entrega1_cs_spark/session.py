@@ -49,4 +49,13 @@ def get_spark(app_name: str = "pipeline_apache_beam_entrega1_cs_spark",
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # A glob read makes FileStreamSink probe the literal glob path for a
+    # streaming-sink metadata directory and log the FileNotFoundException
+    # at WARN with its full stack trace on every read; silence only that
+    # logger, so every other WARN still prints.
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink",
+        jvm.org.apache.logging.log4j.Level.ERROR,
+    )
     return spark

@@ -418,11 +418,11 @@ def run_tfidf_state_stream(spark, sf_dir: str, n_batches: int = 4):
     rounding convention the batch text_tfidf_top_terms entry uses, so
     the two stay drop-in consistent.
 
-    ``n_batches`` (round 16, VERDICT r15 item 6): the per-batch merge is
+    ``n_batches``: the per-batch merge is
     associative, so the FINAL state is identical for any slicing — the
     declared streaming_tfidf_state entry stays at the default 4; the
     amortization harness (streaming_amortization.py) replays at 1 and 8
-    to demonstrate the fixed ~0.8 s/batch Structured Streaming floor
+    to demonstrate the fixed per-batch Structured Streaming floor
     amortizing instead of adjudicating it in prose."""
     raw = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return replay(
@@ -979,7 +979,7 @@ class OutOfOrderAuditSink(MergeSink):
     carry and their first event of the next batch is spliced so no
     adjacent pair is ever lost to a batch boundary.
 
-    Replay-order contract (ADVICE r12): the per-type counters (pairs,
+    Replay-order contract: the per-type counters (pairs,
     backwards, max backwards gap) are ADDITIVE / max-mergeable and thus
     batch-order independent, but the carry SPLICE pairs a user's
     carried last event with their next batch's first event — adjacency
@@ -1080,7 +1080,7 @@ class OutOfOrderAuditSink(MergeSink):
         )
         if carry is not None:
             # Max-by-event_id merge: a late batch never regresses the
-            # carried frontier (batch-order robustness, ADVICE r12).
+            # carried frontier (batch-order robustness).
             new_carry = (
                 last_in_batch.unionByName(carry)
                 .groupBy("user_id")
@@ -1387,8 +1387,8 @@ def run_cdc_apply_stream(spark, sf_dir: str):
 class Scd2MergeSink(MergeSink):
     """``foreachBatch`` MERGE that maintains an SCD2 dimension
     incrementally — the write-side streaming twin of
-    plans/pipeline_ops.scd2_build_from_changes (per VERDICT r9
-    next-step #6, the natural sibling of CdcApplyMergeSink): each
+    plans/pipeline_ops.scd2_build_from_changes (the natural sibling of
+    CdcApplyMergeSink): each
     arriving micro-batch of (key, seq, attr, valid_from) changes
     rewrites ONLY the affected keys' version chains.
 

@@ -7,6 +7,11 @@ posts a new maximum event value, carrying the previous maximum. The
 pattern (detect record-breaking events against persistent state) is a
 classic fraud/alerting shape that plain windowed aggregation can't
 express.
+
+The API runs a gRPC state server in the Python worker, which needs the
+``protobuf`` package; where it is missing, tests skip through
+``transform_with_state_available()``, and applyInPandasWithState
+(streaming/stateful.py) covers the arbitrary-state surface.
 """
 
 from __future__ import annotations
@@ -14,14 +19,6 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-
-ENV_NOTE = """transformWithStateInPandas runs a gRPC state server in the
-Python worker and requires the `protobuf` package, which is NOT installed
-in this container (and installs are disallowed). The operator below is
-complete and exercised wherever protobuf exists; tests skip via
-transform_with_state_available(). applyInPandasWithState
-(streaming/stateful.py) covers the arbitrary-state surface here."""
-
 
 def transform_with_state_available() -> bool:
     try:

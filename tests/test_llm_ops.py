@@ -185,13 +185,6 @@ def test_transform_with_state_high_water_marks(spark, sf_dir):
     assert bad == 0
 
 
-def test_real_decoder_is_marked_stub(spark):
-    from pipeline_apache_beam_entrega1_cs_spark.operators.multimodal import real_decode_image
-
-    with pytest.raises(NotImplementedError):
-        real_decode_image(None)
-
-
 def test_embedding_cosine_lsh_recall(spark, sf_dir):
     """The LSH-bucket-blocked near-dup pairs must recover nearly all
     exact all-pairs cosine matches (measured 0.99 at defaults) — this is
@@ -1989,12 +1982,53 @@ def test_riff_walker_matches_struct_walk_and_detects_corruption(spark):
     assert by_doc[3][0].is_riff == 0 and by_doc[3][0].fourcc is None
 
 
+def _lsh_expression_pairs(embeddings, threshold):
+    """Reference arm for ``embedding_cosine_pairs_lsh`` at its defaults:
+    the same buckets (``_lsh_buckets``) and cell cap, verified by a
+    plain expression pipeline — id-only bucket explode, candidate
+    self-join, id-pair distinct, embedding re-attach and an interpreted
+    Catalyst cosine fold."""
+    from pipeline_apache_beam_entrega1_cs_spark.operators.similarity import (
+        _lsh_buckets,
+        cosine,
+    )
+
+    vecs, buckets = _lsh_buckets(embeddings, 4.0, 6, 42, None)
+    hashed = vecs.select(
+        "vec_id", F.posexplode(buckets).alias("tbl", "bucket")
+    )
+    live = (
+        hashed.groupBy("tbl", "bucket")
+        .agg(F.count(F.lit(1)).alias("_bsz"))
+        .filter((F.col("_bsz") >= 2) & (F.col("_bsz") <= 1024))
+        .select("tbl", "bucket")
+    )
+    pruned = hashed.join(live, ["tbl", "bucket"])
+    a = pruned.select("tbl", "bucket", F.col("vec_id").alias("vec_a"))
+    b = pruned.select("tbl", "bucket", F.col("vec_id").alias("vec_b"))
+    pair_ids = (
+        a.join(b, ["tbl", "bucket"])
+        .filter(F.col("vec_a") < F.col("vec_b"))
+        .select("vec_a", "vec_b")
+        .distinct()
+    )
+    ea = vecs.select(F.col("vec_id").alias("vec_a"), F.col("emb").alias("emb_a"))
+    eb = vecs.select(F.col("vec_id").alias("vec_b"), F.col("emb").alias("emb_b"))
+    cand = pair_ids.join(ea, "vec_a").join(eb, "vec_b")
+    return cand.select(
+        "vec_a",
+        "vec_b",
+        F.round(cosine(F.col("emb_a"), F.col("emb_b")), 6).alias("cos_sim"),
+    ).filter(F.col("cos_sim") >= threshold)
+
+
 def test_cosine_lsh_dim_guard_and_ab_paths_agree(spark, sf_dir):
-    """ADVICE r12: (1) the arrow-verify and pure-expression paths must
-    agree pair-for-pair INCLUDING the rounded cosine (common HALF_UP
-    rounding); (2) dim is derived from the data by default; (3) a
-    ragged / wrong-dim corpus must fail loudly instead of silently
-    returning zero pairs (zip_with null-padding trap)."""
+    """(1) The operator's per-cell arrow verify and the expression
+    pipeline over the same buckets must agree pair-for-pair INCLUDING
+    the rounded cosine (common HALF_UP rounding); (2) dim is derived
+    from the data by default; (3) a ragged / wrong-dim corpus must fail
+    loudly instead of silently returning zero pairs (zip_with
+    null-padding trap)."""
     import pytest
 
     from pipeline_apache_beam_entrega1_cs_spark.operators.similarity import (
@@ -2009,9 +2043,7 @@ def test_cosine_lsh_dim_guard_and_ab_paths_agree(spark, sf_dir):
     }
     slow = {
         (r.vec_a, r.vec_b): r.cos_sim
-        for r in embedding_cosine_pairs_lsh(
-            emb, threshold=0.35, arrow_verify=False
-        ).collect()
+        for r in _lsh_expression_pairs(emb, threshold=0.35).collect()
     }
     assert fast.keys() == slow.keys()
     for k, v in fast.items():
@@ -2113,10 +2145,10 @@ def test_cosine_lsh_dim_probe_tolerates_null_embeddings(spark, sf_dir):
 
 
 def test_cosine_lsh_duplicate_vec_id_pairs_match_expression_path(spark, sf_dir):
-    """ADVICE r15: two distinct rows sharing a vec_id land in the same
-    bucket cell (identical embedding -> identical bucket keys); the
-    arrow path's triu pair enumeration must NOT emit the (x, x) id pair
-    that both legacy paths' strict ``vec_a < vec_b`` filter drops — the
+    """Two distinct rows sharing a vec_id land in the same bucket cell
+    (identical embedding -> identical bucket keys); the arrow verify's
+    triu pair enumeration must NOT emit the (x, x) id pair that the
+    expression pipeline's strict ``vec_a < vec_b`` filter drops — the
     A/B contract holds even on non-unique vec_id input."""
     from pipeline_apache_beam_entrega1_cs_spark.operators.similarity import (
         embedding_cosine_pairs_lsh,
@@ -2136,9 +2168,7 @@ def test_cosine_lsh_duplicate_vec_id_pairs_match_expression_path(spark, sf_dir):
     }
     slow = {
         (r.vec_a, r.vec_b): r.cos_sim
-        for r in embedding_cosine_pairs_lsh(
-            corpus, threshold=0.35, arrow_verify=False
-        ).collect()
+        for r in _lsh_expression_pairs(corpus, threshold=0.35).collect()
     }
     assert all(a < b for a, b in fast), "self-pair leaked through"
     assert fast.keys() == slow.keys()

@@ -6,9 +6,11 @@ Streaming."""
 from __future__ import annotations
 
 import ast
+import io
 import json
 import re
 import threading
+import tokenize
 from collections import Counter, defaultdict
 from pathlib import Path
 
@@ -1139,6 +1141,51 @@ def test_no_copied_blocks_in_package():
         }
     )
     assert runs == [], "copied blocks:\n" + "\n".join(", ".join(r) for r in runs)
+
+
+_DATED_HISTORY = re.compile(
+    r"[Rr]ound[- ]\d+|VERDICT|ADVICE|\d(?:\.\d+)?\s*s\s*(?:->|→)\s*\d"
+)
+
+
+def _prose(src: str) -> list[tuple[int, str]]:
+    """(line number, text) of every comment and docstring of a module;
+    a docstring is given at its first line."""
+    comments = [
+        (t.start[0], t.string)
+        for t in tokenize.generate_tokens(io.StringIO(src).readline)
+        if t.type == tokenize.COMMENT
+    ]
+    docs = [
+        (node.body[0].lineno, node.body[0].value.value)
+        for node in ast.walk(ast.parse(src))
+        if isinstance(
+            node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+        )
+        and node.body
+        and isinstance(node.body[0], ast.Expr)
+        and isinstance(node.body[0].value, ast.Constant)
+        and isinstance(node.body[0].value.value, str)
+    ]
+    return comments + docs
+
+
+def test_no_dated_history_in_package():
+    """No comment or docstring in the package cites a round, a VERDICT
+    or ADVICE item, or an ``x s -> y s`` timing: the code states its
+    contracts and reasons, and dated performance history lives in
+    CHANGES.md and SCALING.md. A failure names each citation by
+    file:line."""
+    root = Path(__file__).resolve().parents[1]
+    package = root / "pipeline_apache_beam_entrega1_cs_spark"
+    found = [
+        f"{path.relative_to(root)}:{line + text[:m.start()].count(chr(10))}: "
+        f"{m.group()}"
+        for path in sorted(package.rglob("*.py"))
+        for line, text in _prose(path.read_text())
+        for m in _DATED_HISTORY.finditer(text)
+    ]
+    assert found == [], "dated history in package prose:\n" + "\n".join(found)
 
 
 def _reader_chain(call: ast.Call) -> list[str]:
