@@ -36,8 +36,8 @@ R01_COMPARABLE = 16
 # hypervisor steal / heavy ambient load the same loop runs slower by the
 # same uniform factor that inflates the Spark wall times, so
 # control_loop_s / calibration is a machine-readable "trust this
-# number?" signal (rounds 2/4/5/6 all needed a manual quiet rerun to
-# establish that; this makes it diagnosable from the JSON alone).
+# number?" signal, diagnosable from the JSON alone without a manual
+# quiet rerun.
 CONTROL_ITERS = 2_000_000
 
 # Pre-start drain: wait (START_WAIT_S at a time, at most START_MAX_WAITS
@@ -102,102 +102,73 @@ BENCH_QUERIES = [
     # end-to-end curation pass (quality filter -> lang-ID -> fingerprint
     # dedup -> yield report): the composed shape of the actual 100 TB
     # workload, so regressions in the LLM path show up as one line.
-    # NOTE for cross-round comparison: first added in round 4 — compare
-    # BENCH_r{N>=4} totals to r03 only after subtracting this entry.
+    # It and every line below it are outside subtotal_r01_comparable.
     "curation_pipeline",
     # corpus-wide duplicated-span removal (substring dedup): the
-    # heaviest single dedup primitive of the LLM path. NOTE for
-    # cross-round comparison: first added in round 6 — compare
-    # BENCH_r{N>=6} totals to earlier rounds only after subtracting
-    # this entry (and curation_pipeline for r<4).
+    # heaviest single dedup primitive of the LLM path.
     "dedup_span_ngram",
-    # round-7 addition (totals comparable to r<7 only after subtracting
-    # it; subtotal_r01_comparable already excludes it): real BPE
-    # segmentation — the zero-shuffle scalar-chain tokenizer.
-    # (ann_retrieval_pipeline was measured and REJECTED as a bench line:
-    # ~4 s of fixed per-stage cost from the unrolled quantizer fits
-    # would inflate the headline total ~35% while measuring scheduling,
-    # not data work — its scaling story lives in SCALING.md instead.
-    # ann_mmr_rerank was re-measured in round 8 after the cache-release
-    # fix — 1.3 s min — but rejected on the same grounds: its cost is
-    # per-query-bounded by design, so the line would track scheduler
-    # fixed costs, not data volume.)
+    # real BPE segmentation — the zero-shuffle scalar-chain tokenizer.
+    # (ann_retrieval_pipeline and ann_mmr_rerank are not bench lines:
+    # their cost is per-query-bounded by design, so a line would track
+    # scheduler fixed costs, not data volume; the retrieval pipeline's
+    # scaling story lives in SCALING.md.)
     "text_bpe_apply",
-    # round-8 additions (totals comparable to r<8 only after
-    # subtracting both; subtotal_r01_comparable already excludes them):
-    # the model-based quality filter (round-7 surface — hashed-feature
-    # dot product + sigmoid over every doc, pure corpus-proportional
-    # expression work) and binary-payload dedup (round-8's heaviest new
-    # line: sha256 digests + byte-shingle MinHash banding over the blob
-    # corpus — the pre-decode multimodal dedup stage).
+    # the model-based quality filter (hashed-feature dot product +
+    # sigmoid over every doc, pure corpus-proportional expression work)
+    # and binary-payload dedup (sha256 digests + byte-shingle MinHash
+    # banding over the blob corpus — the pre-decode multimodal dedup
+    # stage).
     "text_quality_model",
     "dedup_binary_payload",
-    # round-8 late addition (subtotal_r01_comparable excludes it): the
-    # bloom/runtime-filter semi-join reduction — probe-side scan +
+    # the bloom/runtime-filter semi-join reduction — probe-side scan +
     # occupied-bucket broadcast semi-join + hinted SortMergeJoin, all
-    # data-proportional work (the 17× shuffle-row cut is measured in
-    # SCALING.md); cheap enough not to distort the total, and it keeps
-    # a shuffle-reduction idiom under per-round measurement.
+    # data-proportional work (the shuffle-row cut is measured in
+    # SCALING.md); it keeps a shuffle-reduction idiom under measurement.
     "join_bloom_prefilter",
-    # round-8 fourth-session addition (subtotal_r01_comparable excludes
-    # it): bigram stupid-backoff perplexity scoring — corpus-
-    # proportional LM-table fit (two mergeable count aggregates) plus
-    # keyed shuffle-join scoring with no broadcast assumption on vocab
-    # size; the join-heaviest text line, so shuffle-path regressions on
-    # the LLM side show up here.
+    # bigram stupid-backoff perplexity scoring — corpus-proportional
+    # LM-table fit (two mergeable count aggregates) plus keyed
+    # shuffle-join scoring with no broadcast assumption on vocab size;
+    # the join-heaviest text line, so shuffle-path regressions on the
+    # LLM side show up here.
     "text_perplexity_backoff",
-    # round-9 additions (subtotal_r01_comparable excludes both):
-    # dedup_semantic_clusters per VERDICT r8 next-step #5 — it
-    # exercises the deterministic Lloyd k-means fit + in-cluster pair
-    # join path no other headline covers. Re-measured in round 9
-    # before adding: 4.9 s min at sf0.1, still dominated by the
-    # unrolled fit's fixed per-stage scheduling (the original
-    # rejection rationale stands — read its line as a
-    # scheduling-regression canary, not a data-throughput number).
-    # multimodal_cdc_chunking is the data-proportional multimodal
-    # heavy line (2.7 s min at sf0.1): exploded-position unrolled
-    # rolling-hash chunking over every payload byte — the binary
-    # scan-throughput counterpart to dedup_binary_payload's
-    # signature path.
+    # dedup_semantic_clusters exercises the deterministic Lloyd k-means
+    # fit + in-cluster pair join path no other headline covers. The fit
+    # is a driver loop (one pass and one k-row centroid pin per
+    # iteration), so its line is dominated by per-pass scheduling: read
+    # it as the driver-loop canary, not a data-throughput number.
+    # multimodal_cdc_chunking is the data-proportional multimodal heavy
+    # line: exploded-position unrolled rolling-hash chunking over every
+    # payload byte — the binary scan-throughput counterpart to
+    # dedup_binary_payload's signature path.
     "dedup_semantic_clusters",
     "multimodal_cdc_chunking",
-    # round-10 additions (subtotal_r01_comparable excludes both):
-    # embedding_pca_power — the 3-iteration in-plan spectral pass
-    # (exact-arithmetic power iteration; per-iteration work is
-    # data-proportional but, like dedup_semantic_clusters, the line
-    # carries 3 rounds of fixed per-stage scheduling — read it as the
-    # unrolled-iterative-plan canary). text_keyword_rake — corpus-
+    # embedding_pca_power — exact-arithmetic power iteration as a
+    # driver loop: one flat pass per iteration, 64 values collected
+    # between passes. Per-iteration work is data-proportional, but the
+    # line carries 3 passes of fixed per-stage scheduling, so it is
+    # the second driver-loop canary. text_keyword_rake — corpus-
     # proportional phrase segmentation (doc-keyed gaps-and-islands
     # window + two hash-aggs), the windowed-text shape no other
     # headline covers.
     "embedding_pca_power",
     "text_keyword_rake",
-    # round-12 additions (subtotal_r01_comparable excludes all three;
-    # VERDICT r11 item 4): the round-11 full-registry timing sweep
-    # found 93 s / 25 s / 13 s regressions in exactly these families —
-    # grouped-pandas (Arrow batch exchange + per-key Python) and the
-    # LSH candidate join — which had ZERO bench representation, so the
-    # regressions stayed invisible for rounds. (Round 15: all three
-    # were rewritten — the two pandas entries now run native
+    # the grouped-pandas and LSH candidate-join families, which a
+    # full-registry timing sweep found regressing with no bench line
+    # to show it. The two pandas entries now run native
     # window/aggregate plans (the grouped-pandas calling convention
     # lives on in the reference arms of
-    # tests/test_udf_surface_equivalence.py), and the
-    # LSH entry verifies per bucket cell; the lines stay in the bench
-    # as the regression canaries for exactly those rewrites.)
+    # tests/test_udf_surface_equivalence.py), and the LSH entry
+    # verifies per bucket cell; the lines stay as the regression
+    # canaries for those rewrites.
     "applyinpandas_trimmed_mean",
     "cogroup_order_gaps",
     "dedup_embedding_cosine_lsh",
-    # round-13 additions (subtotal_r01_comparable excludes both;
-    # VERDICT r12 item 7): the two heaviest oracle-backed batch entries
-    # had zero bench representation. Both got a root-cause pass first —
-    # the round-13 filter-pushdown fix (.filter(n_sh>0) re-evaluated
-    # the whole shingle construction at the scan; drop_empty pushes a
-    # cheap token-count predicate instead) took dedup_lsh_bucket_stats
-    # 4.3 -> 1.1 s and eval_dedup_quality 5.1 -> 2.9 s warm at sf0.1.
-    # bucket-stats is the MinHash governance pre-flight (banded key
-    # construction + two hash-aggs); eval_dedup_quality composes THREE
-    # dedup methods over a planted corpus, so it's the dedup-family
-    # regression canary in one line.
+    # the two heaviest oracle-backed batch entries. bucket-stats is the
+    # MinHash governance pre-flight (banded key construction + two
+    # hash-aggs; its filter pushes a cheap token-count predicate to the
+    # scan, not the whole shingle construction); eval_dedup_quality
+    # composes THREE dedup methods over a planted corpus, so it's the
+    # dedup-family regression canary in one line.
     "dedup_lsh_bucket_stats",
     "eval_dedup_quality",
 ]
@@ -209,15 +180,13 @@ def main() -> None:
 
     # Pre-start ambient drain: BEFORE Spark exists, the 1-min load is
     # genuinely ambient (not the bench's own), so a strict threshold is
-    # meaningful here — rounds 2/4/5 all ran hot because the harness
-    # started right after heavy driver activity and every wall time
-    # inflated uniformly. Wait (bounded) for the machine to go quiet and
-    # record the load the measurements actually started under.
-    # Round-13 (VERDICT r12 item 3): BENCH_r12 started at load1=1.94 —
-    # under the 1-min threshold — while load5/load15 were 4.8/5.4 and
-    # the pass accrued 2.46 s of steal: the 1-min average dips before
-    # the machine has actually drained. Gate on the 5-MIN average too,
-    # with a larger bounded wait budget.
+    # meaningful here: a harness started right after heavy driver
+    # activity inflates every wall time uniformly. Wait (bounded) for
+    # the machine to go quiet and record the load the measurements
+    # actually started under. The 1-min average dips before the machine
+    # has actually drained (a pass can start under the 1-min threshold
+    # with a high 5-min load and accrue seconds of steal), so gate on
+    # the 5-MIN average too, with a larger bounded wait budget.
     start_waits = 0
     while (
         os.getloadavg()[0] > START_LOAD or os.getloadavg()[1] > START_LOAD5
@@ -265,13 +234,13 @@ def main() -> None:
         layers: dict[str, dict | None] = {}
         for i, name in enumerate(BENCH_QUERIES, 1):
             # Ambient-load guard: a busy host inflates every wall time
-            # uniformly and masquerades as a regression (rounds 2 and 4
-            # both hit this). If the 1-min load average is above
-            # threshold before a query's runs, wait once for it to drain
-            # and record what happened. Threshold is calibrated above the
-            # bench's own steady-state contribution on local[32] (~4-6 in
-            # the round-3/4 quiet readings), and total waiting is capped
-            # so self-load can't stall the harness.
+            # uniformly and masquerades as a regression. If the 1-min
+            # load average is above threshold before a query's runs,
+            # wait once for it to drain and record what happened.
+            # Threshold is calibrated above the bench's own steady-state
+            # contribution on local[32] (~4-6 on quiet readings), and
+            # total waiting is capped so self-load can't stall the
+            # harness.
             load1 = os.getloadavg()[0]
             if load1 > MAX_LOAD and len(load_events) < MAX_LOAD_WAITS:
                 log(f"load wait before {name}: load1 {load1:.2f} > {MAX_LOAD}")
@@ -288,15 +257,14 @@ def main() -> None:
                 f"steal so far {window.steal_s()}s{f', error: {err}' if err else ''}")
         return timings, runs, window.steal_s(), layers
 
-    # Steal-robust measurement (round-8 lesson: BENCH_r08 carried
-    # steal_delta_s=25.4 s and every wall time inflated 7-25% — the
-    # gate artifact was whatever the noisy neighbor allowed). If the
-    # measured pass accrued more hypervisor steal than the threshold,
-    # re-run the whole loop (bounded) and keep the LOWEST-steal pass;
-    # all attempts are summarized in the JSON either way.
-    # Threshold dropped 5 -> 1.5 s in round 13: BENCH_r12's kept pass
-    # carried 2.46 s of steal (a ~65% subtotal overstatement vs the
-    # quiet cross-check) without tripping a retry.
+    # Steal-robust measurement: a pass that carries tens of seconds of
+    # steal inflates every wall time, and the artifact would be
+    # whatever the noisy neighbor allowed. If the measured pass accrued
+    # more hypervisor steal than the threshold, re-run the whole loop
+    # (bounded) and keep the LOWEST-steal pass; all attempts are
+    # summarized in the JSON either way. The threshold is low because
+    # a few seconds of steal already overstate the subtotal by more
+    # than half against a quiet cross-check.
     attempts: list[dict] = []
     passes = []
     for attempt in range(1, STEAL_ATTEMPTS + 1):
@@ -327,8 +295,8 @@ def main() -> None:
         # dedup_span_ngram r06+): THE cross-round comparison number.
         "subtotal_r01_comparable": subtotal,
         # ambient-load evidence: every measured run + the host
-        # 1/5/15-min load average, so a noisy round is diagnosable
-        # from the JSON alone (round-2 lesson).
+        # 1/5/15-min load average, so a noisy run is diagnosable
+        # from the JSON alone.
         "runs": all_runs,
         # ambient load BEFORE Spark started (post pre-start
         # drain): the number that says whether this round's
@@ -345,9 +313,8 @@ def main() -> None:
         # per-query executor task-time (ms) for the min-wall run:
         # task_time_ms / (wall * 1000) ≈ effective parallel cores, the
         # scaling signal wall time alone cannot carry at sf0.1 where
-        # every query is overhead-dominated (VERDICT r15 item 2 —
-        # suspect_cpus_ignored despite session.py honoring
-        # $SPARK_GRAFT_CPUS).
+        # every query is overhead-dominated (it also shows that
+        # session.py honors $SPARK_GRAFT_CPUS).
         "task_time_ms": {n: c["task_ms"] for n, c in layers.items() if c},
         # the same run's jobs, stages, tasks, task ms, shuffle and spill
         # bytes (None where Spark's bookkeeping could not be read)
@@ -365,11 +332,10 @@ def main() -> None:
             "waits": control_waits,
         },
     }
-    # Duplicate the contract line to a file BEFORE printing (VERDICT r15
-    # item 7 / what's-wrong 5: BENCH_r14's one-line JSON was truncated in
-    # the driver's capture, leaving PERF_r15 comparison-blind with
-    # prev_bench_ok=false). A truncated stdout tail can no longer lose
-    # the measurement: BENCH_LAST.json always holds the full payload.
+    # Duplicate the contract line to a file BEFORE printing: a capture
+    # that truncates the one-line JSON leaves any comparison blind. A
+    # truncated stdout tail can no longer lose the measurement:
+    # BENCH_LAST.json always holds the full payload.
     try:
         write_json(os.path.join(HERE, "BENCH_LAST.json"), result)
     except OSError as ex:

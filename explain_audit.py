@@ -153,7 +153,7 @@ def has_single_partition_window(plan: str) -> bool:
     """True iff a Window/WindowGroupLimit consumes an Exchange
     SinglePartition through pass-through nodes only — walking the tree
     section's ancestor chain, not the detail numbering (consecutive
-    detail ids do not guarantee a consumer relationship: ADVICE r05)."""
+    detail ids do not guarantee a consumer relationship)."""
     single = set()
     for m in re.finditer(r"^\((\d+)\) Exchange\b", plan, re.M):
         am = re.search(r"^Arguments: (.*)$", plan[m.end(): m.end() + 500], re.M)

@@ -1,11 +1,10 @@
 #!/usr/bin/env python
-"""Full-registry dual-SF GROWTH sweep (VERDICT r13 item 2 — a standing
-round ritual): times EVERY registry entry at sf0.001 AND sf0.1 (100×
-rows) in the SAME session and records the growth ratio. Growth is the
-one number that separates a fixed-stage cost (unrolled iterations,
+"""Full-registry dual-SF GROWTH sweep: times EVERY registry entry at
+sf0.001 AND sf0.1 (100× rows) in the SAME session and records the
+growth ratio. Growth is the one number that separates a fixed-stage cost (unrolled iterations,
 cached Pregel, MLlib fits — growth ~1× over 100× data) from a genuine
-scale-killer (the round-12 eval-panel quadratic grew linearly with the
-corpus; BFS's identical sweep time was noise) — the timing sweep alone
+scale-killer (a quadratic eval panel grows linearly with the corpus
+while a noisy fixed-cost entry does not) — the timing sweep alone
 cannot tell them apart.
 
 Methodology: both SFs are measured per entry back-to-back in one
@@ -56,7 +55,7 @@ def main() -> None:
         small_runs, err_s, small_layers = timed_noop(spark, fn, small_dir, SWEEP_RUNS)
         big_runs, err_b, big_layers = timed_noop(spark, fn, big_dir, SWEEP_RUNS)
         small_min, big_min = run_min(small_runs), run_min(big_runs)
-        # Record WHICH side failed (ADVICE r15): with a single combined
+        # Record WHICH side failed: with a single combined
         # message, a small-side error could mask or misattribute a
         # big-side failure when triaging the artifact.
         sides = "; ".join(
@@ -91,7 +90,7 @@ def main() -> None:
         **window.fields(),
         # name -> reason; every name must also appear in SCALING.md
         # (tests/test_growth_baseline.py enforces both directions).
-        # Prior adjudications are carried forward verbatim (ADVICE r14).
+        # Prior adjudications are carried forward verbatim.
         "growth_waivers": carried(out_path, "growth_waivers"),
         "n_entries": len(results),
         "total_big_min_s": round(
@@ -104,7 +103,7 @@ def main() -> None:
         "total_all_runs_s": executed_s(results),
         # Steal accrues only over THIS process's lifetime, so on a
         # resumed sweep the noise gate must scale off seconds executed
-        # THIS session, not the all-sessions total above (ADVICE r14).
+        # THIS session, not the all-sessions total above.
         "steal_basis_s": executed_s(session_names),
         "entries": results,
     })

@@ -42,6 +42,21 @@ def _as_double(col: str) -> Column:
     return F.col(col).cast("array<double>")
 
 
+def _driver_frame(spark, rows: list, schema: str) -> DataFrame:
+    """A small driver-held table (``rows`` of tuples, ``schema`` in DDL)
+    as a LocalRelation, built through Arrow. A list passed straight to
+    ``createDataFrame`` becomes a Python RDD instead, and every scan of
+    it starts Python workers, one per partition."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    table = pa.Table.from_pylist([dict(zip(arrow.names, r)) for r in rows], arrow)
+    return spark.createDataFrame(table, struct)
+
+
 def cosine_topk(embeddings: DataFrame, query_ids: list[int], k: int = 5) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector (excluding
     self). Deterministic: rank on (round(cos,6) desc, vec_id asc).
@@ -473,11 +488,12 @@ def _sq_dist(a: Column, b: Column) -> Column:
 
 
 def kmeans_lloyd(embeddings: DataFrame, k: int = 8, iters: int = 2) -> DataFrame:
-    """Deterministic k-means: ``iters`` unrolled Lloyd iterations over
-    the embedding column, entirely as Catalyst plans — the iterative-
-    algorithm pattern (fixed iteration count => a straight-line plan; an
-    unknown count would loop this body driver-side like
-    operators/components.connected_components).
+    """Deterministic k-means: ``iters`` Lloyd iterations over the
+    embedding column, run as PQ's one-subspace case of the shared fit
+    (_pq_fit with m = 1). Each iteration is one flat Spark pass; its
+    k × dim centroids are held on the driver and enter the next pass as
+    a broadcast codebook — the MLlib KMeans structure (centroids live
+    on the driver, data never does).
 
     Determinism conventions that make it hash-comparable cross-engine:
     init centroids are the k smallest vec_ids; distances and updated
@@ -485,75 +501,14 @@ def kmeans_lloyd(embeddings: DataFrame, k: int = 8, iters: int = 2) -> DataFrame
     than 1e-6) collapses to an exact tie in BOTH engines and breaks on
     the smaller cluster id; assignment is min(struct(dist, cluster)).
 
-    Scale shape per iteration: centroids are a k-row broadcast (the
-    sanctioned bounded nested-loop attach); assignment is one
-    struct-min groupBy; the centroid update is posexplode ->
-    (cluster, dim) mergeable avg -> sort_array collect. Nothing in the
-    plan depends on corpus size beyond linear passes; k and dims are
+    Scale shape per iteration: the k centroids are one broadcast
+    codebook row joined by hash on the subspace key; assignment is a
+    per-row array_min over the k (dist, cluster) structs, with no
+    shuffle; the centroid update is posexplode -> (cluster, dim)
+    mergeable avg, collected as k × dim values. Nothing in the plan
+    depends on corpus size beyond linear passes; k and dims are
     constants. Returns (vec_id, cluster) — the final assignment."""
-    vecs = embeddings.select(
-        "vec_id", _as_double("embedding").alias("v")
-    )
-    cents, assign = _kmeans_fit(vecs, k, iters)
-    return assign(cents).select("vec_id", "cluster")
-
-
-def _kmeans_fit(vecs: DataFrame, k: int, iters: int):
-    """Shared unrolled-Lloyd fit (see kmeans_lloyd for the determinism
-    conventions): returns the final centroid DataFrame (cluster, c) and
-    the assign(cents) function — so the deterministic IVF can reuse the
-    exact same quantizer its SQL oracle replays."""
-    cents = vecs.filter(F.col("vec_id") < k).select(
-        F.col("vec_id").cast("int").alias("cluster"), F.col("v").alias("c")
-    )
-
-    def assign(cents: DataFrame) -> DataFrame:
-        d = F.round(_sq_dist(F.col("v"), F.col("c")), 6)
-        return (
-            vecs.crossJoin(F.broadcast(cents))
-            .select("vec_id", "v", "cluster", d.alias("d"))
-            .groupBy("vec_id")
-            .agg(
-                F.min(F.struct("d", "cluster")).alias("m"),
-                F.first("v").alias("v"),  # identical within the group
-            )
-            .select(
-                "vec_id",
-                "v",
-                F.col("m.d").alias("d"),
-                F.col("m.cluster").alias("cluster"),
-            )
-        )
-
-    def materialize(c: DataFrame) -> DataFrame:
-        # k-row driver materialization between iterations — the
-        # MLlib-KMeans structure (centroids live on the driver, data
-        # never does). Without it every downstream reference re-plans
-        # the whole fit subtree and Catalyst+AQE re-optimization
-        # dominates wall time. Values are identical —
-        # the collect only pins the same deterministic rounded
-        # centroids — so the SQL oracle's full-fit replay still
-        # hash-matches.
-        rows = c.collect()
-        return c.sparkSession.createDataFrame(rows, c.schema)
-
-    for _ in range(iters):
-        assigned = assign(cents)
-        cents = (
-            assigned.select(
-                "cluster", F.posexplode("v").alias("pos", "val")
-            )
-            .groupBy("cluster", "pos")
-            .agg(F.round(F.avg("val"), 6).alias("cv"))
-            .groupBy("cluster")
-            .agg(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("pos", "cv"))),
-                    lambda s: s["cv"],
-                ).alias("c")
-            )
-        )
-    return materialize(cents), assign
+    return _pq_fit(embeddings, 1, k, iters)[2].select("vec_id", "cluster")
 
 
 def ivf_ann_topk_det(
@@ -566,7 +521,7 @@ def ivf_ann_topk_det(
 ) -> DataFrame:
     """Deterministic IVF approximate nearest neighbors: the same
     inverted-file structure as ivf_ann_topk, but the coarse quantizer is
-    the deterministic unrolled-Lloyd k-means (_kmeans_fit) instead of
+    the deterministic Lloyd k-means (_pq_fit with m = 1) instead of
     MLlib — so the ENTIRE path (centroid fit -> list assignment ->
     n_probe nearest-list pruning -> exact cosine re-rank) is replayable
     as plain SQL and hash-comparable cross-engine. The same move
@@ -579,9 +534,9 @@ def ivf_ann_topk_det(
     k-row broadcast, and per-query cost drops from |corpus| to roughly
     |corpus| * n_probe / n_centroids. Recall vs the exact baseline is
     asserted in tests like the MLlib variant's."""
-    vecs = embeddings.select("vec_id", _as_double("embedding").alias("v"))
-    cents, assign = _kmeans_fit(vecs, n_centroids, iters)
-    assigned = assign(cents)  # (vec_id, v, cluster) — the inverted lists
+    _, cents, assigned = _pq_fit(embeddings, 1, n_centroids, iters)
+    # (vec_id, v, cluster) — the inverted lists
+    assigned = assigned.select("vec_id", F.col("vs").alias("v"), "cluster")
 
     q = assigned.filter(F.col("vec_id").isin(query_ids)).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("q_v")
@@ -621,12 +576,25 @@ def ivf_ann_topk_det(
 
 
 def _pq_fit(embeddings: DataFrame, m: int, k: int, iters: int):
-    """Shared unified-pass PQ fit (see pq_codes for the conventions and
-    the one-keyed-pass plan shape): returns
-    (sub, cents, assign) where ``sub`` is the (vec_id, s, vs) subvector
-    frame, ``cents`` the final (s, cluster, c) codebooks, and
-    ``assign(cents)`` the (vec_id, s, vs, d, cluster) code assignment —
-    so ADC search replays the exact quantizer its SQL oracle does."""
+    """The one deterministic Lloyd fit, for PQ's m subspaces and for
+    k-means as its one-subspace case (m = 1: the slice is the whole
+    vector and s = 0). See kmeans_lloyd for the determinism conventions
+    and pq_codes for the one-keyed-pass plan shape. Returns
+    (sub, cents, assigned) where ``sub`` is the (vec_id, s, vs)
+    subvector frame, ``cents`` the final (s, cluster, c) codebooks and
+    ``assigned`` the final (vec_id, s, vs, d, cluster) code assignment
+    — so every caller replays the exact quantizer its SQL oracle does.
+
+    The m·k × dim centroids live on the driver, the MLlib KMeans
+    structure: the k smallest vec_ids' subvectors are collected once,
+    and each iteration is one flat Spark pass that reads them as a
+    broadcast codebook (one row per subspace, joined by hash on s),
+    takes each subvector's argmin within its row and collects the
+    (s, cluster, dim) rounded means the driver assembles into the next
+    centroids. No plan nests one iteration inside the next, and the
+    collected values are the same rounded ones, so the SQL oracle's
+    full-fit replay still hash-matches. vec_id is the key of
+    ``embeddings``: each row is assigned on its own."""
     w = (F.size(F.col("v")) / F.lit(m)).cast("int")
     sub = embeddings.select(
         "vec_id", _as_double("embedding").alias("v")
@@ -639,44 +607,55 @@ def _pq_fit(embeddings: DataFrame, m: int, k: int, iters: int):
             )
         ).alias("s", "vs"),
     )
+    spark = embeddings.sparkSession
     cents = sub.filter(F.col("vec_id") < k).select(
-        "s", F.col("vec_id").cast("int").alias("cluster"), F.col("vs").alias("c")
-    )
+        "s", F.col("vec_id").cast("int"), "vs"
+    ).collect()
 
-    def assign(cents: DataFrame) -> DataFrame:
-        d = F.round(_sq_dist(F.col("vs"), F.col("c")), 6)
+    def assign(cents) -> DataFrame:
+        books: dict[int, list] = {}
+        for s, cluster, c in cents:
+            books.setdefault(s, []).append((cluster, c))
+        book = _driver_frame(
+            spark,
+            list(books.items()),
+            "s int, book array<struct<cluster: int, c: array<double>>>",
+        )
+        # min(struct(d, cluster)): the smaller cluster id breaks a tie
+        nearest = F.array_min(
+            F.transform(
+                "book",
+                lambda b: F.struct(
+                    F.round(_sq_dist(F.col("vs"), b["c"]), 6).alias("d"),
+                    b["cluster"].alias("cluster"),
+                ),
+            )
+        )
         return (
-            sub.join(F.broadcast(cents), "s")
-            .select("vec_id", "s", "vs", "cluster", d.alias("d"))
-            .groupBy("vec_id", "s")
-            .agg(
-                F.min(F.struct("d", "cluster")).alias("m"),
-                F.first("vs").alias("vs"),  # identical within the group
-            )
-            .select(
-                "vec_id",
-                "s",
-                "vs",
-                F.col("m.d").alias("d"),
-                F.col("m.cluster").alias("cluster"),
-            )
+            sub.join(F.broadcast(book), "s")
+            .select("vec_id", "s", "vs", nearest.alias("m"))
+            .select("vec_id", "s", "vs", "m.d", "m.cluster")
         )
 
     for _ in range(iters):
-        cents = (
+        means: dict[tuple[int, int], list] = {}
+        for r in (
             assign(cents)
             .select("s", "cluster", F.posexplode("vs").alias("pos", "val"))
             .groupBy("s", "cluster", "pos")
             .agg(F.round(F.avg("val"), 6).alias("cv"))
-            .groupBy("s", "cluster")
-            .agg(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("pos", "cv"))),
-                    lambda st: st["cv"],
-                ).alias("c")
-            )
-        )
-    return sub, cents, assign
+            .collect()
+        ):
+            means.setdefault((r.s, r.cluster), []).append((r.pos, r.cv))
+        cents = [
+            (s, cluster, [cv for _, cv in sorted(pcs)])
+            for (s, cluster), pcs in sorted(means.items())
+        ]
+    return (
+        sub,
+        _driver_frame(spark, cents, "s int, cluster int, c array<double>"),
+        assign(cents),
+    )
 
 
 def pq_codes(
@@ -685,10 +664,11 @@ def pq_codes(
     """Product quantization (Jégou et al. 2011, "Product Quantization
     for Nearest Neighbor Search"): split each embedding into m
     contiguous subvectors, fit an independent k-centroid codebook per
-    subspace with the deterministic unrolled-Lloyd recipe
-    (_kmeans_fit's conventions: init = k smallest vec_ids, 6-dp
-    rounding, min-struct argmin), and emit each vector's code word per
-    subspace plus the total squared reconstruction error.
+    subspace with the deterministic Lloyd fit (_pq_fit, the one
+    k-means also runs: init = k smallest vec_ids, 6-dp rounding,
+    min-struct argmin, codebooks held on the driver between
+    iterations), and emit each vector's code word per subspace plus the
+    total squared reconstruction error.
 
     The compression step a 100 TB embedding store runs before ADC-style
     ANN: m log2(k) bits per vector instead of 4·dims bytes. Subspace
@@ -699,15 +679,13 @@ def pq_codes(
 
     Scale shape: ALL m subspaces run as ONE keyed pass — subspace index
     is a column, the (vec_id, subspace, subvector) rows join the
-    (subspace, cluster, centroid) table by HASH on the subspace key
-    (m·k rows broadcast — a keyed BroadcastHashJoin, not a nested
-    loop), and each Lloyd step is one (vec_id, s) struct-min groupBy
-    plus one (s, cluster, dim) mergeable-avg update. m separate
-    fit/assign chains joined on vec_id would do the same per-item work
-    but pay m× the shuffle machinery."""
-    sub, cents, assign = _pq_fit(embeddings, m, k, iters)
-    final = assign(cents)
-    return final.groupBy("vec_id").agg(
+    per-subspace codebook by HASH on the subspace key (m rows of k
+    centroids broadcast — a keyed BroadcastHashJoin, not a nested
+    loop), and each Lloyd step is one in-row struct-min argmin plus
+    one (s, cluster, dim) mergeable-avg update. m separate fit/assign
+    chains joined on vec_id would do the same per-item work but pay m×
+    the shuffle machinery."""
+    return _pq_fit(embeddings, m, k, iters)[2].groupBy("vec_id").agg(
         *[
             F.min(F.when(F.col("s") == s, F.col("cluster")))
             .cast("bigint")
@@ -746,11 +724,11 @@ def pq_adc_topk(
     broadcast-hash probe + one (query, candidate) decimal-sum aggregate
     (order-independent), then the standard total-ordered top-k window.
     Composable with IVF pruning (probe lists first, ADC inside lists).
-    Deterministic end to end: same unrolled-Lloyd quantizer as
+    Deterministic end to end: same Lloyd quantizer as
     pq_codes, 6-dp rounded table entries, decimal sums, ties broken on
     cand_id."""
-    sub, cents, assign = _pq_fit(embeddings, m, codebook_k, iters)
-    codes = assign(cents).select("vec_id", "s", "cluster")
+    sub, cents, assigned = _pq_fit(embeddings, m, codebook_k, iters)
+    codes = assigned.select("vec_id", "s", "cluster")
     q_tables = (
         sub.filter(F.col("vec_id").isin(query_ids))
         .select(F.col("vec_id").alias("query_id"), "s", "vs")
@@ -799,7 +777,7 @@ def pq_ivf_adc_topk(
     Jégou et al. 2011 §IV) — a coarse quantizer prunes to ``n_probe``
     inverted lists, then ADC ranks ONLY the listed candidates by
     summed distance-table lookups over their PQ codes. Both quantizers
-    are the deterministic unrolled-Lloyd fits (_kmeans_fit / _pq_fit),
+    are the deterministic Lloyd fit (_pq_fit with m = 1 and with m),
     so the entire composed index — coarse fit → list assignment →
     probe pruning → PQ fit → code assignment → ADC ranking — replays
     as SQL and is value-hash oracle-able.
@@ -812,8 +790,8 @@ def pq_ivf_adc_topk(
     at fit time. Distance tables and centroid sets broadcast; the only
     big shuffle is the (query, candidate) decimal-sum aggregate."""
     vecs = embeddings.select("vec_id", _as_double("embedding").alias("v"))
-    coarse_cents, coarse_assign = _kmeans_fit(vecs, n_centroids, coarse_iters)
-    lists = coarse_assign(coarse_cents).select("vec_id", "cluster")
+    _, coarse_cents, lists = _pq_fit(embeddings, 1, n_centroids, coarse_iters)
+    lists = lists.select("vec_id", "cluster")
 
     q = vecs.filter(F.col("vec_id").isin(query_ids)).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("q_v")
@@ -833,8 +811,8 @@ def pq_ivf_adc_topk(
         .select("query_id", "cluster")
     )
 
-    sub, cents, assign = _pq_fit(embeddings, m, codebook_k, pq_iters)
-    codes = assign(cents).select(
+    sub, cents, codes = _pq_fit(embeddings, m, codebook_k, pq_iters)
+    codes = codes.select(
         F.col("vec_id").alias("cand_id"), "s", F.col("cluster").alias("code")
     )
     q_tables = (
@@ -1030,22 +1008,24 @@ def retrieval_pipeline_topk(
     prunes to ~|corpus|·n_probe/n_centroids candidates without touching
     full vectors, full-precision vectors are loaded ONLY for the m
     finalists per query, and the diversity pass is per-query O(m²).
-    Every stage is the deterministic unrolled form, so the whole
-    pipeline replays as a single SQL oracle."""
+    Every stage is deterministic (fixed-iteration fits, fixed MMR
+    rounds), so the whole pipeline replays as a single SQL oracle."""
     cand = pq_ivf_adc_topk(embeddings, query_ids, k=m, **ivf_kwargs).select(
         "query_id", "cand_id"
     )
     # Driver-pin the index -> re-rank boundary: the candidate list is
     # |queries|·m rows BY CONSTRUCTION (corpus-size-independent — the
-    # same bounded class as _kmeans_fit's k-row centroid pin, and the
+    # same bounded class as _pq_fit's driver-held centroids, and the
     # natural serving handoff: a FAISS-style index returns exactly this
     # list). Without the pin, _mmr_core's pair self-join inlines the
     # ENTIRE composed IVF-PQ chain twice into every MMR pick's plan
     # and Catalyst planning dominates wall time (the same reason
-    # _kmeans_fit pins its centroids). Values are identical — the collect
-    # pins the deterministic ranked candidates the SQL oracle replays in
-    # full.
-    cand = cand.sparkSession.createDataFrame(cand.collect(), cand.schema)
+    # _pq_fit keeps its centroids on the driver). Values are identical —
+    # the collect pins the deterministic ranked candidates the SQL
+    # oracle replays in full.
+    cand = _driver_frame(
+        cand.sparkSession, cand.collect(), "query_id bigint, cand_id bigint"
+    )
     emb = embeddings.select(F.col("vec_id"), _as_double("embedding").alias("emb"))
     q = embeddings.filter(F.col("vec_id").isin(query_ids)).select(
         F.col("vec_id").alias("query_id"), _as_double("embedding").alias("q_emb")
@@ -1145,25 +1125,26 @@ def semantic_cluster_dedup(
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): cluster the embedding space with the
-    deterministic unrolled-Lloyd k-means, then inside each cluster mark
-    every vector that has a SMALLER-id neighbor with cosine >=
-    ``threshold`` as a duplicate — keep-min-id, never dropDuplicates.
+    deterministic Lloyd k-means (_pq_fit with m = 1), then inside each
+    cluster mark every vector that has a SMALLER-id neighbor with
+    cosine >= ``threshold`` as a duplicate — keep-min-id, never
+    dropDuplicates.
 
     Output: (vec_id, cluster, is_dup, n_close) — one row per vector, so
     the keep set is the is_dup = false slice and the dedup decision is
     auditable (n_close = how many kept-or-dropped earlier vectors it
     collided with).
 
-    100 TB shape: the quantizer is the k-row broadcast + straight-line
-    Lloyd plan of kmeans_lloyd; pair generation is an EQUI-join on the
-    cluster id (Σ|cluster|² work, never n²) — in production k scales
+    100 TB shape: the quantizer is kmeans_lloyd's driver loop, one flat
+    pass per iteration against a broadcast k-centroid codebook; pair
+    generation is an EQUI-join on the cluster id (Σ|cluster|² work,
+    never n²) — in production k scales
     with corpus size (the paper runs 50k clusters on LAION) so cluster
     populations stay bounded and the per-cluster quadratic term is a
     constant; the dup verdict is one mergeable count aggregate keyed on
     the larger vec_id. Fully hash-oracle-able because every stage is
     the deterministic k-means + rounded cosine recipe."""
-    vecs = embeddings.select("vec_id", _as_double("embedding").alias("v"))
-    cents, assign = _kmeans_fit(vecs, k, iters)
+    assigned = _pq_fit(embeddings, 1, k, iters)[2]
     # Per-vector norms are computed ONCE here and reused per pair: the
     # expression is the exact one cosine() evaluates, so the floats are
     # bitwise-identical to recomputing them pair-side (oracle parity
@@ -1180,15 +1161,19 @@ def semantic_cluster_dedup(
     # pair b-side, final row list). The explicit cluster repartition is
     # a shared Exchange boundary directly above it, so physical
     # planning (ReusedExchange / AQE stage reuse) executes the
-    # crossJoin+argmin assignment ONCE and the two extra references
+    # join+argmin assignment ONCE and the two extra references
     # read shuffle output. The exchange carries 2k compact rows here and
     # O(corpus) at scale — the same rows the pair join would shuffle anyway.
     n_part = int(
         embeddings.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
     assigned = (
-        assign(cents)
-        .select("vec_id", "v", "cluster", _norm(F.col("v")).alias("nrm"))
+        assigned.select(
+            "vec_id",
+            F.col("vs").alias("v"),
+            "cluster",
+            _norm(F.col("vs")).alias("nrm"),
+        )
         .repartition(n_part, "cluster")
     )
     S = 16

@@ -721,7 +721,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def ann_ivf_topk_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic IVF ANN (operators/similarity.ivf_ann_topk_det):
-    the unrolled-Lloyd quantizer replaces MLlib k-means, making the
+    the deterministic Lloyd quantizer replaces MLlib k-means, making the
     whole inverted-file search replayable as SQL — the ANN family's
     hash-green scale path (the dedup_minhash_banded move)."""
     return S.ivf_ann_topk_det(_emb(spark, sf_dir), QUERY_IDS, k=5)
@@ -1789,12 +1789,11 @@ def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def embedding_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic k-means (k=8, 2 unrolled Lloyd iterations) over the
-    embedding column as pure Catalyst plans
-    (operators/similarity.kmeans_lloyd) — the fixed-iteration iterative
-    algorithm expressed as a straight-line plan, oracle-checked against
-    the same unrolling as DuckDB CTEs. Returns the final (vec_id,
-    cluster) assignment."""
+    """Deterministic k-means (k=8, 2 Lloyd iterations) over the
+    embedding column (operators/similarity.kmeans_lloyd) — a driver
+    loop of one flat pass per iteration with the k centroids held on
+    the driver between passes, oracle-checked against the same iterations unrolled
+    as DuckDB CTEs. Returns the final (vec_id, cluster) assignment."""
     return S.kmeans_lloyd(_emb(spark, sf_dir), k=8, iters=2)
 
 
@@ -2308,7 +2307,7 @@ GROUP BY doc_id
 
 def embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product quantization: m=4 subspace codebooks (k=4 each) fit with
-    the deterministic unrolled-Lloyd recipe, per-vector code words +
+    the deterministic Lloyd fit k-means also runs, per-vector code words +
     total squared reconstruction error (operators/similarity.pq_codes).
     The compression step before ADC-style ANN at 100 TB: m·log2(k) bits
     per vector instead of 4·dims bytes."""
@@ -2381,7 +2380,7 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/similarity.pq_adc_topk): each query builds an
     m×k distance table against the codebooks; candidate distance = sum
     of m table lookups by stored code word — full corpus vectors never
-    touched at query time. Fully deterministic (unrolled-Lloyd
+    touched at query time. Fully deterministic (Lloyd
     quantizer, decimal sums, cand_id tie-break), so unlike the LSH ANN
     entries this approximate search is value-hash oracle-able."""
     return S.pq_adc_topk(
@@ -2419,19 +2418,19 @@ def ann_pq_ivf_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning to n_probe inverted lists composed with ADC code-table
     ranking inside the probed lists — the production ANN index
     (FAISS IVFADC), fully deterministic and value-hash oracle-able
-    because both quantizers are the unrolled-Lloyd fits."""
+    because both quantizers are the deterministic Lloyd fit."""
     return S.pq_ivf_adc_topk(
         _emb(spark, sf_dir), query_ids=list(range(_ADC_N_QUERIES)), k=_ADC_TOP_K
     )
 
 
 def ann_retrieval_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full serving stack composed as ONE declarative plan
+    """The full serving stack
     (operators/similarity.retrieval_pipeline_topk): IVF-PQ candidate
     generation -> exact-cosine re-scoring of the m finalists -> greedy
     MMR diversification — the ANN family's curation_pipeline. Every
-    stage is the deterministic unrolled form, so the composition
-    replays as a single SQL oracle."""
+    stage is deterministic, so the composition replays as a single SQL
+    oracle."""
     return S.retrieval_pipeline_topk(
         _emb(spark, sf_dir), query_ids=list(range(_ADC_N_QUERIES)), k=3, m=8
     )
@@ -5753,80 +5752,69 @@ _PCA_ITERS = 3
 
 
 def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top principal direction of the embedding table by UNROLLED power
-    iteration — the deterministic twin of PCA's first component (the
-    embedding_kmeans_lloyd move applied to spectra): three in-plan
-    iterations of v ← normalize(XᵀXv) starting from the fixed ramp
-    v₀ ∝ (dim+1), with EVERY cross-row reduction exact — embeddings
-    quantize to micro-units once, each iteration's row scalar Xv is an
-    exact BIGINT dot product, the dim reduction Xᵀ(Xv) accumulates in
-    DECIMAL(38,0)/HUGEINT, and the norm comes from exact sums of
-    1e13-scaled components (string-hop doubles throughout, so both
-    engines land bit-identical loadings WITHOUT any driver-side loop —
-    unlike SemDeDup's driver-pinned centroids, the whole spectrum pass
-    is one Catalyst plan and one SQL statement).
+    """Top principal direction of the embedding table by power iteration
+    — the deterministic twin of PCA's first component: three iterations
+    of w ← normalize(XᵀXw) starting from the fixed ramp w₀ ∝ (dim+1),
+    with EVERY cross-row reduction exact. Embeddings quantize to
+    micro-units once, each row scalar Xw is an exact BIGINT dot product,
+    and the dim reduction Xᵀ(Xw) accumulates in DECIMAL(38,0)/HUGEINT
+    with a string hop to double.
 
-    100 TB shape: per iteration, one broadcast join of the 64-row v
-    frame + two mergeable hash-aggs (per-vector, per-dim) — never a
-    d×d covariance materialization, never a global sort; the 1-row
-    norm attach is waived. The fixture's spectrum is nearly flat
-    (λ2/λ1 ≈ 0.93), so 3 iterations do NOT pin the exact eigenvector
-    — the spec test asserts what power iteration guarantees: a
-    STRICTLY MONOTONE Rayleigh quotient bounded by λ1 (0.81·λ1 after
-    3 steps here), plus exact numpy-replica equality of the quantized
+    A driver loop, the MLlib structure for a small iterate: each
+    iteration is ONE flat Spark pass computing t = Xᵀ(Xw) against w as
+    a 64-value array literal, and it collects only the 64 t values. The
+    driver then takes ts = floor(t/S), the norm from the exact integer
+    sum of ts² (int -> double, correctly rounded like the string hop)
+    and the rescaled floor(t/(√nsq·S)·U) in IEEE doubles — the same
+    operations the SQL oracle runs, so both engines land bit-identical
+    loadings. The final round(w/U, 6) runs in Spark (HALF_UP, as the
+    oracle's round does).
+
+    100 TB shape: per iteration, one narrow per-row dot product against
+    the literal and one mergeable per-dim hash-agg — never a d×d
+    covariance materialization, never a global sort, no join. The
+    fixture's spectrum is nearly flat (λ2/λ1 ≈ 0.93), so 3 iterations
+    do NOT pin the exact eigenvector — the spec test asserts what power
+    iteration guarantees: a STRICTLY MONOTONE Rayleigh quotient bounded
+    by λ1, plus exact numpy-replica equality of the quantized
     arithmetic."""
-    emb = _emb(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    x = _emb(spark, sf_dir).select(
+        F.transform(
+            F.col("embedding").cast("array<double>"),
+            lambda v: F.floor(v * _PCA_U).cast("long"),
+        ).alias("m")
     )
-    dims = emb.select(
-        "vec_id", F.posexplode("v").alias("dim", "val")
-    ).select(
-        "vec_id", "dim",
-        F.floor(F.col("val") * _PCA_U).cast("long").alias("m"),
-    )
-    v = spark.range(64).select(
-        F.col("id").cast("bigint").alias("dim"),
-        ((F.col("id") + 1) * _PCA_U).cast("long").alias("w"),
-    )
-    dec = "decimal(38,0)"
+    # posexplode numbers every vector's dims 0..len-1, so the t rows are
+    # the dense dims 0..D-1 and w is indexed by position; a dim a vector
+    # lacks contributes nothing, as in the oracle's join on dim
+    w = [(d + 1) * _PCA_U for d in range(64)]
     for _ in range(_PCA_ITERS):
-        s = (
-            dims.join(F.broadcast(v), "dim")
-            .groupBy("vec_id")
-            .agg(F.sum(F.col("m") * F.col("w")).cast("bigint").alias("srow"))
+        wl = F.array(*map(F.lit, w)).cast("array<bigint>")
+        srow = F.aggregate(
+            F.zip_with("m", wl, lambda m, wd: F.coalesce(m * wd, F.lit(0))),
+            F.lit(0).cast("long"),
+            lambda acc, p: acc + p,
         )
-        t = (
-            dims.join(s, "vec_id")
+        t = sorted(
+            x.select("m", srow.alias("srow"))
+            .select("srow", F.posexplode("m").alias("dim", "m"))
             .groupBy("dim")
             .agg(
                 _dec_to_double(
-                    F.sum(F.col("srow").cast(dec) * F.col("m"))
+                    F.sum(F.col("srow").cast("decimal(38,0)") * F.col("m"))
                 ).alias("t")
             )
+            .collect()
         )
-        tt = t.select(
-            "dim", "t",
-            F.floor(F.col("t") / F.lit(_PCA_SCALE)).cast("long").alias("ts"),
-        )
-        nsq = tt.agg(
-            _dec_to_double(F.sum(F.col("ts").cast(dec) * F.col("ts")))
-            .alias("nsq")
-        )
-        v = tt.crossJoin(F.broadcast(nsq)).select(
-            "dim",
-            F.when(
-                F.col("nsq") > 0,
-                F.floor(
-                    F.col("t")
-                    / (F.sqrt(F.col("nsq")) * F.lit(_PCA_SCALE))
-                    * F.lit(float(_PCA_U))
-                ),
-            ).otherwise(F.lit(0)).cast("long").alias("w"),
-        )
-    return v.select(
-        F.col("dim").cast("bigint").alias("dim"),
-        F.round(F.col("w") / F.lit(float(_PCA_U)), 6).alias("loading"),
-    )
+        nsq = float(sum(_math.floor(r.t / _PCA_SCALE) ** 2 for r in t))
+        w = [
+            _math.floor(r.t / (_math.sqrt(nsq) * _PCA_SCALE) * _PCA_U)
+            if nsq > 0 else 0
+            for r in t
+        ]
+    return S._driver_frame(
+        spark, list(enumerate(w)), "dim bigint, w bigint"
+    ).select("dim", F.round(F.col("w") / F.lit(float(_PCA_U)), 6).alias("loading"))
 
 
 def _pca_power_sql() -> str:
@@ -6901,8 +6889,8 @@ QUERIES: dict[str, QuerySpec] = {
                 f"panel (_eval_panel: first {_EVAL_PANEL_N} ids by "
                 "(md5(vec_id), vec_id), a TakeOrderedAndProject) — the "
                 "brute-force scoring stage is corpus × panel, LINEAR "
-                "(VERDICT r12 item 2 closed the mod-97 corpus²/97 "
-                "growth); swappable for the IVF/LSH candidate path")}),
+                "(a mod-97 id panel would grow as corpus²/97); "
+                "swappable for the IVF/LSH candidate path")}),
     "dedup_incremental_new_vs_base": QuerySpec(
         dedup_incremental_new_vs_base, DEDUP_INCREMENTAL_SQL, "dedup"),
     "eval_kendall_tau_rankers": QuerySpec(
@@ -6937,10 +6925,7 @@ QUERIES: dict[str, QuerySpec] = {
     "multimodal_png_chunk_index": QuerySpec(
         multimodal_png_chunk_index, MULTIMODAL_PNG_CHUNKS_SQL, "multimodal"),
     "embedding_pca_power": QuerySpec(
-        embedding_pca_power, _pca_power_sql(), "similarity",
-        plan_waivers={"bnlj": (
-            "1-row norm attach per unrolled power iteration (3 total) "
-            "— scale-independent scalars")}),
+        embedding_pca_power, _pca_power_sql(), "similarity"),
     "text_keyword_rake": QuerySpec(
         text_keyword_rake, _rake_sql(), "text"),
     "multimodal_gif_meta": QuerySpec(
@@ -7040,8 +7025,7 @@ QUERIES: dict[str, QuerySpec] = {
     "dedup_boundary_stitch": QuerySpec(
         dedup_boundary_stitch, DEDUP_BOUNDARY_STITCH_SQL, "dedup"),
     "dedup_semantic_clusters": QuerySpec(
-        dedup_semantic_clusters, _semantic_dedup_sql(), "dedup",
-        plan_waivers={"bnlj": "k-row centroid broadcast (Lloyd fit + assignment)"}),
+        dedup_semantic_clusters, _semantic_dedup_sql(), "dedup"),
     "dedup_embedding_cosine": QuerySpec(dedup_embedding_cosine, DEDUP_EMBEDDING_COSINE_SQL, "dedup"),
     "dedup_embedding_cosine_lsh": QuerySpec(
         dedup_embedding_cosine_lsh, None, "dedup",
@@ -7062,7 +7046,7 @@ QUERIES: dict[str, QuerySpec] = {
                               plan_waivers={"bnlj": "query x n_centroids scoring"}),
     "ann_ivf_topk_det": QuerySpec(
         ann_ivf_topk_det, _ivf_det_sql(), "similarity",
-        plan_waivers={"bnlj": "k-row centroid broadcast (quantizer fit + probe scoring)"}),
+        plan_waivers={"bnlj": "k-row centroid broadcast (probe scoring)"}),
     "ann_mmr_rerank": QuerySpec(
         ann_mmr_rerank, _mmr_sql(), "similarity",
         plan_waivers={"bnlj": (
@@ -7076,10 +7060,10 @@ QUERIES: dict[str, QuerySpec] = {
     "ann_retrieval_pipeline": QuerySpec(
         ann_retrieval_pipeline, _retrieval_pipeline_sql(), "similarity",
         plan_waivers={"bnlj": (
-            "k-row coarse-centroid/codebook broadcasts of the IVF-PQ "
-            "candidate stage (quantizer fit + probe scoring), run in the "
-            "build executions that pin it at the index -> re-rank "
-            "boundary: k = 8 rows whatever the corpus size")}),
+            "k-row coarse-centroid broadcast of the IVF-PQ candidate "
+            "stage's probe scoring, run in the build execution that "
+            "pins it at the index -> re-rank boundary: k = 8 rows "
+            "whatever the corpus size")}),
     "eval_langid_confusion": QuerySpec(
         eval_langid_confusion, EVAL_LANGID_SQL, "text"),
     "eval_score_calibration": QuerySpec(
@@ -7178,8 +7162,7 @@ QUERIES: dict[str, QuerySpec] = {
     "text_winnow_sketch": QuerySpec(text_winnow_sketch, TEXT_WINNOW_SQL, "text"),
     "embedding_centroids": QuerySpec(embedding_centroids, EMBEDDING_CENTROIDS_SQL, "similarity"),
     "embedding_kmeans_lloyd": QuerySpec(
-        embedding_kmeans_lloyd, _kmeans_sql(), "similarity",
-        plan_waivers={"bnlj": "k-row centroid broadcast per iteration"}),
+        embedding_kmeans_lloyd, _kmeans_sql(), "similarity"),
     "embedding_pq_codes": QuerySpec(
         embedding_pq_codes, _pq_sql(), "similarity"),
     "ann_pq_adc_topk": QuerySpec(
@@ -7187,7 +7170,7 @@ QUERIES: dict[str, QuerySpec] = {
     "ann_pq_ivf_adc_topk": QuerySpec(
         ann_pq_ivf_adc_topk, _pq_ivf_adc_sql(), "similarity",
         plan_waivers={"bnlj": "k-row coarse-centroid broadcast "
-                              "(quantizer fit + probe scoring)"}),
+                              "(probe scoring)"}),
     "embedding_quantize_int8": QuerySpec(
         embedding_quantize_int8, EMBEDDING_QUANTIZE_SQL, "similarity"),
     "profile_documents": QuerySpec(profile_documents, PROFILE_DOCUMENTS_SQL, "text"),

@@ -477,7 +477,7 @@ def streaming_ivf_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental ANN index maintenance over a streaming embedding
     ingest: vectors replayed as FOUR micro-batches through a
     foreachBatch MERGE that assigns each to its nearest centroid under a
-    STATIC deterministic quantizer (unrolled-Lloyd k=8, iters=2 — refit
+    STATIC deterministic quantizer (Lloyd k-means k=8, iters=2 — refit
     offline, never per batch) and sums per-inverted-list stats into
     state (streaming/sinks.IvfListMergeSink). Assignments depend only on
     (vector, static centroids) and every stat is associative (count /

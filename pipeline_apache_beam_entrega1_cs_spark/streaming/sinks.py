@@ -554,7 +554,7 @@ class IvfListMergeSink(MergeSink):
     """``foreachBatch`` MERGE for incremental ANN index maintenance: new
     embedding vectors arrive batch by batch and are assigned to the
     inverted list of their nearest centroid under a STATIC coarse
-    quantizer (the deterministic unrolled-Lloyd fit over the initial
+    quantizer (the deterministic Lloyd fit over the initial
     corpus — in production the quantizer is refit offline, not per
     batch, exactly this shape). Per-list stats (vector count, min
     vec_id, decimal sum of assignment distances) are summed into a
@@ -571,7 +571,7 @@ class IvfListMergeSink(MergeSink):
 
     def __init__(self, state_dir: str, centroids) -> None:
         super().__init__(state_dir)
-        self.cents = centroids  # (cluster INT, c ARRAY<DOUBLE>), k rows
+        self.cents = centroids  # (s, cluster INT, c ARRAY<DOUBLE>), k rows
 
     def merge(self, batch_df, prev):
         from ..operators.similarity import _sq_dist
@@ -610,21 +610,15 @@ def run_ivf_state_stream(spark, sf_dir: str):
     """Incremental IVF list maintenance end-to-end: the embeddings table
     replayed as FOUR micro-batches (vec_id % 4 slices) through an
     IvfListMergeSink whose coarse quantizer is fit ONCE on the static
-    table (deterministic unrolled-Lloyd, k=8, 2 iterations) and
-    materialized to a k-row literal; returns the final per-list stats
-    with the decimal distance sum converted via the string-cast
-    convention."""
+    table (deterministic Lloyd k-means, k=8, 2 iterations), whose
+    centroids come back as a k-row frame of driver-held values, so no
+    batch refits them; returns the final per-list stats with the decimal distance
+    sum converted via the string-cast convention."""
     from ..functions.numeric import _dec_to_double
-    from ..operators.similarity import _kmeans_fit
+    from ..operators.similarity import _pq_fit
 
     raw = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    vecs = raw.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    cents_df, _ = _kmeans_fit(vecs, k=8, iters=2)
-    # k rows: materialize once so the per-batch broadcast doesn't
-    # refit the quantizer (and the fit plan dies with the stream)
-    cents = spark.createDataFrame(cents_df.collect(), cents_df.schema)
+    _, cents, _ = _pq_fit(raw, 1, 8, 2)
     return replay(
         raw, F.col("vec_id") % 4, lambda st: IvfListMergeSink(st, cents),
         lambda st: st.select(

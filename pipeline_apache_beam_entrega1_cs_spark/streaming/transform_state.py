@@ -19,6 +19,12 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
+from pyspark.sql import DataFrame
+from pyspark.sql.streaming.stateful_processor import (
+    StatefulProcessor,
+    StatefulProcessorHandle,
+)
+
 
 def transform_with_state_available() -> bool:
     try:
@@ -27,11 +33,7 @@ def transform_with_state_available() -> bool:
         return True
     except ImportError:
         return False
-from pyspark.sql import DataFrame
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
+
 
 OUTPUT_SCHEMA = "user_id LONG, new_max DOUBLE, prev_max DOUBLE, n_records LONG"
 

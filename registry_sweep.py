@@ -1,12 +1,11 @@
 #!/usr/bin/env python
-"""Full-registry timing sweep (VERDICT r11 item 3 — a standing round
-ritual): times EVERY registry entry at $SPARK_GRAFT_SF_DIR (default
-sf0.1) with the same noop-sink shape bench.py uses, and writes one JSON
-file (default SWEEP_sf<sf>.json) mapping name -> {"runs": [...],
+"""Full-registry timing sweep: times EVERY registry entry at
+$SPARK_GRAFT_SF_DIR (default sf0.1) with the same noop-sink shape
+bench.py uses, and writes one JSON file (default SWEEP_sf<sf>.json) mapping name -> {"runs": [...],
 "min": s, "layers": the fastest run's Spark counts, see
 ``measure.timed_noop``}. The headline bench structurally cannot see
-regressions in the ~360 non-headline entries — the round-11 sweep
-caught 93 s / 25 s / 13 s defects this way. Resumable (see ``measure.resume``). Usage:
+regressions in the ~360 non-headline entries; this sweep does.
+Resumable (see ``measure.resume``). Usage:
 
     python registry_sweep.py [out.json]
 """
@@ -32,7 +31,7 @@ def main() -> None:
     from pipeline_apache_beam_entrega1_cs_spark.session import get_spark
 
     # Machine-noise telemetry: tests/test_sweep_baseline.py's regression
-    # diff (VERDICT r12 item 5) skips itself when a sweep self-reports a
+    # diff skips itself when a sweep self-reports a
     # dirty window, the same guard bench.py applies.
     window = Window()
     spark = get_spark("sweep")

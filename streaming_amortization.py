@@ -1,9 +1,9 @@
 #!/usr/bin/env python
-"""Streaming-twin amortization measurement (VERDICT r15 item 6).
+"""Streaming-twin amortization measurement.
 
-The streaming class's ~0.8 s/batch floor was adjudicated experimentally
-in round 14 (32→1 state-file A/B) but never DEMONSTRATED amortizing.
-This harness replays streaming_tfidf_state's corpus through its real
+The streaming class's ~0.8 s/batch floor was adjudicated by a
+state-file A/B (32 files against 1), which does not show it
+amortizing. This harness replays streaming_tfidf_state's corpus through its real
 foreachBatch MERGE sink at 1, 4 (the declared entry's slicing) and 8
 micro-batches and records wall seconds and sec/batch for each: the
 associative merge makes the final state identical for any slicing, so

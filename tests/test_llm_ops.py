@@ -382,7 +382,7 @@ def test_pq_ivf_adc_consistency(spark, sf_dir):
 
     from pipeline_apache_beam_entrega1_cs_spark.operators.similarity import (
         _as_double,
-        _kmeans_fit,
+        _pq_fit,
         _sq_dist,
         pq_adc_topk,
         pq_ivf_adc_topk,
@@ -396,8 +396,8 @@ def test_pq_ivf_adc_consistency(spark, sf_dir):
 
     # (1) recompute lists + probes with the same deterministic fit
     vecs = emb.select("vec_id", _as_double("embedding").alias("v"))
-    cents, assign = _kmeans_fit(vecs, k=8, iters=2)
-    lists = {r["vec_id"]: r["cluster"] for r in assign(cents).collect()}
+    _, cents, assigned = _pq_fit(emb, m=1, k=8, iters=2)
+    lists = {r["vec_id"]: r["cluster"] for r in assigned.collect()}
     qv = {r["vec_id"]: r["v"] for r in vecs.filter(F.col("vec_id").isin(qids)).collect()}
     cts = {r["cluster"]: r["c"] for r in cents.collect()}
 

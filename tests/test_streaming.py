@@ -378,7 +378,7 @@ def test_streaming_ivf_state_replay(spark, sf_dir, tmp_path):
 
     from pipeline_apache_beam_entrega1_cs_spark.functions.numeric import _dec_to_double
     from pipeline_apache_beam_entrega1_cs_spark.operators.similarity import (
-        _kmeans_fit,
+        _pq_fit,
         _sq_dist,
     )
     from pipeline_apache_beam_entrega1_cs_spark.plans.windows_batch import (
@@ -389,8 +389,7 @@ def test_streaming_ivf_state_replay(spark, sf_dir, tmp_path):
 
     raw = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     vecs = raw.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    cents_df, _ = _kmeans_fit(vecs, k=8, iters=2)
-    cents = spark.createDataFrame(cents_df.collect(), cents_df.schema)
+    _, cents, _ = _pq_fit(raw, m=1, k=8, iters=2)
 
     d = F.round(_sq_dist(F.col("v"), F.col("c")), 6)
     batch_expected = rows_multiset(
