@@ -244,7 +244,12 @@ def main() -> None:
     print("counts its final plan only.")
     print("Python nodes are the Python/Arrow exec operators")
     print("(`perfbench.layers.python_nodes`) of the final plan and the build")
-    print("executions together.")
+    print("executions together, and nothing else: a scan of a Python RDD")
+    print("(a `createDataFrame` over a Python list) prints as")
+    print("`Scan ExistingRDD` and counts 0 here. The package builds no such")
+    print("frame (small driver tables are Arrow LocalRelations from")
+    print("`schemas.driver_frame`, which a tier-1 source guard enforces), so a")
+    print("`Scan ExistingRDD` in an audited plan is a `localCheckpoint` pin.")
     print()
     print(f"Entries: {len(registry)} (full registry).")
     print()

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..schemas import driver_frame
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -40,21 +42,6 @@ def cosine(a: Column, b: Column) -> Column:
 
 def _as_double(col: str) -> Column:
     return F.col(col).cast("array<double>")
-
-
-def _driver_frame(spark, rows: list, schema: str) -> DataFrame:
-    """A small driver-held table (``rows`` of tuples, ``schema`` in DDL)
-    as a LocalRelation, built through Arrow. A list passed straight to
-    ``createDataFrame`` becomes a Python RDD instead, and every scan of
-    it starts Python workers, one per partition."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
-
-    struct = StructType.fromDDL(schema)
-    arrow = to_arrow_schema(struct)
-    table = pa.Table.from_pylist([dict(zip(arrow.names, r)) for r in rows], arrow)
-    return spark.createDataFrame(table, struct)
 
 
 def cosine_topk(embeddings: DataFrame, query_ids: list[int], k: int = 5) -> DataFrame:
@@ -180,8 +167,8 @@ def ivf_ann_topk(
     )
 
     # centroid table: tiny (n_centroids x dim) -> literal broadcast side
-    spark = embeddings.sparkSession
-    centroids = spark.createDataFrame(
+    centroids = driver_frame(
+        embeddings.sparkSession,
         [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
         "cluster INT, centroid ARRAY<DOUBLE>",
     )
@@ -502,10 +489,10 @@ def kmeans_lloyd(embeddings: DataFrame, k: int = 8, iters: int = 2) -> DataFrame
     the smaller cluster id; assignment is min(struct(dist, cluster)).
 
     Scale shape per iteration: the k centroids are one broadcast
-    codebook row joined by hash on the subspace key; assignment is a
-    per-row array_min over the k (dist, cluster) structs, with no
-    shuffle; the centroid update is posexplode -> (cluster, dim)
-    mergeable avg, collected as k × dim values. Nothing in the plan
+    codebook row joined by hash on the subspace key; assignment
+    (assign_nearest) is a per-row array_min over the k (dist, cluster)
+    structs, with no shuffle; the centroid update is posexplode ->
+    (cluster, dim) mergeable avg, collected as k × dim values. Nothing in the plan
     depends on corpus size beyond linear passes; k and dims are
     constants. Returns (vec_id, cluster) — the final assignment."""
     return _pq_fit(embeddings, 1, k, iters)[2].select("vec_id", "cluster")
@@ -575,6 +562,41 @@ def ivf_ann_topk_det(
     )
 
 
+def assign_nearest(sub: DataFrame, cents: list) -> DataFrame:
+    """The one nearest-centroid assignment: each (vec_id, s, vs)
+    subvector row of ``sub`` gets the cluster of its nearest centroid in
+    its subspace, as (vec_id, s, vs, d, cluster) with d the squared
+    distance rounded to 6 dp. ``cents`` are driver-held (s, cluster, c)
+    rows. They travel as a broadcast codebook of one row per subspace,
+    joined on s (by hash; when s is a literal, as in the streaming IVF
+    sink, Catalyst folds the key and joins the one row by nested loop),
+    and the argmin is taken within each row, so the assignment shuffles
+    nothing. Ties go to the smaller cluster id:
+    the argmin is the min of (d, cluster) structs."""
+    books: dict[int, list] = {}
+    for s, cluster, c in cents:
+        books.setdefault(s, []).append((cluster, c))
+    book = driver_frame(
+        sub.sparkSession,
+        list(books.items()),
+        "s int, book array<struct<cluster: int, c: array<double>>>",
+    )
+    nearest = F.array_min(
+        F.transform(
+            "book",
+            lambda b: F.struct(
+                F.round(_sq_dist(F.col("vs"), b["c"]), 6).alias("d"),
+                b["cluster"].alias("cluster"),
+            ),
+        )
+    )
+    return (
+        sub.join(F.broadcast(book), "s")
+        .select("vec_id", "s", "vs", nearest.alias("m"))
+        .select("vec_id", "s", "vs", "m.d", "m.cluster")
+    )
+
+
 def _pq_fit(embeddings: DataFrame, m: int, k: int, iters: int):
     """The one deterministic Lloyd fit, for PQ's m subspaces and for
     k-means as its one-subspace case (m = 1: the slice is the whole
@@ -587,14 +609,14 @@ def _pq_fit(embeddings: DataFrame, m: int, k: int, iters: int):
 
     The m·k × dim centroids live on the driver, the MLlib KMeans
     structure: the k smallest vec_ids' subvectors are collected once,
-    and each iteration is one flat Spark pass that reads them as a
-    broadcast codebook (one row per subspace, joined by hash on s),
-    takes each subvector's argmin within its row and collects the
-    (s, cluster, dim) rounded means the driver assembles into the next
-    centroids. No plan nests one iteration inside the next, and the
-    collected values are the same rounded ones, so the SQL oracle's
-    full-fit replay still hash-matches. vec_id is the key of
-    ``embeddings``: each row is assigned on its own."""
+    and each iteration is one flat Spark pass that assigns every
+    subvector with assign_nearest (the streaming IVF sink's assignment
+    too) and collects the (s, cluster, dim) rounded means the driver
+    assembles into the next centroids. No plan nests one iteration
+    inside the next, and the collected values are the same rounded
+    ones, so the SQL oracle's full-fit replay still hash-matches.
+    vec_id is the key of ``embeddings``: each row is assigned on its
+    own."""
     w = (F.size(F.col("v")) / F.lit(m)).cast("int")
     sub = embeddings.select(
         "vec_id", _as_double("embedding").alias("v")
@@ -607,40 +629,14 @@ def _pq_fit(embeddings: DataFrame, m: int, k: int, iters: int):
             )
         ).alias("s", "vs"),
     )
-    spark = embeddings.sparkSession
     cents = sub.filter(F.col("vec_id") < k).select(
         "s", F.col("vec_id").cast("int"), "vs"
     ).collect()
 
-    def assign(cents) -> DataFrame:
-        books: dict[int, list] = {}
-        for s, cluster, c in cents:
-            books.setdefault(s, []).append((cluster, c))
-        book = _driver_frame(
-            spark,
-            list(books.items()),
-            "s int, book array<struct<cluster: int, c: array<double>>>",
-        )
-        # min(struct(d, cluster)): the smaller cluster id breaks a tie
-        nearest = F.array_min(
-            F.transform(
-                "book",
-                lambda b: F.struct(
-                    F.round(_sq_dist(F.col("vs"), b["c"]), 6).alias("d"),
-                    b["cluster"].alias("cluster"),
-                ),
-            )
-        )
-        return (
-            sub.join(F.broadcast(book), "s")
-            .select("vec_id", "s", "vs", nearest.alias("m"))
-            .select("vec_id", "s", "vs", "m.d", "m.cluster")
-        )
-
     for _ in range(iters):
         means: dict[tuple[int, int], list] = {}
         for r in (
-            assign(cents)
+            assign_nearest(sub, cents)
             .select("s", "cluster", F.posexplode("vs").alias("pos", "val"))
             .groupBy("s", "cluster", "pos")
             .agg(F.round(F.avg("val"), 6).alias("cv"))
@@ -653,8 +649,8 @@ def _pq_fit(embeddings: DataFrame, m: int, k: int, iters: int):
         ]
     return (
         sub,
-        _driver_frame(spark, cents, "s int, cluster int, c array<double>"),
-        assign(cents),
+        driver_frame(sub.sparkSession, cents, "s int, cluster int, c array<double>"),
+        assign_nearest(sub, cents),
     )
 
 
@@ -1023,7 +1019,7 @@ def retrieval_pipeline_topk(
     # _pq_fit keeps its centroids on the driver). Values are identical —
     # the collect pins the deterministic ranked candidates the SQL
     # oracle replays in full.
-    cand = _driver_frame(
+    cand = driver_frame(
         cand.sparkSession, cand.collect(), "query_id bigint, cand_id bigint"
     )
     emb = embeddings.select(F.col("vec_id"), _as_double("embedding").alias("emb"))

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..schemas import driver_frame
+
 # Tiny per-language marker vocabularies for the n-gram/stopword-voting
 # language heuristic. Deterministic and mirrored literally in the DuckDB
 # oracle — the point is the Spark plumbing (explode -> join -> argmax),
@@ -69,13 +71,14 @@ def token_stats(docs: DataFrame) -> DataFrame:
 
 def lang_id(docs: DataFrame) -> DataFrame:
     """Stopword-voting language ID: explode tokens, join the marker
-    vocabulary (broadcast — it is tiny by construction), argmax votes per
-    document with a deterministic (votes desc, lang asc) tie-break;
-    documents with zero marker hits predict 'und'."""
-    spark = docs.sparkSession
-    markers = spark.createDataFrame(
+    vocabulary (a driver-held LocalRelation, broadcast — it is tiny by
+    construction), argmax votes per document with a deterministic
+    (votes desc, lang asc) tie-break; documents with zero marker hits
+    predict 'und'."""
+    markers = driver_frame(
+        docs.sparkSession,
         [(lang, w) for lang, ws in LANG_MARKERS.items() for w in ws],
-        ["cand_lang", "marker"],
+        "cand_lang string, marker string",
     )
     tok = explode_tokens(docs)
     votes = (

@@ -21,7 +21,7 @@ from ..operators import multimodal as M
 from ..operators import similarity as S
 from ..operators import textops as T
 from ..operators.textops import LANG_MARKERS
-from ..schemas import load_table
+from ..schemas import driver_frame, load_table
 from .spec import QuerySpec
 
 _TOKS = r"regexp_split_to_array(lower(trim(text)), '\s+')"
@@ -4912,9 +4912,8 @@ def eval_dedup_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.coalesce("is_tp", F.lit(0))).cast("bigint").alias("tp"),
         )
     )
-    methods = spark.createDataFrame(
-        [("exact",), ("ngram_jaccard",), ("minhash_banded",)],
-        "method string",
+    methods = driver_frame(
+        spark, [("exact",), ("ngram_jaccard",), ("minhash_banded",)], "method string"
     )
     n_truth = truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_truth"))
     out = (
@@ -5812,7 +5811,7 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
             if nsq > 0 else 0
             for r in t
         ]
-    return S._driver_frame(
+    return driver_frame(
         spark, list(enumerate(w)), "dim bigint, w bigint"
     ).select("dim", F.round(F.col("w") / F.lit(float(_PCA_U)), 6).alias("loading"))
 

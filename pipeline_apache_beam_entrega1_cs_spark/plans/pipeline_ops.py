@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_u32
 from ..functions.numeric import dsum, sql_dsum
-from ..schemas import load_table
+from ..schemas import driver_frame, load_table
 from .analytics import DQ_ERROR_BURST_SQL, DQ_OUT_OF_ORDER_SQL
 from .llm_data import _coverage_sql
 from .relational2 import AGG_COUNTMIN_SQL
@@ -1145,7 +1145,8 @@ def pipeline_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     observed.write.format("noop").mode("overwrite").save()
     m = obs.get
-    return spark.createDataFrame(
+    return driver_frame(
+        spark,
         [
             (
                 int(m["n_rows"]),

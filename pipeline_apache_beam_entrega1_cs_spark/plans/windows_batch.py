@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from ..functions.numeric import dsum, sql_dsum
 from ..operators.sessionize import session_window_agg
-from ..schemas import load_table
+from ..schemas import driver_frame, load_table
 from .analytics import TIMESERIES_CUSUM_SQL as _CUSUM_ORACLE_SQL
 from .spec import QuerySpec
 
@@ -334,7 +334,7 @@ def streaming_file_source_incremental(spark: SparkSession, sf_dir: str) -> DataF
             F.min("o_orderkey").alias("min_key"),
             F.max("o_orderkey").alias("max_key"),
         )
-        return spark.createDataFrame(res.collect(), res.schema)
+        return driver_frame(spark, res.collect(), res.schema)
     finally:
         shutil.rmtree(out, ignore_errors=True)
 

@@ -1,4 +1,5 @@
-"""Explicit schemas (SURVEY.md §1.2) and testdata table loaders.
+"""Explicit schemas (SURVEY.md §1.2), testdata table loaders and the
+one builder of small driver-held tables (:func:`driver_frame`).
 
 The reference is schemaless (Python dicts end-to-end); here every reader
 gets an explicit ``StructType`` so Catalyst can prune/pushdown and no
@@ -140,6 +141,23 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_session_confs(spark)
     path = f"{sf_dir}/{name}.parquet"
     return normalize_nanos_ts(spark.read.schema(footer_schema(path)).parquet(path))
+
+
+def driver_frame(
+    spark: SparkSession, rows: list, schema: str | T.StructType
+) -> DataFrame:
+    """A small driver-held table (``rows`` of tuples, ``schema`` in DDL
+    or as a ``StructType``) as a LocalRelation, built through Arrow. The
+    package's one ``createDataFrame`` call: a list passed straight to
+    ``createDataFrame`` becomes a Python RDD instead, and every scan of
+    it starts Python workers, one per partition."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = T.StructType.fromDDL(schema) if isinstance(schema, str) else schema
+    arrow = to_arrow_schema(struct)
+    table = pa.Table.from_pylist([dict(zip(arrow.names, r)) for r in rows], arrow)
+    return spark.createDataFrame(table, struct)
 
 
 def normalize_nanos_ts(df: DataFrame, col: str = "ts") -> DataFrame:

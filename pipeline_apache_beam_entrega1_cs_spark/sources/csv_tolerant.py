@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..functions.strings import COUNTRY_ALIAS
-from ..schemas import LOCATION_SCHEMA
+from ..schemas import LOCATION_SCHEMA, driver_frame
 
 # Logical field -> accepted header spellings (reference src/pipeline.py:67-80),
 # in LocationData field order (schemas.LOCATION_FIELDS).
@@ -101,6 +101,5 @@ def read_country_dim(spark: SparkSession, csv_path: str) -> DataFrame:
     """The country LUT as a 6-column DataFrame: ``key`` (normalized
     country) + the 5 payload fields of LocationData."""
     schema = T.StructType([T.StructField("key", T.StringType()), *LOCATION_SCHEMA.fields])
-    return spark.createDataFrame(
-        [(key, *payload) for key, payload in read_country_lut(csv_path).items()], schema
-    )
+    rows = [(key, *payload) for key, payload in read_country_lut(csv_path).items()]
+    return driver_frame(spark, rows, schema)

@@ -565,31 +565,23 @@ class IvfListMergeSink(MergeSink):
     DECIMAL sum — decimal so merge order can't perturb float addition),
     so a cold replay over any batch slicing equals the one-shot batch
     assignment — what the SQL oracle computes by replaying the same
-    unrolled-Lloyd fit as CTEs. At 100 TB each batch broadcasts the
-    k-row centroid table and shuffles |centroids| partial rows — never
-    embeddings."""
+    unrolled-Lloyd fit as CTEs. Each batch is assigned by the fit's own
+    ``assign_nearest`` (one subspace, s = 0), so the incremental plan is
+    the batch plan over the new rows. At 100 TB each batch broadcasts
+    the k-row centroid codebook and shuffles |centroids| partial rows —
+    never embeddings."""
 
     def __init__(self, state_dir: str, centroids) -> None:
         super().__init__(state_dir)
-        self.cents = centroids  # (s, cluster INT, c ARRAY<DOUBLE>), k rows
+        # (s, cluster INT, c ARRAY<DOUBLE>), k driver-held rows
+        self.cents = centroids.collect()
 
     def merge(self, batch_df, prev):
-        from ..operators.similarity import _sq_dist
+        from ..operators.similarity import assign_nearest
 
-        vecs = batch_df.select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        )
-        d = F.round(_sq_dist(F.col("v"), F.col("c")), 6)
-        assigned = (
-            vecs.crossJoin(F.broadcast(self.cents))
-            .select("vec_id", "cluster", d.alias("d"))
-            .groupBy("vec_id")
-            .agg(F.min(F.struct("d", "cluster")).alias("m"))
-            .select(
-                "vec_id",
-                F.col("m.cluster").alias("cluster"),
-                F.col("m.d").alias("d"),
-            )
+        vs = F.col("embedding").cast("array<double>").alias("vs")
+        assigned = assign_nearest(
+            batch_df.select("vec_id", F.lit(0).alias("s"), vs), self.cents
         )
         inc = assigned.groupBy("cluster").agg(
             F.count(F.lit(1)).cast("long").alias("n_vecs"),

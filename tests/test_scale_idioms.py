@@ -1257,3 +1257,35 @@ def test_no_inferred_table_reads():
     assert inferred == [], "parquet reads without a schema:\n" + "\n".join(
         f"{p}:{n}" for p, n in sorted(inferred)
     )
+
+
+def test_small_tables_built_only_by_driver_frame():
+    """The package builds every small driver-held table through
+    ``schemas.driver_frame``, an Arrow LocalRelation: a ``.createDataFrame(``
+    call anywhere else (a Python list becomes a Python RDD, whose every
+    scan starts Python workers) fails, named by file:line. A plan-level
+    ``Scan ExistingRDD`` check could not tell these apart from
+    ``localCheckpoint`` pins, which plan the same way."""
+    root = Path(__file__).resolve().parents[1]
+    package = root / "pipeline_apache_beam_entrega1_cs_spark"
+    stray = []
+    for path in sorted(package.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        helper = [
+            range(n.lineno, n.end_lineno + 1)
+            for n in tree.body
+            if path.name == "schemas.py"
+            and isinstance(n, ast.FunctionDef)
+            and n.name == "driver_frame"
+        ]
+        stray += [
+            f"{path.relative_to(root)}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "createDataFrame"
+            and not any(node.lineno in r for r in helper)
+        ]
+    assert stray == [], "createDataFrame outside schemas.driver_frame:\n" + "\n".join(
+        stray
+    )

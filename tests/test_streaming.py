@@ -4,6 +4,7 @@ dedup, and the applyInPandasWithState custom stateful operator."""
 
 from __future__ import annotations
 
+import re
 from collections import Counter
 
 import pytest
@@ -414,6 +415,14 @@ def test_streaming_ivf_state_replay(spark, sf_dir, tmp_path):
     # (2)+(3) drive the sink directly with 3 manual slices
     state = str(tmp_path / "ivf" / "state")
     sink = IvfListMergeSink(state, cents)
+
+    # a batch shuffles per-list partial rows, never one row per vector
+    probe = sink.merge(raw, None)
+    probe.collect()
+    executed = probe._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" in executed
+    assert not re.search(r"Exchange hashpartitioning\(vec_id#", executed), executed
+
     slices = [raw.filter(F.col("vec_id") % 3 == i) for i in range(3)]
     sink(slices[0], 0)
     sink(slices[1], 1)
