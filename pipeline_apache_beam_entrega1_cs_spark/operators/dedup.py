@@ -8,7 +8,8 @@ reproducible across runs, so it never appears here.
 
 Scale notes per operator are inline; the common theme is that candidate
 generation must be sub-quadratic (hash buckets, LSH bands, frequency-capped
-shingle inversion) — only verification touches pairs.
+shingle inversion) — only verification touches pairs. Every capped
+bucket emits its pairs through ``bucket_pairs`` and ``explode_pairs``.
 """
 
 from __future__ import annotations
@@ -122,27 +123,14 @@ def ngram_jaccard_pairs(
     sizes are built narrowly (array_distinct per row — no dedup shuffle);
     candidate pairs are generated INSIDE each shingle bucket from a
     collected (doc, size) list — the frequency cap bounds every bucket at
-    max_df entries, so pair emission is a bounded nested transform, not a
-    self-join. Total: 2 shuffles (bucket aggregate, pair-count aggregate)
-    and the shingle pipeline evaluates exactly once — the self-join form
-    costs ~8 shuffles and recomputes the tokenizer once per branch.
+    max_df entries, so pair emission (bucket_pairs) is a bounded nested
+    transform, not a self-join. Total: 2 shuffles (bucket aggregate,
+    pair-count aggregate) and the shingle pipeline evaluates exactly
+    once — the self-join form costs ~8 shuffles and recomputes the
+    tokenizer once per branch.
     """
-    return ngram_jaccard_pairs_from_arrays(
-        _shingle_arrays(docs, n), threshold=threshold, max_df=max_df
-    )
-
-
-def ngram_jaccard_pairs_from_arrays(
-    arr: DataFrame, threshold: float = 0.5, max_df: int = 100
-) -> DataFrame:
-    """ngram_jaccard_pairs over a precomputed ``(doc_id, n_sh,
-    shingles)`` frame (the _shingle_arrays shape), the jaccard core's
-    internal seam. Sharing one shingling across eval_dedup_quality's
-    arms does not pay: reading back materialized shingle arrays costs
-    what rebuilding them costs, and exchange reuse cannot help because
-    the quadratic gram construction lives above the exchange."""
     return (
-        _pair_intersections_from_arrays(arr, max_df)
+        _pair_intersections(docs, n, max_df)
         .withColumn(
             "jaccard",
             F.round(
@@ -156,44 +144,60 @@ def ngram_jaccard_pairs_from_arrays(
     )
 
 
-def _pair_intersections(docs: DataFrame, n: int, max_df: int) -> DataFrame:
-    """(doc_a, doc_b, n_a, n_b, n_common): candidate pairs with exact
-    shingle-intersection counts via the frequency-capped inverted index
-    — the shared core of ngram_jaccard_pairs and containment_pairs."""
-    return _pair_intersections_from_arrays(_shingle_arrays(docs, n), max_df)
-
-
-def _pair_intersections_from_arrays(arr: DataFrame, max_df: int) -> DataFrame:
-    """_pair_intersections over a precomputed shingle-array frame."""
-    ex = _explode_shingles(arr)
-    buckets = (
-        ex.groupBy("shingle")
-        .agg(F.sort_array(F.collect_list(F.struct("doc_id", "n_sh"))).alias("ds"))
-        .filter((F.size("ds") >= 2) & (F.size("ds") <= max_df))
-    )
-    ds = F.col("ds")
-    pair_arrays = F.flatten(
+def bucket_pairs(members: Column, pair) -> Column:
+    """The in-bucket pair emission: for each element x of the array
+    ``members`` and each element y after it, ``pair(x, y)`` (a Column),
+    flattened into one array. On a sorted member array every unordered
+    pair appears once, smaller member first. The work is quadratic in
+    the array's size, so callers cap it (a frequency cap, a bucket cap,
+    or a bounded group such as one order's brands)."""
+    return F.flatten(
         F.transform(
-            ds,
+            members,
             lambda x, i: F.transform(
-                F.slice(ds, i + 2, F.size(ds) - i - 1),
-                lambda y: F.struct(
-                    x["doc_id"].alias("doc_a"),
-                    x["n_sh"].alias("n_a"),
-                    y["doc_id"].alias("doc_b"),
-                    y["n_sh"].alias("n_b"),
-                ),
+                F.slice(members, i + 2, F.size(members) - i - 1),
+                lambda y: pair(x, y),
             ),
         )
     )
-    # explode_outer again (see _explode_shingles): a plain explode makes
-    # InferFiltersFromGenerate evaluate the O(k²) pair construction twice.
-    pairs = (
-        buckets.select(F.explode_outer(pair_arrays).alias("p"))
+
+
+def explode_pairs(df: DataFrame, pairs: Column) -> DataFrame:
+    """One row per struct of the array Column ``pairs`` (a bucket_pairs
+    result), its fields as columns. explode_outer, then a not-null
+    filter, for the reason _explode_shingles gives: a plain explode
+    makes InferFiltersFromGenerate evaluate the quadratic pair array
+    twice."""
+    return (
+        df.select(F.explode_outer(pairs).alias("p"))
         .filter(F.col("p").isNotNull())
         .select("p.*")
     )
-    return pairs.groupBy("doc_a", "doc_b", "n_a", "n_b").agg(
+
+
+def _pair_intersections(docs: DataFrame, n: int, max_df: int) -> DataFrame:
+    """(doc_a, doc_b, n_a, n_b, n_common): candidate pairs with exact
+    shingle-intersection counts via the frequency-capped inverted index
+    — the shared core of ngram_jaccard_pairs and containment_pairs.
+    Each shingle's bucket is its sorted (doc_id, n_sh) list; buckets of
+    one document or of more than ``max_df`` are dropped before the
+    pairs are emitted."""
+    buckets = (
+        _explode_shingles(_shingle_arrays(docs, n))
+        .groupBy("shingle")
+        .agg(F.sort_array(F.collect_list(F.struct("doc_id", "n_sh"))).alias("ds"))
+        .filter((F.size("ds") >= 2) & (F.size("ds") <= max_df))
+    )
+    pairs = bucket_pairs(
+        F.col("ds"),
+        lambda x, y: F.struct(
+            x["doc_id"].alias("doc_a"),
+            x["n_sh"].alias("n_a"),
+            y["doc_id"].alias("doc_b"),
+            y["n_sh"].alias("n_b"),
+        ),
+    )
+    return explode_pairs(buckets, pairs).groupBy("doc_a", "doc_b", "n_a", "n_b").agg(
         F.count(F.lit(1)).alias("n_common")
     )
 
@@ -380,7 +384,7 @@ def minhash_banded_pairs(
     (md5 of each ``num_hashes/bands``-signature slice) are exploded for
     the bucket join.
 
-    Candidate generation is in-bucket pair emission with a
+    Candidate generation is in-bucket pair emission (bucket_pairs) with a
     ``max_bucket`` cap (same boilerplate guard as the n-gram inverted
     index); a pair colliding in several bands appears with identical
     row content, so distinct() is deterministic. est_jaccard = fraction
@@ -398,10 +402,7 @@ def minhash_banded_pairs(
     100 TB shape: one shuffle on band keys (32-hex strings), bounded
     pair fan-out, signature cost ~1 md5 + num_hashes int-ops per
     shingle."""
-    arr = _shingle_arrays(docs, 3, drop_empty=True)
-    return _minhash_banded_from_arrays(
-        arr.select("doc_id", "shingles"), num_hashes, bands, max_bucket
-    )
+    return _minhash_banded_from_xs(_minhash_xs(docs), num_hashes, bands, max_bucket)
 
 
 def minhash_bucket_stats(
@@ -420,22 +421,14 @@ def minhash_bucket_stats(
     raise bands or cap before running the join, because in-bucket pair
     emission is quadratic in bucket size.
 
-    Shares _banded_keys with minhash_banded_pairs, so the audit counts
-    the exact buckets the dedup join will use. All outputs are exact
-    integers.
+    Shares _minhash_xs and _banded_keys with minhash_banded_pairs, so
+    the audit counts the exact buckets the dedup join will use. All
+    outputs are exact integers.
 
     100 TB shape: one shuffle on band keys to the bucket-size
     hash-agg, then one mergeable per-band rollup to `bands` rows —
     strictly cheaper than the dedup pass it de-risks."""
-    arr = _shingle_arrays(docs, 3, drop_empty=True)
-    xs = F.transform(
-        F.col("shingles"),
-        lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
-        % _MINHASH_P,
-    )
-    banded = _banded_keys(
-        arr.select("doc_id", xs.alias("xs")), num_hashes, bands
-    )
+    banded = _banded_keys(_minhash_xs(docs), num_hashes, bands)
     sizes = banded.groupBy("band", "band_key").agg(
         F.count(F.lit(1)).cast("bigint").alias("sz")
     )
@@ -463,21 +456,16 @@ def minhash_bucket_stats(
     )
 
 
-def _minhash_banded_from_arrays(
-    arr: DataFrame, num_hashes: int, bands: int, max_bucket: int
-) -> DataFrame:
-    """The signature + banding + in-bucket pair core of
-    minhash_banded_pairs over an arbitrary ``(doc_id, shingles
-    array<string>)`` frame: each shingle string is hashed once via
-    md5 -> bigint mod P, then delegated to _minhash_banded_from_xs."""
+def _minhash_xs(docs: DataFrame) -> DataFrame:
+    """(doc_id, xs): the text family's base hashes — each distinct word
+    3-gram shingle of a document with at least 3 tokens, hashed once as
+    md5 → first 15 hex chars → bigint mod P."""
     xs = F.transform(
         F.col("shingles"),
         lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
         % _MINHASH_P,
     )
-    return _minhash_banded_from_xs(
-        arr.select("doc_id", xs.alias("xs")), num_hashes, bands, max_bucket
-    )
+    return _shingle_arrays(docs, 3, drop_empty=True).select("doc_id", xs.alias("xs"))
 
 
 _MINHASH_P = 2147483647
@@ -563,36 +551,23 @@ def _minhash_banded_from_xs(
         .agg(F.sort_array(F.collect_list(F.struct("doc_id", "sig"))).alias("ds"))
         .filter((F.size("ds") >= 2) & (F.size("ds") <= max_bucket))
     )
-    ds = F.col("ds")
-    pair_arrays = F.flatten(
-        F.transform(
-            ds,
-            lambda x, i: F.transform(
-                F.slice(ds, i + 2, F.size(ds) - i - 1),
-                lambda y: F.struct(
-                    x["doc_id"].alias("doc_a"),
-                    y["doc_id"].alias("doc_b"),
-                    (
-                        F.size(
-                            F.filter(
-                                F.zip_with(x["sig"], y["sig"], lambda p, q: p == q),
-                                lambda t: t,
-                            )
-                        ).cast("double")
-                        / num_hashes
-                    ).alias("est_jaccard"),
-                ),
-            ),
-        )
+    pairs = bucket_pairs(
+        F.col("ds"),
+        lambda x, y: F.struct(
+            x["doc_id"].alias("doc_a"),
+            y["doc_id"].alias("doc_b"),
+            (
+                F.size(
+                    F.filter(
+                        F.zip_with(x["sig"], y["sig"], lambda p, q: p == q),
+                        lambda t: t,
+                    )
+                ).cast("double")
+                / num_hashes
+            ).alias("est_jaccard"),
+        ),
     )
-    # explode_outer (see _explode_shingles): keeps InferFiltersFromGenerate
-    # from evaluating the O(k²) pair construction twice.
-    return (
-        buckets.select(F.explode_outer(pair_arrays).alias("p"))
-        .filter(F.col("p").isNotNull())
-        .select("p.*")
-        .distinct()
-    )
+    return explode_pairs(buckets, pairs).distinct()
 
 
 def binary_payload_dedup(

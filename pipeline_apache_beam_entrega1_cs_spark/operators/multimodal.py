@@ -20,6 +20,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import _shuffle_partitions
+
 DECODED_SCHEMA = (
     "doc_id long, byte_len long, width int, height int, mode string"
 )
@@ -555,7 +557,7 @@ def riff_chunk_index(docs_with_payload: DataFrame) -> DataFrame:
     )
     base = (
         docs_with_payload.repartition(
-            _explicit_partitions(docs_with_payload), "doc_id"
+            _shuffle_partitions(docs_with_payload), "doc_id"
         )
         .select(
             "doc_id",
@@ -742,17 +744,6 @@ _CDC_MASK = 63        # boundary when h % 64 == 0 -> ~64-byte avg chunks
 _CDC_POW = [pow(31, j, _CDC_MOD) for j in range(_CDC_W)]
 
 
-def _explicit_partitions(df: DataFrame) -> int:
-    """Explicit partition count for CPU-dense/byte-light repartition
-    barriers (the dedup._shuffle_partitions rule: AQE sizes exchanges
-    by BYTES, so without an explicit count these stages coalesce to
-    the scan's split layout and run single-core). One definition for
-    every container-parse and CDC barrier in this module."""
-    from .dedup import _shuffle_partitions
-
-    return _shuffle_partitions(df)
-
-
 def cdc_chunk_stats(docs_with_payload: DataFrame,
                     max_bytes: int = 256) -> DataFrame:
     """Content-defined chunking (rsync/FastCDC-style) over a binary
@@ -778,7 +769,7 @@ def cdc_chunk_stats(docs_with_payload: DataFrame,
     hexs = F.hex(F.substring(p, 1, max_bytes))
     base = (
         docs_with_payload.repartition(
-            _explicit_partitions(docs_with_payload), "doc_id"
+            _shuffle_partitions(docs_with_payload), "doc_id"
         )
         .select("doc_id", hexs.alias("_h"))
         .withColumn(
@@ -1035,7 +1026,7 @@ def tiff_header_meta(tiff: DataFrame) -> DataFrame:
     filters in the next, CollapseProject's multi-reference/expensive
     guard keeps the entries construction evaluated ONCE (inline, the
     local-expression form evaluated it three times)."""
-    tiff = tiff.repartition(_explicit_partitions(tiff), "doc_id")
+    tiff = tiff.repartition(_shuffle_partitions(tiff), "doc_id")
     p = F.col("payload")
     le = F.hex(F.substring(p, 1, 2)) == "4949"
 
@@ -1083,7 +1074,7 @@ def tiff_header_meta(tiff: DataFrame) -> DataFrame:
         entries.alias("entries"),
         (next_ifd == 0).alias("last_ifd"),
     )
-    parsed = parsed.repartition(_explicit_partitions(parsed), "doc_id")
+    parsed = parsed.repartition(_shuffle_partitions(parsed), "doc_id")
     return parsed.select(
         "doc_id",
         "is_little_endian",
@@ -1253,7 +1244,7 @@ def tar_index(tar: DataFrame) -> DataFrame:
             ).alias(f"name_hex_{j}")
             for j in range(3)
         ],
-    ).repartition(_explicit_partitions(tar), "doc_id")
+    ).repartition(_shuffle_partitions(tar), "doc_id")
 
     def member(j):
         off = F.col(f"off_{j}")
@@ -1501,7 +1492,7 @@ def zip_index(z: DataFrame) -> DataFrame:
     construction (concat + three crc32s) into every one — the
     tar_index barrier lesson on the build side instead of the walk
     side."""
-    z = z.repartition(_explicit_partitions(z), "doc_id")
+    z = z.repartition(_shuffle_partitions(z), "doc_id")
     p = F.col("payload")
 
     def u16(off):  # little-endian, 0-based offset
@@ -1909,7 +1900,7 @@ def mp4_box_index(mp4: DataFrame) -> DataFrame:
         ),
     )
     base = (
-        mp4.repartition(_explicit_partitions(mp4), "doc_id")
+        mp4.repartition(_shuffle_partitions(mp4), "doc_id")
         .select(
             "doc_id",
             plen.alias("plen"),
@@ -2036,7 +2027,7 @@ def png_chunk_index(png: DataFrame) -> DataFrame:
         ),
     )
     base = (
-        png.repartition(_explicit_partitions(png), "doc_id")
+        png.repartition(_shuffle_partitions(png), "doc_id")
         .select(
             "doc_id",
             "payload",

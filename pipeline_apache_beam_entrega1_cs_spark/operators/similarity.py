@@ -1,17 +1,42 @@
-"""Similarity search over an embedding column (array<float>) —
-SURVEY.md §2B "Similarity search" row.
+"""Similarity search and embedding near-duplicate detection over an
+embedding column (array<float>) — SURVEY.md §2B "Similarity search" row.
 
-- ``cosine_topk``: exact brute-force top-k, the correctness baseline.
-  Dot products are native ``zip_with``/``aggregate`` expressions (no
-  UDF); the cross join is bounded by a small query set, so the cost is
-  |queries| × |corpus| — fine when queries are few, and the exact
-  re-rank step under any ANN scheme.
-- ``embedding_cosine_pairs``: near-duplicate detection by cosine within
-  a blocking key (here the corpus partitioning column) — pairwise only
-  inside blocks.
-- ``lsh_ann_topk``: the scale path — BucketedRandomProjectionLSH
-  (random-hyperplane buckets) prunes candidates before the exact
-  re-rank. Recall is measured against ``cosine_topk`` in tests.
+Operator families:
+
+- Exact top-k: ``cosine_topk``, the correctness baseline (broadcast
+  queries × corpus stream, 6-dp cosine, cand_id tie-break), and
+  ``truncated_rescore_topk`` (coarse top-m on a dimension prefix, exact
+  re-score to top-k).
+- Approximate top-k: ``lsh_ann_topk`` (MLlib random-projection
+  buckets), ``ivf_ann_topk`` (MLlib k-means lists) and
+  ``ivf_ann_topk_det`` (lists from the deterministic Lloyd fit), each
+  re-ranked by exact cosine; ``pq_adc_topk`` ranks by asymmetric
+  distance over PQ codes, and ``pq_ivf_adc_topk`` does so inside the
+  probed IVF lists only. Recall against ``cosine_topk`` is asserted in
+  tests.
+- Re-ranking: ``mmr_rerank`` (MMR over exact-cosine candidates) and
+  ``retrieval_pipeline_topk`` (IVF-PQ candidates, exact re-score, MMR).
+- Quantizers: ``kmeans_lloyd`` and ``pq_codes``, both the one
+  deterministic Lloyd fit ``_pq_fit`` with its in-row argmin
+  ``assign_nearest``.
+- Near-duplicate pairs: ``embedding_cosine_pairs`` (within a blocking
+  column), ``embedding_cosine_pairs_lsh`` (within LSH bucket cells,
+  verified per cell in Arrow) and ``semantic_cluster_dedup`` (within
+  k-means clusters).
+
+Shared helpers, each the one place its idiom is written:
+
+- ``cosine``, ``_dot``, ``_norm``, ``_sq_dist``: native
+  ``zip_with``/``aggregate`` folds, evaluated left to right so results
+  are bit-identical to the sequential SQL oracles.
+- ``_top_k``: every per-group top-k in this module (a numbered window
+  cut at k); ``_ranked`` is the retrieval tail built on it,
+  (query_id, cand_id, ..., rank) with cand_id tie-breaks.
+- ``_probe``: the IVF probe, each query's ``n_probe`` nearest lists by
+  a given distance; ``_rerank``: the exact-cosine re-rank of the probed
+  lists.
+- ``_adc_topk``: the ADC scorer of Jégou et al. 2011 — distance tables,
+  decimal sums and the ranking.
 """
 
 from __future__ import annotations
@@ -20,6 +45,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..schemas import driver_frame
+from .dedup import _shuffle_partitions
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -42,6 +68,27 @@ def cosine(a: Column, b: Column) -> Column:
 
 def _as_double(col: str) -> Column:
     return F.col(col).cast("array<double>")
+
+
+def _top_k(
+    df: DataFrame, k: int, *order: Column, by: str | list[str] = "query_id"
+) -> DataFrame:
+    """The one per-group top-k: ``df``'s rows numbered 1, 2, ... within
+    each ``by`` group in ``order`` (a total order, so the kept set is
+    deterministic), keeping the first ``k`` with their number as ``rk``.
+    Spark plans it as a partitioned window behind a WindowGroupLimit,
+    so each task keeps ~k rows per group before the shuffle."""
+    w = Window.partitionBy(by).orderBy(*order)
+    return df.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)
+
+
+def _ranked(df: DataFrame, k: int, score: Column, *cols: str) -> DataFrame:
+    """The retrieval tail: each query's first ``k`` candidates by
+    ``score`` (a sort order), ties to the smaller cand_id, as
+    (query_id, cand_id, *cols, rank)."""
+    return _top_k(df, k, score, F.col("cand_id").asc()).select(
+        "query_id", "cand_id", *cols, F.col("rk").cast("long").alias("rank")
+    )
 
 
 def cosine_topk(embeddings: DataFrame, query_ids: list[int], k: int = 5) -> DataFrame:
@@ -67,12 +114,7 @@ def cosine_topk(embeddings: DataFrame, query_ids: list[int], k: int = 5) -> Data
             F.round(cosine(F.col("q_emb"), F.col("c_emb")), 6).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("cand_id").asc())
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "cand_id", "cos_sim", F.col("rk").cast("long").alias("rank"))
-    )
+    return _ranked(scored, k, F.col("cos_sim").desc(), "cos_sim")
 
 
 def embedding_cosine_pairs(
@@ -94,22 +136,19 @@ def embedding_cosine_pairs(
     exactly). Capped-block losses are reported by
     ``dedup_cosine_threshold_sweep``'s n_capped_blocks / n_rows_dropped
     columns, mirroring dedup_lsh_bucket_stats."""
-    from .dedup import _shuffle_partitions
-
     base = embeddings.select(
         F.col(block_col).alias("blk"),
         F.col("vec_id"),
         _as_double("embedding").alias("emb"),
     )
     if block_cap is not None:
-        wcap = Window.partitionBy("blk").orderBy(
-            F.md5(F.col("vec_id").cast("string")).asc(), F.col("vec_id").asc()
-        )
-        base = (
-            base.withColumn("_rk", F.row_number().over(wcap))
-            .filter(F.col("_rk") <= block_cap)
-            .drop("_rk")
-        )
+        base = _top_k(
+            base,
+            block_cap,
+            F.md5(F.col("vec_id").cast("string")).asc(),
+            F.col("vec_id").asc(),
+            by="blk",
+        ).drop("rk")
     a = base.select(
         "blk", F.col("vec_id").alias("vec_a"), F.col("emb").alias("emb_a")
     )
@@ -175,34 +214,43 @@ def ivf_ann_topk(
     q = assigned.filter(F.col("vec_id").isin(query_ids)).select(
         F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb")
     )
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.col("c_dist").asc(), F.col("cluster").asc()
+    probes = _probe(
+        q, centroids, 1 - cosine(F.col("q_emb"), F.col("centroid")), n_probe, "q_emb"
     )
-    probes = (
-        q.crossJoin(F.broadcast(centroids))
-        .select(
-            "query_id",
-            "q_emb",
-            "cluster",
-            (1 - cosine(F.col("q_emb"), F.col("centroid"))).alias("c_dist"),
-        )
-        .withColumn("pr", F.row_number().over(probe_w))
-        .filter(F.col("pr") <= n_probe)
-        .select("query_id", "q_emb", "cluster")
+    return _rerank(probes, assigned, k)
+
+
+def _probe(
+    q: DataFrame, cents: DataFrame, dist: Column, n_probe: int, *keep: str
+) -> DataFrame:
+    """The IVF probe: each query row of ``q`` (query_id, *keep) against
+    the broadcast centroid set ``cents`` (one row per cluster), keeping
+    its ``n_probe`` nearest lists by ``dist`` (ties to the smaller
+    cluster id) as (query_id, *keep, cluster)."""
+    scored = q.crossJoin(F.broadcast(cents)).select(
+        "query_id", *keep, "cluster", dist.alias("c_dist")
     )
-    cands = probes.join(assigned, "cluster").filter(
+    return _top_k(
+        scored, n_probe, F.col("c_dist").asc(), F.col("cluster").asc()
+    ).select("query_id", *keep, "cluster")
+
+
+def _rerank(probes: DataFrame, lists: DataFrame, k: int) -> DataFrame:
+    """The IVF exact re-rank: every member of a query's probed lists
+    (``lists`` is (vec_id, emb, cluster)) but the query itself, scored
+    by its 6-dp cosine to ``q_emb`` and cut to the top ``k``."""
+    cands = probes.join(lists, "cluster").filter(
         F.col("vec_id") != F.col("query_id")
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("cand_id").asc())
-    return (
+    return _ranked(
         cands.select(
             "query_id",
             F.col("vec_id").alias("cand_id"),
             F.round(cosine(F.col("q_emb"), F.col("emb")), 6).alias("cos_sim"),
-        )
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "cand_id", "cos_sim", F.col("rk").cast("long").alias("rank"))
+        ),
+        k,
+        F.col("cos_sim").desc(),
+        "cos_sim",
     )
 
 
@@ -243,12 +291,7 @@ def lsh_ann_topk(
         F.col("datasetA.vec_id").alias("cand_id"),
         F.round(cosine(F.col("datasetB.emb"), F.col("datasetA.emb")), 6).alias("cos_sim"),
     ).filter(F.col("cand_id") != F.col("query_id"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("cand_id").asc())
-    return (
-        cands.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "cand_id", "cos_sim", F.col("rk").cast("long").alias("rank"))
-    )
+    return _ranked(cands, k, F.col("cos_sim").desc(), "cos_sim")
 
 
 def _lsh_buckets(
@@ -319,17 +362,19 @@ def _lsh_buckets(
         )
     )
     vecs = embeddings.select("vec_id", guarded.alias("emb"))
-    bucket_exprs = []
-    for t in range(num_tables):
-        plane = F.array(*[F.lit(float(x)) for x in planes[t]])
-        dot = F.aggregate(
-            F.zip_with(F.col("emb"), plane, lambda x, y: x * y),
-            F.lit(0.0).cast("double"),
-            lambda acc, v: acc + v,
-        )
-        bucket_exprs.append(
-            F.floor(dot / F.lit(float(bucket_length))).cast("long")
-        )
+    # each plane is one SQL array literal of exact double literals (repr
+    # round-trips a float), so the planes cost one gateway call each
+    # rather than one per component
+    bucket_exprs = [
+        F.floor(
+            _dot(
+                F.col("emb"),
+                F.expr(f"array({', '.join(f'{float(x)!r}D' for x in plane)})"),
+            )
+            / F.lit(float(bucket_length))
+        ).cast("long")
+        for plane in planes
+    ]
     return vecs, F.array(*bucket_exprs)
 
 
@@ -359,23 +404,27 @@ def embedding_cosine_pairs_lsh(
     low threshold makes candidates close to all pairs, because
     0.35-pairs are the bulk tail, not a near-dup cluster. So it runs
     vectorized and per cell: each capped (table, bucket) cell's members
-    are collected once (<= max_bucket structs of ~dim doubles), one
-    mapInArrow pass computes every within-cell pairwise cosine with a
-    numpy per-pair reduction rounded HALF_UP like ``F.round``, and only
-    survivors (cos >= threshold) leave Python. The cross-table dedup
-    then runs on the survivor set instead of materializing
-    |candidates| (near n²) id-pair rows. Shuffle budget: num_tables
-    copies of the corpus through one exchange into cells.
+    are collected once (<= max_bucket structs of ~dim doubles), and one
+    mapInArrow pass selects the cell's candidate pairs with a single
+    Gram product over the row-normalized vectors (entry >= threshold -
+    1e-6), then rechecks only those with the exact numpy per-pair
+    cosine rounded HALF_UP like ``F.round``; only survivors (cos >=
+    threshold) leave Python. The cross-table dedup then runs on the
+    survivor set instead of materializing |candidates| (near n²)
+    id-pair rows. Shuffle budget: num_tables copies of the corpus
+    through one exchange into cells.
 
     Two knobs bound the pairwise cost: ``bucket_length`` sets the
     expected bucket population, and ``max_bucket`` hard-caps it — cells
     above the cap are dropped before pair generation, exactly like the
     n-gram dedup's frequency cap, so worst-case pairwise work is
     <= max_bucket²/2 * num_tables cosines no matter how degenerate the
-    geometry (and per-cell memory is <= max_bucket * dim * 8 B plus one
-    bounded chunk of pair rows). Recall vs the exact all-pairs baseline
-    is asserted in tests (rows-only oracle: bucket boundaries are not
-    SQL-expressible)."""
+    geometry. Per-cell memory is the cell's vectors (<= max_bucket * dim
+    * 8 B, twice with the normalized copy), its Gram matrix (max_bucket²
+    * 8 B: 8 MB at the default 1,024) and one bounded chunk of pair
+    rows (~2 * 65,536 * dim * 8 B of gathered operands). Recall vs the
+    exact all-pairs baseline is asserted in tests (rows-only oracle:
+    bucket boundaries are not SQL-expressible)."""
     vecs, buckets = _lsh_buckets(
         embeddings, bucket_length, num_tables, seed, dim
     )
@@ -427,7 +476,17 @@ def embedding_cosine_pairs_lsh(
                 order = _np.argsort(ids, kind="stable")
                 ids, x = ids[order], x[order]
                 norms = _np.sqrt((x * x).sum(axis=1))
-                ii, jj = _np.triu_indices(len(ids), k=1)
+                # Gram prefilter: a pair whose rounded cosine reaches
+                # threshold has a raw cosine within 5e-7 of it (the
+                # 6-dp round-up) and a Gram entry within BLAS
+                # summation-order error of that, so the 1e-6 margin
+                # keeps every such pair; the exact recheck below
+                # decides each survivor. A zero-norm row is NaN and
+                # never selected, as its per-pair cosine is never kept.
+                xn = x / norms[:, None]
+                ii, jj = _np.nonzero(
+                    _np.triu(xn @ xn.T >= threshold - 1e-6, k=1)
+                )
                 for s in range(0, len(ii), chunk):
                     ai, bi = ii[s : s + chunk], jj[s : s + chunk]
                     raw = (x[ai] * x[bi]).sum(axis=1) / (
@@ -522,44 +581,16 @@ def ivf_ann_topk_det(
     |corpus| * n_probe / n_centroids. Recall vs the exact baseline is
     asserted in tests like the MLlib variant's."""
     _, cents, assigned = _pq_fit(embeddings, 1, n_centroids, iters)
-    # (vec_id, v, cluster) — the inverted lists
-    assigned = assigned.select("vec_id", F.col("vs").alias("v"), "cluster")
+    # (vec_id, emb, cluster) — the inverted lists
+    assigned = assigned.select("vec_id", F.col("vs").alias("emb"), "cluster")
 
     q = assigned.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("q_v")
+        F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb")
     )
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.col("c_dist").asc(), F.col("cluster").asc()
+    probes = _probe(
+        q, cents, F.round(_sq_dist(F.col("q_emb"), F.col("c")), 6), n_probe, "q_emb"
     )
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .select(
-            "query_id",
-            "q_v",
-            "cluster",
-            F.round(_sq_dist(F.col("q_v"), F.col("c")), 6).alias("c_dist"),
-        )
-        .withColumn("pr", F.row_number().over(probe_w))
-        .filter(F.col("pr") <= n_probe)
-        .select("query_id", "q_v", "cluster")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("cand_id").asc()
-    )
-    return (
-        probes.join(assigned, "cluster")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("cand_id"),
-            F.round(cosine(F.col("q_v"), F.col("v")), 6).alias("cos_sim"),
-        )
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select(
-            "query_id", "cand_id", "cos_sim", F.col("rk").cast("long").alias("rank")
-        )
-    )
+    return _rerank(probes, assigned, k)
 
 
 def assign_nearest(sub: DataFrame, cents: list) -> DataFrame:
@@ -724,7 +755,24 @@ def pq_adc_topk(
     pq_codes, 6-dp rounded table entries, decimal sums, ties broken on
     cand_id."""
     sub, cents, assigned = _pq_fit(embeddings, m, codebook_k, iters)
-    codes = assigned.select("vec_id", "s", "cluster")
+    return _adc_topk(sub, cents, assigned, query_ids, k)
+
+
+def _adc_topk(
+    sub: DataFrame,
+    cents: DataFrame,
+    codes: DataFrame,
+    query_ids: list[int],
+    k: int,
+    cands: DataFrame | None = None,
+) -> DataFrame:
+    """The one ADC scorer over a PQ fit's (sub, cents, codes): each
+    query's m × codebook_k distance table (6-dp squared distances as
+    exact decimals), every candidate's table lookups by its code words
+    summed as decimals (order-independent), and the top ``k`` by that
+    sum, ties to the smaller cand_id. Candidates are every vector but
+    the query, or the (query_id, vec_id) rows of ``cands``."""
+    codes = codes.select("vec_id", "s", "cluster")
     q_tables = (
         sub.filter(F.col("vec_id").isin(query_ids))
         .select(F.col("vec_id").alias("query_id"), "s", "vs")
@@ -738,24 +786,18 @@ def pq_adc_topk(
             .alias("qd"),
         )
     )
-    cand = (
-        codes.join(F.broadcast(q_tables), ["s", "cluster"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("cand_id"))
-        .agg(
-            F.sum("qd").cast("string").cast("double").alias("adc_dist")
+    if cands is None:
+        looked_up = codes.join(F.broadcast(q_tables), ["s", "cluster"]).filter(
+            F.col("vec_id") != F.col("query_id")
         )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("cand_id").asc()
-    )
-    return (
-        cand.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select(
-            "query_id", "cand_id", "adc_dist", F.col("rk").cast("long").alias("rank")
+    else:
+        looked_up = cands.join(codes, "vec_id").join(
+            F.broadcast(q_tables), ["query_id", "s", "cluster"]
         )
+    scored = looked_up.groupBy("query_id", F.col("vec_id").alias("cand_id")).agg(
+        F.sum("qd").cast("string").cast("double").alias("adc_dist")
     )
+    return _ranked(scored, k, F.col("adc_dist").asc(), "adc_dist")
 
 
 def pq_ivf_adc_topk(
@@ -792,59 +834,16 @@ def pq_ivf_adc_topk(
     q = vecs.filter(F.col("vec_id").isin(query_ids)).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("q_v")
     )
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.col("c_dist").asc(), F.col("cluster").asc()
+    probes = _probe(
+        q, coarse_cents, F.round(_sq_dist(F.col("q_v"), F.col("c")), 6), n_probe
     )
-    probes = (
-        q.crossJoin(F.broadcast(coarse_cents))
-        .select(
-            "query_id",
-            "cluster",
-            F.round(_sq_dist(F.col("q_v"), F.col("c")), 6).alias("c_dist"),
-        )
-        .withColumn("pr", F.row_number().over(probe_w))
-        .filter(F.col("pr") <= n_probe)
-        .select("query_id", "cluster")
-    )
-
-    sub, cents, codes = _pq_fit(embeddings, m, codebook_k, pq_iters)
-    codes = codes.select(
-        F.col("vec_id").alias("cand_id"), "s", F.col("cluster").alias("code")
-    )
-    q_tables = (
-        sub.filter(F.col("vec_id").isin(query_ids))
-        .select(F.col("vec_id").alias("query_id"), "s", "vs")
-        .join(F.broadcast(cents), "s")
-        .select(
-            "query_id",
-            "s",
-            F.col("cluster").alias("code"),
-            F.round(_sq_dist(F.col("vs"), F.col("c")), 6)
-            .cast("decimal(18,6)")
-            .alias("qd"),
-        )
-    )
-    cand = (
+    cands = (
         probes.join(lists, "cluster")
         .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("cand_id"))
+        .select("query_id", "vec_id")
     )
-    scored = (
-        cand.join(codes, "cand_id")
-        .join(F.broadcast(q_tables), ["query_id", "s", "code"])
-        .groupBy("query_id", "cand_id")
-        .agg(F.sum("qd").cast("string").cast("double").alias("adc_dist"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("cand_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select(
-            "query_id", "cand_id", "adc_dist", F.col("rk").cast("long").alias("rank")
-        )
-    )
+    sub, cents, codes = _pq_fit(embeddings, m, codebook_k, pq_iters)
+    return _adc_topk(sub, cents, codes, query_ids, k, cands)
 
 
 # ---------------------------------------------------------------------------
@@ -1087,33 +1086,15 @@ def truncated_rescore_topk(
             ).alias("coarse_sim"),
         )
     )
-    wc = Window.partitionBy("query_id").orderBy(
-        F.col("coarse_sim").desc(), F.col("cand_id").asc()
+    survivors = _top_k(
+        coarse, m, F.col("coarse_sim").desc(), F.col("cand_id").asc()
+    ).select(
+        "query_id",
+        "cand_id",
+        "coarse_sim",
+        F.round(cosine(F.col("q_emb"), F.col("c_emb")), 6).alias("cos_sim"),
     )
-    survivors = (
-        coarse.withColumn("crk", F.row_number().over(wc))
-        .filter(F.col("crk") <= m)
-        .select(
-            "query_id",
-            "cand_id",
-            "coarse_sim",
-            F.round(cosine(F.col("q_emb"), F.col("c_emb")), 6).alias("cos_sim"),
-        )
-    )
-    wk = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("cand_id").asc()
-    )
-    return (
-        survivors.withColumn("rk", F.row_number().over(wk))
-        .filter(F.col("rk") <= k)
-        .select(
-            "query_id",
-            "cand_id",
-            "coarse_sim",
-            "cos_sim",
-            F.col("rk").cast("long").alias("rank"),
-        )
-    )
+    return _ranked(survivors, k, F.col("cos_sim").desc(), "coarse_sim", "cos_sim")
 
 
 def semantic_cluster_dedup(
@@ -1160,9 +1141,7 @@ def semantic_cluster_dedup(
     # join+argmin assignment ONCE and the two extra references
     # read shuffle output. The exchange carries 2k compact rows here and
     # O(corpus) at scale — the same rows the pair join would shuffle anyway.
-    n_part = int(
-        embeddings.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
+    n_part = _shuffle_partitions(embeddings)
     assigned = (
         assigned.select(
             "vec_id",

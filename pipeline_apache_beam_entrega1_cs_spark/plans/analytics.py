@@ -27,6 +27,7 @@ from ..functions.numeric import (
     sql_rev,
 )
 from ..operators.asof import asof_join
+from ..operators.dedup import bucket_pairs, explode_pairs
 from ..schemas import load_table
 from .spec import QuerySpec
 
@@ -245,9 +246,9 @@ def basket_brand_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: pairs are generated ARRAY-SIDE from each order's
     sorted distinct-brand set (bounded by brands-per-order, never a
-    self-join on the order key — the same in-bucket pair idiom as the
-    Jaccard inverted index); brand marginals and the 1-row basket total
-    are broadcast. Numerators/denominators stay integer (exact) until
+    self-join on the order key — dedup.bucket_pairs, the in-bucket pair
+    emission of the Jaccard inverted index); brand marginals and the
+    1-row basket total are broadcast. Numerators/denominators stay integer (exact) until
     one double division, rounded to 6 dp."""
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
@@ -259,20 +260,9 @@ def basket_brand_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrs = ob.groupBy("l_orderkey").agg(
         F.array_sort(F.collect_set("p_brand")).alias("bs")
     )
-    bs = F.col("bs")
-    pair_arrays = F.flatten(
-        F.transform(
-            bs,
-            lambda x, i: F.transform(
-                F.slice(bs, i + 2, F.size(bs) - i - 1),
-                lambda y: F.struct(x.alias("b1"), y.alias("b2")),
-            ),
-        )
-    )
-    pairs = (
-        arrs.select(F.explode_outer(pair_arrays).alias("p"))
-        .filter(F.col("p").isNotNull())
-        .select("p.*")
+    pairs = explode_pairs(
+        arrs,
+        bucket_pairs(F.col("bs"), lambda x, y: F.struct(x.alias("b1"), y.alias("b2"))),
     )
     c_xy = pairs.groupBy("b1", "b2").agg(F.count(F.lit(1)).alias("c_xy"))
     c_x = ob.groupBy("p_brand").agg(F.count(F.lit(1)).alias("c"))

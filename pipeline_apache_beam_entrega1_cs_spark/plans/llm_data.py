@@ -5176,15 +5176,8 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("n_common").cast("double") / F.col("u"), 6)
         .alias("jaccard"),
     )
-    m = F.col("members")
-    pair_arrays = F.flatten(
-        F.transform(
-            m,
-            lambda x, i: F.transform(
-                F.slice(m, i + 2, F.size(m) - i - 1),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
+    pair_arrays = D.bucket_pairs(
+        F.col("members"), lambda x, y: F.struct(x.alias("doc_a"), y.alias("doc_b"))
     )
     within = (
         sets.filter(F.size("members") >= 2)
@@ -6601,15 +6594,13 @@ def embedding_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         6,
     )
-    w = Window.partitionBy("trunc_dim", "query_id").orderBy(
-        F.col("cos").desc(), F.col("cand_id").asc()
-    )
-    topk = (
-        pairs.withColumn("cos", cos)
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _MATRYOSHKA_K)
-        .select("trunc_dim", "query_id", "cand_id")
-    )
+    topk = S._top_k(
+        pairs.withColumn("cos", cos),
+        _MATRYOSHKA_K,
+        F.col("cos").desc(),
+        F.col("cand_id").asc(),
+        by=["trunc_dim", "query_id"],
+    ).select("trunc_dim", "query_id", "cand_id")
     # Two consumers re-execute the scored+ranked subtree (no common-
     # subplan reuse in Spark). That is the right trade here: an eager
     # cache+release of topk is slower, because materializing the full
@@ -6720,14 +6711,9 @@ def eval_kendall_tau_rankers(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cb"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("ca").desc(), F.col("cand_id").asc()
-    )
-    items = (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _KENDALL_K)
-        .select("query_id", "cand_id", "ca", "cb")
-    )
+    items = S._top_k(
+        scored, _KENDALL_K, F.col("ca").desc(), F.col("cand_id").asc()
+    ).select("query_id", "cand_id", "ca", "cb")
     i = items.select(
         "query_id", F.col("cand_id").alias("id_i"),
         F.col("ca").alias("ca_i"), F.col("cb").alias("cb_i"),

@@ -1259,6 +1259,38 @@ def test_no_inferred_table_reads():
     )
 
 
+def _calls_outside(helper: str, is_site, scope: str = "**/*.py") -> list[str]:
+    """file:line of every call in the package files matching ``scope``
+    that ``is_site`` accepts, except inside ``helper``, a top-level
+    function given as ``"<path in the package>:<name>"``."""
+    root = Path(__file__).resolve().parents[1]
+    package = root / "pipeline_apache_beam_entrega1_cs_spark"
+    home, name = helper.split(":")
+    sites = []
+    for path in sorted(package.glob(scope)):
+        tree = ast.parse(path.read_text())
+        owned = [
+            range(n.lineno, n.end_lineno + 1)
+            for n in tree.body
+            if path.relative_to(package).as_posix() == home
+            and isinstance(n, ast.FunctionDef)
+            and n.name == name
+        ]
+        sites += [
+            f"{path.relative_to(root)}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and is_site(node)
+            and not any(node.lineno in r for r in owned)
+        ]
+    return sites
+
+
+def _called_name(call: ast.Call) -> str | None:
+    """``f`` for a call ``f(..)`` or ``x.f(..)``."""
+    return getattr(call.func, "attr", getattr(call.func, "id", None))
+
+
 def test_small_tables_built_only_by_driver_frame():
     """The package builds every small driver-held table through
     ``schemas.driver_frame``, an Arrow LocalRelation: a ``.createDataFrame(``
@@ -1266,26 +1298,34 @@ def test_small_tables_built_only_by_driver_frame():
     scan starts Python workers) fails, named by file:line. A plan-level
     ``Scan ExistingRDD`` check could not tell these apart from
     ``localCheckpoint`` pins, which plan the same way."""
-    root = Path(__file__).resolve().parents[1]
-    package = root / "pipeline_apache_beam_entrega1_cs_spark"
-    stray = []
-    for path in sorted(package.rglob("*.py")):
-        tree = ast.parse(path.read_text())
-        helper = [
-            range(n.lineno, n.end_lineno + 1)
-            for n in tree.body
-            if path.name == "schemas.py"
-            and isinstance(n, ast.FunctionDef)
-            and n.name == "driver_frame"
-        ]
-        stray += [
-            f"{path.relative_to(root)}:{node.lineno}"
-            for node in ast.walk(tree)
-            if isinstance(node, ast.Call)
-            and isinstance(node.func, ast.Attribute)
-            and node.func.attr == "createDataFrame"
-            and not any(node.lineno in r for r in helper)
-        ]
+    stray = _calls_outside(
+        "schemas.py:driver_frame",
+        lambda c: isinstance(c.func, ast.Attribute) and c.func.attr == "createDataFrame",
+    )
     assert stray == [], "createDataFrame outside schemas.driver_frame:\n" + "\n".join(
         stray
     )
+
+
+def test_candidate_idioms_written_once():
+    """The in-bucket pair emission, ``slice(<members>, i + 2, ..)`` over
+    the elements after each one, is written only in
+    ``dedup.bucket_pairs``, anywhere in the package; and
+    ``operators/similarity.py`` numbers rows (``row_number``) only in
+    ``_top_k``, its one per-query top-k. A failure names each other site
+    by file:line."""
+    pairs = _calls_outside(
+        "operators/dedup.py:bucket_pairs",
+        lambda c: _called_name(c) == "slice"
+        and len(c.args) > 1
+        and ast.unparse(c.args[1]) == "i + 2",
+    )
+    ranks = _calls_outside(
+        "operators/similarity.py:_top_k",
+        lambda c: _called_name(c) == "row_number",
+        scope="operators/similarity.py",
+    )
+    stray = [f"pair emission outside dedup.bucket_pairs: {p}" for p in pairs] + [
+        f"row_number outside similarity._top_k: {r}" for r in ranks
+    ]
+    assert stray == [], "\n".join(stray)
