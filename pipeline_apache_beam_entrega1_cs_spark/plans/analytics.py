@@ -248,8 +248,8 @@ def basket_brand_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     sorted distinct-brand set (bounded by brands-per-order, never a
     self-join on the order key — dedup.bucket_pairs, the in-bucket pair
     emission of the Jaccard inverted index); brand marginals and the
-    1-row basket total are broadcast. Numerators/denominators stay integer (exact) until
-    one double division, rounded to 6 dp."""
+    1-row basket total are broadcast. Numerators/denominators stay
+    integer (exact) until one double division, rounded to 6 dp."""
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
     ob = (
